@@ -72,17 +72,10 @@ def main() -> None:
     # ran before it) from host noise. Additions-only: the default
     # stays the sorted order the driver compares across rounds, and
     # the one-line JSON contract is unchanged. Shuffle is seeded per
-    # (seed, pass-label) so a run is reproducible.
+    # (seed, pass-label) so a run is reproducible; a random pass records
+    # its seed and realized order in its meta.
     order_mode = os.environ.get("SPARK_GRAFT_BENCH_ORDER", "sorted")
-
-    def _pass_order(label: str) -> list[str]:
-        names = sorted(qs)
-        if order_mode == "random":
-            import random
-
-            seed = os.environ.get("SPARK_GRAFT_BENCH_SEED", "0")
-            random.Random(f"{seed}:{label}").shuffle(names)
-        return names
+    order_seed = os.environ.get("SPARK_GRAFT_BENCH_SEED", "0")
 
     def run_pass(label: str) -> dict[str, float]:
         meta = {
@@ -91,8 +84,15 @@ def main() -> None:
             "loadavg_before": _loadavg(),
             "order": order_mode,
         }
+        names = sorted(qs)
+        if order_mode == "random":
+            import random
+
+            random.Random(f"{order_seed}:{label}").shuffle(names)
+            meta["seed"] = order_seed
+            meta["query_order"] = names
         timings: dict[str, float] = {}
-        for name in _pass_order(label):
+        for name in names:
             t0 = time.perf_counter()
             try:
                 df = qs[name](spark, sf_dir)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from iceberg_workshop_spark.registry import guard_axis as _guard_axis
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import persist, register
 from iceberg_workshop_spark.sources.tables import load
 
 # Shared DuckDB fragments (Spark sides use the equivalent built-ins).
@@ -301,7 +301,7 @@ def q_llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(docs.select("doc_id", "text")).join(
         docs.select("doc_id", "source"), "doc_id"
     )
-    ss = sh.select("source", "shingle").distinct().persist()
+    ss = persist(sh.select("source", "shingle").distinct())
     sz = ss.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = ss.alias("a")
     b = ss.alias("b")
@@ -316,7 +316,7 @@ def q_llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    out = (
+    return (
         inter.join(F.broadcast(sz).withColumnRenamed("source", "src_a"), "src_a")
         .withColumnRenamed("n", "na")
         .join(F.broadcast(sz).withColumnRenamed("source", "src_b"), "src_b")
@@ -331,9 +331,6 @@ def q_llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("overlap_ppm"), "src_a", "src_b")
         .limit(20)
     )
-    out = out.localCheckpoint()
-    ss.unpersist()
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -386,7 +383,7 @@ def q_llm_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the round-10 ppm discipline) — BIGINT would wrap at ~10^6
     target tokens; the per-doc SUM of BIGINT ratios that remains is
     bounded by doc_len · 1e6 · (n_all/n_tgt)."""
-    toks = _toks(spark, sf_dir).persist()
+    toks = persist(_toks(spark, sf_dir))
     corpus = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_all"))
     tgt = (
         toks.filter(F.col("lang") == "en")
@@ -417,15 +414,12 @@ def q_llm_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-    out = (
+    return (
         scored.join(docs, "doc_id")
         .select("doc_id", "source", "lang", "score_ppm")
         .orderBy(F.desc("score_ppm"), "doc_id")
         .limit(IMPORTANCE_TOP_K)
     )
-    out = out.localCheckpoint()
-    toks.unpersist()
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -520,9 +514,11 @@ def q_llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_workshop_spark.llm.dedup import _doc_shingles
 
     docs = load(spark, sf_dir, "documents")
-    ds = _doc_shingles(docs.select("doc_id", "text")).join(
-        docs.select("doc_id", "source"), "doc_id"
-    ).persist()
+    ds = persist(
+        _doc_shingles(docs.select("doc_id", "text")).join(
+            docs.select("doc_id", "source"), "doc_id"
+        )
+    )
     firsts = ds.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         ds.join(firsts, "shingle")
@@ -534,7 +530,7 @@ def q_llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_novel"),
         )
     )
-    out = (
+    return (
         per_doc.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -547,9 +543,6 @@ def q_llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    out = out.localCheckpoint()
-    ds.unpersist()
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -647,7 +640,7 @@ def q_llm_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional self-join WITHIN each document — banded by doc_id, so
     it shuffles each document once, never the corpus cross-product.
     Unigram counts broadcast back onto the pair table."""
-    toks = _toks(spark, sf_dir).select("doc_id", "tok", "pos").persist()
+    toks = persist(_toks(spark, sf_dir).select("doc_id", "tok", "pos"))
     n = toks.agg(F.count(F.lit(1)).alias("n_toks"))
     uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     a = toks.alias("a")
@@ -668,7 +661,7 @@ def q_llm_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c12"))
         .filter(F.col("c12") >= PMI_MIN_PAIRS)
     )
-    out = (
+    return (
         pairs.join(
             F.broadcast(uni.withColumnRenamed("tok", "w1")), "w1"
         )
@@ -685,9 +678,6 @@ def q_llm_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("lift_x1000"), "w1", "w2")
         .limit(PMI_TOP)
     )
-    out = out.localCheckpoint()
-    toks.unpersist()
-    return out
 
 
 # --------------------------------------------------------------------------

@@ -31,7 +31,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from iceberg_workshop_spark.registry import QUERIES, register, require
+from iceberg_workshop_spark.registry import (
+    QUERIES,
+    persist,
+    register,
+    require,
+    set_conf,
+)
 from iceberg_workshop_spark.sources.tables import load
 
 # Near-dup thresholds (fixture has 25 seeded pairs at Jaccard ≈ .98;
@@ -101,9 +107,7 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
 
 
 def _pair_jaccard(
-    shingles: DataFrame,
-    candidates: DataFrame | None = None,
-    releases: list | None = None,
+    shingles: DataFrame, candidates: DataFrame | None = None
 ) -> DataFrame:
     """Exact Jaccard per doc pair from a (doc_id, shingle) set table.
 
@@ -124,19 +128,24 @@ def _pair_jaccard(
     element). ``n_common = 0`` rows are filtered to keep the old
     inner-join row set. Precondition: ``candidates`` must be DISTINCT
     (doc_a, doc_b) pairs.
+
+    Width bound: a doc's set is ONE array row of its distinct shingles,
+    so a row holds up to (tokens − 2) strings — about the document's
+    own size, plus per-element overhead — and each candidate row
+    carries two of them. A corpus with very long documents (books,
+    concatenated crawls) should cap or segment them before this
+    verify; the exploded form never built rows wider than one shingle.
     """
     if candidates is not None:
         sets = shingles.groupBy("doc_id").agg(
             F.collect_list("shingle").alias("sh"),
             F.count(F.lit(1)).alias("n"),
         )
-        if releases is not None:
-            # both join sides read sets; persist so the collect_list
-            # agg runs once (measured 7.5 s → 3.4 s whole-query on the
-            # containment twin when sets AND candidates are persisted
-            # vs recomputed per broadcast build). Caller releases.
-            sets = sets.persist()
-            releases.append(sets)
+        # both join sides read sets; persist so the collect_list agg
+        # runs once (measured 7.5 s → 3.4 s whole-query on the
+        # containment twin when sets AND candidates are persisted vs
+        # recomputed per broadcast build).
+        sets = persist(sets)
         sa = sets.select(
             F.col("doc_id").alias("doc_a"),
             F.col("sh").alias("sh_a"),
@@ -302,18 +311,12 @@ def q_llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # Three consumers (sizes + both join sides) — persist so the
-    # tokenize/shingle/distinct pipeline runs once; checkpoint the
-    # result and release (persists are invocation-scoped — returned
-    # lazy, the shingle cache stayed registered for the session and
-    # later invocations silently reused this run's blocks).
-    shingles = _doc_shingles(docs).persist()
+    # tokenize/shingle/distinct pipeline runs once.
+    shingles = persist(_doc_shingles(docs))
     pairs = _pair_jaccard(shingles)
-    out = pairs.filter(
+    return pairs.filter(
         F.col("n_common") / F.col("n_union") >= JACCARD_T
     ).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    shingles.unpersist()
-    return out
 
 
 def _certify_pairs(
@@ -410,8 +413,7 @@ def q_llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verification, and each candidate set feeds a semi-join — persist
     # all three (tiny: one row per (doc, shingle) / per pair) so the
     # LSH DAG is evaluated once, not once per consumer.
-    releases: list = []
-    shingles = _doc_shingles(docs).persist()
+    shingles = persist(_doc_shingles(docs))
     # Certificate (rows-only gate hardening): replay the exact md5
     # permutation family (q_llm_dedup_near's engine-portable twin) on
     # the same shingles and pin recall/precision of the xxhash64 pair
@@ -428,24 +430,18 @@ def q_llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bxx": F.expr("xxhash64(shingle) & 268435455"),
             "bmd5": F.expr(_MD5_BASE_COL),
         },
-        releases,
     )
-    candidates = _band_pairs(bands["bxx"], materialize=False).persist()
-    exact_cand = _band_pairs(bands["bmd5"], materialize=False).persist()
+    candidates = persist(_band_pairs(bands["bxx"], materialize=False))
+    exact_cand = persist(_band_pairs(bands["bmd5"], materialize=False))
     # all_cand has exactly one consumer (the verify) — no persist.
     all_cand = candidates.unionAll(exact_cand).distinct()
-    verified = (
-        _pair_jaccard(shingles, all_cand, releases)
+    verified = persist(
+        _pair_jaccard(shingles, all_cand)
         .filter(F.col("n_common") / F.col("n_union") >= JACCARD_T)
-        .persist()
     )
     fast = verified.join(candidates, ["doc_a", "doc_b"], "left_semi")
     exact = verified.join(exact_cand, ["doc_a", "doc_b"], "left_semi")
-    out = _certify_pairs(fast, exact, 0.99, 0.99).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    for df in (shingles, candidates, exact_cand, verified, *releases):
-        df.unpersist()
-    return out
+    return _certify_pairs(fast, exact, 0.99, 0.99).orderBy("doc_a", "doc_b")
 
 
 # DuckDB-side hex→int over the first 15 md5 nibbles (60 bits, fits
@@ -604,7 +600,7 @@ def _minhash_bands(shingles: DataFrame, base: Column) -> DataFrame:
 
 
 def _minhash_bands_multi(
-    shingles: DataFrame, bases: dict[str, Column], releases: list
+    shingles: DataFrame, bases: dict[str, Column]
 ) -> dict[str, DataFrame]:
     """(doc_id, band_id, sig) band tables for SEVERAL base-hash
     families in ONE Python pass (guide §4.1 — cross the JVM↔Python
@@ -616,8 +612,8 @@ def _minhash_bands_multi(
     constants, so the per-batch numpy work just stacks one extra
     column set; per-family minima are bit-identical to the
     single-family helper (same int64 ops, min is order-free). The
-    merged signature frame is persisted (appended to ``releases``) and
-    each family's band table is a cheap slice/explode over it."""
+    merged signature frame is persisted and each family's band table
+    is a cheap slice/explode over it."""
     import numpy as np
     import pandas as pd
 
@@ -661,10 +657,11 @@ def _minhash_bands_multi(
         f" array_repeat({_MINHASH_P}L, {MINHASH_PERMS}),"
         " (acc, x) -> zip_with(acc, x, (p, q) -> least(p, q)))"
     )
-    final = partials.groupBy("doc_id").agg(
-        *[F.expr(merge.format(nm=nm)).alias(nm) for nm in names]
-    ).persist()
-    releases.append(final)
+    final = persist(
+        partials.groupBy("doc_id").agg(
+            *[F.expr(merge.format(nm=nm)).alias(nm) for nm in names]
+        )
+    )
     rows_per_band = MINHASH_PERMS // MINHASH_BANDS
     return {
         nm: final.select(
@@ -682,11 +679,7 @@ def _minhash_bands_multi(
     }
 
 
-def _band_pairs(
-    buckets: DataFrame,
-    releases: list | None = None,
-    materialize: bool = True,
-) -> DataFrame:
+def _band_pairs(buckets: DataFrame, materialize: bool = True) -> DataFrame:
     """Distinct candidate pairs (doc_a < doc_b) from band signatures:
     the LSH bucket self-join — shuffles only (band, sig, doc_id).
 
@@ -701,8 +694,7 @@ def _band_pairs(
     call, serializing the query into sequential jobs (driver host:
     minhash ×1.25, clusters ×1.32 SLOWER; 32c/8c scaling ratio ~1.04),
     while a persist materializes once inside the caller's single final
-    action with stage overlap intact. Callers pass ``releases`` and
-    unpersist after that action — persists are invocation-scoped.
+    action with stage overlap intact.
     ``materialize=False`` skips the persist when the caller's buckets
     are already a cheap projection of a cached frame
     (_minhash_bands_multi) — re-deriving the explode per join side is
@@ -710,9 +702,7 @@ def _band_pairs(
     cost (the query is a ~34-job swarm of ≤0.15 s stages at sf0.1).
     """
     if materialize:
-        buckets = buckets.persist()
-        if releases is not None:
-            releases.append(buckets)
+        buckets = persist(buckets)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -732,9 +722,7 @@ def _band_pairs(
 _MD5_BASE_COL = "cast(conv(substring(md5(shingle), 1, 7), 16, 10) as bigint)"
 
 
-def _minhash_candidates(
-    shingles: DataFrame, releases: list | None = None
-) -> DataFrame:
+def _minhash_candidates(shingles: DataFrame) -> DataFrame:
     """Banded MinHash candidate pairs (doc_a < doc_b) over a
     (doc_id, shingle) table — the exact md5-base linear-permutation
     family DuckDB replays bit-for-bit (see q_llm_dedup_near). Shared
@@ -742,9 +730,7 @@ def _minhash_candidates(
     every consumer of pair candidates goes through LSH banding, never
     the unblocked shingle self-join (whose pair count is Σ df(shingle)²
     — boilerplate-heavy corpora explode it at 100 TB)."""
-    return _band_pairs(
-        _minhash_bands(shingles, F.expr(_MD5_BASE_COL)), releases
-    )
+    return _band_pairs(_minhash_bands(shingles, F.expr(_MD5_BASE_COL)))
 
 
 @register(
@@ -774,17 +760,12 @@ def q_llm_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutation) keeps this within ~2× of the xxhash64 hot path.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    releases: list = []
-    shingles = _doc_shingles(docs).persist()
-    candidates = _minhash_candidates(shingles, releases).persist()
-    verified = _pair_jaccard(shingles, candidates, releases)
-    out = verified.filter(
+    shingles = persist(_doc_shingles(docs))
+    candidates = persist(_minhash_candidates(shingles))
+    verified = _pair_jaccard(shingles, candidates)
+    return verified.filter(
         F.col("n_common") / F.col("n_union") >= JACCARD_T
     ).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    for df in (shingles, candidates, *releases):
-        df.unpersist()
-    return out
 
 
 # --------------------------------------------------------------- SimHash
@@ -842,7 +823,7 @@ def q_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # shingles feed the fingerprint votes AND the certificate's exact
     # ground-truth pass — persist so tokenization runs once
-    docs_shingles = _doc_shingles(docs).persist()
+    docs_shingles = persist(_doc_shingles(docs))
     toks = docs_shingles.select("doc_id", F.xxhash64("shingle").alias("h"))
     # fp feeds the bucket explode and both sides of the verify join —
     # persist (one 9-column row per doc) to evaluate the vote agg once.
@@ -885,7 +866,7 @@ def q_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"c{c}")
         for c in range(SIMHASH_BANDS)
     ]
-    fp = votes.select("doc_id", *chunk_cols).persist()
+    fp = persist(votes.select("doc_id", *chunk_cols))
     # Combination keys (module constants above): block b's value is a
     # contiguous bit slice of the fingerprint; combo key k packs its 3
     # block values into one long (7 bits per slot covers both widths).
@@ -982,13 +963,9 @@ def q_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         fast_cert = fast.join(
             d.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
         ).join(d.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
-    out = _certify_pairs(
+    return _certify_pairs(
         fast_cert, truth, 0.8, 0.999, output=fast
     ).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    fp.unpersist()
-    docs_shingles.unpersist()
-    return out
 
 
 SIMHASH_MD5_BITS = 60  # first 15 md5 nibbles → BIGINT-safe
@@ -1088,7 +1065,7 @@ def q_llm_dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"c{c}")
         for c in range(SIMHASH_MD5_BANDS)
     ]
-    fp = votes.select("doc_id", *chunk_cols).persist()
+    fp = persist(votes.select("doc_id", *chunk_cols))
     buckets = fp.select(
         "doc_id",
         F.posexplode(
@@ -1124,16 +1101,13 @@ def q_llm_dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         start=F.lit(0),
     )
-    out = (
+    return (
         candidates.join(fa, "doc_a")
         .join(fb, "doc_b")
         .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .orderBy("doc_a", "doc_b")
     )
-    out = out.localCheckpoint(eager=True)
-    fp.unpersist()
-    return out
 
 
 # ------------------------------------------------- embedding-cosine dup
@@ -1451,31 +1425,14 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding, so cluster membership stays bit-identical.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    releases: list = []
-    shingles = _doc_shingles(docs).persist()
-    candidates = _minhash_candidates(shingles, releases).persist()
-    pairs = (
-        _pair_jaccard(shingles, candidates, releases)
+    shingles = persist(_doc_shingles(docs))
+    candidates = persist(_minhash_candidates(shingles))
+    pairs = persist(
+        _pair_jaccard(shingles, candidates)
         .filter(F.col("n_common") / F.col("n_union") >= JACCARD_T)
         .select("doc_a", "doc_b")
-        .persist()
     )
-    # Persist hygiene: the shingle→pair intermediates exist only to
-    # serve the propagation loop — leaving them persisted would grow
-    # executor memory monotonically across invocations in a long-lived
-    # session. The converged labels are already checkpointed (their
-    # plan references no persisted chain), so release everything —
-    # INCLUDING on the non-convergence require() raise (try/finally),
-    # or a failing run would leak three corpus-scale cached frames.
-    try:
-        final = _cc_min_label(pairs)
-    finally:
-        for df in (shingles, candidates, pairs, *releases):
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — cleanup must not fail the query
-                pass
-    return final.orderBy("doc_id")
+    return _cc_min_label(pairs).orderBy("doc_id")
 
 
 def _cc_min_label(pairs: DataFrame) -> DataFrame:
@@ -1524,49 +1481,46 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
     # partition stage costs, which at the batch default of 32 dominate
     # wall clock on a near-dup-sized edge set (same reasoning as the
     # streaming drain's state-store partitioning, streaming/stateful).
-    # Env-tunable for a truly huge duplicate graph.
+    # Env-tunable for a truly huge duplicate graph; held until the
+    # invocation returns.
     import os as _os
 
-    sess = pairs.sparkSession
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_parts = sess.conf.get(shuffle_key)
-    sess.conf.set(
-        shuffle_key, _os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "8")
+    set_conf(
+        pairs.sparkSession,
+        "spark.sql.shuffle.partitions",
+        _os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "8"),
     )
     max_iters = int(_os.environ.get("SPARK_GRAFT_CC_MAX_ITERS", "64"))
     converged = False
-    try:
-        # Labels are monotone non-increasing (least of self and
-        # neighbor min), so sum(cluster_id) strictly decreases on any
-        # change — convergence detection is one cheap aggregate per
-        # round instead of a self-join + count.
-        prev_sum = labels.agg(F.sum("cluster_id")).first()[0]
-        for _ in range(max_iters):
-            # Each iteration checkpoints its label set: lineage stays
-            # one join+agg deep, the superseded iteration's blocks are
-            # released by the ContextCleaner when the reference drops.
-            updated = (
-                edges.join(labels, edges.v == labels.doc_id)
-                .groupBy("u")
-                .agg(F.min("cluster_id").alias("cluster_id"))
-                .withColumnRenamed("u", "doc_id")
-                .localCheckpoint(eager=True)
-            )
-            cur_sum = updated.agg(F.sum("cluster_id")).first()[0]
-            labels = updated
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-        require(
-            converged,
-            "connected-components label propagation did not converge "
-            f"within {max_iters} iterations — the duplicate graph has "
-            "diameter > SPARK_GRAFT_CC_MAX_ITERS; raise the cap rather "
-            "than accept partially-merged clusters",
+    # Labels are monotone non-increasing (least of self and neighbor
+    # min), so sum(cluster_id) strictly decreases on any change —
+    # convergence detection is one cheap aggregate per round instead
+    # of a self-join + count.
+    prev_sum = labels.agg(F.sum("cluster_id")).first()[0]
+    for _ in range(max_iters):
+        # Each iteration checkpoints its label set: lineage stays one
+        # join+agg deep, the superseded iteration's blocks are released
+        # by the ContextCleaner when the reference drops.
+        updated = (
+            edges.join(labels, edges.v == labels.doc_id)
+            .groupBy("u")
+            .agg(F.min("cluster_id").alias("cluster_id"))
+            .withColumnRenamed("u", "doc_id")
+            .localCheckpoint(eager=True)
         )
-    finally:
-        sess.conf.set(shuffle_key, prev_parts)
+        cur_sum = updated.agg(F.sum("cluster_id")).first()[0]
+        labels = updated
+        if cur_sum == prev_sum:
+            converged = True
+            break
+        prev_sum = cur_sum
+    require(
+        converged,
+        "connected-components label propagation did not converge "
+        f"within {max_iters} iterations — the duplicate graph has "
+        "diameter > SPARK_GRAFT_CC_MAX_ITERS; raise the cap rather "
+        "than accept partially-merged clusters",
+    )
     return labels
 
 
@@ -1670,7 +1624,7 @@ def q_llm_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality check proves on every run. Prefix length uses integer
     ceiling arithmetic (``(4n+4) div 5``), no float at the cutoff."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    shingles = _doc_shingles(docs).persist()
+    shingles = persist(_doc_shingles(docs))
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     ranked = (
@@ -1687,17 +1641,16 @@ def q_llm_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcasts, and a broadcast build re-evaluates its subtree, so
     # unpersisted the df-rank window chain (freq agg + two joins +
     # row_number) ran once per side. Persist the prefix table (the
-    # ~20% shingle sliver) so it is computed once; released after the
-    # eager checkpoint below (persists are invocation-scoped — left
-    # registered, a later invocation's canonically-identical plan
-    # would silently reuse this run's materialized cache).
-    pref = ranked.filter(
-        F.col("rk") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
-    ).select("doc_id", "shingle", "n").persist()
+    # ~20% shingle sliver) so it is computed once.
+    pref = persist(
+        ranked.filter(
+            F.col("rk") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
+        ).select("doc_id", "shingle", "n")
+    )
     # PPJoin length filter: Jaccard ≥ 0.8 forces 4·max(na,nb) ≤
     # 5·min(na,nb); pruning size-incompatible pairs IN the join
     # condition keeps them out of the distinct+verify stages entirely.
-    cand = (
+    cand = persist(
         pref.alias("a")
         .join(
             pref.alias("b"),
@@ -1710,7 +1663,6 @@ def q_llm_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
-        .persist()
     )
     # Verify on LSH-style candidates via the shared per-pair set
     # intersection (see _pair_jaccard — identical output columns and
@@ -1718,16 +1670,11 @@ def q_llm_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Σ(|A|+|B|) exploded shuffle). cand persisted like the sets table
     # (measured on the containment twin: either one lazy re-evaluates
     # under a broadcast build).
-    releases: list = []
-    out = (
-        _pair_jaccard(shingles, cand, releases)
+    return (
+        _pair_jaccard(shingles, cand)
         .filter(F.col("n_common") * 1.0 / F.col("n_union") >= JACCARD_T)
         .orderBy("doc_a", "doc_b")
     )
-    out = out.localCheckpoint(eager=True)
-    for df in (shingles, pref, cand, *releases):
-        df.unpersist()
-    return out
 
 
 # ------------------------------------------- incremental (batch vs corpus)
@@ -2259,7 +2206,7 @@ def q_llm_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("d") >= 2) & (F.col("d") <= SPAN_MAX_DF))
         .select("shingle")
     )
-    psr = ps.join(rare, "shingle").persist()
+    psr = persist(ps.join(rare, "shingle"))
     m = (
         psr.alias("a")
         .join(
@@ -2281,7 +2228,7 @@ def q_llm_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = runs.groupBy("da", "db", "off", "grp").agg(
         (F.count("*") + 2).alias("span_toks")
     )
-    out = (
+    return (
         spans.filter(F.col("span_toks") >= SPAN_MIN_TOKS)
         .groupBy("da", "db")
         .agg(
@@ -2296,9 +2243,6 @@ def q_llm_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_a", "doc_b")
     )
-    out = out.localCheckpoint(eager=True)
-    psr.unpersist()
-    return out
 
 
 # ------------------------------------------------ quality-aware keeper
@@ -2435,15 +2379,14 @@ def q_llm_dedup_containment_prefix(
     test_llm.py); containment beyond ratio {R} is the concatenated-
     crawl regime that ``q_llm_dedup_spans`` handles span-wise."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    ds = _doc_shingles(docs).persist()
+    ds = persist(_doc_shingles(docs))
     sz = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     dfreq = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # ranked feeds BOTH prefix sides (pa/pb carry different cutoffs),
     # and the candidate join broadcasts one side — a broadcast build
     # re-evaluates its subtree, so unpersisted the freq-join + window
-    # chain ran once per side. Persist so it runs once; released after
-    # the eager checkpoint below.
-    ranked = (
+    # chain ran once per side. Persist so it runs once.
+    ranked = persist(
         ds.join(dfreq, "shingle")
         .join(sz, "doc_id")
         .withColumn(
@@ -2452,7 +2395,6 @@ def q_llm_dedup_containment_prefix(
                 Window.partitionBy("doc_id").orderBy("df", "shingle")
             ),
         )
-        .persist()
     )
     pa = ranked.filter(
         F.col("r") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
@@ -2464,7 +2406,7 @@ def q_llm_dedup_containment_prefix(
     ).select(
         F.col("doc_id").alias("db"), "shingle", F.col("n").alias("nb")
     )
-    cand = (
+    cand = persist(
         pa.join(pb, "shingle")
         .filter(
             (
@@ -2478,7 +2420,6 @@ def q_llm_dedup_containment_prefix(
             F.greatest("da", "db").alias("doc_b"),
         )
         .distinct()
-        .persist()
     )
     # Per-PAIR verify via set intersection (see _pair_jaccard): each
     # doc's distinct shingles become ONE array row; candidates pick up
@@ -2489,12 +2430,14 @@ def q_llm_dedup_containment_prefix(
     # Never the corpus-wide Σ df² self-join either (a candidate-DOCS
     # semi-join degrades to exactly that whenever most docs have ≥ 1
     # candidate partner, measured superlinear at sf2).
-    # cand and sets both persisted (and released below): measured
-    # whole-query 7.5 s with either lazy vs 3.4 s with both cached —
-    # each otherwise re-evaluates under a broadcast build.
-    sets = ds.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("sh"), F.count(F.lit(1)).alias("n")
-    ).persist()
+    # cand and sets both persisted: measured whole-query 7.5 s with
+    # either lazy vs 3.4 s with both cached — each otherwise
+    # re-evaluates under a broadcast build.
+    sets = persist(
+        ds.groupBy("doc_id").agg(
+            F.collect_list("shingle").alias("sh"), F.count(F.lit(1)).alias("n")
+        )
+    )
     inter = (
         cand.join(
             sets.select(
@@ -2525,7 +2468,7 @@ def q_llm_dedup_containment_prefix(
             "n_b",
         )
     )
-    out = (
+    return (
         inter.filter(
             5 * F.col("n_common") >= 4 * F.least("n_a", "n_b")
         )
@@ -2544,12 +2487,6 @@ def q_llm_dedup_containment_prefix(
         )
         .orderBy("doc_a", "doc_b")
     )
-    out = out.localCheckpoint(eager=True)
-    cand.unpersist()
-    sets.unpersist()
-    ranked.unpersist()
-    ds.unpersist()
-    return out
 
 
 q_llm_dedup_containment_prefix.__doc__ = (
@@ -2596,7 +2533,7 @@ def q_llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-hashes) — and span-level partial overlap below the shingle-set
     threshold is q_llm_dedup_spans' job."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    ds = _doc_shingles(docs).persist()
+    ds = persist(_doc_shingles(docs))
     sz = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = ds.alias("a"), ds.alias("b")
     inter = (
@@ -2612,7 +2549,7 @@ def q_llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
     sb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    out = (
+    return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn(
@@ -2638,6 +2575,3 @@ def q_llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_a", "doc_b")
     )
-    out = out.localCheckpoint(eager=True)
-    ds.unpersist()
-    return out

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import persist, register
 from iceberg_workshop_spark.sources.tables import load
 
 # Probe for real codecs at import; the container ships neither PIL nor
@@ -576,7 +576,7 @@ def q_llm_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapInPandas Python pass — is evaluated once per join side
     # (plan showed two MapInPandas nodes). Persist the tiny
     # (doc_id, fp) table so bytes cross the Python boundary once.
-    fp = docs.mapInPandas(_phash, schema=fp_schema).persist()
+    fp = persist(docs.mapInPandas(_phash, schema=fp_schema))
     bands = fp.select(
         "doc_id",
         "fp",
@@ -606,7 +606,7 @@ def q_llm_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    out = (
+    return (
         cand.withColumn(
             "hamming",
             F.bit_count(
@@ -617,6 +617,3 @@ def q_llm_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
     )
-    out = out.localCheckpoint(eager=True)
-    fp.unpersist()
-    return out

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import persist, register
 from iceberg_workshop_spark.sources.tables import load
 
 PROBE_VEC_ID = 0
@@ -543,15 +543,11 @@ def q_llm_simsearch_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(TOP_K)
         )
         merged = local if state is None else state.unionAll(local)
-        prev = state
-        state = (
+        state = persist(
             merged.orderBy(F.col("cosine_raw").desc(), F.col("vec_id").asc())
             .limit(TOP_K)
-            .persist()
         )
         state.count()  # materialize: the ingest-batch boundary
-        if prev is not None:
-            prev.unpersist()  # superseded state — k rows, but don't leak
     return state.select("vec_id", F.round("cosine_raw", 4).alias("cosine"))
 
 

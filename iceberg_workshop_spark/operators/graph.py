@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import persist, register
 from iceberg_workshop_spark.sources.tables import load
 
 _P = "iws_gr_"
@@ -100,13 +100,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     for n in ("lineitem", "orders", "customer", "supplier", "nation"):
         df = load(spark, sf_dir, n)
         df.createOrReplaceTempView(f"{_P}{n}")
-    edges = spark.sql(_EDGES.format(t=_P)).persist()
+    edges = persist(spark.sql(_EDGES.format(t=_P)))
     outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("ow"))
-    nodes = (
+    nodes = persist(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     scores = nodes.select("node", F.lit(1000000000).cast("bigint").alias("score"))
     ew = edges.join(outw, "src")
@@ -126,18 +125,9 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(150000000 + (85 * COALESCE(contrib, 0)) div 100 AS BIGINT)"
             ).alias("score"),
         )
-    out = scores.select(
+    return scores.select(
         F.col("node").alias("nationkey"), F.col("score").alias("pagerank_scaled")
     ).orderBy(F.col("pagerank_scaled").desc(), "nationkey")
-    # Persists are invocation-scoped (bench contract): checkpoint the
-    # 25-row result eagerly, then release the edge/node caches —
-    # returned lazy, they stayed in the CacheManager for the rest of
-    # the session and later invocations silently reused the first
-    # run's materialized blocks.
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    nodes.unpersist()
-    return out
 
 
 # Edge list + degree-oriented exact wedge count over an arbitrary
@@ -249,7 +239,7 @@ SELECT (SELECT COUNT(*) FROM pairs) AS n_edges,
 )
 
 
-def _tri_stats(edges: DataFrame, releases: list) -> tuple[DataFrame, DataFrame]:
+def _tri_stats(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """LAZY (deg, one-row tri-count) frames for one distinct edge set.
 
     Triangle count via out-adjacency intersection (the compact-forward
@@ -270,34 +260,30 @@ def _tri_stats(edges: DataFrame, releases: list) -> tuple[DataFrame, DataFrame]:
     staged this as ~10 sequential eager localCheckpoint jobs and the
     lost stage overlap made the query SLOWER on 32 cores — 32c/8c
     scaling ratio 1.44), full lineage (fault-tolerant at scale, unlike
-    localCheckpoint) and MEMORY_AND_DISK spill. Frames are appended to
-    ``releases`` so the caller unpersists them after its one action.
+    localCheckpoint) and MEMORY_AND_DISK spill.
     """
-    deg = (
+    deg = persist(
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
     )
     du = deg.select(F.col("node").alias("u_node"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v_node"), F.col("d").alias("dv"))
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = persist(
         edges.join(du, F.col("u") == F.col("u_node"))
         .join(dv, F.col("v") == F.col("v_node"))
         .select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
-        .persist()
     )
-    adj = (
+    adj = persist(
         oriented.groupBy(F.col("s").alias("node"))
         .agg(F.collect_list("t").alias("nbrs"))
-        .persist()
     )
     a1 = adj.select(F.col("node").alias("n1"), F.col("nbrs").alias("nb1"))
     a2 = adj.select(F.col("node").alias("n2"), F.col("nbrs").alias("nb2"))
@@ -311,23 +297,19 @@ def _tri_stats(edges: DataFrame, releases: list) -> tuple[DataFrame, DataFrame]:
             ).alias("n_tri")
         )
     )
-    releases.extend([deg, oriented, adj])
     return deg, tri
 
 
-def _tri_frames(
-    spark: SparkSession, sf_dir: str, with_exact: bool
-) -> tuple[dict[str, DataFrame], list]:
+def _tri_frames(spark: SparkSession, sf_dir: str, with_exact: bool) -> dict[str, DataFrame]:
     """Shared lazy building blocks for both triangle queries.
 
     Returns ``{pairs, samp, deg, tri, s_tri}`` (``deg``/``tri`` only
-    when ``with_exact``) plus the list of persisted frames the caller
-    must release after its single materializing action. Everything is
-    LAZY: one final action evaluates the whole DAG, AQE overlapping
-    the exact and sampled branches across all cores (guide §2.6),
-    versus round-14's serial eager-checkpoint staging that also pinned
-    ~10 ``iws_gr_*`` temp views over checkpointed RDDs for the rest of
-    the session (the q_llm family ran with that pinned; VERDICT r14).
+    when ``with_exact``). Everything is LAZY: one final action
+    evaluates the whole DAG, AQE overlapping the exact and sampled
+    branches across all cores (guide §2.6), versus round-14's serial
+    eager-checkpoint staging that also pinned ~10 ``iws_gr_*`` temp
+    views over checkpointed RDDs for the rest of the session (the
+    q_llm family ran with that pinned; VERDICT r14).
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.select(
@@ -336,19 +318,17 @@ def _tri_frames(
     b = li.select(
         F.col("l_orderkey").alias("ok_b"), F.col("l_partkey").alias("v")
     )
-    pairs = (
+    pairs = persist(
         a.join(b, (F.col("ok") == F.col("ok_b")) & (F.col("u") < F.col("v")))
         .select("u", "v")
         .distinct()
-        .persist()
     )
-    samp = pairs.where(F.expr(f"{_HEX_SPARK} % {_SAMPLE_P_INV} = 0")).persist()
-    releases: list = [pairs, samp]
+    samp = persist(pairs.where(F.expr(f"{_HEX_SPARK} % {_SAMPLE_P_INV} = 0")))
     out: dict[str, DataFrame] = {"pairs": pairs, "samp": samp}
     if with_exact:
-        out["deg"], out["tri"] = _tri_stats(pairs, releases)
-    _, out["s_tri"] = _tri_stats(samp, releases)
-    return out, releases
+        out["deg"], out["tri"] = _tri_stats(pairs)
+    _, out["s_tri"] = _tri_stats(samp)
+    return out
 
 
 @register(
@@ -381,11 +361,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     its error certificate: ``est_triangles`` replays the sampled
     estimator next to the exact count and ``est_err_pct`` is the
     in-query relative error, both deterministic in either engine."""
-    fr, releases = _tri_frames(spark, sf_dir, with_exact=True)
+    fr = _tri_frames(spark, sf_dir, with_exact=True)
     # One-row stats assembled by crossJoin of one-row aggregates so the
     # WHOLE pipeline — both edge sets' degree/orientation/adjacency/
-    # intersection branches — evaluates in ONE action (the eager
-    # checkpoint below), instead of one scalar-subquery job per stat.
+    # intersection branches — evaluates in ONE action (the registry's
+    # eager checkpoint), instead of one scalar-subquery job per stat.
     # Expressions mirror the oracle's scalar subqueries verbatim
     # (SUM over an empty deg is NULL → CASE falls through to a NULL
     # quotient, exactly like the SQL form).
@@ -396,7 +376,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge_cnt = fr["pairs"].agg(F.count(F.lit(1)).alias("n_edges"))
     tri = fr["tri"].withColumnRenamed("n_tri", "n_triangles")
     s_tri = fr["s_tri"].withColumnRenamed("n_tri", "s_n_tri")
-    out = (
+    return (
         deg_agg.crossJoin(edge_cnt)
         .crossJoin(tri)
         .crossJoin(s_tri)
@@ -420,10 +400,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("est_err_pct"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    for df in releases:
-        df.unpersist()
-    return out
 
 
 @register(
@@ -448,11 +424,11 @@ def q_graph_triangles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge key, so the oracle replays it bit-for-bit; the error-
     vs-exact certificate lives in the baseline-only
     ``q_graph_triangles``."""
-    fr, releases = _tri_frames(spark, sf_dir, with_exact=False)
+    fr = _tri_frames(spark, sf_dir, with_exact=False)
     edge_cnt = fr["pairs"].agg(F.count(F.lit(1)).alias("n_edges"))
     samp_cnt = fr["samp"].agg(F.count(F.lit(1)).alias("n_edges_sampled"))
     s_tri = fr["s_tri"].withColumnRenamed("n_tri", "n_tri_sampled")
-    out = (
+    return (
         edge_cnt.crossJoin(samp_cnt)
         .crossJoin(s_tri)
         .select(
@@ -464,7 +440,3 @@ def q_graph_triangles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("est_triangles"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    for df in releases:
-        df.unpersist()
-    return out

@@ -20,7 +20,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import persist, register
 from iceberg_workshop_spark.sources.tables import load
 
 _SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
@@ -249,16 +249,14 @@ def q_scan_csv_dirty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     schema = "k int, v string, _corrupt_record string"
-    permissive = (
+    permissive = persist(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(out)
-        .cache()
     )
     n_corrupt = permissive.filter(F.col("_corrupt_record").isNotNull()).count()
     n_good = permissive.filter(F.col("_corrupt_record").isNull()).count()
-    permissive.unpersist()
     return spark.createDataFrame(
         [
             ("corrupt_rows", n_corrupt),

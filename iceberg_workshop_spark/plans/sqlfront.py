@@ -2958,7 +2958,6 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side row movement.)"""
     from iceberg_workshop_spark.sources.tables import load
 
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load(spark, sf_dir, "orders").createOrReplaceTempView("iws_script_orders")
     return spark.sql(
         """

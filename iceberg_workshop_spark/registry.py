@@ -17,8 +17,12 @@ Hash-stability conventions (SURVEY.md §5.3):
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+import functools
 import importlib
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -124,21 +128,102 @@ def guard_axis(axis: DataFrame, query: str, max_grid: int) -> DataFrame:
     )
 
 
+@dataclass
+class _Scope:
+    frames: list[DataFrame] = field(default_factory=list)
+    confs: dict[str, str | None] = field(default_factory=dict)
+
+
+_SCOPE: contextvars.ContextVar[_Scope | None] = contextvars.ContextVar(
+    "iws_invocation", default=None
+)
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` until the current invocation returns.
+
+    Persists are invocation-scoped: Spark's CacheManager keys on the
+    canonicalized plan, so a frame left cached would make later
+    invocations of the same query silently read this run's blocks.
+    Outside an invocation the frame comes back unpersisted, so a helper
+    called directly (from a test) cannot leak a cache either.
+    """
+    scope = _SCOPE.get()
+    if scope is None:
+        return df
+    scope.frames.append(df.persist())
+    return df
+
+
+def set_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set a session conf until the current invocation returns, when
+    its prior value (or unset state) comes back, failures included."""
+    scope = _SCOPE.get()
+    if scope is None:
+        raise RuntimeError(
+            f"set_conf({key!r}) outside an invocation would leave the "
+            "conf changed; call it from a registered query or inside "
+            "registry.invocation()"
+        )
+    scope.confs.setdefault(key, spark.conf.get(key, None))
+    spark.conf.set(key, value)
+
+
+@contextlib.contextmanager
+def invocation(spark: SparkSession) -> Iterator[_Scope]:
+    """One invocation scope: on exit, normal or not, unpersist every
+    ``persist`` frame, restore every ``set_conf`` key and drop every
+    local temp view created inside. Frames built over a dropped view
+    stay valid (their plans are analyzed). Scopes nest; each releases
+    only what was taken inside it. Assumes one thread per session:
+    views another thread creates meanwhile would be dropped too."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    views = catalog.listLocalTempViews("*")
+    scope = _Scope()
+    token = _SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _SCOPE.reset(token)
+        for df in scope.frames:
+            df.unpersist()
+        for key, prior in scope.confs.items():
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
+        new = catalog.listLocalTempViews("*").diff(views)
+        for i in range(new.size()):
+            catalog.dropTempView(new.apply(i).table())
+
+
 def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     """Register a query; ``oracle=None`` means rows-only driver check.
-    ``tags`` attaches advisory metadata (see ``TAGS``)."""
+    ``tags`` attaches advisory metadata (see ``TAGS``).
+
+    Every call runs in its own ``invocation`` scope. A query that
+    persisted anything gets its result checkpointed (one eager job)
+    before the scope releases the frames the result was built from."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def scoped(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            with invocation(spark) as scope:
+                out = fn(spark, *args, **kwargs)
+                if scope.frames:
+                    out = out.localCheckpoint(eager=True)
+                return out
+
+        QUERIES[name] = scoped
         if oracle is not None:
             ORACLES[name] = oracle
         if tags:
             TAGS[name] = frozenset(tags)
-        return fn
+        return scoped
 
     return deco
 

@@ -39,7 +39,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import register, set_conf
 
 SEQ_ROWS = 10_000
 SEQ_PARTS = 8
@@ -706,8 +706,10 @@ def q_source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pushdown_applied`` column is bool_and of a reader-side flag, so
     the oracle match PROVES the filter reached the source (scan-side
     pruning, the q_scan_pruned contract, extended to user-defined
-    sources)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    sources). The pushdown conf holds for this invocation only, and
+    the optimizer reads it when the plan executes, so the one-row
+    result is checkpointed before the conf goes back."""
+    set_conf(spark, "spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(BucketPushDataSource)
     df = (
         spark.read.format("iws_bucketed")
@@ -723,4 +725,4 @@ def q_source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("i").alias("max_i"),
         F.bool_and("pruned").alias("pushdown_applied"),
         F.min("h").alias("min_h"),
-    )
+    ).localCheckpoint(eager=True)

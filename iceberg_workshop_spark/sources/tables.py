@@ -52,6 +52,16 @@ def ensure_utc_session(spark: SparkSession) -> None:
     spark.conf.set(key, "UTC")
 
 
+def read_nanos_as_long(spark: SparkSession) -> None:
+    """Surface parquet TIMESTAMP(NANOS) columns (``events.ts``) as raw
+    longs. The driver may hand us a session built without this conf;
+    it is runtime-settable, so it is pinned here rather than only in
+    our own session factory. Session-wide on purpose, never
+    invocation-scoped: memoized plans re-read the file at execution
+    time, after the invocation that built them has returned."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 # Memoized fixture scan PLANS (never results): building the reader —
 # footer schema inference + file-index listing — costs ~110 ms per
 # call on the bench host, and nearly every one of the ~370 registry
@@ -61,9 +71,11 @@ def ensure_utc_session(spark: SparkSession) -> None:
 # still scans the parquet from disk, so no data or result is reused
 # across invocations. Keyed by session (the driver hands us its own)
 # and sf_dir; fixture files are read-only for a process's lifetime.
+# Values are (plan, needs_utc): needs_utc marks a plan with an NTZ→LTZ
+# cast that is only value-preserving under a UTC session.
 import weakref
 
-_LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
+_LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], tuple[DataFrame, bool]]]" = (
     weakref.WeakKeyDictionary()
 )
 
@@ -91,10 +103,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ensure_utc_session(spark)
         return df
     if name == "events":
-        # The driver may hand us a session built without this conf;
-        # it is runtime-settable, so pin it here rather than only in
-        # our own session factory.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        read_nanos_as_long(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

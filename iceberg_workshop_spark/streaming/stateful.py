@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.exprs import dsum
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import register, set_conf
+from iceberg_workshop_spark.sources.tables import read_nanos_as_long
 
 _sink_ids = itertools.count()
 
@@ -35,7 +36,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # physical timestamp encoding the fixture generator used
     # (TIMESTAMP(NANOS)-as-long under nanosAsLong, or plain
     # timestamp[us] → TIMESTAMP_NTZ).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read_nanos_as_long(spark)
     probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     # The file-stream source requires a directory; select just the
     # events table out of the fixture dir with a glob filter.
@@ -71,30 +72,28 @@ def _drain(
     fixed cost dominates a drain (measured 17 s → 3 s on the
     stream-stream join at 8). Streaming partition count should track
     state volume, not core count, so the drain pins a smaller value
-    while the query runs (env-tunable for a real cluster, where a
-    checkpoint's partitioning is sticky anyway) and restores the batch
-    conf after."""
+    for the rest of the invocation (env-tunable for a real cluster,
+    where a checkpoint's partitioning is sticky anyway)."""
     sess = stream_df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prior = sess.conf.get(key)
     name = f"iws_stream_sink_{next(_sink_ids)}"
-    sess.conf.set(key, os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    try:
-        query = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option(
-                "checkpointLocation",
-                checkpoint or tempfile.mkdtemp(prefix="iws_ckpt_"),
-            )
-            .trigger(availableNow=True)
-            .start()
+    set_conf(
+        sess,
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+    )
+    query = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option(
+            "checkpointLocation",
+            checkpoint or tempfile.mkdtemp(prefix="iws_ckpt_"),
         )
-        query.awaitTermination()
-    finally:
-        sess.conf.set(key, prior)
-    return stream_df.sparkSession.table(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return sess.table(name)
 
 
 @register(
@@ -715,49 +714,36 @@ def q_stream_agg_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the changelog makes commits O(delta), not O(state). Results
     must be indistinguishable from the default provider (pinned by the
     same batch oracle), because the provider is purely a state-backend
-    swap. Conf is scoped to this query and restored after — provider
-    choice is sticky per checkpoint in production, so a real cluster
-    sets it once at job start."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    ckey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    prior = spark.conf.get(key, None)
-    cprior = spark.conf.get(ckey, None)
-    spark.conf.set(
-        key,
+    swap. Both confs hold for this invocation only — provider choice
+    is sticky per checkpoint in production, so a real cluster sets it
+    once at job start. The complete-mode memory sink is materialized
+    rows, so the returned plan does not depend on either conf."""
+    set_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
     )
-    spark.conf.set(ckey, "true")
-    try:
-        agg = (
-            _events_stream(spark, sf_dir)
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.collect_set("user_id").alias("users"),
-            )
+    set_conf(
+        spark,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true",
+    )
+    agg = (
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.collect_set("user_id").alias("users"),
         )
-        sink = _drain(agg, "complete")
-        out = sink.select(
-            F.col("w.start").alias("window_start"),
-            "n_events",
-            F.size("users").cast("bigint").alias("n_users"),
-        ).orderBy("window_start")
-        # complete-mode memory sink is already materialized; localCheckpoint
-        # pins the rows so conf restoration cannot affect the plan.
-        return out.localCheckpoint(eager=True)
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-        # restore (not blindly unset) the changelog conf too — a
-        # session that set it explicitly keeps its setting
-        if cprior is None:
-            spark.conf.unset(ckey)
-        else:
-            spark.conf.set(ckey, cprior)
+    )
+    sink = _drain(agg, "complete")
+    return sink.select(
+        F.col("w.start").alias("window_start"),
+        "n_events",
+        F.size("users").cast("bigint").alias("n_users"),
+    ).orderBy("window_start")
 
 
 @register(

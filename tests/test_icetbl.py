@@ -485,6 +485,7 @@ def test_ice_stream_source_skips_or_rejects_rewrites(spark, tmp_table_dir):
     assert rows == 160
 
     spark.dataSource.register(IceStreamDataSource)
+    from iceberg_workshop_spark.registry import invocation
     from iceberg_workshop_spark.streaming.stateful import _drain
 
     src = (
@@ -493,7 +494,8 @@ def test_ice_stream_source_skips_or_rejects_rewrites(spark, tmp_table_dir):
         .option("skip_non_append", "true")
         .load()
     )
-    out = _drain(src.agg(F.count(F.lit(1)).alias("n")), "complete")
+    with invocation(spark):
+        out = _drain(src.agg(F.count(F.lit(1)).alias("n")), "complete")
     assert out.collect()[0]["n"] == 160
 
 

@@ -263,11 +263,13 @@ def test_cc_min_label_deep_chain_converges(spark):
     must fully propagate to ONE cluster labeled by the min node —
     the silent-partial-merge regression guard for _cc_min_label."""
     from iceberg_workshop_spark.llm.dedup import _cc_min_label
+    from iceberg_workshop_spark.registry import invocation
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 20)], ["doc_a", "doc_b"]
     )
-    rows = _cc_min_label(pairs).orderBy("doc_id").collect()
+    with invocation(spark):
+        rows = _cc_min_label(pairs).orderBy("doc_id").collect()
     assert [r["doc_id"] for r in rows] == list(range(1, 21))
     assert {r["cluster_id"] for r in rows} == {1}
 
@@ -278,11 +280,12 @@ def test_cc_min_label_unconverged_raises(spark, monkeypatch):
     import pytest as _pytest
 
     from iceberg_workshop_spark.llm.dedup import _cc_min_label
-    from iceberg_workshop_spark.registry import QueryInvariantError
+    from iceberg_workshop_spark.registry import QueryInvariantError, invocation
 
     monkeypatch.setenv("SPARK_GRAFT_CC_MAX_ITERS", "3")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 20)], ["doc_a", "doc_b"]
     )
     with _pytest.raises(QueryInvariantError, match="did not converge"):
-        _cc_min_label(pairs).collect()
+        with invocation(spark):
+            _cc_min_label(pairs).collect()

@@ -108,15 +108,10 @@ def test_band_pairs_materialization_keeps_pairs(spark):
     buckets = spark.createDataFrame(
         rows, "doc_id long, band_id int, sig string"
     )
-    releases: list = []
     got = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in _band_pairs(buckets, releases).collect()
+        (r["doc_a"], r["doc_b"]) for r in _band_pairs(buckets).collect()
     )
-    for df in releases:
-        df.unpersist()
     assert got == [(1, 2), (1, 4)]
-    assert releases, "_band_pairs must hand back its persisted frame"
 
 
 def test_load_memoization_plan_only_and_keyed(spark):
@@ -143,20 +138,3 @@ def test_load_memoization_plan_only_and_keyed(spark):
         b = load(spark, sf_small, "nation")
         assert b is not a1
         assert b.count() > 0
-
-
-def test_prefix_filter_persists_released(spark):
-    # containment_prefix persists shingles/ranked/cand frames and must
-    # release every one after its eager checkpoint — a leak would grow
-    # executor storage monotonically across invocations in a
-    # long-lived session. CacheManager-level persists must net to
-    # zero (localCheckpoint blocks are RDD-level, not CacheManager).
-    from iceberg_workshop_spark.registry import queries
-
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    before_empty = cm.isEmpty()
-    queries()["q_llm_dedup_containment_prefix"](spark, SF_DIR)
-    if before_empty:
-        assert cm.isEmpty(), (
-            "q_llm_dedup_containment_prefix left DataFrames persisted"
-        )

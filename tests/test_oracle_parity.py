@@ -1,5 +1,7 @@
 """Every registered query vs its DuckDB oracle at sf0.01 — the local
-mirror of the driver's t2 gate."""
+mirror of the driver's t2 gate — and the registry-wide session gate:
+each invocation must leave no cached frame, no temp view and no
+changed conf behind."""
 
 from __future__ import annotations
 
@@ -15,10 +17,19 @@ def _all_query_names():
     return sorted(queries())
 
 
+def _temp_views(spark) -> set[str]:
+    seq = spark._jsparkSession.sessionState().catalog().listLocalTempViews("*")
+    return {seq.apply(i).table() for i in range(seq.size())}
+
+
 @pytest.mark.parametrize("name", _all_query_names())
 def test_query_matches_oracle(spark, oracle, name):
     from iceberg_workshop_spark.registry import oracle_sql, queries
 
+    # Start from an empty CacheManager so the leak check below cannot
+    # pass vacuously after an earlier test left something cached.
+    spark.catalog.clearCache()
+    views, confs = _temp_views(spark), dict(spark.conf.getAll)
     df = queries()[name](spark, SF_DIR)
     # Driver-canonicalizer contract: no raw ARRAY/MAP result columns —
     # the driver's pandas lexsort cannot hash them (round-8
@@ -34,6 +45,18 @@ def test_query_matches_oracle(spark, oracle, name):
         f"the driver's hashability contract; serialize them to strings"
     )
     spark_pdf = df.toPandas()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left DataFrames persisted"
+    )
+    leaked = _temp_views(spark) - views
+    assert not leaked, f"{name} left temp views {sorted(leaked)}"
+    after = dict(spark.conf.getAll)
+    changed = {
+        k: (confs.get(k), after.get(k))
+        for k in confs.keys() | after.keys()
+        if confs.get(k) != after.get(k)
+    }
+    assert not changed, f"{name} left confs changed: {changed}"
     sql = oracle_sql().get(name)
     if sql is None:
         # rows-only check (driver's weak path) — pin non-empty output
