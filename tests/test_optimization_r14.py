@@ -138,3 +138,21 @@ def test_load_memoization_plan_only_and_keyed(spark):
         b = load(spark, sf_small, "nation")
         assert b is not a1
         assert b.count() > 0
+
+
+def test_prefix_filter_persists_released(spark):
+    # containment_prefix persists shingles/ranked/cand frames; the
+    # invocation scope must release every one when the call returns —
+    # a leak would grow executor storage monotonically across
+    # invocations in a long-lived session. CacheManager-level persists
+    # must net to zero (localCheckpoint blocks are RDD-level, not
+    # CacheManager). The cache is cleared first so the check cannot
+    # pass vacuously.
+    from iceberg_workshop_spark.registry import queries
+
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    queries()["q_llm_dedup_containment_prefix"](spark, SF_DIR)
+    assert cm.isEmpty(), (
+        "q_llm_dedup_containment_prefix left DataFrames persisted"
+    )

@@ -1,17 +1,17 @@
-"""Focused tests for the round-15 optimization changes.
+"""Release checks for the triangle, dedup and graph queries.
 
-Round 15 re-adjudicated the round-14 eager-checkpoint/persist staging
-(VERDICT r14 "Next round" #2-#4):
+1. The triangle queries must not leave session-lifetime ``iws_gr_*``
+   temp views over checkpointed RDDs behind — such a view would pin the
+   full edge set in executor storage for every query that runs after
+   them. They must leave the temp-view catalog and the CacheManager
+   exactly as they found them.
+2. Every dedup/graph query that persists intermediates must have them
+   released when the call returns (persists are invocation-scoped — the
+   bench re-invokes queries, and a leaked persist makes later
+   invocations silently reuse the first run's materialized cache).
 
-1. The triangle queries no longer register session-lifetime
-   ``iws_gr_*`` temp views over checkpointed RDDs — the staged form
-   pinned the full edge set in executor storage for every query that
-   ran after them. They must leave the temp-view catalog and the
-   CacheManager exactly as they found it.
-2. Every dedup/graph query that persists intermediates must release
-   them before returning (persists are invocation-scoped — the bench
-   re-invokes queries, and a leaked persist makes later invocations
-   silently reuse the first run's materialized cache).
+Each test clears the cache first so the empty-CacheManager check
+cannot pass vacuously.
 """
 
 from __future__ import annotations
@@ -33,8 +33,8 @@ def test_triangles_leave_no_temp_view_pins(spark):
     from iceberg_workshop_spark.registry import queries
 
     qs = queries()
+    spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
-    before_empty = cm.isEmpty()
     before_views = set(_iws_gr_views(spark))
     row = qs["q_graph_triangles"](spark, SF_DIR).collect()[0]
     assert row["n_triangles"] >= 0 and row["n_edges"] > 0
@@ -43,8 +43,7 @@ def test_triangles_leave_no_temp_view_pins(spark):
     assert set(_iws_gr_views(spark)) == before_views, (
         "triangle queries must not register staged temp views"
     )
-    if before_empty:
-        assert cm.isEmpty(), "triangle queries left DataFrames persisted"
+    assert cm.isEmpty(), "triangle queries left DataFrames persisted"
 
 
 @pytest.mark.parametrize(
@@ -60,14 +59,12 @@ def test_triangles_leave_no_temp_view_pins(spark):
 )
 def test_query_releases_every_persist(spark, name):
     # Same pin as test_prefix_filter_persists_released, extended to
-    # every query the round-14/15 audits found persisting frames into
-    # a LAZILY returned plan (or releasing only part of what the
-    # banding helpers now persist). CacheManager-level persists must
-    # net to zero per invocation.
+    # every query that persists frames into a lazily returned plan or
+    # through the banding helpers. CacheManager-level persists must net
+    # to zero per invocation.
     from iceberg_workshop_spark.registry import queries
 
+    spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
-    before_empty = cm.isEmpty()
     queries()[name](spark, SF_DIR)
-    if before_empty:
-        assert cm.isEmpty(), f"{name} left DataFrames persisted"
+    assert cm.isEmpty(), f"{name} left DataFrames persisted"
