@@ -157,13 +157,15 @@ def q_udtf_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for w in text.split(" "):
                     yield doc_id, w
 
-    docs = load(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("iws_docs_udtf")
-    spark.udtf.register("iws_word_splitter", WordSplitter)
-    return spark.sql(
-        "SELECT s.doc_id, s.word FROM iws_docs_udtf d, "
-        "LATERAL iws_word_splitter(d.doc_id, d.text) s"
-    ).orderBy("doc_id", "word")
+    # Called through DataFrame.lateralJoin with outer() references, the
+    # UDTF object runs without a session registration or temp view.
+    d = load(spark, sf_dir, "documents").alias("d")
+    words = WordSplitter(F.col("d.doc_id").outer(), F.col("d.text").outer())
+    return (
+        d.lateralJoin(words.alias("s"))
+        .select("s.doc_id", "s.word")
+        .orderBy("doc_id", "word")
+    )
 
 
 @register(

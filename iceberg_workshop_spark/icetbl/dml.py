@@ -22,26 +22,17 @@ files, not the table.
 
 from __future__ import annotations
 
-import urllib.parse
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from iceberg_workshop_spark.icetbl.morread import canon_path
 from iceberg_workshop_spark.icetbl.pruning import Pred, prune_files
-from iceberg_workshop_spark.icetbl.table import IceTable, _pred_to_column
-
-
-def _norm_path(spark_file_path: str) -> str:
-    """_metadata.file_path is a Hadoop URI: strip the scheme AND
-    percent-decode (a space in the table location arrives as %20 —
-    comparing the raw .path against os.path file paths silently
-    misses every file under such a location)."""
-    return urllib.parse.unquote(urllib.parse.urlparse(spark_file_path).path)
+from iceberg_workshop_spark.icetbl.table import IceTable
 
 
 def _affected_paths(df_with_fp: DataFrame) -> set[str]:
     rows = df_with_fp.select("__fp").distinct().collect()
-    return {_norm_path(r["__fp"]) for r in rows}
+    return {canon_path(r["__fp"]) for r in rows}
 
 
 def _with_fp(tbl: IceTable, files: list[dict]) -> DataFrame:
@@ -148,12 +139,7 @@ def _cow_rebase(
                 "isolation validation: files this operation rewrote were "
                 "removed by a concurrent commit — re-plan required"
             )
-        cur = fresh_meta.current_snapshot_id
-        fresh_dels = (
-            fresh_meta.delete_entries(fresh_meta.snapshot(cur))
-            if cur is not None
-            else []
-        )
+        fresh_dels = fresh_meta.current_deletes()
         for d in fresh_dels:
             if _del_entry_key(d) in base_del_keys:
                 continue  # read through at plan time
@@ -249,12 +235,7 @@ def _mor_append_rebase(
                 "rewrote data files this operation's delete sidecars "
                 "target — re-plan required"
             )
-        cur = fresh_meta.current_snapshot_id
-        fresh_dels = (
-            fresh_meta.delete_entries(fresh_meta.snapshot(cur))
-            if cur is not None
-            else []
-        )
+        fresh_dels = fresh_meta.current_deletes()
         if {_del_entry_key(d) for d in fresh_dels} != base_del_keys:
             raise M2.CommitConflict(
                 "merge-on-read rebase: a concurrent commit changed the "
@@ -515,6 +496,23 @@ def _write_delete_sidecar(tbl: IceTable, prefix: str, df: DataFrame):
     return paths, content.num_rows, content
 
 
+def _require_key_set(tbl: IceTable, keys: list[str]) -> None:
+    """All equality deletes of a table share one key set (order-
+    insensitive): the reader anti-joins every delete file on the same
+    columns, so a new delete keyed differently must be refused."""
+    for d in _current_deletes(tbl):
+        if d.get("kind", "eq") != "eq":
+            continue
+        cur = tbl._eq_delete_current_keys(d)
+        if sorted(cur) != sorted(keys):
+            raise ValueError(
+                "equality-delete key set mismatch: table already "
+                f"carries deletes keyed on {cur}, got {list(keys)}; "
+                "run rewrite_equality_deletes() first to materialize "
+                "the old deletes before changing the key set"
+            )
+
+
 def delete_where_mor(
     tbl: IceTable, condition: str, keys: list[str]
 ) -> dict[str, int]:
@@ -522,7 +520,7 @@ def delete_where_mor(
     rewriting affected data files (CoW, `delete_where`), write a tiny
     parquet of the matching key tuples and commit it as an
     equality-delete file. Readers anti-join it against strictly older
-    data (sequence rule in ``IceTable._apply_deletes``); a later
+    data (sequence rule in ``morread.read_with_deletes``); a later
     `rewrite_equality_deletes` materializes and drops it.
 
     At 100 TB this is the low-latency delete path: the commit cost is
@@ -533,20 +531,7 @@ def delete_where_mor(
     enforced loudly here, because the reader resolves the key columns
     from a single entry and a silently-mixed key set would misapply
     every later delete."""
-    if tbl.meta.current_snapshot_id is not None:
-        for d in tbl.meta.delete_entries(
-            tbl.meta.snapshot(tbl.meta.current_snapshot_id)
-        ):
-            if d.get("kind", "eq") == "eq" and sorted(
-                tbl._eq_delete_current_keys(d)
-            ) != sorted(keys):
-                raise ValueError(
-                    "equality-delete key set mismatch: table already "
-                    "carries deletes keyed on "
-                    f"{tbl._eq_delete_current_keys(d)}, got {list(keys)}; "
-                    "run rewrite_equality_deletes() first to materialize "
-                    "the old deletes before changing the key set"
-                )
+    _require_key_set(tbl, keys)
     matching = tbl.read().filter(condition).select(*keys).distinct()
     return _commit_eq_delete(tbl, matching, keys)
 
@@ -561,31 +546,14 @@ def delete_keys_mor(
     protocol, same sequence rule; commit cost is O(|keys|) regardless
     of table size — the index-maintenance primitive a derived table
     (e.g. a persisted ANN index) needs to track its base's deletes."""
-    if tbl.meta.current_snapshot_id is not None:
-        for d in tbl.meta.delete_entries(
-            tbl.meta.snapshot(tbl.meta.current_snapshot_id)
-        ):
-            if d.get("kind", "eq") == "eq" and sorted(
-                tbl._eq_delete_current_keys(d)
-            ) != sorted(keys):
-                raise ValueError(
-                    "equality-delete key set mismatch: table already "
-                    "carries deletes keyed on "
-                    f"{tbl._eq_delete_current_keys(d)}, got {list(keys)}; "
-                    "run rewrite_equality_deletes() first to materialize "
-                    "the old deletes before changing the key set"
-                )
+    _require_key_set(tbl, keys)
     # Validate the caller's key column TYPES against the table schema
     # at write time: the read-time anti-join compares sidecar columns
     # to table columns, and a mistyped key (string keys against a
     # bigint column) would rely on implicit casts that can silently
     # fail to match — resurrecting deleted rows — instead of erroring
     # here where the bad feed is visible.
-    from pyspark.sql.types import StructType
-
-    declared = {
-        f.name: f.dataType for f in StructType.fromDDL(tbl.meta.schema_ddl).fields
-    }
+    declared = tbl._types()
     got = {f.name: f.dataType for f in keys_df.select(*keys).schema.fields}
     for k in keys:
         if k not in declared:
@@ -613,7 +581,7 @@ def _commit_eq_delete(
     # N concurrent append winners. After a rebase the delete's dseq can
     # therefore equal (collide with) winner #1's data sequence — that
     # is the intent: equality deletes apply only to STRICTLY older data
-    # (see `IceTable._apply_deletes`), so winner rows survive, giving
+    # (see `morread.read_with_deletes`), so winner rows survive, giving
     # the serializable order delete-then-append. The resulting
     # invariant — an entry's dseq may be LESS than its committing
     # snapshot's own sequence number — is pinned by
@@ -623,11 +591,7 @@ def _commit_eq_delete(
         {"path": p, "record_count": n_keys, "keys": list(keys), "dseq": dseq}
         for p in paths
     ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
+    existing = _current_deletes(tbl)
     # Delta commit: the head's data AND delete manifests carry by
     # reference; only the new sidecar entries are written — the commit
     # never materializes the live file list (O(|keys|) at any table
@@ -698,6 +662,35 @@ def insert_overwrite(tbl: IceTable, df: DataFrame) -> dict[str, int]:
 IceTable.insert_overwrite = insert_overwrite
 
 
+def _pos_entries(
+    tbl: IceTable,
+    paths: list[str],
+    n_pos: int,
+    content,
+    dseq: int | None = None,
+) -> list[dict]:
+    """Manifest entries for freshly written positional-delete sidecars
+    (``dseq`` defaults to the next sequence number). Each records its
+    TARGET data files (Iceberg keeps the same information in manifest
+    stats): readers apply the (path, pos) anti-join only to the named
+    files and scan every other file clean. Metadata-scale: one
+    canonical path per touched file."""
+    uris = content.column("file_path").unique().to_pylist()
+    target_paths = sorted({canon_path(u) for u in uris})
+    if dseq is None:
+        dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
+    return [
+        {
+            "path": p,
+            "record_count": n_pos,
+            "kind": "pos",
+            "dseq": dseq,
+            "target_paths": target_paths,
+        }
+        for p in paths
+    ]
+
+
 def delete_where_pos(tbl: IceTable, condition: str) -> dict[str, int]:
     """Merge-on-read DELETE via Iceberg v2 POSITIONAL delete files
     (`sql/update_iceberg_v2_examples.sql:1-18` is the v2 row-level-ops
@@ -740,34 +733,8 @@ def delete_where_pos(tbl: IceTable, condition: str) -> dict[str, int]:
     paths, n_pos, content = _write_delete_sidecar(
         tbl, "posdel", matching.orderBy("file_path", "pos")
     )
-    # Record the delete's TARGET data files on the entry (Iceberg
-    # keeps the same information in manifest stats): readers then
-    # apply the (path, pos) anti-join only to the named files and
-    # scan every other file clean — no _metadata generation, no
-    # anti-join on the untouched part of the table. Metadata-scale:
-    # one normalized path per touched file.
-    target_paths = sorted(
-        {
-            _norm_path(u)
-            for u in content.column("file_path").unique().to_pylist()
-        }
-    )
-    dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
-    entries = [
-        {
-            "path": p,
-            "record_count": n_pos,
-            "kind": "pos",
-            "dseq": dseq,
-            "target_paths": target_paths,
-        }
-        for p in paths
-    ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
+    entries = _pos_entries(tbl, paths, n_pos, content)
+    existing = _current_deletes(tbl)
     tbl._commit_snapshot_delta(
         [],
         [],
@@ -830,28 +797,8 @@ def update_where_mor(
         # nothing matched: drop the empty sidecar-dir artifacts and
         # leave the table untouched (no empty commit)
         return {"positions_deleted": 0, "files_added": 0}
-    target_paths = sorted(
-        {
-            _norm_path(u)
-            for u in content.column("file_path").unique().to_pylist()
-        }
-    )
-    dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
-    entries = [
-        {
-            "path": p,
-            "record_count": n_pos,
-            "kind": "pos",
-            "dseq": dseq,
-            "target_paths": target_paths,
-        }
-        for p in paths
-    ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
+    entries = _pos_entries(tbl, paths, n_pos, content)
+    existing = _current_deletes(tbl)
     tbl._commit_snapshot_delta(
         new_files,
         [],
@@ -949,30 +896,8 @@ def merge_into_mor(
     finally:
         if live is not None:
             live.unpersist()
-    entries: list[dict] = []
-    if n_pos:
-        target_paths = sorted(
-            {
-                _norm_path(u)
-                for u in content.column("file_path").unique().to_pylist()
-            }
-        )
-        dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
-        entries = [
-            {
-                "path": p,
-                "record_count": n_pos,
-                "kind": "pos",
-                "dseq": dseq,
-                "target_paths": target_paths,
-            }
-            for p in paths
-        ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
+    entries = _pos_entries(tbl, paths, n_pos, content) if n_pos else []
+    existing = _current_deletes(tbl)
     tbl._commit_snapshot_delta(
         new_files,
         [],

@@ -60,6 +60,18 @@ from pyspark.sql import types as T
 
 from iceberg_workshop_spark.icetbl import meta as M
 from iceberg_workshop_spark.icetbl.avroio import read_avro, write_avro
+from iceberg_workshop_spark.icetbl.morread import (
+    DeleteFile,
+    Opener,
+    bucket_expectations,
+    canon_path_col,
+    changelog,
+    pruned_scan,
+    read_with_deletes,
+    snapshot_as_of,
+    strip_scheme_col,
+)
+from iceberg_workshop_spark.icetbl.morread import strip_scheme as _strip_scheme
 
 # ------------------------------------------------------ schema mapping
 
@@ -1242,10 +1254,6 @@ def export_iceberg(
 # ------------------------------------------------------------- import
 
 
-def _strip_scheme(p: str) -> str:
-    return p[len("file:"):] if p.startswith("file:") else p
-
-
 _FROM_ICE = {
     "int": "int", "long": "bigint", "float": "float", "double": "double",
     "boolean": "boolean", "string": "string", "binary": "binary",
@@ -1540,7 +1548,7 @@ def _entries_distributed(
         key = (int(mf.get("content", 0)), int(mf.get("partition_spec_id", 0)))
         by_group.setdefault(key, []).append(mf)
     info_by_path = {
-        _canon_path(mf["manifest_path"]): (
+        os.path.abspath(_strip_scheme(mf["manifest_path"])): (
             int(mf.get("sequence_number", 0)),
             int(mf.get("partition_spec_id", 0)),
         )
@@ -1566,7 +1574,7 @@ def _entries_distributed(
             .load([_strip_scheme(m["manifest_path"]) for m in group])
             .select(
                 "status", "sequence_number", "data_file",
-                _canon_path_col(F.col("_metadata.file_path")).alias("__mf"),
+                canon_path_col(F.col("_metadata.file_path")).alias("__mf"),
             )
             .collect()
         )
@@ -1660,39 +1668,26 @@ def resolve_snapshot_at(doc: dict, as_of_ms: int) -> int:
     staged branch heads resolve correctly). Raises if the instant
     predates retained history or the resolved snapshot was expired —
     never silently returns other-era data (same contract as the
-    internal dialect's ``_resolve_snapshot``)."""
-    last = None
-    for h in doc.get("snapshot-log", []):
-        if int(h["timestamp-ms"]) <= as_of_ms:
-            last = h
-    if last is None:
+    internal dialect's ``_resolve_snapshot``; both resolve through
+    ``morread.snapshot_as_of``)."""
+    sid = snapshot_as_of(
+        (
+            (int(h["timestamp-ms"]), int(h["snapshot-id"]))
+            for h in doc.get("snapshot-log", [])
+        ),
+        as_of_ms,
+    )
+    if sid is None:
         raise ValueError(
             f"time travel to {as_of_ms}: no snapshot-log entry at or "
             "before that instant (predates retained history)"
         )
-    sid = int(last["snapshot-id"])
     if sid not in {int(s["snapshot-id"]) for s in doc.get("snapshots", [])}:
         raise ValueError(
             f"time travel to {as_of_ms}: snapshot {sid} was current at "
             "that instant but is no longer retained (expired)"
         )
     return sid
-
-
-def _require_retained(doc: dict, snapshot_id: int | None) -> None:
-    """An EXPLICITLY pinned snapshot id must exist in the retained
-    set — a pinned read of an expired snapshot raises instead of
-    silently returning an empty (other-era) result, the same contract
-    the managed dialect's pinned reads keep."""
-    if snapshot_id is None:
-        return
-    if int(snapshot_id) not in {
-        int(s["snapshot-id"]) for s in doc.get("snapshots", [])
-    }:
-        raise ValueError(
-            f"snapshot {snapshot_id} is not retained (expired or never "
-            "existed)"
-        )
 
 
 def resolve_iceberg_ref(doc: dict, ref: str) -> int:
@@ -1715,6 +1710,35 @@ def resolve_iceberg_ref(doc: dict, ref: str) -> int:
             "metadata (refs are retention roots)"
         )
     return sid
+
+
+def _read_snapshot(
+    doc: dict,
+    snapshot_id: int | None,
+    as_of_ms: int | None,
+    ref: str | None,
+) -> int | None:
+    """The snapshot id a read names by id, instant or ref (None =
+    current); a named snapshot must be retained, the contract the
+    managed dialect's pinned reads keep."""
+    if ref is not None:
+        if snapshot_id is not None or as_of_ms is not None:
+            raise ValueError(
+                "pass exactly one of ref / snapshot_id / as_of_ms"
+            )
+        snapshot_id = resolve_iceberg_ref(doc, ref)
+    if snapshot_id is None and as_of_ms is not None:
+        snapshot_id = resolve_snapshot_at(doc, as_of_ms)
+    if snapshot_id is not None and int(snapshot_id) not in {
+        int(s["snapshot-id"]) for s in doc.get("snapshots", [])
+    }:
+        # a pinned read of an expired snapshot raises instead of
+        # silently returning an empty (other-era) result
+        raise ValueError(
+            f"snapshot {snapshot_id} is not retained (expired or never "
+            "existed)"
+        )
+    return snapshot_id
 
 
 def _declared_spark_schema(doc: dict):
@@ -1879,8 +1903,8 @@ def _projection_groups(
     per-file aliasing. Slow path (a probe hit a rename): full footer
     sweep, files grouped by their projection map — a handful of groups
     (one per rename era), not one per file. ONE probe serves a whole
-    read; _read_with_deletes combines these groups with its
-    sequence-number groups instead of re-probing per sequence."""
+    read (``_opener``), whatever sequence-number groups the read core
+    splits it into."""
     fields = _current_schema(doc)
     mapping = _name_mapping(doc)
     # The sample-16 probe is only trustworthy when the table has NO
@@ -1943,7 +1967,7 @@ def _read_group(
 
     declared = _declared_spark_schema(doc)
     meta_exprs = [
-        _canon_path_col(F.col("_metadata.file_path")).alias("__path"),
+        strip_scheme_col(F.col("_metadata.file_path")).alias("__path"),
         F.col("_metadata.row_index").alias("__pos"),
     ] if meta_cols else []
     if ren is None:
@@ -1968,19 +1992,53 @@ def _read_group(
     )
 
 
+def _opener(spark: SparkSession, doc: dict, files: list[dict]) -> Opener:
+    """The foreign data-file opener for ``morread``: files PROJECTED to
+    the table's current schema, renamed physical columns resolved per
+    file by stamped field-id, else through
+    ``schema.name-mapping.default``. ONE footer probe
+    (``_projection_groups``) plans every file of ``files``; each call
+    then reads its subset group by group."""
+    from pyspark.sql import functions as F
+
+    groups = (
+        _projection_groups(spark, doc, [f["path"] for f in files])
+        if files
+        else []
+    )
+    group_of = {p: i for i, (ps, _ren) in enumerate(groups) for p in ps}
+
+    def open_files(fs: list[dict], with_pos: bool) -> DataFrame:
+        if not fs:
+            # the TABLE's schema, not a placeholder — unions and
+            # .select() downstream must keep working
+            df = spark.createDataFrame([], schema=_ddl_of(doc))
+            if with_pos:
+                df = df.withColumns({
+                    "__path": F.lit(None).cast("string"),
+                    "__pos": F.lit(None).cast("long"),
+                })
+            return df
+        by_group: dict[int, list[str]] = {}
+        for f in fs:
+            by_group.setdefault(group_of[f["path"]], []).append(f["path"])
+        out = None
+        for i, ps in sorted(by_group.items()):
+            part = _read_group(spark, doc, ps, groups[i][1], with_pos)
+            out = part if out is None else out.unionByName(part)
+        return out
+
+    return open_files
+
+
 def _open_projected(
     spark: SparkSession, doc: dict, paths: list[str],
     meta_cols: bool = False,
 ) -> DataFrame:
-    """Open data files PROJECTED to the table's current schema,
-    resolving renamed physical columns per file — by stamped field-id
-    when present, else through ``schema.name-mapping.default``. See
-    ``_projection_groups`` for the probe/sweep strategy."""
-    out = None
-    for gpaths, ren in _projection_groups(spark, doc, paths):
-        part = _read_group(spark, doc, gpaths, ren, meta_cols)
-        out = part if out is None else out.unionByName(part)
-    return out
+    """Open data files projected to the table's current schema (see
+    ``_opener``)."""
+    files = [{"path": p} for p in paths]
+    return _opener(spark, doc, files)(files, meta_cols)
 
 
 def read_iceberg(
@@ -2002,52 +2060,11 @@ def read_iceberg(
     check refuses renamed columns loudly (field-id resolution is not
     provided) instead of silently returning nulls."""
     doc = resolve_iceberg_metadata(location)
-    if ref is not None:
-        if snapshot_id is not None or as_of_ms is not None:
-            raise ValueError(
-                "pass exactly one of ref / snapshot_id / as_of_ms"
-            )
-        snapshot_id = resolve_iceberg_ref(doc, ref)
-    if snapshot_id is None and as_of_ms is not None:
-        snapshot_id = resolve_snapshot_at(doc, as_of_ms)
-    _require_retained(doc, snapshot_id)
+    snapshot_id = _read_snapshot(doc, snapshot_id, as_of_ms, ref)
     files, dels = iceberg_manifest_entries(doc, snapshot_id, spark=spark)
     if not files:
-        # empty table: the TABLE's schema, not a placeholder — unions
-        # and .select() downstream must keep working
         return spark.createDataFrame([], schema=_ddl_of(doc))
-    if not dels:
-        return _open_projected(
-            spark, doc, [_strip_scheme(f["file_path"]) for f in files]
-        )
     return _read_with_deletes(spark, doc, files, dels)
-
-
-def _canon_path_col(c):
-    """file:///a, file:/a and /a all canonicalize to /a — manifest
-    entries, delete-file rows and Spark's _metadata.file_path disagree
-    on the scheme prefix."""
-    from pyspark.sql import functions as F
-
-    return F.regexp_replace(c, "^file:/*", "/")
-
-
-def _canon_path(p: str) -> str:
-    """Python twin of ``_canon_path_col``: file:///a, file:/a and /a
-    all canonicalize to /a."""
-    import re as _re
-
-    return _re.sub(r"^file:/*", "/", p)
-
-
-def _dseq_map_df(spark: SparkSession, dels: list[dict]) -> DataFrame:
-    """(delete file path → its delete sequence number) as a tiny
-    broadcastable frame keyed by the canonical path form
-    ``_canon_path_col(_metadata.file_path)`` produces."""
-    rows = [
-        (_canon_path(d["file_path"]), int(d.get("_seq", 0))) for d in dels
-    ]
-    return spark.createDataFrame(rows, "__dfile string, __ddseq long")
 
 
 def _require_columns(paths: list[str], keys: list[str]) -> None:
@@ -2068,128 +2085,99 @@ def _require_columns(paths: list[str], keys: list[str]) -> None:
             )
 
 
-def _read_with_deletes(
-    spark: SparkSession, doc: dict, files: list[dict], dels: list[dict]
-) -> DataFrame:
-    """Apply a real Iceberg v2 table's delete files at read time —
-    position deletes (content 1: (file_path, pos) parquet, anti-join
-    on the row's file + ordinal, applied only to data files with
-    data_seq <= delete_seq per the v2 read contract) and equality
-    deletes (content 2: key columns named by equality_ids, anti-join
-    under row_seq < delete_seq, null-safe). Mirrors the icetbl
-    dialect's ``_apply_deletes``; delete sets are broadcast (they are
-    the small side by construction).
+def _data_files(
+    doc: dict, files: list[dict], decode: bool = False
+) -> tuple[list[dict], dict[int, list[dict]]]:
+    """Iceberg data-file entries in the shared shape (``morread``):
+    local ``path``, data ``seq``, ``file_size`` and the entry itself
+    under ``_foreign``. ``decode`` adds ``spec_id``, ``partition`` and
+    ``bounds`` for pruning and returns the icetbl form of each spec the
+    files use; a spec whose transform this reader cannot decode
+    degrades to no partition pruning for its files (sound: every file
+    survives; bounds still prune)."""
+    out = [
+        {
+            "path": _strip_scheme(f["file_path"]),
+            "seq": int(f.get("_seq", 0)),
+            "file_size": int(f.get("file_size_in_bytes") or 0),
+            "_foreign": f,
+        }
+        for f in files
+    ]
+    if not decode:
+        return out, {}
+    specs_json = {
+        int(s.get("spec-id", 0)): s.get("fields", [])
+        for s in doc.get("partition-specs", [])
+    }
+    spec_by_id: dict[int, list[dict]] = {}
+    decoder_by_id: dict[int, Any] = {}
+    for sid in {int(f.get("_spec_id", 0)) for f in files}:
+        carried = _import_one_spec(doc, specs_json.get(sid, []))
+        if carried is None:
+            spec_by_id[sid], decoder_by_id[sid] = [], lambda e: {}
+        else:
+            spec_by_id[sid], decoder_by_id[sid] = carried
+    by_id = {f["id"]: f for f in _current_schema(doc)}
+    for e in out:
+        f = e["_foreign"]
+        e["spec_id"] = int(f.get("_spec_id", 0))
+        e["partition"] = decoder_by_id[e["spec_id"]](f)
+        e["bounds"] = _decode_bounds(f, by_id)
+    return out, spec_by_id
 
-    Delete files are read in GROUPS — one scan for all position
-    deletes, one scan per distinct equality-id set — not one scan and
-    one anti-join per file: a year of MoR deletes leaves thousands of
-    sidecars, and O(delete-files) driver round trips + plan nodes is
-    exactly the metadata-scale failure this module exists to avoid.
-    Each delete row recovers ITS OWN file's sequence number by joining
-    ``_metadata.file_path`` against a broadcast (path → seq) map, so
-    grouping loses no per-file sequence fidelity."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
-    pos_dels = [d for d in dels if d.get("content") == 1]
-    eq_dels = [d for d in dels if d.get("content") == 2]
+def _delete_files(doc: dict, dels: list[dict]) -> list[DeleteFile]:
+    """Iceberg delete-file entries in the shared shape: content 1 is
+    positional, content 2 equality with its key names resolved from
+    ``equality_ids``. Any other content id is refused loudly."""
     unknown = [d for d in dels if d.get("content") not in (1, 2)]
     if unknown:
         raise ValueError(
             f"unsupported delete-file content ids: "
             f"{sorted({d.get('content') for d in unknown})}"
         )
-    fields = _current_schema(doc)
-    name_by_id = {f["id"]: f["name"] for f in fields}
-    type_by_name = {f["name"]: f["type"] for f in fields}
-    need_pos = bool(pos_dels)
-    # group data files by (resolved sequence number, projection group)
-    # so each row carries its file's data seq (the delete-sequence
-    # comparand) and renamed eras read through their own aliasing. ONE
-    # footer probe plans the projection for ALL files — not one probe
-    # per sequence group, which at thousands of MoR commits would be
-    # O(commits) driver-side footer reads per read.
-    seq_of = {
-        _strip_scheme(f["file_path"]): int(f.get("_seq", 0)) for f in files
-    }
-    proj_groups = _projection_groups(spark, doc, list(seq_of))
-    data = None
-    for gpaths, ren in proj_groups:
-        by_seq: dict[int, list[str]] = {}
-        for p in gpaths:
-            by_seq.setdefault(seq_of[p], []).append(p)
-        for seq, ps in sorted(by_seq.items()):
-            part = _read_group(
-                spark, doc, ps, ren, meta_cols=need_pos
-            ).withColumn("__seq", F.lit(seq))
-            data = part if data is None else data.unionByName(part)
-    if pos_dels:
-        # ONE scan for every position-delete file; the spec fixes the
-        # two columns (2147483546 file_path string, 2147483545 pos
-        # long), so an explicit schema reads each file by name and
-        # ignores the optional deleted-row payload column
-        pd_schema = StructType.fromDDL("file_path string, pos long")
-        pd = (
-            spark.read.schema(pd_schema)
-            .parquet(*[_strip_scheme(d["file_path"]) for d in pos_dels])
-            .select(
-                _canon_path_col(F.col("file_path")).alias("__dpath"),
-                F.col("pos").alias("__dpos"),
-                _canon_path_col(F.col("_metadata.file_path")).alias(
-                    "__dfile"
-                ),
-            )
-            .join(F.broadcast(_dseq_map_df(spark, pos_dels)), "__dfile")
-            .groupBy("__dpath", "__dpos")
-            .agg(F.max("__ddseq").alias("__ddseq"))
-        )
-        data = data.join(
-            F.broadcast(pd),
-            (F.col("__path") == F.col("__dpath"))
-            & (F.col("__pos") == F.col("__dpos"))
-            # v2: a position delete applies only to data files whose
-            # data sequence is <= the delete's sequence (paths are
-            # rarely reused, but the contract is the contract)
-            & (F.col("__seq") <= F.col("__ddseq")),
-            "left_anti",
-        )
-    # ONE scan per distinct equality-id set (not per file)
-    eq_groups: dict[tuple[int, ...], list[dict]] = {}
-    for d in eq_dels:
+    name_by_id = {f["id"]: f["name"] for f in _current_schema(doc)}
+    out = []
+    for d in dels:
+        path, seq = _strip_scheme(d["file_path"]), int(d.get("_seq", 0))
+        if d["content"] == 1:
+            out.append(DeleteFile(path, seq))
+            continue
         ids = tuple(d.get("equality_ids") or [])
         if not ids or any(i not in name_by_id for i in ids):
             raise ValueError(
                 f"equality delete file {d['file_path']} has unresolvable "
                 f"equality_ids {list(ids)}"
             )
-        eq_groups.setdefault(ids, []).append(d)
-    for ids, group in sorted(eq_groups.items()):
         keys = [name_by_id[i] for i in ids]
-        paths = [_strip_scheme(d["file_path"]) for d in group]
-        _require_columns(paths, keys)
-        key_schema = StructType.fromDDL(
-            ", ".join(f"{k} {_spark_type_of(type_by_name[k])}" for k in keys)
+        _require_columns([path], keys)
+        out.append(DeleteFile(path, seq, keys=tuple((k, k) for k in keys)))
+    return out
+
+
+def _reader(spark: SparkSession, doc: dict):
+    """``read(files, dels)`` over shared-shape entries: the read core
+    with this table's opener and key types."""
+    types = {f.name: f.dataType for f in _declared_spark_schema(doc).fields}
+
+    def read(files: list[dict], dels: list[DeleteFile]) -> DataFrame:
+        return read_with_deletes(
+            spark, files, dels, _opener(spark, doc, files), types
         )
-        dd = (
-            spark.read.schema(key_schema)
-            .parquet(*paths)
-            .select(
-                *[F.col(k).alias(f"__dk_{k}") for k in keys],
-                _canon_path_col(F.col("_metadata.file_path")).alias(
-                    "__dfile"
-                ),
-            )
-            .join(F.broadcast(_dseq_map_df(spark, group)), "__dfile")
-            .groupBy(*[f"__dk_{k}" for k in keys])
-            .agg(F.max("__ddseq").alias("__ddseq"))
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__dk_{k}"))
-        cond = cond & (F.col("__seq") < F.col("__ddseq"))
-        data = data.join(F.broadcast(dd), cond, "left_anti")
-    drop = ["__seq"] + (["__path", "__pos"] if need_pos else [])
-    return data.drop(*drop)
+
+    return read
+
+
+def _read_with_deletes(
+    spark: SparkSession, doc: dict, files: list[dict], dels: list[dict]
+) -> DataFrame:
+    """Apply a real Iceberg v2 table's delete files at read time
+    (``morread.read_with_deletes``): position deletes (content 1) and
+    equality deletes (content 2, key columns named by equality_ids,
+    every delete file's footer checked to carry them)."""
+    entries, _ = _data_files(doc, files)
+    return _reader(spark, doc)(entries, _delete_files(doc, dels))
 
 
 def _bound_value(ice_type: Any, raw: bytes) -> Any:
@@ -2805,6 +2793,72 @@ def _write_foreign_files(
     return entries, avro_fields, spec_json, spec_id
 
 
+def _data_manifest(
+    spark: SparkSession,
+    doc: dict,
+    mdir: str,
+    entries: list[dict],
+    avro_fields: list[dict],
+    spec_json: list[dict],
+    spec_id: int,
+    sid: int,
+    new_seq: int,
+) -> tuple[dict, int]:
+    """Write one data manifest holding the freshly written ``entries``
+    (all ADDED by snapshot ``sid`` at ``new_seq``) and return its
+    manifest-list row and the added record count."""
+    cur_schema = next(
+        (
+            s
+            for s in doc.get("schemas", [])
+            if int(s.get("schema-id", 0))
+            == int(doc.get("current-schema-id", 0))
+        ),
+        None,
+    )
+    mf_path = os.path.join(mdir, f"{uuid.uuid4()}-m0.avro")
+    write_avro(
+        spark, mf_path, manifest_entry_schema(avro_fields), entries,
+        meta={
+            "schema": json.dumps(cur_schema or {}),
+            "schema-id": str(doc.get("current-schema-id", 0)),
+            "partition-spec": json.dumps(spec_json),
+            "partition-spec-id": str(spec_id),
+            "format-version": "2",
+            "content": "data",
+        },
+    )
+    added_rows = sum(e["data_file"]["record_count"] for e in entries)
+    row = {
+        "manifest_path": mf_path,
+        "manifest_length": os.path.getsize(mf_path),
+        "partition_spec_id": spec_id,
+        "content": 0,
+        "sequence_number": new_seq,
+        "min_sequence_number": new_seq,
+        "added_snapshot_id": sid,
+        "added_files_count": len(entries),
+        "existing_files_count": 0,
+        "deleted_files_count": 0,
+        "added_rows_count": added_rows,
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+        "partitions": [
+            {
+                "contains_null": any(
+                    e["data_file"]["partition"].get(pf["name"]) is None
+                    for e in entries
+                ),
+                "contains_nan": None,
+                "lower_bound": None,
+                "upper_bound": None,
+            }
+            for pf in avro_fields
+        ],
+    }
+    return row, added_rows
+
+
 def append_iceberg(
     spark: SparkSession,
     location: str,
@@ -2886,55 +2940,10 @@ def append_iceberg(
         raise ValueError("append frame is empty — nothing to commit")
 
     mdir = os.path.join(os.path.dirname(new_md_path))
-    cur_schema = next(
-        (
-            s
-            for s in doc.get("schemas", [])
-            if int(s.get("schema-id", 0))
-            == int(doc.get("current-schema-id", 0))
-        ),
-        None,
+    new_row, added_rows = _data_manifest(
+        spark, doc, mdir, entries, avro_fields, spec_json, spec_id, sid,
+        new_seq,
     )
-    mf_path = os.path.join(mdir, f"{uuid.uuid4()}-m0.avro")
-    write_avro(
-        spark, mf_path, manifest_entry_schema(avro_fields), entries,
-        meta={
-            "schema": json.dumps(cur_schema or {}),
-            "schema-id": str(doc.get("current-schema-id", 0)),
-            "partition-spec": json.dumps(spec_json),
-            "partition-spec-id": str(spec_id),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    added_rows = sum(e["data_file"]["record_count"] for e in entries)
-    new_row = {
-        "manifest_path": mf_path,
-        "manifest_length": os.path.getsize(mf_path),
-        "partition_spec_id": spec_id,
-        "content": 0,
-        "sequence_number": new_seq,
-        "min_sequence_number": new_seq,
-        "added_snapshot_id": sid,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": added_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "partitions": [
-            {
-                "contains_null": any(
-                    e["data_file"]["partition"].get(pf["name"]) is None
-                    for e in entries
-                ),
-                "contains_nan": None,
-                "lower_bound": None,
-                "upper_bound": None,
-            }
-            for pf in avro_fields
-        ],
-    }
     return _commit_foreign_snapshot(
         spark, location, doc, new_md_path, hint, new_row, sid, new_seq,
         now, "append",
@@ -3238,6 +3247,44 @@ def _stage_single_parquet(df: DataFrame, ddir: str, prefix: str) -> str | None:
     return out
 
 
+def _stage_positions(
+    spark: SparkSession,
+    doc: dict,
+    location: str,
+    files: list[dict],
+    condition: str,
+    verb: str,
+) -> tuple[str, int]:
+    """Stage a positional delete file for every RAW row of ``files``
+    matching ``condition``: one planning scan records (file_path, pos)
+    — the position is Spark's ``_metadata.row_index``, the file path
+    its scheme-stripped ``_metadata.file_path`` — sorted per the spec.
+    Returns (staged path, position count); refuses when no row
+    matches."""
+    from pyspark.sql import functions as F
+
+    from iceberg_workshop_spark.icetbl.stats import file_stats
+
+    paths = [_strip_scheme(f["file_path"]) for f in files]
+    matching = (
+        _open_projected(spark, doc, paths, meta_cols=True)
+        .filter(condition)
+        .select(
+            F.col("__path").alias("file_path"),
+            F.col("__pos").cast("long").alias("pos"),
+        )
+        .orderBy("file_path", "pos")
+    )
+    ddir = os.path.join(os.path.abspath(location), "data")
+    del_path = _stage_single_parquet(matching, ddir, "posdel-foreign")
+    n_pos = file_stats(del_path)[0] if del_path is not None else 0
+    if n_pos == 0:
+        if del_path is not None:
+            os.unlink(del_path)
+        raise ValueError(f"no rows match — nothing to {verb}")
+    return del_path, n_pos
+
+
 def _commit_foreign_delete(
     spark: SparkSession,
     location: str,
@@ -3374,39 +3421,12 @@ def delete_iceberg_where(
     if doc.get("current-snapshot-id") in (None, -1):
         raise ValueError("table has no current snapshot — nothing to "
                          "delete from")
-    import shutil
-
-    from pyspark.sql import functions as F
-
     files, _dels = iceberg_manifest_entries(doc, spark=spark)
     if not files:
         raise ValueError("table has no live data files")
-    matching = (
-        _open_projected(
-            spark, doc,
-            [_strip_scheme(f["file_path"]) for f in files],
-            meta_cols=True,
-        )
-        .filter(condition)
-        .select(
-            # the manifest entries record plain absolute paths, so the
-            # delete rows use the same form — a real engine matches
-            # them string-equal against its data-file paths
-            F.col("__path").alias("file_path"),
-            F.col("__pos").cast("long").alias("pos"),
-        )
-        .orderBy("file_path", "pos")
+    del_path, n_pos = _stage_positions(
+        spark, doc, location, files, condition, "commit"
     )
-    ddir = os.path.join(os.path.abspath(location), "data")
-    del_path = _stage_single_parquet(matching, ddir, "posdel-foreign")
-    if del_path is None:
-        raise ValueError("no rows match — nothing to commit")
-    from iceberg_workshop_spark.icetbl.stats import file_stats
-
-    n_pos, _bounds = file_stats(del_path)
-    if n_pos == 0:
-        os.unlink(del_path)
-        raise ValueError("no rows match — nothing to commit")
     return _commit_foreign_delete(
         spark, location, doc, new_md_path, hint, del_path, n_pos,
         [], [],
@@ -3446,8 +3466,6 @@ def update_iceberg_where(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    from iceberg_workshop_spark.icetbl.stats import file_stats
-
     fields = _current_schema(doc)
     names = [f["name"] for f in fields]
     unknown = [c for c in set_exprs if c not in names]
@@ -3459,35 +3477,16 @@ def update_iceberg_where(
     files, dels = iceberg_manifest_entries(doc, spark=spark)
     if not files:
         raise ValueError("table has no live data files")
-    paths = [_strip_scheme(f["file_path"]) for f in files]
     declared = StructType.fromDDL(_ddl_of(doc))
 
     # (a) raw positions of every matching row (superset: rows already
     # masked re-record harmlessly)
-    matching = (
-        _open_projected(spark, doc, paths, meta_cols=True)
-        .filter(condition)
-        .select(
-            F.col("__path").alias("file_path"),
-            F.col("__pos").cast("long").alias("pos"),
-        )
-        .orderBy("file_path", "pos")
+    del_path, n_pos = _stage_positions(
+        spark, doc, location, files, condition, "update"
     )
-    ddir = os.path.join(os.path.abspath(location), "data")
-    del_path = _stage_single_parquet(matching, ddir, "posdel-foreign")
-    if del_path is None:
-        raise ValueError("no rows match — nothing to update")
-    n_pos, _b = file_stats(del_path)
-    if n_pos == 0:
-        os.unlink(del_path)
-        raise ValueError("no rows match — nothing to update")
 
     # (b) updated images from the CURRENT VIEW
-    view = (
-        _read_with_deletes(spark, doc, files, dels)
-        if dels
-        else _open_projected(spark, doc, paths)
-    )
+    view = _read_with_deletes(spark, doc, files, dels)
     images = view.filter(condition).select(
         *[
             (
@@ -3511,60 +3510,11 @@ def update_iceberg_where(
     new_rows = [del_row]
     added_rows = 0
     if entries:  # every matching row may already be masked
-        cur_schema = next(
-            (
-                s
-                for s in doc.get("schemas", [])
-                if int(s.get("schema-id", 0))
-                == int(doc.get("current-schema-id", 0))
-            ),
-            None,
+        row, added_rows = _data_manifest(
+            spark, doc, mdir, entries, avro_fields, spec_json, spec_id,
+            sid, new_seq,
         )
-        mf_path = os.path.join(mdir, f"{uuid.uuid4()}-m0.avro")
-        write_avro(
-            spark, mf_path, manifest_entry_schema(avro_fields), entries,
-            meta={
-                "schema": json.dumps(cur_schema or {}),
-                "schema-id": str(doc.get("current-schema-id", 0)),
-                "partition-spec": json.dumps(spec_json),
-                "partition-spec-id": str(spec_id),
-                "format-version": "2",
-                "content": "data",
-            },
-        )
-        added_rows = sum(
-            e["data_file"]["record_count"] for e in entries
-        )
-        new_rows.append(
-            {
-                "manifest_path": mf_path,
-                "manifest_length": os.path.getsize(mf_path),
-                "partition_spec_id": spec_id,
-                "content": 0,
-                "sequence_number": new_seq,
-                "min_sequence_number": new_seq,
-                "added_snapshot_id": sid,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": added_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": [
-                    {
-                        "contains_null": any(
-                            e["data_file"]["partition"].get(pf["name"])
-                            is None
-                            for e in entries
-                        ),
-                        "contains_nan": None,
-                        "lower_bound": None,
-                        "upper_bound": None,
-                    }
-                    for pf in avro_fields
-                ],
-            }
-        )
+        new_rows.append(row)
     return _commit_foreign_snapshot(
         spark, location, doc, new_md_path, hint, new_rows, sid, new_seq,
         now, "overwrite",
@@ -3750,55 +3700,10 @@ def rewrite_iceberg_files(
         raise ValueError("current snapshot reads as empty — use "
                          "expire/truncate, not a rewrite")
     mdir = os.path.dirname(new_md_path)
-    cur_schema = next(
-        (
-            s
-            for s in doc.get("schemas", [])
-            if int(s.get("schema-id", 0))
-            == int(doc.get("current-schema-id", 0))
-        ),
-        None,
+    new_row, added_rows = _data_manifest(
+        spark, doc, mdir, entries, avro_fields, spec_json, spec_id, sid,
+        new_seq,
     )
-    mf_path = os.path.join(mdir, f"{uuid.uuid4()}-m0.avro")
-    write_avro(
-        spark, mf_path, manifest_entry_schema(avro_fields), entries,
-        meta={
-            "schema": json.dumps(cur_schema or {}),
-            "schema-id": str(doc.get("current-schema-id", 0)),
-            "partition-spec": json.dumps(spec_json),
-            "partition-spec-id": str(spec_id),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    added_rows = sum(e["data_file"]["record_count"] for e in entries)
-    new_row = {
-        "manifest_path": mf_path,
-        "manifest_length": os.path.getsize(mf_path),
-        "partition_spec_id": spec_id,
-        "content": 0,
-        "sequence_number": new_seq,
-        "min_sequence_number": new_seq,
-        "added_snapshot_id": sid,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": added_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "partitions": [
-            {
-                "contains_null": any(
-                    e["data_file"]["partition"].get(pf["name"]) is None
-                    for e in entries
-                ),
-                "contains_nan": None,
-                "lower_bound": None,
-                "upper_bound": None,
-            }
-            for pf in avro_fields
-        ],
-    }
     # the REPLACE snapshot lists ONLY the new manifest: old data files
     # and MoR delete sidecars leave the current view together, but
     # stay reachable from prior snapshots for time travel
@@ -3971,40 +3876,16 @@ def scan_iceberg(
     the predicate re-applied row-level. MoR delete files apply against
     the KEPT subset only, so pruning still pays on deleted tables.
 
-    Returns ``(DataFrame, report)`` with the same files/bytes report
-    shape as the managed dialect's ``IceTable.scan`` — a foreign
-    engine's file-skipping numbers, reproducible from bytes alone.
+    Planned by ``morread.pruned_scan``, the planner ``IceTable.scan``
+    uses too. Returns ``(DataFrame, report)`` — a foreign engine's
+    file-skipping numbers, reproducible from bytes alone.
 
     Specs whose transform this reader cannot decode degrade to
     no-partition-pruning for that era's files (sound: every file
     survives); bounds pruning still applies to them."""
-    from iceberg_workshop_spark.icetbl.bucketing import (
-        UncoercibleLiteral,
-        bucket_value,
-        coerce_bucket_literal,
-    )
-    from iceberg_workshop_spark.icetbl.pruning import (
-        PRUNE_DISTRIBUTED_THRESHOLD,
-        bucket_survives,
-        normalize_dnf,
-        prune_files,
-        prune_files_distributed,
-    )
-    from iceberg_workshop_spark.icetbl.table import _dnf_to_column
-
     doc = resolve_iceberg_metadata(location)
-    if ref is not None:
-        if snapshot_id is not None or as_of_ms is not None:
-            raise ValueError(
-                "pass exactly one of ref / snapshot_id / as_of_ms"
-            )
-        snapshot_id = resolve_iceberg_ref(doc, ref)
-    if snapshot_id is None and as_of_ms is not None:
-        snapshot_id = resolve_snapshot_at(doc, as_of_ms)
-    _require_retained(doc, snapshot_id)
+    snapshot_id = _read_snapshot(doc, snapshot_id, as_of_ms, ref)
     files, dels = iceberg_manifest_entries(doc, snapshot_id, spark=spark)
-    fields = _current_schema(doc)
-    by_id = {f["id"]: f for f in fields}
     if not files:
         return (
             spark.createDataFrame([], schema=_ddl_of(doc)),
@@ -4012,119 +3893,21 @@ def scan_iceberg(
              "bytes_total": 0, "bytes_scanned": 0,
              "delete_files_read": len(dels)},
         )
-
-    # per-spec icetbl translation; an undecodable spec degrades to []
-    spec_ids_json = {
-        int(s.get("spec-id", 0)): s.get("fields", [])
-        for s in doc.get("partition-specs", [])
-    }
-    spec_by_id: dict[int, list[dict]] = {}
-    decoder_by_id: dict[int, Any] = {}
-    for sid in {int(f.get("_spec_id", 0)) for f in files}:
-        carried = _import_one_spec(doc, spec_ids_json.get(sid, []))
-        if carried is None:
-            spec_by_id[sid] = []
-            decoder_by_id[sid] = lambda e: {}
-        else:
-            spec_by_id[sid], decoder_by_id[sid] = carried
-
-    entries = [
-        {
-            "path": _strip_scheme(f["file_path"]),
-            "spec_id": int(f.get("_spec_id", 0)),
-            "partition": decoder_by_id[int(f.get("_spec_id", 0))](f),
-            "bounds": _decode_bounds(f, by_id),
-            "file_size": int(f.get("file_size_in_bytes") or 0),
-            "_foreign": f,
-        }
-        for f in files
-    ]
-
+    entries, spec_by_id = _data_files(doc, files, decode=True)
     # Spark DDL type per source column, for literal coercion before
-    # hashing (ADVICE r13: the same type-mismatch gap as the managed
-    # _prune_bucket — an ISO string probed against a date column would
-    # hash different bytes than the foreign writer and silently prune
-    # matching files). Complex/unmappable types simply don't register.
+    # bucket hashing; complex/unmappable types simply don't register
     type_by_name: dict[str, str] = {}
-    for f in fields:
+    for f in _current_schema(doc):
         try:
             type_by_name[f["name"]] = _spark_type_of(f["type"])
         except ValueError:
             pass
-
-    def _bucket_expectations_foreign(
-        d: list,
-    ) -> dict[tuple[int, str], str | None]:
-        # equality literal → murmur3 bucket id (foreign writers are
-        # real Iceberg engines — murmur3 by the spec's definition),
-        # coerced to the source column's type first; None = cannot
-        # prune (uncoercible literal)
-        eq = {p.col: p.value for p in d if getattr(p, "op", None) == "="}
-        out: dict[tuple[int, str], str | None] = {}
-        if not eq:
-            return out
-        bcache: dict[tuple[str, int], str | None] = {}
-        for sid, spec in spec_by_id.items():
-            for field in spec:
-                t = field["transform"]
-                if not (t.startswith("bucket[") and field["source"] in eq):
-                    continue
-                n = int(t[7:-1])
-                key = (field["source"], n)
-                if key not in bcache:
-                    try:
-                        lit = coerce_bucket_literal(
-                            eq[field["source"]],
-                            type_by_name.get(field["source"], ""),
-                        )
-                        bcache[key] = str(bucket_value(lit, n))
-                    except UncoercibleLiteral:
-                        bcache[key] = None
-                out[(sid, field["name"])] = bcache[key]
-        return out
-
-    dnf = normalize_dnf(preds or [])
-    if not dnf:
-        kept = entries
-    elif len(entries) >= PRUNE_DISTRIBUTED_THRESHOLD:
-        # scale path (VERDICT r13): a foreign table at 100 TB carries
-        # 10^5-10^6 live entries — the survival decision runs on
-        # executors via the same pure functions as the driver loop
-        kept = prune_files_distributed(
-            spark,
-            [{k: v for k, v in e.items() if k != "_foreign"} for e in entries],
-            spec_by_id, dnf,
-            [_bucket_expectations_foreign(d) for d in dnf],
-        )
-        kept_paths = {e["path"] for e in kept}
-        kept = [e for e in entries if e["path"] in kept_paths]
-    else:
-        kept_paths: set[str] = set()
-        for d in dnf:
-            k, _ = prune_files(entries, spec_by_id, d)
-            exp = _bucket_expectations_foreign(d)
-            if exp:
-                k = [e for e in k if bucket_survives(e, exp)]
-            kept_paths.update(e["path"] for e in k)
-        kept = [e for e in entries if e["path"] in kept_paths]
-    report = {
-        "files_total": len(entries),
-        "files_scanned": len(kept),
-        "bytes_total": sum(e["file_size"] for e in entries),
-        "bytes_scanned": sum(e["file_size"] for e in kept),
-        "delete_files_read": len(dels),
-    }
-    if not kept:
-        return spark.createDataFrame([], schema=_ddl_of(doc)), report
-    if dels:
-        df = _read_with_deletes(
-            spark, doc, [e["_foreign"] for e in kept], dels
-        )
-    else:
-        df = _open_projected(spark, doc, [e["path"] for e in kept])
-    if dnf:
-        df = df.filter(_dnf_to_column(dnf))
-    return df, report
+    return pruned_scan(
+        spark, entries, _delete_files(doc, dels), spec_by_id, preds,
+        # foreign writers are real Iceberg engines: murmur3 buckets
+        lambda d: bucket_expectations(spec_by_id, type_by_name, d),
+        _reader(spark, doc),
+    )
 
 
 # --------------------------------------------------- incremental read
@@ -4265,148 +4048,33 @@ def read_iceberg_changelog(
     contains the delete/overwrite/compaction commits the append-only
     ``read_iceberg_changes`` refuses; an UPDATE surfaces as its
     delete/insert pair, and rows a copy-on-write rewrite carried over
-    unchanged cancel in the ``exceptAll`` (net-changes semantics).
-
-    Scale contract mirrors the managed twin: O(changed files), never
-    O(table) — only the symmetric difference of the endpoint file sets
-    is read. When the endpoints' DELETE-file sets differ (a MoR delete
-    flips visibility of rows in unchanged files), the affected common
-    files are added back: positional delete files name their target
-    paths outright; equality delete files prune candidates by their
-    key min/max against the entries' decoded manifest bounds.
+    unchanged cancel out (net-changes semantics).
+    O(changed files), never O(table): see ``morread.changelog``.
 
     Endpoints also resolve from NAMED REFS (``from_ref``/``to_ref`` —
     the start-tag/end-tag shape of Iceberg's create_changelog_view)."""
-    from pyspark.sql import functions as F
-
-    from iceberg_workshop_spark.icetbl.pruning import (
-        Pred,
-        file_survives_bounds,
-        intervals,
-    )
-
     doc = resolve_iceberg_metadata(location)
     from_snapshot_id, to_snapshot_id = _resolve_range_endpoints(
         doc, from_snapshot_id, to_snapshot_id, from_ref, to_ref
     )
-    snaps = {int(s["snapshot-id"]): s for s in doc.get("snapshots", [])}
+    snaps = {int(s["snapshot-id"]) for s in doc.get("snapshots", [])}
     to_sid = (
         int(to_snapshot_id)
         if to_snapshot_id is not None
         else int(doc.get("current-snapshot-id"))
     )
+    sides = []
+    spec_by_id: dict[int, list[dict]] = {}
     for sid in (int(from_snapshot_id), to_sid):
         if sid not in snaps:
             raise ValueError(
                 f"snapshot {sid} is not a retained snapshot of this table"
             )
-    f_files, f_dels = iceberg_manifest_entries(
-        doc, int(from_snapshot_id), spark=spark
+        files, dels = iceberg_manifest_entries(doc, sid, spark=spark)
+        entries, specs = _data_files(doc, files, decode=True)
+        spec_by_id |= specs
+        sides.append((entries, _delete_files(doc, dels)))
+    types = {f.name: f.dataType for f in _declared_spark_schema(doc).fields}
+    return changelog(
+        spark, sides[0], sides[1], spec_by_id, types, _reader(spark, doc)
     )
-    t_files, t_dels = iceberg_manifest_entries(doc, to_sid, spark=spark)
-    fields = _current_schema(doc)
-    by_id = {f["id"]: f for f in fields}
-    name_by_id = {f["id"]: f["name"] for f in fields}
-    fp = {_strip_scheme(f["file_path"]) for f in f_files}
-    tp = {_strip_scheme(f["file_path"]) for f in t_files}
-    relevant = fp ^ tp
-
-    def _dkey(d: dict) -> tuple:
-        return (_strip_scheme(d["file_path"]), int(d.get("_seq", 0)))
-
-    d_from = {_dkey(d): d for d in f_dels}
-    d_to = {_dkey(d): d for d in t_dels}
-    diff_dels = [
-        d
-        for k, d in (d_from | d_to).items()
-        if (k in d_from) != (k in d_to)
-    ]
-    if diff_dels:
-        common_paths = fp & tp
-        common_entries = [
-            f
-            for f in t_files
-            if _strip_scheme(f["file_path"]) in common_paths
-        ]
-        pos_diff = [d for d in diff_dels if d.get("content") == 1]
-        if pos_diff:
-            from pyspark.sql.types import StructType as _ST
-
-            hits = (
-                spark.read.schema(_ST.fromDDL("file_path string"))
-                .parquet(*[_strip_scheme(d["file_path"]) for d in pos_diff])
-                .select("file_path")
-                .distinct()
-                .collect()
-            )
-            relevant |= {
-                _strip_scheme(str(r["file_path"])) for r in hits
-            } & common_paths
-        for d in diff_dels:
-            if d.get("content") != 2:
-                continue
-            keys = [
-                name_by_id[i]
-                for i in (d.get("equality_ids") or [])
-                if i in name_by_id
-            ]
-            candidates = [
-                f
-                for f in common_entries
-                # v2 eq rule: the delete masks rows with row_seq <
-                # delete_seq only
-                if int(f.get("_seq", 0)) < int(d.get("_seq", 0))
-            ]
-            preds: list[Pred] = []
-            if keys and candidates:
-                row = (
-                    spark.read.parquet(_strip_scheme(d["file_path"]))
-                    .agg(
-                        *[
-                            expr
-                            for k in keys
-                            for expr in (
-                                F.min(k).alias(f"mn_{k}"),
-                                F.max(k).alias(f"mx_{k}"),
-                            )
-                        ]
-                    )
-                    .first()
-                )
-                preds = [
-                    Pred(k, "between", (row[f"mn_{k}"], row[f"mx_{k}"]))
-                    for k in keys
-                    if row[f"mn_{k}"] is not None
-                ]
-            if preds:
-                iv = intervals(preds)
-                candidates = [
-                    f
-                    for f in candidates
-                    if file_survives_bounds(_decode_bounds(f, by_id), iv)
-                ]
-            relevant |= {
-                _strip_scheme(f["file_path"]) for f in candidates
-            }
-
-    def _side(files: list[dict], dels: list[dict]) -> DataFrame:
-        sub = [
-            f for f in files if _strip_scheme(f["file_path"]) in relevant
-        ]
-        if not sub:
-            return spark.createDataFrame([], schema=_ddl_of(doc))
-        if dels:
-            return _read_with_deletes(spark, doc, sub, dels)
-        return _open_projected(
-            spark, doc, [_strip_scheme(f["file_path"]) for f in sub]
-        )
-
-    rows_from = _side(f_files, f_dels)
-    rows_to = _side(t_files, t_dels)
-    inserts = rows_to.exceptAll(rows_from).withColumn(
-        "_change_type", F.lit("insert")
-    )
-    deletes = rows_from.exceptAll(rows_to).withColumn(
-        "_change_type", F.lit("delete")
-    )
-    return inserts.unionByName(deletes)

@@ -237,9 +237,7 @@ def rewrite_data_files(
     # carried equality deletes — so the rewrite must read THROUGH the
     # deletes (untouched files keep their old seq; the carried deletes
     # still apply to them).
-    cur = tbl.meta.current_snapshot_id
-    dels = tbl.meta.delete_entries(tbl.meta.snapshot(cur)) if cur is not None else []
-    df = tbl._apply_deletes(to_rewrite, dels)
+    df = tbl._apply_deletes(to_rewrite, tbl.meta.current_deletes())
     if zorder_by:
         df = _zorder(df, zorder_by, n)
     elif sort_by:
@@ -394,10 +392,7 @@ def rewrite_equality_deletes(tbl: IceTable) -> dict[str, int]:
     files, commit a snapshot carrying zero delete files. Read-time
     anti-join cost drops back to nothing; time travel to pre-rewrite
     snapshots still sees the MoR pair."""
-    cur = tbl.meta.current_snapshot_id
-    dels = (
-        tbl.meta.delete_entries(tbl.meta.snapshot(cur)) if cur is not None else []
-    )
+    dels = tbl.meta.current_deletes()
     if not dels:
         return {"delete_files_removed": 0, "files_written": 0}
     clean = tbl.read().select(*tbl._column_names())
@@ -629,10 +624,9 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
 
     from pyspark.sql import functions as F
 
-    cur = tbl.meta.current_snapshot_id
-    dels = (
-        tbl.meta.delete_entries(tbl.meta.snapshot(cur)) if cur is not None else []
-    )
+    from iceberg_workshop_spark.icetbl.morread import canon_path_col
+
+    dels = tbl.meta.current_deletes()
     pos_dels = [d for d in dels if d.get("kind") == "pos"]
     # (equality deletes carry forward by manifest reference — the
     # delta commit below removes only the pos-delete entries)
@@ -642,15 +636,11 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
             "added_delete_files_count": 0,
             "dangling_positions_dropped": 0,
         }
-    # _metadata.file_path URIs render as file:/abs/path (sometimes
-    # file:///abs/path) WITH percent-encoding (%20 for a space). Match
-    # them to the live file set with an EXECUTOR-side normalization +
-    # semi-join against a DataFrame of live paths: collecting the
-    # distinct URIs and inlining an isin() literal list would grow the
-    # plan (and driver memory) with the number of distinct
-    # deleted-from files. url_decode is form-decoding ('+' → space),
-    # so literal plus signs are pre-escaped to %2B first; %XX escapes
-    # then decode exactly like urllib.unquote.
+    # Match the recorded URIs to the live file set with an EXECUTOR-
+    # side canonicalization + semi-join against a DataFrame of live
+    # paths: collecting the distinct URIs and inlining an isin()
+    # literal list would grow the plan (and driver memory) with the
+    # number of distinct deleted-from files.
     live_df = tbl.spark.createDataFrame(
         [(_os.path.abspath(f["path"]),) for f in tbl.meta.current_files()],
         "live_path string",
@@ -664,11 +654,7 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
     # count overstated the dangling report)
     dedup = union.distinct()
     n_before = dedup.count()
-    norm = F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace("file_path", r"^file:/+", "/"), r"\+", "%2B"
-        )
-    )
+    norm = canon_path_col(F.col("file_path"))
     live = (
         dedup
         .withColumn("__norm", norm)
@@ -679,28 +665,15 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
     n_live = live.count()
     new_entries: list[dict] = []
     if n_live:
-        import urllib.parse as _up
-
-        from iceberg_workshop_spark.icetbl.dml import _write_delete_sidecar
+        from iceberg_workshop_spark.icetbl.dml import (
+            _pos_entries,
+            _write_delete_sidecar,
+        )
 
         paths, _n, content = _write_delete_sidecar(tbl, "posdel", live)
-        target_paths = sorted(
-            {
-                _up.unquote(_up.urlparse(u).path)
-                for u in content.column("file_path").unique().to_pylist()
-            }
+        new_entries = _pos_entries(
+            tbl, paths, n_live, content, max(int(d["dseq"]) for d in pos_dels)
         )
-        dseq = max(int(d["dseq"]) for d in pos_dels)
-        new_entries = [
-            {
-                "path": p,
-                "record_count": n_live,
-                "kind": "pos",
-                "dseq": dseq,
-                "target_paths": target_paths,
-            }
-            for p in paths
-        ]
     tbl._commit_snapshot_delta(
         [],
         [],

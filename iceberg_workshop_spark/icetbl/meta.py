@@ -287,6 +287,10 @@ class TableMeta:
         sid = self.current_snapshot_id
         return [] if sid is None else self.files(self.snapshot(sid))
 
+    def current_deletes(self) -> list[dict[str, Any]]:
+        sid = self.current_snapshot_id
+        return [] if sid is None else self.delete_entries(self.snapshot(sid))
+
     # -- construction ------------------------------------------------
     @staticmethod
     def empty(location: str, schema_ddl: str, spec: list[dict[str, str]]) -> "TableMeta":

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 import urllib.parse
 import uuid
 from datetime import datetime, timezone
@@ -38,7 +39,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.icetbl import meta as M
-from iceberg_workshop_spark.icetbl.pruning import Pred, prune_files
+from iceberg_workshop_spark.icetbl.morread import (
+    DeleteFile,
+    bucket_expectations,
+    canon_path,
+    changelog,
+    pruned_scan,
+    read_with_deletes,
+    snapshot_as_of,
+    survive_buckets,
+)
+from iceberg_workshop_spark.icetbl.pruning import Pred
 from iceberg_workshop_spark.icetbl.stats import file_stats
 
 SpecField = dict[str, str]  # {"name": ..., "source": ..., "transform": ...}
@@ -243,10 +254,7 @@ class IceTable:
         from pyspark.sql.types import StructType
 
         new_type = new_type.strip().lower()
-        cur = {
-            f.name: f.dataType.simpleString()
-            for f in StructType.fromDDL(self.meta.schema_ddl).fields
-        }
+        cur = {n: t.simpleString() for n, t in self._types().items()}
         if name not in cur:
             raise KeyError(f"no such column: {name}")
         if cur[name] == new_type:  # fast path: nothing to commit
@@ -412,13 +420,8 @@ class IceTable:
                 # and the table can cross the byte-format boundary
                 # (iceformat.export_iceberg) with a true bucket spec.
                 from iceberg_workshop_spark.icetbl.bucketing import bucket_col
-                from pyspark.sql.types import StructType
 
-                dt = {
-                    f.name: f.dataType
-                    for f in StructType.fromDDL(self.meta.schema_ddl).fields
-                }[src]
-                return bucket_col(F.col(src), n, dt)
+                return bucket_col(F.col(src), n, self._types()[src])
             # legacy pre-murmur3 tables: keep Spark's hash so files
             # written before the switch stay consistent with new ones
             return F.pmod(F.hash(F.col(src)), F.lit(n))
@@ -433,14 +436,10 @@ class IceTable:
                 IntegerType,
                 LongType,
                 ShortType,
-                StructType,
             )
 
             w = int(t[9:-1])
-            dt = {
-                f.name: f.dataType
-                for f in StructType.fromDDL(self.meta.schema_ddl).fields
-            }.get(src)
+            dt = self._types().get(src)
             if isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
                 return (F.col(src) - F.pmod(F.col(src), F.lit(w))).cast("long")
             return F.substring(F.col(src).cast("string"), 1, w)
@@ -497,12 +496,8 @@ class IceTable:
                 from iceberg_workshop_spark.icetbl.bucketing import (
                     with_bucket_column,
                 )
-                from pyspark.sql.types import StructType
 
-                dt = {
-                    f.name: f.dataType
-                    for f in StructType.fromDDL(self.meta.schema_ddl).fields
-                }[field["source"]]
+                dt = self._types()[field["source"]]
                 out = with_bucket_column(
                     out, pcol, field["source"], int(t[7:-1]), dt
                 )
@@ -569,8 +564,6 @@ class IceTable:
         # in one distributed pass grouped by file; the driver receives
         # only set-bit positions — metadata scale).
         if bloom_cols and files:
-            import urllib.parse as _up
-
             by_path = {os.path.abspath(f["path"]): f for f in files}
             read = self.spark.read.parquet(snap_dir).select(
                 F.col("_metadata.file_path").alias("__fp"), *bloom_cols
@@ -590,8 +583,7 @@ class IceTable:
                     .collect()
                 )
                 for r in rows:
-                    path = os.path.abspath(_up.unquote(_up.urlparse(r["__fp"]).path))
-                    entry = by_path.get(path)
+                    entry = by_path.get(os.path.abspath(canon_path(r["__fp"])))
                     if entry is not None:
                         entry.setdefault("bloom", {})[c] = {
                             "m": B.BLOOM_BITS,
@@ -1213,9 +1205,7 @@ class IceTable:
 
     # ------------------------------------------------------------ read
     def _column_names(self) -> list[str]:
-        from pyspark.sql.types import StructType
-
-        return [f.name for f in StructType.fromDDL(self.meta.schema_ddl).fields]
+        return list(self._types())
 
     def _read_files(
         self,
@@ -1234,30 +1224,22 @@ class IceTable:
         the union throws UNRESOLVED_COLUMN (bug found by the
         type-widening work). Zero cost when off."""
 
+        extra: dict[str, tuple[str, str]] = {}  # name -> (source, type)
+        if with_pos:
+            extra["__path"] = ("_metadata.file_path", "string")
+            extra["__pos"] = ("_metadata.row_index", "long")
+        if with_fp:
+            extra["__fp"] = ("_metadata.file_path", "string")
+        meta_cols = list(extra)
+
         def _pos_cols(df: DataFrame) -> DataFrame:
-            if with_pos:
-                df = df.withColumns(
-                    {
-                        "__path": F.col("_metadata.file_path"),
-                        "__pos": F.col("_metadata.row_index"),
-                    }
-                )
-            if with_fp:
-                df = df.withColumn("__fp", F.col("_metadata.file_path"))
-            return df
+            return df.withColumns({n: F.col(c) for n, (c, _t) in extra.items()})
 
         if not files:
             df = self.spark.createDataFrame([], schema=self.meta.schema_ddl)
-            if with_pos:
-                df = df.withColumns(
-                    {
-                        "__path": F.lit(None).cast("string"),
-                        "__pos": F.lit(None).cast("long"),
-                    }
-                )
-            if with_fp:
-                df = df.withColumn("__fp", F.lit(None).cast("string"))
-            return df
+            return df.withColumns(
+                {n: F.lit(None).cast(t) for n, (_c, t) in extra.items()}
+            )
         created = self.meta.doc.get("column_created_seq", {})
         renames = self.meta.doc.get("column_renames", [])
         widened = self.meta.doc.get("column_type_history", [])
@@ -1274,12 +1256,8 @@ class IceTable:
         # name must not resurrect old data). Group by file seq, mask,
         # union — the fast path above is untouched for tables that
         # never evolved.
-        from pyspark.sql.types import StructType
-
-        types = {
-            f.name: f.dataType
-            for f in StructType.fromDDL(self.meta.schema_ddl).fields
-        }
+        types = self._types()
+        declared = list(types)
         by_seq: dict[int, list[str]] = {}
         for f in files:
             by_seq.setdefault(int(f.get("seq", 0)), []).append(f["path"])
@@ -1298,9 +1276,6 @@ class IceTable:
             return types[name].simpleString()
 
         parts = []
-        declared = [
-            f.name for f in StructType.fromDDL(self.meta.schema_ddl).fields
-        ]
         for seq, paths in sorted(by_seq.items()):
             # Only columns ALIVE in this era (created before the file
             # was written) are read from the files; columns created
@@ -1318,9 +1293,6 @@ class IceTable:
                 for n in declared
                 if n not in created or seq > int(created[n])
             ]
-            meta_cols = (["__path", "__pos"] if with_pos else []) + (
-                ["__fp"] if with_fp else []
-            )
             if alive:
                 phys = {n: self._physical_name(n, seq) for n in alive}
                 era_schema = ", ".join(
@@ -1376,7 +1348,9 @@ class IceTable:
         snap = self._resolve_snapshot(as_of_timestamp_ms, snapshot_id)
         if snap is None:
             return self._read_files([])
-        return self._apply_deletes(self.meta.files(snap), self.meta.delete_entries(snap))
+        return self._apply_deletes(
+            self.meta.files(snap), self.meta.delete_entries(snap)
+        )
 
     def _resolve_snapshot(
         self,
@@ -1385,167 +1359,96 @@ class IceTable:
     ) -> dict | None:
         if snapshot_id is not None:
             return self.meta.snapshot(snapshot_id)
-        if as_of_timestamp_ms is not None:
-            # AS OF resolves through the SNAPSHOT LOG (history_log,
-            # Iceberg's snapshot-log semantics): the snapshot that was
-            # CURRENT at that instant. A max-over-all-snapshots rule
-            # would (a) leak unpublished branch heads — a staged WAP
-            # snapshot has the newest timestamp but never was current
-            # on main — and (b) ignore rollback, which re-points
-            # current at an OLDER snapshot and records that in the log
-            # (round-11 review finding).
-            log = self.meta.doc.get("history_log")
-            if log:
-                by_id = {s["snapshot_id"]: s for s in self.meta.snapshots}
-                last = None
-                for h in log:  # chronological
-                    if h["made_current_at_ms"] <= as_of_timestamp_ms:
-                        last = h
-                if last is None:
-                    return None
-                snap = by_id.get(last["snapshot_id"])
-                if snap is None:
-                    # The snapshot that WAS current at the requested
-                    # instant has been expired. Silently resolving to
-                    # an older still-live entry would return data that
-                    # was not current then (round-12 review fix);
-                    # Iceberg likewise fails time travel to expired
-                    # state.
-                    raise M.SnapshotExpired(
-                        f"time travel to {as_of_timestamp_ms}: snapshot "
-                        f"{last['snapshot_id']} was current at that "
-                        "instant but has been removed by "
-                        "expire_snapshots; the requested state can no "
-                        "longer be materialized"
+        if as_of_timestamp_ms is None:
+            sid = self.meta.current_snapshot_id
+            return None if sid is None else self.meta.snapshot(sid)
+        # The snapshot log (history_log) records rollbacks and never a
+        # staged branch head. A legacy doc without one falls back to
+        # the newest snapshot at or before the instant.
+        log = [
+            (h["made_current_at_ms"], h["snapshot_id"])
+            for h in self.meta.doc.get("history_log") or ()
+        ] or sorted(
+            (s["timestamp_ms"], s["snapshot_id"]) for s in self.meta.snapshots
+        )
+        sid = snapshot_as_of(log, as_of_timestamp_ms)
+        if sid is None:
+            return None
+        by_id = {s["snapshot_id"]: s for s in self.meta.snapshots}
+        if sid not in by_id:
+            # Resolving to an older still-live snapshot would return
+            # data that was not current then; Iceberg likewise fails
+            # time travel to expired state.
+            raise M.SnapshotExpired(
+                f"time travel to {as_of_timestamp_ms}: snapshot "
+                f"{sid} was current at that "
+                "instant but has been removed by "
+                "expire_snapshots; the requested state can no "
+                "longer be materialized"
+            )
+        return by_id[sid]
+
+    def _types(self) -> dict:
+        from pyspark.sql.types import StructType
+
+        return {
+            f.name: f.dataType
+            for f in StructType.fromDDL(self.meta.schema_ddl).fields
+        }
+
+    def _delete_files(self, entries: list[dict]) -> list[DeleteFile]:
+        """Native delete entries in the shared shape. Equality keys are
+        translated to CURRENT names through the rename log (deletes
+        follow renames, Iceberg's field-id semantics); all equality
+        entries must share one key set (order-insensitive). A
+        positional entry without ``dseq`` bounds no data sequence."""
+        out: list[DeleteFile] = []
+        key_set: list[str] | None = None
+        for d in entries:
+            kind = d.get("kind", "eq")
+            if kind == "pos":
+                tp = d.get("target_paths")
+                if tp is not None:
+                    tp = frozenset(map(os.path.abspath, tp))
+                out.append(
+                    DeleteFile(
+                        d["path"], int(d.get("dseq", sys.maxsize)), targets=tp
                     )
-                return snap
-            # legacy doc without a history log: fall back to the
-            # newest snapshot at-or-before the instant
-            eligible = [
-                s
-                for s in self.meta.snapshots
-                if s["timestamp_ms"] <= as_of_timestamp_ms
-            ]
-            return max(eligible, key=lambda s: s["timestamp_ms"]) if eligible else None
-        sid = self.meta.current_snapshot_id
-        return None if sid is None else self.meta.snapshot(sid)
+                )
+            elif kind == "eq":
+                cur = self._eq_delete_current_keys(d)
+                if key_set is None:
+                    key_set = cur
+                elif sorted(cur) != sorted(key_set):
+                    # delete_where_mor rejects mixed key sets at write
+                    # time; a hand-crafted manifest must not silently
+                    # apply a delete with the wrong equality columns
+                    raise ValueError(
+                        "equality-delete files disagree on key columns: "
+                        f"{key_set} vs {cur}"
+                    )
+                keys = tuple(zip(d["keys"], cur))
+                out.append(DeleteFile(d["path"], int(d["dseq"]), keys=keys))
+        return out
 
     def _apply_deletes(
         self, files: list[dict], delete_files: list[dict],
         keep_pos: bool = False,
     ) -> DataFrame:
-        """Read data files with merge-on-read equality deletes applied:
-        one anti-join of (rows, their file's data sequence) against the
-        union of delete-key files, matching on the equality columns and
-        ``row_seq < delete_seq`` (Iceberg v2 sequence rule). No data
-        file is rewritten — the cost moves to read time until a
-        rewrite materializes the deletes."""
-        if not delete_files:
-            return self._read_files(files, with_pos=keep_pos)
-        eq_dels = [d for d in delete_files if d.get("kind", "eq") == "eq"]
-        pos_dels = [d for d in delete_files if d.get("kind") == "pos"]
-        # Positional deletes name their target files on the entry
-        # (written by delete_where_pos); only those files need the
-        # _metadata columns and the (path, pos) anti-join — every
-        # other file scans clean. An entry without the target list
-        # (defensive) degrades to all-files-targeted.
-        pos_targets: set[str] | None = set()
-        for d in pos_dels:
-            tp = d.get("target_paths")
-            if tp is None:
-                pos_targets = None
-                break
-            pos_targets.update(tp)
+        """Rows of ``files`` with the merge-on-read ``delete_files``
+        applied (``morread.read_with_deletes``). No data file is
+        rewritten — the cost moves to read time until a rewrite
+        materializes the deletes."""
+        return self._read_shared(
+            files, self._delete_files(delete_files), keep_pos
+        )
 
-        def _needs_pos(f: dict) -> bool:
-            if keep_pos:
-                return True  # caller wants (__path, __pos) on every row
-            if not pos_dels:
-                return False
-            if pos_targets is None:
-                return True
-            return os.path.abspath(f["path"]) in pos_targets
-
-        by_key: dict[tuple[int, bool], list[dict]] = {}
-        for f in files:
-            by_key.setdefault((int(f.get("seq", 0)), _needs_pos(f)), []).append(f)
-        data = None
-        for (seq, wp), fs in sorted(by_key.items()):
-            part = self._read_files(fs, with_pos=wp).withColumn(
-                "__seq", F.lit(seq)
-            )
-            if bool(pos_dels) and not wp:
-                # untouched files still union with the targeted part:
-                # carry null markers so the schemas line up (the
-                # anti-join condition below only binds targeted rows)
-                part = part.withColumns(
-                    {
-                        "__path": F.lit(None).cast("string"),
-                        "__pos": F.lit(None).cast("long"),
-                    }
-                )
-            data = part if data is None else data.unionByName(part)
-        if data is None:
-            return self._read_files([])
-        if pos_dels:
-            # Positional deletes (Iceberg v2's second delete flavor):
-            # (file_path, pos) pairs target rows of a SPECIFIC data
-            # file by ordinal. Data-file paths are never reused, so a
-            # path+pos match alone is already sequence-correct — a key
-            # re-inserted after the delete lands in a NEW file and can
-            # never collide with a recorded (path, pos).
-            pd_union = None
-            for d in pos_dels:
-                one = self.spark.read.parquet(d["path"]).select(
-                    F.col("file_path").alias("__path"),
-                    F.col("pos").alias("__pos"),
-                )
-                pd_union = one if pd_union is None else pd_union.unionByName(one)
-            data = data.join(pd_union, ["__path", "__pos"], "left_anti")
-            if not keep_pos:
-                data = data.drop("__path", "__pos")
-        if eq_dels:
-            # Key columns are compared under CURRENT logical names:
-            # each sidecar's recorded write-time names are translated
-            # through the rename log (round-11 fix: RENAME COLUMN with
-            # outstanding equality deletes used to break every read
-            # with UNRESOLVED_COLUMN — deletes must follow renames,
-            # Iceberg's field-id semantics).
-            cur_keys = [self._eq_delete_current_keys(d) for d in eq_dels]
-            keys = cur_keys[0]
-            # delete_where_mor rejects mixed key SETS at write time;
-            # re-check here so a hand-crafted manifest cannot silently
-            # apply a later delete with the wrong equality columns.
-            # Order-insensitive (round-10 ADVICE): the anti-join binds
-            # by column NAME, so ['k','v'] and ['v','k'] are one set.
-            for cur in cur_keys[1:]:
-                if sorted(cur) != sorted(keys):
-                    raise ValueError(
-                        "equality-delete files disagree on key columns: "
-                        f"{keys} vs {cur}"
-                    )
-            dels = None
-            for d, cur in zip(eq_dels, cur_keys):
-                one = (
-                    self.spark.read.parquet(d["path"])
-                    .select(
-                        *[
-                            F.col(phys).alias(c)
-                            for phys, c in zip(d["keys"], cur)
-                        ]
-                    )
-                    .withColumn("__dseq", F.lit(int(d["dseq"])))
-                )
-                dels = one if dels is None else dels.unionByName(one)
-            cond = F.col("__seq") < F.col("__dseq")
-            for k in keys:
-                # NULL-SAFE equality (round-11 fix): Iceberg equality
-                # deletes treat null as equal to null, so a delete row
-                # with a NULL key must delete NULL-keyed data rows —
-                # plain `=` made such tombstones silent no-ops
-                cond = cond & data[k].eqNullSafe(dels[k])
-            data = data.join(dels, cond, "left_anti")
-        return data.drop("__seq")
+    def _read_shared(
+        self, files: list[dict], dels: list[DeleteFile], keep_pos=False
+    ) -> DataFrame:
+        return read_with_deletes(
+            self.spark, files, dels, self._read_files, self._types(), keep_pos
+        )
 
     @staticmethod
     def _delete_entry_bytes(d: dict) -> int:
@@ -1561,70 +1464,29 @@ class IceTable:
             return 0
 
     def scan(self, preds: list | None = None) -> DataFrame:
-        """Pruned scan (A25/A26): partition-transform + column-bounds
-        file pruning in the planner, then the same predicate pushed to
-        Spark for row-level correctness. ``last_scan_report`` records
-        the files/bytes ratio benchmarked against BASELINE.md.
+        """Pruned scan (A25/A26, ``morread.pruned_scan``): partition-
+        transform, column-bounds, bloom and bucket file pruning in the
+        planner, merge-on-read deletes applied to the kept files, then
+        the same predicate pushed to Spark for row-level correctness.
+        ``last_scan_report`` records the files/bytes ratio benchmarked
+        against BASELINE.md, plus the delete files the read also
+        touches.
 
         ``preds`` is a conjunct list or DNF (list of conjunct lists):
-        for an OR predicate a file survives if ANY disjunct keeps it,
-        and bucket pruning applies per disjunct before the union."""
-        from iceberg_workshop_spark.icetbl.pruning import (
-            PRUNE_DISTRIBUTED_THRESHOLD,
-            normalize_dnf,
-            prune_files_distributed,
+        for an OR predicate a file survives if ANY disjunct keeps it."""
+        dels = self.meta.current_deletes()
+        df, self.last_scan_report = pruned_scan(
+            self.spark,
+            self.meta.current_files(),
+            self._delete_files(dels),
+            dict(enumerate(self.meta.specs)),
+            preds,
+            self._bucket_expectations,
+            self._read_shared,
         )
-
-        files = self.meta.current_files()
-        spec_by_id = {i: s for i, s in enumerate(self.meta.specs)}
-        dnf = normalize_dnf(preds or [])
-        if not dnf:
-            kept = files
-        elif len(files) >= PRUNE_DISTRIBUTED_THRESHOLD:
-            # scale path: the per-file survival decision runs on
-            # executors (same pure functions — pruning.survives_dnf),
-            # one pass for ALL disjuncts; only bucket expectations are
-            # computed driver-side (metadata-sized)
-            kept = prune_files_distributed(
-                self.spark, files, spec_by_id, dnf,
-                [self._bucket_expectations(d) for d in dnf],
-            )
-        else:
-            kept_paths: set[str] = set()
-            for d in dnf:
-                k, _ = prune_files(files, spec_by_id, d)
-                k = self._prune_bucket(k, d)
-                kept_paths.update(f["path"] for f in k)
-            kept = [f for f in files if f["path"] in kept_paths]
-        # Merge-on-read deletes apply on the pruned path too (round-10
-        # fix: scan() used to read kept files raw, silently
-        # resurrecting MoR-deleted rows on any pruned read, including
-        # sqlfront predicate pushdown). The anti-join runs against the
-        # KEPT subset only, so pruning still pays.
-        cur = self.meta.current_snapshot_id
-        dels = (
-            self.meta.delete_entries(self.meta.snapshot(cur))
-            if cur is not None
-            else []
+        self.last_scan_report["delete_bytes_read"] = sum(
+            self._delete_entry_bytes(d) for d in dels
         )
-        self.last_scan_report = {
-            "files_total": len(files),
-            "files_scanned": len(kept),
-            "bytes_total": sum(f.get("file_size", 0) for f in files),
-            "bytes_scanned": sum(f.get("file_size", 0) for f in kept),
-            # MoR sidecars the read must ALSO touch (they are not part
-            # of the prune ratio — files_/bytes_scanned measure the
-            # data-file skipping the planner achieved — but the report
-            # should not understate total read IO when deletes are
-            # outstanding)
-            "delete_files_read": len(dels),
-            "delete_bytes_read": sum(
-                self._delete_entry_bytes(d) for d in dels
-            ),
-        }
-        df = self._apply_deletes(kept, dels) if dels else self._read_files(kept)
-        if dnf:
-            df = df.filter(_dnf_to_column(dnf))
         return df
 
     def _bucket_hash_flavor(self) -> str:
@@ -1638,87 +1500,27 @@ class IceTable:
     def _bucket_expectations(
         self, preds: list[Pred]
     ) -> dict[tuple[int, str], str | None]:
-        """Precompute each bucket partition field's expected dir value
-        for one disjunct's equality literals: ``(spec_id, field_name)``
-        → the literal's bucket id as a string, or None for "cannot
-        prune this field" (uncoercible literal). Driver-side and
-        metadata-sized — the per-file check against it is the pure
-        :func:`pruning.bucket_survives`, shared with the distributed
-        planner.
+        """``morread.bucket_expectations`` over this table's specs: the
+        literal is bucketed with the SAME function the writer used —
+        murmur3 for current tables, Spark's hash for legacy ones."""
+        types = self._types()
 
-        The literal is bucketed with the SAME function used at write
-        time — Iceberg's murmur3 transform (bucketing.bucket_value,
-        after coercing the literal to the source column's type) for
-        current tables, Spark's hash for legacy ones — so planner and
-        writer can never disagree. Range predicates can't prune a hash
-        bucket; they never register an expectation."""
-        eq = {p.col: p.value for p in preds if p.op == "="}
-        out: dict[tuple[int, str], str | None] = {}
-        if not eq:
-            return out
+        def spark_hash(value: Any, source: str, n: int) -> str:
+            lit = F.lit(value).cast(types[source])
+            b = F.pmod(F.hash(lit), F.lit(n)).alias("b")
+            return str(self.spark.range(1).select(b).first()["b"])
+
         murmur = self._bucket_hash_flavor() == "iceberg-murmur3"
-        from pyspark.sql.types import StructType
-
-        types = {
-            f.name: f.dataType
-            for f in StructType.fromDDL(self.meta.schema_ddl).fields
-        }
-        if murmur:
-            from iceberg_workshop_spark.icetbl.bucketing import (
-                UncoercibleLiteral,
-                bucket_value,
-                coerce_bucket_literal,
-            )
-        cache: dict[tuple[str, int], str | None] = {}
-        for sid, spec in enumerate(self.meta.specs):
-            for field in spec:
-                t = field["transform"]
-                if not (t.startswith("bucket[") and field["source"] in eq):
-                    continue
-                n = int(t[7:-1])
-                key = (field["source"], n)
-                if key not in cache:
-                    if murmur:
-                        # coerce the literal to the SOURCE column's
-                        # type first (ADVICE r13: an ISO string on a
-                        # date column or an int on a decimal column
-                        # hashes different bytes than the write path
-                        # and silently prunes matching files)
-                        try:
-                            lit = coerce_bucket_literal(
-                                eq[field["source"]],
-                                types[field["source"]].simpleString(),
-                            )
-                            cache[key] = str(bucket_value(lit, n))
-                        except UncoercibleLiteral:
-                            cache[key] = None
-                    else:
-                        lit = F.lit(eq[field["source"]]).cast(
-                            types[field["source"]]
-                        )
-                        row = (
-                            self.spark.range(1)
-                            .select(
-                                F.pmod(F.hash(lit), F.lit(n)).alias("b")
-                            )
-                            .first()
-                        )
-                        cache[key] = str(row["b"])
-                out[(sid, field["name"])] = cache[key]
-        return out
+        return bucket_expectations(
+            dict(enumerate(self.meta.specs)),
+            {k: t.simpleString() for k, t in types.items()},
+            preds,
+            None if murmur else spark_hash,
+        )
 
     def _prune_bucket(self, files: list[dict], preds: list[Pred]) -> list[dict]:
-        """Bucket-transform pruning for one disjunct — expectations
-        computed once driver-side, applied per file via the shared
-        :func:`pruning.bucket_survives`."""
-        from iceberg_workshop_spark.icetbl.pruning import bucket_survives
-
-        if not files:
-            return files
-        exp = self._bucket_expectations(preds)
-        if not exp:
-            return files
-        return [f for f in files if bucket_survives(f, exp)]
+        """Bucket-transform pruning for one disjunct."""
+        return survive_buckets(files, preds, self._bucket_expectations)
 
     def history(self) -> DataFrame:
         """The `.history` metadata table (A31): made_current_at,
@@ -1798,151 +1600,39 @@ class IceTable:
         column in {'insert','delete'} (an UPDATE surfaces as the
         delete/insert pair, Iceberg's pre/post-update images).
 
-        Scale contract: O(changed files), never O(table). A data file
-        present in BOTH endpoint snapshots contributes identical rows
-        to both sides of the diff, so only the symmetric difference of
-        the file sets is read; rows a copy-on-write rewrite carried
-        over unchanged cancel in the `exceptAll`, which is exactly the
-        net-changes semantics. When the endpoints' merge-on-read
-        delete-file sets differ (a MoR delete can flip visibility of
-        rows in *unchanged* files), the affected unchanged files are
-        added back after stats-based pruning against the differing
-        delete files' key bounds — O(files whose key ranges intersect
-        the deleted keys), the same bound Iceberg gets from manifest
-        stats."""
+        O(changed files), never O(table): see ``morread.changelog``."""
+        def side(snap: dict | None) -> tuple[list[dict], list[DeleteFile]]:
+            if snap is None:
+                return [], []
+            dels = self._delete_files(self.meta.delete_entries(snap))
+            return self.meta.files(snap), dels
+
         from_snap = (
             None
             if from_snapshot_id is None
             else self.meta.snapshot(from_snapshot_id)
         )
-        to_snap = self._resolve_snapshot(None, to_snapshot_id)
-        from_files = [] if from_snap is None else self.meta.files(from_snap)
-        to_files = [] if to_snap is None else self.meta.files(to_snap)
-        from_dels = [] if from_snap is None else self.meta.delete_entries(from_snap)
-        to_dels = [] if to_snap is None else self.meta.delete_entries(to_snap)
-        fp = {f["path"] for f in from_files}
-        tp = {f["path"] for f in to_files}
-        relevant = fp ^ tp
-
-        # MoR delta: delete files present in only one endpoint can mask
-        # rows in files common to both. Prune the common files by the
-        # differing delete files' key bounds before reading them.
-        def _del_key(d: dict) -> tuple:
-            return (d["path"], int(d["dseq"]))
-
-        d_from = {_del_key(d): d for d in from_dels}
-        d_to = {_del_key(d): d for d in to_dels}
-        diff_dels = [
-            d
-            for k, d in (d_from | d_to).items()
-            if (k in d_from) != (k in d_to)
-        ]
-        if diff_dels:
-            common = [f for f in from_files if f["path"] in (fp & tp)]
-            spec_by_id = {i: s for i, s in enumerate(self.meta.specs)}
-            # One bounds job per distinct key set (tables share one
-            # equality key set in practice), not one per delete file:
-            # sequential per-file .first() round-trips would dominate
-            # changelog latency with many delete files.
-            # Positional delete files name their targets outright:
-            # the delete file's distinct file_path values ARE the
-            # affected files — no stats pruning needed, exact by
-            # construction.
-            pos_diff = [d for d in diff_dels if d.get("kind") == "pos"]
-            if pos_diff:
-                hit_uris = {
-                    r["file_path"]
-                    for r in self.spark.read.parquet(
-                        *[d["path"] for d in pos_diff]
-                    )
-                    .select("file_path")
-                    .distinct()
-                    .collect()
-                }
-                hit_paths = {
-                    urllib.parse.unquote(urllib.parse.urlparse(u).path)
-                    for u in hit_uris
-                }
-                relevant.update(
-                    f["path"]
-                    for f in from_files
-                    if f["path"] in (fp & tp)
-                    and os.path.abspath(f["path"]) in hit_paths
-                )
-            by_keys: dict[tuple, list[dict]] = {}
-            for d in diff_dels:
-                if d.get("kind") == "pos":
-                    continue
-                by_keys.setdefault(tuple(d["keys"]), []).append(d)
-            for keys, dels in by_keys.items():
-                bounds_rows = (
-                    self.spark.read.parquet(*[d["path"] for d in dels])
-                    .select(
-                        F.col("_metadata.file_path").alias("__fp"),
-                        *keys,
-                    )
-                    .groupBy("__fp")
-                    .agg(
-                        *[F.min(k).alias(f"mn_{k}") for k in keys],
-                        *[F.max(k).alias(f"mx_{k}") for k in keys],
-                    )
-                    .collect()
-                )
-                by_path = {
-                    urllib.parse.unquote(
-                        urllib.parse.urlparse(r["__fp"]).path
-                    ): r
-                    for r in bounds_rows
-                }
-                for d in dels:
-                    # a lookup miss degrades to unpruned-but-correct
-                    bounds = by_path.get(os.path.abspath(d["path"]))
-                    preds = (
-                        [
-                            Pred(
-                                k,
-                                "between",
-                                (bounds[f"mn_{k}"], bounds[f"mx_{k}"]),
-                            )
-                            for k in keys
-                            if bounds[f"mn_{k}"] is not None
-                        ]
-                        if bounds is not None
-                        else []
-                    )
-                    affected = [
-                        f
-                        for f in common
-                        if int(f.get("seq", 0)) < int(d["dseq"])
-                    ]
-                    if preds:
-                        affected, _ = prune_files(
-                            affected, spec_by_id, preds
-                        )
-                    relevant.update(f["path"] for f in affected)
-
-        rows_from = self._apply_deletes(
-            [f for f in from_files if f["path"] in relevant], from_dels
+        out = changelog(
+            self.spark,
+            side(from_snap),
+            side(self._resolve_snapshot(None, to_snapshot_id)),
+            dict(enumerate(self.meta.specs)),
+            self._types(),
+            self._read_shared,
         )
-        rows_to = self._apply_deletes(
-            [f for f in to_files if f["path"] in relevant], to_dels
-        )
-        inserts = rows_to.exceptAll(rows_from).withColumn(
-            "_change_type", F.lit("insert")
-        )
-        deletes = rows_from.exceptAll(rows_to).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        out = inserts.unionByName(deletes)
         if identifier_columns:
             # Iceberg's update-image pairing (create_changelog_view's
             # identifier_columns): a delete and an insert sharing the
             # row identity are the two halves of an UPDATE — relabel
             # them update_preimage/update_postimage. The semi-joins
             # shuffle only the delta, never the table.
+            kind = F.col("_change_type")
             upd_keys = (
-                inserts.select(*identifier_columns)
-                .intersect(deletes.select(*identifier_columns))
+                out.filter(kind == "insert")
+                .select(*identifier_columns)
+                .intersect(
+                    out.filter(kind == "delete").select(*identifier_columns)
+                )
             )
             # no broadcast hint: AQE broadcasts when the key set is
             # small; a huge merge delta stays a shuffled join
@@ -2029,41 +1719,3 @@ class IceTable:
 
         self._retry_commit(mutate)
 
-
-def _dnf_to_column(dnf: list[list[Pred]]) -> F.Column:
-    """OR-of-AND filter for a DNF predicate list. An empty disjunct is
-    TRUE (that OR branch was un-analyzable — no row constraint)."""
-    disjuncts = []
-    for d in dnf:
-        c = F.lit(True)
-        for p in d:
-            c = c & _pred_to_column(p)
-        disjuncts.append(c)
-    out = disjuncts[0]
-    for c in disjuncts[1:]:
-        out = out | c
-    return out
-
-
-def _pred_to_column(p: Pred) -> F.Column:
-    c = F.col(p.col)
-    v = p.value
-
-    def lit(x: Any) -> F.Column:
-        if isinstance(x, datetime):
-            return F.lit(x.isoformat(sep=" ")).cast("timestamp")
-        return F.lit(x)
-
-    if p.op == "=":
-        return c == lit(v)
-    if p.op == "<":
-        return c < lit(v)
-    if p.op == "<=":
-        return c <= lit(v)
-    if p.op == ">":
-        return c > lit(v)
-    if p.op == ">=":
-        return c >= lit(v)
-    if p.op == "between":
-        return c.between(lit(v[0]), lit(v[1]))
-    raise ValueError(p.op)

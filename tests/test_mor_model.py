@@ -36,6 +36,11 @@ outstanding deletes (the round-10 fix, kept fixed):
   rows;
 - rewrite_equality_deletes materializes: visible rows unchanged,
   delete entries dropped.
+
+Every 10th op the table is also exported as real Iceberg
+(`export_iceberg`) into a fresh directory and read back through the
+foreign dialect (`read_iceberg`): both dialects must agree with each
+other and with the model.
 """
 
 from __future__ import annotations
@@ -74,6 +79,10 @@ def _run_sequence(spark, loc, rng, reload_each_step=False):
     persists fails here (round-11 hardening for the O(changed-files)
     commit + manifest-list topology)."""
     from iceberg_workshop_spark.icetbl import IceTable
+    from iceberg_workshop_spark.icetbl.iceformat import (
+        export_iceberg,
+        read_iceberg,
+    )
     from iceberg_workshop_spark.icetbl.pruning import Pred
 
     next_v = [0]
@@ -191,9 +200,20 @@ def _run_sequence(spark, loc, rng, reload_each_step=False):
         checked = (
             IceTable.load(spark, loc) if reload_each_step else t
         )
-        assert _read_set(checked) == _model_set(rows, eq_dels), (
+        native = _read_set(checked)
+        assert native == _model_set(rows, eq_dels), (
             f"step {step} op {op} history {history}"
         )
+        if step % 10 == 9:
+            dest = f"{loc}_iceberg_{step}"
+            export_iceberg(checked, dest)
+            foreign = sorted(
+                (row["k"], row["v"])
+                for row in read_iceberg(spark, dest).collect()
+            )
+            assert foreign == native, (
+                f"exported read, step {step} history {history}"
+            )
         if step % 3 == 2:
             kpick = rng.choice(KEY_SPACE)
             got = sorted(

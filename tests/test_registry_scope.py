@@ -122,3 +122,16 @@ def test_query_modules_leave_session_state_to_the_registry():
             if _RAW.search(line):
                 hits.append(f"{rel}:{no}: {line.strip()}")
     assert not hits, "use registry.persist / registry.set_conf:\n" + "\n".join(hits)
+
+
+def test_udtf_words_registers_no_function(spark):
+    """q_udtf_words calls its Python UDTF through ``lateralJoin``: no
+    session function is registered (re-registering it on every call
+    logged "replaced a previously registered function")."""
+    from iceberg_workshop_spark.registry import queries
+    from tests.conftest import SMOKE_SF_DIR
+
+    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS iws_word_splitter")
+    rows = queries()["q_udtf_words"](spark, SMOKE_SF_DIR).collect()
+    assert rows
+    assert not spark.catalog.functionExists("iws_word_splitter")
