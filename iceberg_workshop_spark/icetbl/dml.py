@@ -465,37 +465,6 @@ IceTable.merge_into = merge_into
 IceTable.update_where = update_where
 
 
-def _write_delete_sidecar(tbl: IceTable, prefix: str, df: DataFrame):
-    """Shared sidecar-file protocol for delete files: write the rows
-    (sorted, single file) under data/, return (paths, row_count,
-    pyarrow table of the written rows). Reading the just-written local
-    file back is ONE tiny IO instead of re-running the planning scan
-    per derived quantity (row count, distinct targets) — the full-table
-    predicate scan runs exactly once."""
-    import os as _os
-    import uuid as _uuid
-
-    import pyarrow.parquet as _pq
-
-    from iceberg_workshop_spark.icetbl import meta as M2
-
-    ddir = _os.path.join(
-        tbl.meta.location, M2.DATA_DIR, f"{prefix}-{_uuid.uuid4().hex[:12]}"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(ddir)
-    paths = [
-        _os.path.join(root, n)
-        for root, _d, names in _os.walk(ddir)
-        for n in names
-        if n.endswith(".parquet")
-    ]
-    tables = [_pq.read_table(p) for p in paths]
-    import pyarrow as _pa
-
-    content = tables[0] if len(tables) == 1 else _pa.concat_tables(tables)
-    return paths, content.num_rows, content
-
-
 def _require_key_set(tbl: IceTable, keys: list[str]) -> None:
     """All equality deletes of a table share one key set (order-
     insensitive): the reader anti-joins every delete file on the same
@@ -575,7 +544,9 @@ def delete_keys_mor(
 def _commit_eq_delete(
     tbl: IceTable, matching: DataFrame, keys: list[str]
 ) -> dict[str, int]:
-    paths, n_keys, _content = _write_delete_sidecar(tbl, "eqdel", matching)
+    from iceberg_workshop_spark.icetbl.iceformat import stage_delete_file
+
+    staged = stage_delete_file(matching, tbl.meta.location, "eqdel")
     # dseq is stamped from the base seen at PLAN time and deliberately
     # NOT re-stamped when `_mor_append_rebase` retries the commit onto
     # N concurrent append winners. After a rebase the delete's dseq can
@@ -587,10 +558,16 @@ def _commit_eq_delete(
     # snapshot's own sequence number — is pinned by
     # tests/test_concurrency.py's concurrent MoR cases.
     dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
+    # an empty key set still commits (one snapshot per call), with no
+    # delete file
     entries = [
-        {"path": p, "record_count": n_keys, "keys": list(keys), "dseq": dseq}
-        for p in paths
-    ]
+        {
+            "path": staged[0],
+            "record_count": staged[1].num_rows,
+            "keys": list(keys),
+            "dseq": dseq,
+        }
+    ] if staged else []
     existing = _current_deletes(tbl)
     # Delta commit: the head's data AND delete manifests carry by
     # reference; only the new sidecar entries are written — the commit
@@ -606,7 +583,10 @@ def _commit_eq_delete(
             tbl, tbl.meta, tbl.meta.current_snapshot_id, existing, [], entries
         ),
     )
-    return {"delete_files_added": len(entries), "keys_deleted": n_keys}
+    return {
+        "delete_files_added": len(entries),
+        "keys_deleted": sum(e["record_count"] for e in entries),
+    }
 
 
 IceTable.delete_where_mor = delete_where_mor
@@ -662,32 +642,38 @@ def insert_overwrite(tbl: IceTable, df: DataFrame) -> dict[str, int]:
 IceTable.insert_overwrite = insert_overwrite
 
 
-def _pos_entries(
-    tbl: IceTable,
-    paths: list[str],
-    n_pos: int,
-    content,
-    dseq: int | None = None,
+def _stage_pos_deletes(
+    tbl: IceTable, positions: DataFrame, dseq: int | None = None
 ) -> list[dict]:
-    """Manifest entries for freshly written positional-delete sidecars
-    (``dseq`` defaults to the next sequence number). Each records its
-    TARGET data files (Iceberg keeps the same information in manifest
-    stats): readers apply the (path, pos) anti-join only to the named
-    files and scan every other file clean. Metadata-scale: one
-    canonical path per touched file."""
+    """Stage a (file_path, pos) frame as one positional delete file,
+    sorted by (file_path, pos) as Iceberg lays them out so readers can
+    merge-apply, and return its manifest entries: none when the frame
+    is empty (nothing is written then). ``dseq`` defaults to the next
+    sequence number. Each entry records its TARGET data files
+    (Iceberg keeps the same information in manifest stats): readers
+    apply the (path, pos) anti-join only to the named files and scan
+    every other file clean. Metadata-scale: one canonical path per
+    touched file, read from the staged file, so the planning scan
+    runs once."""
+    from iceberg_workshop_spark.icetbl.iceformat import stage_delete_file
+
+    staged = stage_delete_file(
+        positions.orderBy("file_path", "pos"), tbl.meta.location, "posdel"
+    )
+    if staged is None:
+        return []
+    path, content = staged
     uris = content.column("file_path").unique().to_pylist()
-    target_paths = sorted({canon_path(u) for u in uris})
     if dseq is None:
         dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
     return [
         {
-            "path": p,
-            "record_count": n_pos,
+            "path": path,
+            "record_count": content.num_rows,
             "kind": "pos",
             "dseq": dseq,
-            "target_paths": target_paths,
+            "target_paths": sorted({canon_path(u) for u in uris}),
         }
-        for p in paths
     ]
 
 
@@ -726,14 +712,9 @@ def delete_where_pos(tbl: IceTable, condition: str) -> dict[str, int]:
             F.col("__pos").alias("pos"),
         )
     )
-    # Iceberg sorts position deletes by (file_path, pos) so readers
-    # can merge-apply them; keep that layout. The planning scan runs
-    # ONCE (the write); row count and the target list come from
-    # reading the tiny written file back.
-    paths, n_pos, content = _write_delete_sidecar(
-        tbl, "posdel", matching.orderBy("file_path", "pos")
-    )
-    entries = _pos_entries(tbl, paths, n_pos, content)
+    entries = _stage_pos_deletes(tbl, matching)
+    if not entries:  # nothing matched: no file, no commit
+        return {"delete_files_added": 0, "positions_deleted": 0}
     existing = _current_deletes(tbl)
     tbl._commit_snapshot_delta(
         [],
@@ -744,7 +725,10 @@ def delete_where_pos(tbl: IceTable, condition: str) -> dict[str, int]:
             tbl, tbl.meta, tbl.meta.current_snapshot_id, existing, [], entries
         ),
     )
-    return {"delete_files_added": len(entries), "positions_deleted": n_pos}
+    return {
+        "delete_files_added": 1,
+        "positions_deleted": entries[0]["record_count"],
+    }
 
 
 def update_where_mor(
@@ -780,6 +764,10 @@ def update_where_mor(
         positions = live.select(
             F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
         )
+        entries = _stage_pos_deletes(tbl, positions)
+        if not entries:
+            # nothing matched: no file written, no empty commit
+            return {"positions_deleted": 0, "files_added": 0}
         updated = live.select(
             *[
                 F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(c)
@@ -788,16 +776,8 @@ def update_where_mor(
         )
         spec_id = tbl.meta.current_spec_id
         new_files = tbl._write_files(updated, tbl.meta.specs[spec_id], spec_id)
-        paths, n_pos, content = _write_delete_sidecar(
-            tbl, "posdel", positions.orderBy("file_path", "pos")
-        )
     finally:
         live.unpersist()
-    if n_pos == 0:
-        # nothing matched: drop the empty sidecar-dir artifacts and
-        # leave the table untouched (no empty commit)
-        return {"positions_deleted": 0, "files_added": 0}
-    entries = _pos_entries(tbl, paths, n_pos, content)
     existing = _current_deletes(tbl)
     tbl._commit_snapshot_delta(
         new_files,
@@ -813,7 +793,10 @@ def update_where_mor(
             entries,
         ),
     )
-    return {"positions_deleted": n_pos, "files_added": len(new_files)}
+    return {
+        "positions_deleted": entries[0]["record_count"],
+        "files_added": len(new_files),
+    }
 
 
 IceTable.delete_where_pos = delete_where_pos
@@ -887,16 +870,12 @@ def merge_into_mor(
         new_files = tbl._write_files(
             new_rows, tbl.meta.specs[spec_id], spec_id
         )
-        if positions is not None:
-            paths, n_pos, content = _write_delete_sidecar(
-                tbl, "posdel", positions.orderBy("file_path", "pos")
-            )
-        else:
-            paths, n_pos, content = [], 0, None
+        entries = (
+            _stage_pos_deletes(tbl, positions) if positions is not None else []
+        )
     finally:
         if live is not None:
             live.unpersist()
-    entries = _pos_entries(tbl, paths, n_pos, content) if n_pos else []
     existing = _current_deletes(tbl)
     tbl._commit_snapshot_delta(
         new_files,
@@ -912,7 +891,10 @@ def merge_into_mor(
             entries,
         ),
     )
-    return {"positions_deleted": n_pos, "files_added": len(new_files)}
+    return {
+        "positions_deleted": sum(e["record_count"] for e in entries),
+        "files_added": len(new_files),
+    }
 
 
 IceTable.update_where_mor = update_where_mor

@@ -624,6 +624,7 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
 
     from pyspark.sql import functions as F
 
+    from iceberg_workshop_spark.icetbl.dml import _stage_pos_deletes
     from iceberg_workshop_spark.icetbl.morread import canon_path_col
 
     dels = tbl.meta.current_deletes()
@@ -660,20 +661,15 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
         .withColumn("__norm", norm)
         .join(live_df, F.col("__norm") == F.col("live_path"), "left_semi")
         .drop("__norm")
-        .orderBy("file_path", "pos")
     )
+    # counting first skips the sorted write when every position dangles
+    # (the usual case right after a compaction)
     n_live = live.count()
-    new_entries: list[dict] = []
-    if n_live:
-        from iceberg_workshop_spark.icetbl.dml import (
-            _pos_entries,
-            _write_delete_sidecar,
-        )
-
-        paths, _n, content = _write_delete_sidecar(tbl, "posdel", live)
-        new_entries = _pos_entries(
-            tbl, paths, n_live, content, max(int(d["dseq"]) for d in pos_dels)
-        )
+    new_entries = (
+        _stage_pos_deletes(tbl, live, max(int(d["dseq"]) for d in pos_dels))
+        if n_live
+        else []
+    )
     tbl._commit_snapshot_delta(
         [],
         [],

@@ -2595,3 +2595,33 @@ def test_update_iceberg_where_foreign_mor(spark, tmp_path):
         update_iceberg_where(spark, dest, "id = 999", {"amount": "0.0"})
     with pytest.raises(ValueError, match="SET columns"):
         update_iceberg_where(spark, dest, "id = 1", {"zzz": "1"})
+
+
+def test_rewrite_iceberg_files_guarantees_name_mapping(spark, tmp_path):
+    """Compaction writes ID-less parquet like every foreign writer, so
+    its commit guarantees ``schema.name-mapping.default`` even when
+    the table it starts from lacks the property."""
+    from iceberg_workshop_spark.icetbl.iceformat import (
+        current_metadata_path,
+        rewrite_iceberg_files,
+    )
+
+    df = spark.range(12).selectExpr("id", "concat('n', id) as name")
+    t = IceTable.create_as(spark, str(tmp_path / "src"), df)
+    dest = str(tmp_path / "ice")
+    md = export_iceberg(t, dest)
+    with open(md) as fh:
+        doc = json.load(fh)
+    del doc["properties"]["schema.name-mapping.default"]
+    with open(md, "w") as fh:
+        json.dump(doc, fh)
+    before = sorted(read_iceberg(spark, dest).collect())
+
+    new_md, _rep = rewrite_iceberg_files(spark, dest)
+    assert new_md == current_metadata_path(dest)
+    props = resolve_iceberg_metadata(dest)["properties"]
+    assert json.loads(props["schema.name-mapping.default"]) == [
+        {"field-id": 1, "names": ["id"]},
+        {"field-id": 2, "names": ["name"]},
+    ]
+    assert sorted(read_iceberg(spark, dest).collect()) == before

@@ -8,7 +8,12 @@ survive export's typed encoding and import's decoding UNCHANGED —
 ``decode(encode(dir)) == dir`` for every transform and value. A drift
 in either direction silently mis-prunes adopted foreign tables, so
 the round trip is pinned here property-style, Spark-free (the
-encoders/decoders are pure functions over metadata)."""
+encoders/decoders are pure functions over metadata).
+
+The last test drives Spark: it pins the one metadata writer by
+checking that every manifest-list row, snapshot summary and
+metadata-log entry agrees with the manifests after export and after
+each foreign commit."""
 
 from __future__ import annotations
 
@@ -173,3 +178,128 @@ def test_sort_order_serialize_parse_roundtrip(fields):
     name_by_id = {v["id"]: k for k, v in by_name.items()}
     jf = to_iceberg_fields(fields, by_name)
     assert from_iceberg_fields(jf, name_by_id) == fields
+
+
+# ------------------------------------------ manifest-list consistency
+
+
+def _assert_manifest_lists_agree(dest: str) -> None:
+    """Every reachable snapshot's manifest-list rows agree with the
+    entries of the manifests they name; its summary totals agree with
+    the live data entries; every metadata-log entry names an existing
+    earlier metadata file."""
+    import json
+    import os
+    import re
+
+    from iceberg_workshop_spark.icetbl.avroio import read_avro
+    from iceberg_workshop_spark.icetbl.iceformat import (
+        current_metadata_path,
+        resolve_iceberg_metadata,
+    )
+
+    def version(path: str) -> int:
+        return int(re.match(r"v(\d+)\.", os.path.basename(path)).group(1))
+
+    doc = resolve_iceberg_metadata(dest)
+    current = current_metadata_path(dest)
+    for snap in doc["snapshots"]:
+        _, rows, _ = read_avro(snap["manifest-list"])
+        live_files = live_records = 0
+        for row in rows:
+            _, entries, fmeta = read_avro(row["manifest_path"])
+            spec = json.loads(fmeta["partition-spec"])
+
+            def of(status):
+                return [e for e in entries if e["status"] == status]
+
+            assert row["added_files_count"] == len(of(1))
+            assert row["existing_files_count"] == len(of(0))
+            assert row["added_rows_count"] == sum(
+                e["data_file"]["record_count"] for e in of(1)
+            )
+            assert row["existing_rows_count"] == sum(
+                e["data_file"]["record_count"] for e in of(0)
+            )
+            seqs = [e["sequence_number"] for e in entries]
+            if seqs:
+                assert row["sequence_number"] == max(seqs)
+                assert row["min_sequence_number"] == min(seqs)
+            assert [p["contains_null"] for p in row["partitions"]] == [
+                any(e["data_file"]["partition"].get(pf["name"]) is None
+                    for e in entries)
+                for pf in spec
+            ]
+            live = [
+                e["data_file"] for e in entries
+                if e["status"] != 2 and e["data_file"]["content"] == 0
+            ]
+            live_files += len(live)
+            live_records += sum(f["record_count"] for f in live)
+        assert snap["summary"]["total-data-files"] == str(live_files)
+        assert snap["summary"]["total-records"] == str(live_records)
+    for entry in doc["metadata-log"]:
+        assert os.path.exists(entry["metadata-file"])
+        assert version(entry["metadata-file"]) < version(current)
+
+
+def test_manifest_lists_agree_with_manifests_across_writers(spark, tmp_path):
+    """Export a partition-evolved table carrying both delete kinds,
+    then commit through every snapshot-producing foreign writer: after
+    each commit the manifest lists, snapshot summaries and metadata
+    log of every reachable snapshot agree with the manifests."""
+    from iceberg_workshop_spark.icetbl import spec_field
+    from iceberg_workshop_spark.icetbl.iceformat import (
+        append_iceberg,
+        delete_iceberg_keys,
+        delete_iceberg_where,
+        export_iceberg,
+        read_iceberg,
+        rewrite_iceberg_files,
+        update_iceberg_where,
+    )
+    from iceberg_workshop_spark.icetbl.table import IceTable
+
+    schema = "id bigint, name string"
+    t = IceTable.create_as(
+        spark, str(tmp_path / "src"),
+        spark.createDataFrame(
+            [(i, f"n{i}") for i in range(16)], schema
+        ).repartition(4),
+    )
+    t.set_partition_spec([spec_field("name", "truncate[2]", "name_t2")])
+    t.append(
+        spark.createDataFrame(
+            [(i, f"{chr(97 + i % 5)}{i}") for i in range(16, 40)]
+            + [(40, None)],
+            schema,
+        )
+    )
+    t.delete_keys_mor(spark.createDataFrame([(3,), (20,)], "id bigint"), ["id"])
+    t.delete_where_pos("id IN (5, 30)")
+    want = set(range(41)) - {3, 5, 20, 30}
+
+    dest = str(tmp_path / "ice")
+    export_iceberg(t, dest, history=True)
+    _assert_manifest_lists_agree(dest)
+
+    append_iceberg(
+        spark, dest,
+        spark.createDataFrame([(50, "zz"), (51, None)], schema),
+    )
+    want |= {50, 51}
+    _assert_manifest_lists_agree(dest)
+    delete_iceberg_keys(
+        spark, dest, spark.createDataFrame([(7,), (50,)], "id bigint"),
+        ["id"],
+    )
+    want -= {7, 50}
+    _assert_manifest_lists_agree(dest)
+    delete_iceberg_where(spark, dest, "id % 9 = 0")
+    want = {i for i in want if i % 9 != 0}
+    _assert_manifest_lists_agree(dest)
+    update_iceberg_where(spark, dest, "id < 12", {"name": "'up'"})
+    _assert_manifest_lists_agree(dest)
+    rewrite_iceberg_files(spark, dest)
+    _assert_manifest_lists_agree(dest)
+    assert {r.id for r in read_iceberg(spark, dest).collect()} == want

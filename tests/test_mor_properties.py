@@ -203,6 +203,47 @@ def test_update_mor_noop_when_nothing_matches(spark, tmp_path):
     assert t.meta.version == v_before  # no empty commit
 
 
+def test_mor_no_match_leaves_nothing_behind(spark, tmp_path):
+    """A merge-on-read write that matches no row writes no sidecar or
+    data file and commits no snapshot; a MERGE whose source matches no
+    target row commits its inserts and leaves no orphan behind."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    loc = str(tmp_path / "nomatch")
+    t = IceTable.create_as(
+        spark, loc,
+        spark.range(0, 5).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+        ),
+    )
+
+    def on_disk():
+        return sorted(
+            os.path.join(root, n)
+            for root, _dirs, names in os.walk(loc)
+            for n in names
+        )
+
+    for call in (
+        lambda: t.update_where_mor("k > 100", {"v": "v + 1"}),
+        lambda: t.delete_where_pos("k > 100"),
+    ):
+        files, snaps = on_disk(), len(IceTable.load(spark, loc).meta.snapshots)
+        call()
+        assert on_disk() == files
+        assert len(IceTable.load(spark, loc).meta.snapshots) == snaps
+
+    t.merge_into_mor(
+        spark.createDataFrame([(50, 500)], "k bigint, v bigint"), on=["k"]
+    )
+    assert t.orphan_file_report()["files_orphaned"] == 0
+    assert {(r.k, r.v) for r in t.read().collect()} == {
+        (k, 10 * k) for k in range(5)
+    } | {(50, 500)}
+
+
 def test_merge_mor_effect_protocol_and_front_end_routing(spark, tmp_path):
     """MoR MERGE honors the __delete effect column (masked, not
     re-inserted) and the front-end routes by write.merge.mode."""

@@ -1,7 +1,7 @@
 """Every registered query vs its DuckDB oracle at sf0.01 — the local
 mirror of the driver's t2 gate — and the registry-wide session gate:
-each invocation must leave no cached frame, no temp view and no
-changed conf behind."""
+each invocation must leave no cached frame, no temp view, no
+registered function and no changed conf behind."""
 
 from __future__ import annotations
 
@@ -22,6 +22,10 @@ def _temp_views(spark) -> set[str]:
     return {seq.apply(i).table() for i in range(seq.size())}
 
 
+def _user_functions(spark) -> set[str]:
+    return {r.function for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+
+
 @pytest.mark.parametrize("name", _all_query_names())
 def test_query_matches_oracle(spark, oracle, name):
     from iceberg_workshop_spark.registry import oracle_sql, queries
@@ -30,6 +34,7 @@ def test_query_matches_oracle(spark, oracle, name):
     # pass vacuously after an earlier test left something cached.
     spark.catalog.clearCache()
     views, confs = _temp_views(spark), dict(spark.conf.getAll)
+    funcs = _user_functions(spark)
     df = queries()[name](spark, SF_DIR)
     # Driver-canonicalizer contract: no raw ARRAY/MAP result columns —
     # the driver's pandas lexsort cannot hash them (round-8
@@ -57,6 +62,8 @@ def test_query_matches_oracle(spark, oracle, name):
         if confs.get(k) != after.get(k)
     }
     assert not changed, f"{name} left confs changed: {changed}"
+    added = _user_functions(spark) - funcs
+    assert not added, f"{name} left functions registered: {sorted(added)}"
     sql = oracle_sql().get(name)
     if sql is None:
         # rows-only check (driver's weak path) — pin non-empty output
@@ -83,3 +90,19 @@ def test_query_matches_oracle(spark, oracle, name):
         return
     oracle_pdf = oracle.execute(sql).df()
     assert_frames_match(spark_pdf, oracle_pdf, name)
+
+
+def test_function_gate_sees_a_function_registered_in_scope(spark):
+    """The registered-function check above is not vacuous: the
+    invocation scope does not drop functions, so one registered inside
+    a scope shows up as new afterwards."""
+    from iceberg_workshop_spark.registry import invocation
+
+    before = _user_functions(spark)
+    try:
+        with invocation(spark):
+            spark.udf.register("iws_gate_probe", lambda x: x, "bigint")
+        assert _user_functions(spark) - before == {"iws_gate_probe"}
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS iws_gate_probe")
+    assert _user_functions(spark) == before
