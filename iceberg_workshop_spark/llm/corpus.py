@@ -43,6 +43,8 @@ BPE_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"  # textstats.py's pre-tokenizer
 
 
 def _norm_text(c: Column) -> Column:
+    """Canonical text form: lowercase, whitespace-collapsed, trimmed —
+    the one normalization dedup and curation share."""
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 

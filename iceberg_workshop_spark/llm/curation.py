@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from iceberg_workshop_spark.llm.corpus import _norm_text
 from iceberg_workshop_spark.registry import register
 from iceberg_workshop_spark.sources.tables import load
 
@@ -32,7 +33,7 @@ MIX_ALPHA_MILLI = 1000  # integer sqrt weight scale (w = floor(sqrt(n)*1000))
 def _norm_tokens(col):
     """Whitespace-normalized token array (shared convention with
     llm.textstats / llm.dedup)."""
-    return F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " ")
+    return F.split(_norm_text(col), " ")
 
 
 # ------------------------------------------------------------ PII redaction

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from iceberg_workshop_spark.llm.corpus import _norm_text
 from iceberg_workshop_spark.registry import (
     QUERIES,
     persist,
@@ -63,11 +64,6 @@ SIMHASH_MAX_HAMMING = 7
 # same way.
 SIMHASH_BLOCK_WIDTHS = [8, 7, 7, 7, 7, 7, 7, 7, 7]
 SIMHASH_COMBO = 2
-
-
-def _norm_text(c: Column) -> Column:
-    """Canonical text form: lowercase, whitespace-collapsed, trimmed."""
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
 def _doc_shingles(docs: DataFrame) -> DataFrame:

@@ -4,18 +4,30 @@ statements.
 The workshop's user-facing language is SQL text:
 
 - ``MERGE INTO ... WHEN MATCHED THEN UPDATE SET ... WHEN NOT MATCHED
-  THEN INSERT VALUES (...)`` (/root/reference/sql/update_iceberg_v2_examples.sql:14-18)
-- ``DELETE FROM <tbl> WHERE <cond>`` (/root/reference/pyspark-iceberg/interoperability.md:128)
-- ``INSERT INTO <tbl> VALUES (...)`` (/root/reference/README.md:100-103)
-- ``SELECT * FROM <tbl> FOR SYSTEM_TIME AS OF "<ts>"`` (/root/reference/README.md:110-117)
-- ``ALTER TABLE <tbl> EXECUTE rollback("<snapshot-id>")`` (/root/reference/README.md:120-123)
+  THEN INSERT VALUES (...)`` (reference sql/update_iceberg_v2_examples.sql:14-18)
+- ``DELETE FROM <tbl> WHERE <cond>`` (reference pyspark-iceberg/interoperability.md:128)
+- ``INSERT INTO <tbl> VALUES (...)`` (reference README.md:100-103)
+- ``SELECT * FROM <tbl> FOR SYSTEM_TIME AS OF "<ts>"`` (reference README.md:110-117)
+- ``ALTER TABLE <tbl> EXECUTE rollback("<snapshot-id>")`` (reference README.md:120-123)
 
 ``IceSqlSession`` accepts those statements verbatim and routes them to
 the icetbl API (``merge_into``/``delete_where``/``insert_values``/
-``read(as_of...)``/``rollback``); any other statement falls through to
-``spark.sql`` with registered table names rewritten to temp views of
-the table's current snapshot. A workshop user can paste the exercises
-unchanged.
+``read(as_of...)``/``rollback``). What a statement means is read from
+Spark's own parse (``plans/catalyst.py``): the root node of the parsed
+plan picks the handler (``MergeIntoTable``, ``DeleteFromTable``,
+``InsertIntoStatement``, ``Call``, ``CreateTable``, ...), and
+conditions, assignments and values come back from the plan as SQL
+text. Regexes remain only for the forms Spark's grammar rejects — the
+Iceberg/Impala extensions (``EXECUTE rollback``/``expire_snapshots``,
+tag/branch DDL, ``WRITE ORDERED BY``, ``SET PARTITION SPEC``),
+materialized-view maintenance and ``QUALIFY``; they are matched before
+the parse, and ``tests/test_sqlfront.py`` checks that Spark still
+rejects each. Three Hive/Impala spellings are respelled for Spark's
+grammar before the parse (``_spark_spelling``). Any other statement
+falls through to ``spark.sql`` with registered table names rewritten to
+temp views of the table's current snapshot; a statement Spark rejects
+raises Spark's ``ParseException``. A workshop user can paste the
+exercises unchanged.
 
 Scale notes: the front-end only *dispatches* — every statement lands
 on the same CoW/MoR DataFrame plans the Python API uses (file-granular
@@ -38,34 +50,82 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.icetbl import IceTable, spec_field
+from iceberg_workshop_spark.plans import catalyst as C
 from iceberg_workshop_spark.registry import register, require
 
-_MERGE_HEAD_RE = re.compile(
-    # the target alias takes an optional AS (standard SQL allows the
-    # bare form `MERGE INTO t tgt USING …`); the negative lookahead
-    # keeps the USING keyword from being eaten as the alias
-    r"MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?"
-    r"INTO\s+(?P<target>[\w.]+)(?:\s+(?:AS\s+)?(?!USING\b)(?P<talias>\w+))?\s+"
-    r"USING\s+(?:\((?P<src>.+?)\)|(?P<srcname>[\w.]+))"
-    r"(?:\s+(?:AS\s+)?(?!ON\b)(?P<salias>\w+))?\s+"
-    r"ON\s+(?P<on>.+?)\s+(?=WHEN\s)",
+# -- forms Spark's grammar rejects ------------------------------------
+# Matched before the parse, so a supported statement never makes the
+# JVM raise (Spark logs every ParseException at ERROR with its stack).
+_EXECUTE_RE = re.compile(
+    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+EXECUTE\s+"
+    r"(?P<proc>rollback|expire_snapshots)\s*\(\s*"
+    r"(?P<q>[\"']?)(?P<arg>.+?)(?P=q)\s*\)$",
     re.I | re.S,
 )
-_MERGE_CLAUSE_HEAD_RE = re.compile(
-    r"WHEN\s+(?:NOT\s+)?MATCHED\b", re.I
+_REF_DDL_RE = re.compile(
+    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+"
+    r"(?P<verb>CREATE|DROP)\s+(?P<kind>TAG|BRANCH)\s+(?P<name>\w+)"
+    r"(?:\s+AS\s+OF\s+VERSION\s+(?P<sid>\d+))?$",
+    re.I,
 )
-_MERGE_CLAUSE_RE = re.compile(
-    r"WHEN\s+(?P<neg>NOT\s+)?MATCHED(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-    r"(?P<action>.+)$",
+_WRITE_ORDERED_RE = re.compile(
+    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+WRITE\s+"
+    r"(?:ORDERED\s+BY\s+(?P<cols>.+)|UNORDERED)$",
     re.I | re.S,
 )
+_SET_SPEC_RE = re.compile(
+    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+SET\s+PARTITION\s+SPEC\s*"
+    r"\((?P<spec>.+)\)$",
+    re.I | re.S,
+)
+_MV_STMT_RE = re.compile(
+    r"(?P<verb>REFRESH|DROP)\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.]+)$", re.I
+)
+_SHOW_MV_RE = re.compile(r"SHOW\s+MATERIALIZED\s+VIEWS$", re.I)
+
+# -- Hive/Impala spellings respelled for Spark's grammar ----------------
+_STORED_ICEBERG = r"(?i)\bSTORED\s+(?:BY|AS)\s+ICEBERG\b"
+_PARTITIONED_BY_SPEC = r"(?i)\bPARTITIONED\s+BY\s+SPEC\s*\("
+_BARE_INSERT_VALUES_RE = re.compile(r"\bINSERT\s+VALUES\s*(?=\()", re.I)
+# the one column MERGE's bare INSERT VALUES list is carried in
+_VALUES_COL = "__iws_values"
+
+_META_SUFFIXES = (
+    "history",
+    "snapshots",
+    "files",
+    "partitions",
+    "refs",
+    "metadata_log_entries",
+    "entries",
+    "all_data_files",
+    "delete_files",
+    "position_deletes",
+)
+_TT_RE = re.compile(
+    r"(?P<name>[\w.]+)\s+FOR\s+(?P<kind>SYSTEM_TIME|SYSTEM_VERSION)\s+AS\s+OF\s+"
+    r"(?P<q>[\"'])(?P<lit>.+?)(?P=q)",
+    re.I,
+)
+_PROCEDURES = {
+    "rewrite_data_files", "rewrite_manifests", "rewrite_position_delete_files",
+    "remove_orphan_files", "cherrypick_snapshot", "rollback_to_snapshot",
+    "set_current_snapshot", "fast_forward", "create_changelog_view",
+    "expire_snapshots",
+}
+# Unary nodes a WHERE directly over a table scan passes through on its
+# way to the root without reading the table again (see _table_filter).
+_PASS_THROUGH = {
+    "Project", "Filter", "Sort", "Aggregate", "UnresolvedHaving", "Distinct",
+    "GlobalLimit", "LocalLimit", "Offset", "SubqueryAlias",
+}
 
 
 def _find_top_keyword(s: str, kw: str) -> int:
     """Index of the first occurrence of a keyword outside quotes and
-    parens; -1 if none. Used to split a MERGE clause at its own THEN
-    without being fooled by CASE ... THEN inside a (parenthesized)
-    condition or a string literal."""
+    parens; -1 if none. Finds QUALIFY and the clauses around it
+    without being fooled by a keyword inside a (parenthesized)
+    subquery or a string literal."""
     masked = _mask_quotes(s)
     pat = re.compile(rf"\b{kw}\b", re.I)
     depth = 0
@@ -168,189 +228,6 @@ def _rewrite_qualify(s: str) -> tuple[list[str], bool]:
     return candidates, True
 
 
-def _split_merge_clauses(when_text: str) -> list[str]:
-    """Split MERGE's WHEN section into whole clauses at quote-masked
-    top-level ``WHEN [NOT] MATCHED`` tokens. Splitting on the full
-    token (not bare WHEN) keeps CASE WHEN expressions inside SET
-    values intact, and masking keeps literals containing the words
-    intact; because the segments partition the text, nothing can be
-    silently dropped between clauses."""
-    masked = _mask_quotes(when_text)
-    starts = [m.start() for m in _MERGE_CLAUSE_HEAD_RE.finditer(masked)]
-    if not starts or when_text[: starts[0]].strip():
-        raise ValueError(f"unparsed MERGE WHEN clauses: {when_text!r}")
-    bounds = starts + [len(when_text)]
-    return [
-        when_text[a:b].strip() for a, b in zip(bounds, bounds[1:])
-    ]
-_DELETE_RE = re.compile(
-    # WHERE is optional: standard SQL's bare DELETE FROM t removes all
-    # rows (it previously fell through to spark.sql and failed with an
-    # unrelated error); the handler maps a missing condition to "true".
-    r"DELETE\s+FROM\s+(?P<target>[\w.]+)(?:\s+WHERE\s+(?P<cond>.+))?$",
-    re.I | re.S,
-)
-_ROLLBACK_RE = re.compile(
-    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+EXECUTE\s+rollback\s*\(\s*"
-    r"(?P<q>[\"']?)(?P<arg>.+?)(?P=q)\s*\)$",
-    re.I | re.S,
-)
-_TRUNCATE_RE = re.compile(r"TRUNCATE\s+TABLE\s+(?P<target>[\w.]+)$", re.I)
-_ANALYZE_RE = re.compile(
-    r"ANALYZE\s+TABLE\s+(?P<target>[\w.]+)\s+COMPUTE\s+STATISTICS"
-    r"(?:\s+FOR\s+COLUMNS\s+(?P<cols>[\w,\s]+))?$",
-    re.I,
-)
-_CREATE_DB_RE = re.compile(
-    r"CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<db>\w+)$", re.I
-)
-_DROP_DB_RE = re.compile(
-    r"DROP\s+DATABASE\s+(?:IF\s+EXISTS\s+)?(?P<db>\w+)(?:\s+CASCADE)?$", re.I
-)
-_DROP_TABLE_RE = re.compile(
-    r"DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<target>[\w.]+)$", re.I
-)
-_CREATE_TABLE_RE = re.compile(
-    r"CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<target>[\w.]+)\s*(?P<body>.*)$",
-    re.I | re.S,
-)
-_CREATE_MV_JOIN_RE = re.compile(
-    r"CREATE\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.]+)\s+AS\s+"
-    r"SELECT\s+(?P<select>.+?)\s+FROM\s+"
-    r"(?P<srca>[\w.]+)\s+(?P<aa>\w+)\s+JOIN\s+"
-    r"(?P<srcb>[\w.]+)\s+(?P<ab>\w+)\s+ON\s+(?P<on>.+?)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?"
-    r"\s+GROUP\s+BY\s+(?P<group>[\w,\s.]+)$",
-    re.I | re.S,
-)
-_CREATE_MV_RE = re.compile(
-    r"CREATE\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.]+)\s+AS\s+"
-    r"SELECT\s+(?P<select>.+?)\s+FROM\s+(?P<src>[\w.]+)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?"
-    r"\s+GROUP\s+BY\s+(?P<group>[\w,\s.]+)$",
-    re.I | re.S,
-)
-_REFRESH_MV_RE = re.compile(
-    r"REFRESH\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.]+)$", re.I
-)
-_DROP_MV_RE = re.compile(
-    r"DROP\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.]+)$", re.I
-)
-_SHOW_MV_RE = re.compile(r"SHOW\s+MATERIALIZED\s+VIEWS$", re.I)
-_INSERT_RE = re.compile(
-    r"INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?(?P<target>[\w.]+)"
-    r"(?:\s+PARTITION\s*\((?P<part>[^)]*)\))?"
-    r"(?:\s*\((?P<cols>[\w`,\s]*)\))?\s+"
-    r"(?P<rest>(?:VALUES|SELECT)\b.+)$",
-    re.I | re.S,
-)
-_SHOW_PARTS_RE = re.compile(r"SHOW\s+PARTITIONS\s+(?P<target>[\w.]+)$", re.I)
-_SHOW_TABLES_RE = re.compile(
-    r"SHOW\s+TABLES(?:\s+(?:IN|FROM)\s+(?P<db>[\w.]+))?$", re.I
-)
-_SHOW_PROPS_RE = re.compile(
-    r"SHOW\s+TBLPROPERTIES\s+(?P<target>[\w.]+)$", re.I
-)
-_SHOW_CREATE_RE = re.compile(
-    r"SHOW\s+CREATE\s+TABLE\s+(?P<target>[\w.]+)$", re.I
-)
-_UPDATE_RE = re.compile(
-    # SET/WHERE are split quote-aware in the dispatcher (_mask_quotes)
-    # — a lazy regex group would split at a WHERE inside a string
-    # literal (SET note = 'x WHERE y').
-    r"UPDATE\s+(?P<target>[\w.]+)\s+SET\s+(?P<rest>.+)$",
-    re.I | re.S,
-)
-_SET_SPEC_RE = re.compile(
-    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+SET\s+PARTITION\s+SPEC\s*"
-    r"\((?P<spec>.+)\)$",
-    re.I | re.S,
-)
-_SET_PROPS_RE = re.compile(
-    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+SET\s+TBLPROPERTIES\s*"
-    r"\((?P<props>.+)\)$",
-    re.I | re.S,
-)
-_WRITE_ORDERED_RE = re.compile(
-    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+WRITE\s+"
-    r"(?:ORDERED\s+BY\s+(?P<cols>.+)|UNORDERED)$",
-    re.I | re.S,
-)
-_EXPIRE_RE = re.compile(
-    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+EXECUTE\s+expire_snapshots\s*\(\s*"
-    r"(?P<q>[\"']?)(?P<arg>.+?)(?P=q)\s*\)$",
-    re.I | re.S,
-)
-_CALL_RE = re.compile(
-    r"CALL\s+[\w.]*system\.(?P<proc>rewrite_data_files|rewrite_manifests|"
-    r"rewrite_position_delete_files|"
-    r"remove_orphan_files|cherrypick_snapshot|rollback_to_snapshot|"
-    r"set_current_snapshot|fast_forward|create_changelog_view|"
-    r"expire_snapshots)\s*"
-    r"\((?P<args>.*)\)$",
-    re.I | re.S,
-)
-_ALTER_COL_RE = re.compile(
-    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+"
-    r"(?P<verb>ADD|DROP|RENAME|ALTER)\s+COLUMNS?\s+(?P<body>.+)$",
-    re.I | re.S,
-)
-_REF_DDL_RE = re.compile(
-    r"ALTER\s+TABLE\s+(?P<target>[\w.]+)\s+"
-    r"(?P<verb>CREATE|DROP)\s+(?P<kind>TAG|BRANCH)\s+(?P<name>\w+)"
-    r"(?:\s+AS\s+OF\s+VERSION\s+(?P<sid>\d+))?$",
-    re.I,
-)
-_META_SUFFIXES = (
-    "history",
-    "snapshots",
-    "files",
-    "partitions",
-    "refs",
-    "metadata_log_entries",
-    "entries",
-    "all_data_files",
-    "delete_files",
-    "position_deletes",
-)
-_DESCRIBE_RE = re.compile(
-    r"DESCRIBE\s+(?P<fmt>FORMATTED\s+)?(?P<target>[\w.]+)$", re.I
-)
-_TT_RE = re.compile(
-    r"(?P<name>[\w.]+)\s+FOR\s+(?P<kind>SYSTEM_TIME|SYSTEM_VERSION)\s+AS\s+OF\s+"
-    r"(?P<q>[\"'])(?P<lit>.+?)(?P=q)",
-    re.I,
-)
-
-
-def _split_top_commas(text: str) -> list[str]:
-    """Split on commas not nested in parens/quotes."""
-    parts, depth, quote, cur = [], 0, None, []
-    for ch in text:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in "\"'":
-            quote = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def _iso_to_ms(lit: str) -> int:
     dt = datetime.fromisoformat(lit)
     if dt.tzinfo is None:
@@ -362,42 +239,22 @@ def _view_name(name: str) -> str:
     return name.replace(".", "__")
 
 
-def _call_literal(s: str):
-    """One CALL argument value: quoted string, integer, TIMESTAMP
-    literal (kept as its string body), or map('k','v',...) → dict."""
-    s = s.strip()
-    mm = re.match(r"map\s*\((?P<body>.*)\)$", s, re.I | re.S)
-    if mm:
-        items = [_call_literal(p) for p in _split_top_commas(mm["body"])]
-        return {str(items[i]): items[i + 1] for i in range(0, len(items) - 1, 2)}
-    am = re.match(r"array\s*\((?P<body>.*)\)$", s, re.I | re.S)
-    if am:
-        return [_call_literal(p) for p in _split_top_commas(am["body"])]
-    tm = re.match(r"TIMESTAMP\s+(?P<q>[\"'])(?P<body>.*)(?P=q)$", s, re.I | re.S)
-    if tm:
-        return tm["body"]
-    if s[:1] in "\"'" and s[-1:] == s[:1]:
-        return s[1:-1]
-    if re.fullmatch(r"-?\d+", s):
-        return int(s)
-    return s
-
-
-def _parse_call_args(raw: str) -> tuple[list, dict]:
-    """CALL procedure arguments: positional and `name => value` named
-    forms, comma-split outside quotes/parens."""
-    pos: list = []
-    named: dict = {}
-    for part in _split_top_commas(raw):
-        part = part.strip()
-        if not part:
-            continue
-        nm = re.match(r"(?P<name>\w+)\s*=>\s*(?P<val>.+)$", part, re.S)
-        if nm:
-            named[nm["name"].lower()] = _call_literal(nm["val"])
-        else:
-            pos.append(_call_literal(part))
-    return pos, named
+def _call_value(e):
+    """One CALL argument: a literal's value (a TIMESTAMP literal keeps
+    its text), ``map('k', 'v', ...)`` as a dict, ``array(...)`` as a
+    list."""
+    if e.nodeName() == "UnresolvedFunction":
+        fn = C.name_of(e).lower()
+        items = [_call_value(a) for a in C.seq(e.arguments())]
+        if fn == "map":
+            return {str(items[i]): items[i + 1] for i in range(0, len(items) - 1, 2)}
+        if fn == "array":
+            return items
+    lit = C.literal(e)
+    if lit is None:
+        return e.sql()
+    typ, text = lit
+    return int(text) if typ in C.INTEGRAL else text
 
 
 def _call_ts_ms(v) -> int:
@@ -407,15 +264,19 @@ def _call_ts_ms(v) -> int:
     return _iso_to_ms(str(v))
 
 
-# backslash-escaped quotes (Spark's default literal syntax) stay
-# INSIDE the span — without the escape alternation, 'don\\'t' ended
-# the span early and keyword detection ran inside string literals
-_QUOTED_SPAN = re.compile(r"\"(?:\\.|[^\"\\])*\"|'(?:\\.|[^'\\])*'")
+# Quoted spans and comments: backslash-escaped quotes stay INSIDE the
+# span (without the escape alternation 'don\\'t' ended the span early
+# and keyword detection ran inside string literals); a comment is one
+# span, so a quote inside it opens no literal.
+_QUOTED_SPAN = re.compile(
+    r"\"(?:\\.|[^\"\\])*\"|'(?:\\.|[^'\\])*'|--[^\n]*|/\*.*?\*/", re.S
+)
 
 
 def _mask_quotes(text: str) -> str:
-    """Length-preserving blank-out of quoted spans, so keyword searches
-    on the mask yield positions valid in the original text."""
+    """Length-preserving blank-out of quoted spans and comments, so
+    keyword searches on the mask yield positions valid in the original
+    text."""
     return _QUOTED_SPAN.sub(lambda m: " " * len(m.group(0)), text)
 
 
@@ -433,20 +294,44 @@ def _sub_outside_quotes(pattern: str, repl: str, text: str) -> str:
     return "".join(parts)
 
 
-def _take_parens(text: str) -> tuple[str, str]:
-    """Split '(...)...' into (inner, rest) at the balanced close.
-    Parens inside string literals don't count (the mask is
-    length-preserving, so indices address the original text)."""
-    assert text[0] == "("
+def _close_paren(masked: str, i: int) -> int:
+    """Index of the ``)`` closing the ``(`` at ``masked[i]`` (quote-
+    masked text, so parens inside literals don't count)."""
     depth = 0
-    for i, ch in enumerate(_mask_quotes(text)):
-        if ch == "(":
+    for j in range(i, len(masked)):
+        if masked[j] == "(":
             depth += 1
-        elif ch == ")":
+        elif masked[j] == ")":
             depth -= 1
             if depth == 0:
-                return text[1:i], text[i + 1 :].strip()
-    raise ValueError(f"unbalanced parens: {text[:80]}")
+                return j
+    raise ValueError(f"unbalanced parens: {masked[i:i + 80]}")
+
+
+def _spark_spelling(spark: SparkSession, s: str) -> str:
+    """The statement as Spark's grammar spells it: ``${var}``
+    substituted (the parser substitutes too, and node origins index the
+    substituted text), Hive's ``STORED BY ICEBERG`` / ``STORED AS
+    ICEBERG`` dropped, Impala's ``PARTITIONED BY SPEC (`` respelled
+    ``PARTITIONED BY (``, and MERGE's bare ``INSERT VALUES (…)`` —
+    Spark requires a column list — carried as one struct,
+    ``INSERT (__iws_values) VALUES (struct(…))``, which ``_merge``
+    unpacks and checks against the table width."""
+    s = C.substitute(spark, s)
+    s = _sub_outside_quotes(_STORED_ICEBERG, "", s)
+    s = _sub_outside_quotes(_PARTITIONED_BY_SPEC, "PARTITIONED BY (", s)
+    masked = _mask_quotes(s)
+    out, last = [], 0
+    for m in _BARE_INSERT_VALUES_RE.finditer(masked):
+        close = _close_paren(masked, m.end())
+        out += [
+            s[last : m.start()],
+            f"INSERT ({_VALUES_COL}) VALUES (struct",
+            s[m.end() : close + 1],
+            ")",
+        ]
+        last = close + 1
+    return "".join(out) + s[last:]
 
 
 _TRANSFORM_ALIASES = {
@@ -457,36 +342,32 @@ _TRANSFORM_ALIASES = {
 }
 
 
-def _parse_spec(text: str) -> list:
-    """PARTITION SPEC items: identity cols, YEAR()/MONTH()/DAY()/HOUR()
-    (singular or plural, any case — Impala and Spark both appear in the
-    workshop), BUCKET(n, col), TRUNCATE(w, col)."""
+def _spec(transforms: list) -> list:
+    """Partition spec fields from Spark's parsed transforms: identity
+    columns, YEAR()/MONTH()/DAY()/HOUR() (singular or plural, any
+    case — Impala and Spark both appear in the workshop),
+    BUCKET(n, col), TRUNCATE(w, col)."""
     fields = []
-    for item in _split_top_commas(text):
-        item = item.strip()
-        m = re.fullmatch(r"(\w+)\s*\(\s*(.+?)\s*\)", item)
-        if not m:
-            fields.append(spec_field(item, "identity"))
-            continue
-        fn = m[1].lower()
-        args = [a.strip() for a in m[2].split(",")]
-        if fn in _TRANSFORM_ALIASES:
+    for t in transforms:
+        fn = t.name().lower()
+        args = [a.toString().strip("`") for a in t.arguments()]
+        if fn == "identity":
+            fields.append(spec_field(args[0], "identity"))
+        elif fn in _TRANSFORM_ALIASES:
             fields.append(spec_field(args[0], _TRANSFORM_ALIASES[fn]))
-        elif fn == "bucket":
-            fields.append(spec_field(args[1], f"bucket[{args[0]}]"))
-        elif fn == "truncate":
-            fields.append(spec_field(args[1], f"truncate[{args[0]}]"))
+        elif fn in ("bucket", "truncate"):
+            fields.append(spec_field(args[1], f"{fn}[{args[0]}]"))
         else:
-            raise ValueError(f"unknown partition transform: {item}")
+            raise ValueError(f"unknown partition transform: {t.toString()}")
     return fields
 
 
-def _parse_props(text: str) -> dict[str, str]:
-    props = {}
-    for item in _split_top_commas(text):
-        k, v = item.split("=", 1)
-        props[k.strip().strip("\"'")] = v.strip().strip("\"'")
-    return props
+def _parse_spec(spark: SparkSession, text: str) -> list:
+    """The items of ``SET PARTITION SPEC (...)``. Spark parses
+    partition transforms only inside CREATE TABLE, so the list is read
+    through one."""
+    plan = C.parse_plan(spark, f"CREATE TABLE t PARTITIONED BY ({text})")
+    return _spec(C.seq(plan.partitioning()))
 
 
 def _hive_partition_str(file_entry: dict) -> str:
@@ -496,88 +377,93 @@ def _hive_partition_str(file_entry: dict) -> str:
     return "/".join(f"{k}={part[k]}" for k in sorted(part)) or "<unpartitioned>"
 
 
-_SIMPLE_SELECT_RE = re.compile(
-    r"SELECT\s+.+?\s+FROM\s+(?P<name>[\w.]+)\s+WHERE\s+(?P<cond>.+?)"
-    r"(?:\s+(?:ORDER|GROUP|LIMIT|HAVING)\b.*)?$",
-    re.I | re.S,
-)
-_LIT = r"(?:\"[^\"]*\"|'[^']*'|[\w.:-]+)"
-_BETWEEN_RE = re.compile(
-    rf"(?P<col>\w+)\s+BETWEEN\s+(?P<lo>{_LIT})\s+AND\s+(?P<hi>{_LIT})", re.I
-)
-_CMP_RE = re.compile(rf"^(?P<col>\w+)\s*(?P<op>=|<=|>=|<|>)\s*(?P<lit>{_LIT})$")
-
-
 _NOT_A_LITERAL = object()
 _TS_LIT_RE = re.compile(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?$")
 _DATE_LIT_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
-
-
-def _coerce_lit(text: str):
-    """SQL literal → comparable Python value.
-
-    Quoted strings that look like timestamps/dates become datetime/date
-    objects so pruning compares in the same domain the write side used
-    (identity partition dirs use the space-separated second form, stats
-    bounds the ISO 'T' form — a raw string can't match both). A bare
-    unquoted word is an IDENTIFIER, not a literal (`origin = dest` is a
-    column comparison) — returning it as a string would both mis-prune
-    and mis-filter, so it maps to the _NOT_A_LITERAL sentinel and the
-    caller drops the conjunct."""
-    text = text.strip()
-    if text and text[0] in "\"'":
-        s = text[1:-1]
-        if _TS_LIT_RE.match(s):
-            return datetime.fromisoformat(s.replace(" ", "T"))
-        if _DATE_LIT_RE.match(s):
-            return datetime.fromisoformat(s).date()
-        return s
-    try:
-        return int(text)
-    except ValueError:
-        try:
-            return float(text)
-        except ValueError:
-            return _NOT_A_LITERAL
-
-
-_IN_RE = re.compile(r"^(?P<col>\w+)\s+IN\s*\((?P<items>[^()]*)\)$", re.I)
+_CMP_OPS = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
 _MAX_DNF_TERMS = 64
 
 
-def _split_top_keyword(s: str, kw: str) -> list[str]:
-    """Split on top-level occurrences of a boolean keyword — outside
-    parens, outside quotes, and (for AND) outside a BETWEEN..AND span."""
-    masked = _mask_quotes(s)
-    protected: list[tuple[int, int]] = []
-    if kw.upper() == "AND":
-        # Spans computed on the RAW text — _LIT must see quoted
-        # literals; masking is length-preserving so the positions are
-        # valid in the masked text too.
-        protected = [m.span() for m in _BETWEEN_RE.finditer(s)]
-    pat = re.compile(rf"\b{kw}\b", re.I)
-    parts, depth, last, i = [], 0, 0, 0
-    while i < len(masked):
-        ch = masked[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(masked, i)
-            if m and not any(a <= i < b for a, b in protected):
-                parts.append(s[last : i])
-                last = i = m.end()
-                continue
-        i += 1
-    parts.append(s[last:])
-    return parts
+def _coerce_lit(expr):
+    """Parsed literal → comparable Python value.
+
+    String literals that look like timestamps/dates become
+    datetime/date objects so pruning compares in the same domain the
+    write side used (identity partition dirs use the space-separated
+    second form, stats bounds the ISO 'T' form — a raw string can't
+    match both). Anything but a string or numeric literal — a column
+    (`origin = dest` is a column comparison), a function, a NULL —
+    maps to the _NOT_A_LITERAL sentinel and the caller drops the
+    conjunct: read as a value it would both mis-prune and mis-filter."""
+    lit = C.literal(expr)
+    if lit is None:
+        return _NOT_A_LITERAL
+    typ, text = lit
+    if typ == "string":
+        if _TS_LIT_RE.match(text):
+            return datetime.fromisoformat(text.replace(" ", "T"))
+        if _DATE_LIT_RE.match(text):
+            return datetime.fromisoformat(text).date()
+        return text
+    if typ in C.INTEGRAL:
+        return int(text)
+    if typ in ("float", "double") or typ.startswith("decimal"):
+        return float(text)
+    return _NOT_A_LITERAL
+
+
+def _dnf(expr) -> list | None:
+    """Pruning DNF of a parsed condition; see ``_dnf_from_where``."""
+    from iceberg_workshop_spark.icetbl import Pred
+
+    kind = expr.nodeName()
+    if kind == "Or":
+        branches = [_dnf(e) for e in C.conjuncts(expr, "Or")]
+        if any(b is None for b in branches):
+            return None
+        flat = [c for b in branches for c in b]
+        return flat if len(flat) <= _MAX_DNF_TERMS else None
+    if kind == "And":
+        usable = [b for b in map(_dnf, C.conjuncts(expr)) if b is not None]
+        if not usable:
+            return None
+        # AND of DNFs = cross-product of their disjuncts
+        acc: list[list] = [[]]
+        for b in usable:
+            acc = [a + c for a in acc for c in b]
+            if len(acc) > _MAX_DNF_TERMS:
+                return None
+        return acc
+    # ---- leaf: NOT and anything not listed are un-analyzable --------
+    if kind in _CMP_OPS:
+        col, lit = C.column(expr.left()), _coerce_lit(expr.right())
+        if col and lit is not _NOT_A_LITERAL:
+            return [[Pred(col, _CMP_OPS[kind], lit)]]
+    elif kind == "In":
+        col = C.column(expr.value())
+        vals = [_coerce_lit(e) for e in C.seq(expr.list())]
+        if col and vals and all(v is not _NOT_A_LITERAL for v in vals):
+            return [[Pred(col, "=", v)] for v in vals]
+    elif kind == "UnresolvedFunction" and C.name_of(expr).lower() == "between":
+        col, lo, hi = C.seq(expr.arguments())
+        col, lo, hi = C.column(col), _coerce_lit(lo), _coerce_lit(hi)
+        if col and _NOT_A_LITERAL not in (lo, hi):
+            return [[Pred(col, "between", (lo, hi))]]
+    return None
 
 
 def _dnf_from_where(cond: str) -> list | None:
     """Best-effort conversion of a WHERE clause into pruning DNF
     (list of conjunct Pred-lists, OR across them); None = 'cannot
-    constrain the file set' (the subtree may match anything).
+    constrain the file set' (the subtree may match anything). The
+    clause is read from Spark's parse of it, so quoting, comments and
+    nesting are Spark's.
 
     Soundness rules: inside an AND, un-analyzable conjuncts are simply
     dropped (pruning on a SUBSET of conjuncts keeps a superset of
@@ -588,55 +474,7 @@ def _dnf_from_where(cond: str) -> list | None:
     never changes answers. ``col IN (...)`` expands to equality
     disjuncts. DNF size is capped (cross-products of big ORs) —
     beyond the cap we bail to no-pruning rather than planner blowup."""
-    from iceberg_workshop_spark.icetbl import Pred
-
-    s = cond.strip()
-    # peel redundant outer parens: "(a OR b)" → "a OR b"
-    while s.startswith("("):
-        inner, rest = _take_parens(s)
-        if rest.strip():
-            break
-        s = inner.strip()
-    ors = _split_top_keyword(s, "OR")
-    if len(ors) > 1:
-        branches = [_dnf_from_where(p) for p in ors]
-        if any(b is None for b in branches):
-            return None
-        flat = [c for b in branches for c in b]
-        return flat if len(flat) <= _MAX_DNF_TERMS else None
-    ands = _split_top_keyword(s, "AND")
-    if len(ands) > 1:
-        branches = [_dnf_from_where(p) for p in ands]
-        usable = [b for b in branches if b is not None]
-        if not usable:
-            return None
-        # AND of DNFs = cross-product of their disjuncts
-        acc: list[list] = [[]]
-        for b in usable:
-            acc = [a + c for a in acc for c in b]
-            if len(acc) > _MAX_DNF_TERMS:
-                return None
-        return acc
-    # ---- leaf -------------------------------------------------------
-    if re.match(r"NOT\b", s, re.I):
-        return None
-    if m := _BETWEEN_RE.fullmatch(s):
-        lo, hi = _coerce_lit(m["lo"]), _coerce_lit(m["hi"])
-        if _NOT_A_LITERAL not in (lo, hi):
-            return [[Pred(m["col"], "between", (lo, hi))]]
-        return None
-    if m := _CMP_RE.match(s):
-        lit = _coerce_lit(m["lit"])
-        if lit is not _NOT_A_LITERAL:
-            return [[Pred(m["col"], m["op"], lit)]]
-        return None
-    if m := _IN_RE.match(s):
-        vals = [_coerce_lit(x) for x in _split_top_commas(m["items"])]
-        if vals and all(v is not _NOT_A_LITERAL for v in vals):
-            return [[Pred(m["col"], "=", v)] for v in vals]
-        return None
-    return None
-
+    return _dnf(C.parse_expression(SparkSession.active(), cond))
 
 
 def _iso_level(tbl, op: str) -> str:
@@ -669,6 +507,7 @@ class IceSqlSession:
         # materialized views: name -> {src, base_sid, group, aggs, where}
         self.mviews: dict[str, dict] = {}
         self.location_map = dict(location_map or {})
+        self._patterns = C.Patterns(spark)
 
     def register_table(self, name: str, tbl: IceTable) -> None:
         self.tables[name] = tbl
@@ -678,297 +517,40 @@ class IceSqlSession:
 
     # -- dispatch ------------------------------------------------------
     def sql(self, text: str) -> DataFrame | None:
+        """Run one statement. Each form has one route: a regex for the
+        forms Spark rejects, else the root node of Spark's parse, else
+        the SELECT fall-through."""
         s = text.strip().rstrip(";").strip()
-        if m := _MERGE_HEAD_RE.match(s):
-            return self._merge(m, s[m.end():])
-        if m := _DELETE_RE.match(s):
-            # Prune candidate files on the WHERE's simple conjuncts —
-            # each is implied by the full condition, so a pruned-out
-            # file cannot hold a matching row (the rewrite itself still
-            # applies the full condition). Iceberg's branch identifier
-            # (DELETE FROM db.t.branch_audit ...) routes the CoW
-            # rewrite to that branch's head — WAP with row deletes.
-            target, branch = m["target"], None
-            bm = re.match(r"(?P<base>[\w.]+)\.branch_(?P<br>\w+)$", target)
-            if bm and bm["base"] in self.tables:
-                target, branch = bm["base"], bm["br"]
-            tbl = self._table(target)
-            # Iceberg's write.delete.mode property: merge-on-read
-            # writes positional delete files (O(matching rows) commit,
-            # no data-file rewrite) instead of the CoW default.
-            # Branch-scoped deletes stay CoW (the MoR sidecar path is
-            # main-head-scoped).
-            cond = m["cond"]
-            mode = tbl.meta.properties.get("write.delete.mode", "copy-on-write")
-            if mode == "merge-on-read" and branch is None:
-                tbl.delete_where_pos(
-                    self._rewrite(cond) if cond else "true"
-                )
-            else:
-                tbl.delete_where(
-                    self._rewrite(cond) if cond else "true",
-                    prune=self._safe_preds(tbl, cond) if cond else None,
-                    isolation=_iso_level(tbl, "delete"),
-                    branch=branch,
-                )
-            return None
-        if m := _ANALYZE_RE.match(s):
-            # ANALYZE TABLE ... COMPUTE STATISTICS [FOR COLUMNS ...]:
-            # one distributed aggregate computes the row count (and
-            # per-column exact NDV + null counts when columns are
-            # named); results land in table properties like engine
-            # catalogs persist them (SHOW TBLPROPERTIES / DESCRIBE
-            # FORMATTED surface them; a CBO reads them at plan time).
-            tbl = self._table(m["target"])
-            df = tbl.read()
-            cols = (
-                [c.strip() for c in m["cols"].split(",") if c.strip()]
-                if m["cols"]
-                else []
-            )
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for c in cols:
-                aggs.append(F.countDistinct(c).alias(f"__ndv_{c}"))
-                aggs.append(
-                    F.count(F.when(F.col(c).isNull(), 1)).alias(f"__nul_{c}")
-                )
-            row = df.agg(*aggs).first()
-            props = {"statistics.row-count": str(row["__n"])}
-            for c in cols:
-                props[f"statistics.ndv.{c}"] = str(row[f"__ndv_{c}"])
-                props[f"statistics.null-count.{c}"] = str(row[f"__nul_{c}"])
-            tbl.set_properties(props)
-            return None
-        if m := _ROLLBACK_RE.match(s):
-            return self._rollback(m)
-        if m := _EXPIRE_RE.match(s):
-            return self._expire(m)
-        if m := _REF_DDL_RE.match(s):
-            # Iceberg ref DDL: ALTER TABLE t CREATE/DROP TAG|BRANCH
-            # (tags are immutable bookmarks, branches movable heads).
-            tbl = self._table(m["target"])
-            if m["verb"].upper() == "DROP":
-                tbl.drop_ref(m["name"])
-            else:
-                sid = int(m["sid"]) if m["sid"] else None
-                if m["kind"].upper() == "TAG":
-                    tbl.create_tag(m["name"], snapshot_id=sid)
-                else:
-                    tbl.create_branch(m["name"], snapshot_id=sid)
-            return None
-        if m := _ALTER_COL_RE.match(s):
-            # Schema-evolution DDL (A35; the reference's literal
-            # `ALTER TABLE foo.bar ADD COLUMN ts TIMESTAMP`,
-            # /root/reference/limitations.md:8). All metadata-only.
-            tbl = self._table(m["target"])
-            verb = m["verb"].upper()
-            if verb == "ADD":
-                for part in _split_top_commas(m["body"].strip().strip("()")):
-                    name, _, typ = part.strip().partition(" ")
-                    tbl.add_column(name, typ.strip())
-            elif verb == "DROP":
-                tbl.drop_column(m["body"].strip())
-            elif verb == "ALTER":
-                # Iceberg type-widening DDL: ALTER COLUMN c TYPE bigint
-                am = re.match(
-                    r"(?P<col>\w+)\s+TYPE\s+(?P<typ>[\w(),\s]+)$",
-                    m["body"].strip(),
-                    re.I,
-                )
-                if not am:
-                    raise ValueError(f"unparsed ALTER COLUMN: {m['body']!r}")
-                tbl.update_column_type(am["col"], am["typ"].strip())
-            else:  # RENAME COLUMN old TO new
-                rm = re.match(
-                    r"(?P<old>\w+)\s+TO\s+(?P<new>\w+)$",
-                    m["body"].strip(),
-                    re.I,
-                )
-                if not rm:
-                    raise ValueError(f"unparsed RENAME COLUMN: {m['body']!r}")
-                tbl.rename_column(rm["old"], rm["new"])
-            return None
-        if m := _SET_SPEC_RE.match(s):
-            self._table(m["target"]).set_partition_spec(_parse_spec(m["spec"]))
-            return None
-        if m := _SET_PROPS_RE.match(s):
-            self._table(m["target"]).set_properties(_parse_props(m["props"]))
-            return None
-        if m := _WRITE_ORDERED_RE.match(s):
-            # Iceberg write-order DDL: ALTER TABLE t WRITE ORDERED BY
-            # c1 [ASC|DESC][, ...] / WRITE UNORDERED. Stored as the
-            # write.sort-order table property; honored by every later
-            # write (_write_files range-clusters + sorts on it).
-            if m["cols"] is None:
-                self._table(m["target"]).set_properties({"write.sort-order": ""})
-                return None
-            # full Iceberg sort-field surface (round 14): direction,
-            # null order, and transform terms all parse and persist —
-            # sortorder.py owns the grammar shared with export/import
-            from iceberg_workshop_spark.icetbl.sortorder import (
-                parse_sort_order,
-                serialize_sort_order,
-            )
-
-            try:
-                fields = parse_sort_order(m["cols"])
-            except ValueError as exc:
-                raise ValueError(
-                    f"unparsed WRITE ORDERED BY columns: {m['cols']!r}"
-                ) from exc
-            self._table(m["target"]).set_properties(
-                {"write.sort-order": serialize_sort_order(fields)}
-            )
-            return None
-        if m := _TRUNCATE_RE.match(s):
-            self._table(m["target"]).truncate()
-            return None
-        if m := _UPDATE_RE.match(s):
-            rest = m["rest"]
-            # depth-aware split: a WHERE inside a scalar-subquery or
-            # EXISTS assignment must not terminate the SET list
-            wi = _find_top_keyword(rest, "WHERE")
-            set_text = rest[:wi] if wi >= 0 else rest
-            cond = rest[wi + len("WHERE"):].strip() if wi >= 0 else None
-            assignments = {}
-            for assign in _split_top_commas(set_text):
-                k, v = assign.split("=", 1)
-                assignments[k.strip()] = self._rewrite(v.strip())
-            tbl = self._table(m["target"])
-            # Iceberg's write.update.mode: merge-on-read masks the old
-            # rows with a positional delete file and appends the
-            # updated images in one commit (O(matching rows)); the
-            # default stays copy-on-write.
-            upd_mode = tbl.meta.properties.get(
-                "write.update.mode", "copy-on-write"
-            )
-            if upd_mode == "merge-on-read":
-                tbl.update_where_mor(
-                    self._rewrite(cond) if cond else "true", assignments
-                )
-            else:
-                tbl.update_where(
-                    self._rewrite(cond) if cond else "true",
-                    assignments,
-                    prune=self._safe_preds(tbl, cond) if cond else None,
-                    isolation=_iso_level(tbl, "update"),
-                )
-            return None
-        if m := _CREATE_DB_RE.match(s):
-            self.databases.add(m["db"])
-            return None
-        if m := _DROP_DB_RE.match(s):
-            self.databases.discard(m["db"])
-            prefix = m["db"] + "."
-            for name in [n for n in self.tables if n.startswith(prefix)]:
-                del self.tables[name]
-            for name in [n for n in self.views if n.startswith(prefix)]:
-                del self.views[name]
-            for name in [n for n in self.mviews if n.startswith(prefix)]:
-                del self.mviews[name]
-            return None
-        if m := _DROP_TABLE_RE.match(s):
-            self.tables.pop(m["target"], None)
-            self.views.pop(m["target"], None)
-            # a dropped MV must not survive as a ghost registration
-            self.mviews.pop(m["target"], None)
-            return None
-        if m := _SHOW_PARTS_RE.match(s):
-            return self._show_partitions(m)
-        if m := _SHOW_TABLES_RE.match(s):
-            db = m["db"]
-            names = sorted(
-                n for n in {**dict.fromkeys(self.tables), **self.views}
-                if db is None or n.startswith(db + ".")
-            )
-            rows = [
-                (
-                    n.rsplit(".", 1)[0] if "." in n else "",
-                    n.rsplit(".", 1)[-1],
-                    n in self.views,
-                )
-                for n in names
-            ]
-            return self.spark.createDataFrame(
-                rows, "namespace string, tableName string, isTemporary boolean"
-            )
-        if (m := _SHOW_PROPS_RE.match(s)) and m["target"] in self.tables:
-            props = self.tables[m["target"]].meta.properties
-            return self.spark.createDataFrame(
-                sorted(props.items()) or [("", "")], "key string, value string"
-            ).filter("key <> ''")
-        if (m := _SHOW_CREATE_RE.match(s)) and m["target"] in self.tables:
-            tbl = self.tables[m["target"]]
-            from pyspark.sql.types import StructType
-            cols = ",\n  ".join(
-                f"{f.name} {f.dataType.simpleString().upper()}"
-                for f in StructType.fromDDL(tbl.meta.schema_ddl).fields
-            )
-            spec = tbl.meta.specs[tbl.meta.current_spec_id]
-            part = (
-                "\nPARTITIONED BY SPEC ("
-                + ", ".join(f"{f['transform']}({f['source']})" for f in spec)
-                + ")"
-                if spec
-                else ""
-            )
-            stmt = (
-                f"CREATE TABLE {m['target']} (\n  {cols}){part}\n"
-                f"STORED BY ICEBERG\nLOCATION '{tbl.meta.location}'"
-            )
-            return self.spark.createDataFrame(
-                [(stmt,)], "createtab_stmt string"
-            )
-        if (m := _DESCRIBE_RE.match(s)) and m["target"] in self.tables:
-            return self._describe(m)
-        if m := _CALL_RE.match(s):
-            return self._call(m)
-        if m := _CREATE_MV_JOIN_RE.match(s):
-            return self._create_mview_join(m)
-        if m := _CREATE_MV_RE.match(s):
-            return self._create_mview(m)
-        if m := _REFRESH_MV_RE.match(s):
-            return self._refresh_mview(m["name"])
-        if m := _DROP_MV_RE.match(s):
-            if m["name"] not in self.mviews:
-                raise KeyError(f"not a materialized view: {m['name']}")
-            spec = self.mviews.pop(m["name"])
-            tbl = self.tables.pop(m["name"])
-            IceTable.drop(tbl.meta.location)
-            return None
-        if _SHOW_MV_RE.match(s):
-            rows = []
-            for name, spec in sorted(self.mviews.items()):
-                src = (
-                    f"{spec['srca']} JOIN {spec['srcb']}"
-                    if spec.get("join")
-                    else spec["src"]
-                )
-                rows.append((name, src, ", ".join(spec["group"])))
-            return self.spark.createDataFrame(
-                rows or [], "name string, source string, group_cols string"
-            )
-        if m := _INSERT_RE.match(s):
-            return self._insert(m)
-        if m := _CREATE_TABLE_RE.match(s):
-            return self._create_table(m)
-        return self._select(s)
+        for pattern, handler in self._REGEX_FORMS:
+            if m := pattern.match(s):
+                return handler(self, m)
+        if "qualify" in s.lower() and _find_top_keyword(s, "QUALIFY") >= 0:
+            return self._qualify(s)
+        s = _spark_spelling(self.spark, s)
+        plan = C.parse_plan(self.spark, s)
+        handler = self._PLAN_HANDLERS.get(plan.nodeName())
+        if handler is None:
+            return self._select(s, plan)
+        return handler(self, plan, s)
 
     def _table(self, name: str) -> IceTable:
         if name not in self.tables:
             raise KeyError(f"not a registered ice table: {name}")
         return self.tables[name]
 
-    def _safe_preds(self, tbl: IceTable, cond: str) -> list | None:
-        """Pruning DNF for a WHERE clause (OR predicates prune as
-        per-file interval unions), pre-validated against the table's
-        actual metadata: a literal whose type can't be compared to this
-        table's partition values / bounds must degrade to 'no pruning',
-        never crash the statement (pruning is an optimization; DML
-        correctness can't ride on it)."""
+    def _text(self, s: str, expr) -> str:
+        return C.expr_text(self._patterns, s, expr)
+
+    def _safe_preds(self, tbl: IceTable, cond) -> list | None:
+        """Pruning DNF for a parsed WHERE condition (OR predicates
+        prune as per-file interval unions), pre-validated against the
+        table's actual metadata: a literal whose type can't be compared
+        to this table's partition values / bounds must degrade to 'no
+        pruning', never crash the statement (pruning is an
+        optimization; DML correctness can't ride on it)."""
         from iceberg_workshop_spark.icetbl.pruning import prune_files
 
-        dnf = _dnf_from_where(cond)
+        dnf = _dnf(cond) if cond is not None else None
         if not dnf:
             return None
         try:
@@ -979,9 +561,12 @@ class IceSqlSession:
         return dnf
 
     def _resolve_location(self, loc: str) -> str:
+        # the parser substituted any ${var} in the statement's LOCATION,
+        # so the prefixes are compared substituted too
         for prefix in sorted(self.location_map, key=len, reverse=True):
-            if loc.startswith(prefix):
-                return self.location_map[prefix] + loc[len(prefix):]
+            sub = C.substitute(self.spark, prefix)
+            if loc.startswith(sub):
+                return self.location_map[prefix] + loc[len(sub):]
         return loc
 
     def _rewrite(self, fragment: str, preregistered: set[str] | None = None) -> str:
@@ -1254,26 +839,136 @@ class IceSqlSession:
             "partition string",
         ).distinct()
 
-    # -- statement handlers -------------------------------------------
-    def _merge(self, m: re.Match, when_text: str) -> None:
+
+    # -- statements Spark parses --------------------------------------
+    def _delete(self, plan, s: str) -> None:
+        """DELETE FROM t [WHERE c] (no WHERE parses as ``true``).
+        Candidate files are pruned on the WHERE's simple conjuncts —
+        each is implied by the full condition, so a pruned-out file
+        cannot hold a matching row (the rewrite itself still applies
+        the full condition). Iceberg's branch identifier (DELETE FROM
+        db.t.branch_audit ...) routes the CoW rewrite to that branch's
+        head — WAP with row deletes."""
+        target, branch = C.target(plan), None
+        base, _, leaf = target.rpartition(".")
+        if leaf.startswith("branch_") and base in self.tables:
+            target, branch = base, leaf[len("branch_"):]
+        tbl = self._table(target)
+        cond = plan.condition()
+        where = self._rewrite(self._text(s, cond))
+        # Iceberg's write.delete.mode property: merge-on-read writes
+        # positional delete files (O(matching rows) commit, no
+        # data-file rewrite) instead of the CoW default. Branch-scoped
+        # deletes stay CoW (the MoR sidecar path is main-head-scoped).
+        mode = tbl.meta.properties.get("write.delete.mode", "copy-on-write")
+        if mode == "merge-on-read" and branch is None:
+            tbl.delete_where_pos(where)
+        else:
+            tbl.delete_where(
+                where,
+                prune=self._safe_preds(tbl, cond),
+                isolation=_iso_level(tbl, "delete"),
+                branch=branch,
+            )
+
+    def _update(self, plan, s: str) -> None:
+        assignments = {
+            C.last_part(a.key()): self._rewrite(self._text(s, a.value()))
+            for a in C.seq(plan.assignments())
+        }
+        tbl = self._table(C.target(plan))
+        cond = C.opt(plan.condition())
+        where = self._rewrite(self._text(s, cond)) if cond is not None else "true"
+        # Iceberg's write.update.mode: merge-on-read masks the old
+        # rows with a positional delete file and appends the updated
+        # images in one commit (O(matching rows)); the default stays
+        # copy-on-write.
+        if tbl.meta.properties.get("write.update.mode") == "merge-on-read":
+            tbl.update_where_mor(where, assignments)
+        else:
+            tbl.update_where(
+                where,
+                assignments,
+                prune=self._safe_preds(tbl, cond),
+                isolation=_iso_level(tbl, "update"),
+            )
+
+    def _merge(self, plan, s: str) -> None:
         """General MERGE (Iceberg grammar subset): any number of
         ``WHEN MATCHED [AND <cond>] THEN UPDATE SET ... | DELETE``
-        clauses (first applicable wins, SQL clause order) plus an
-        optional ``WHEN NOT MATCHED [AND <cond>] THEN INSERT VALUES``.
+        clauses (first applicable wins, SQL clause order), an optional
+        ``WHEN NOT MATCHED [AND <cond>] THEN INSERT``, and ``WHEN NOT
+        MATCHED BY SOURCE`` UPDATE/DELETE clauses.
         Reduction: one join computes per-matched-row effects (updated
         values or a __delete flag — rows no clause claims keep their
         original values), the anti-join computes inserts, and
         ``merge_into`` applies both in a single copy-on-write commit."""
-        tbl = self._table(m["target"])
-        talias = m["talias"] or _view_name(m["target"])
-        # alias-less `USING s ON ...`: the source is referenced by its
-        # (last-component) table name, standard SQL
-        salias = m["salias"] or (
-            m["srcname"].split(".")[-1] if m["srcname"] else "__merge_src"
-        )
-        src_sql = m["src"] or f"SELECT * FROM {m['srcname']}"
+        target, talias = C.relation(plan.targetTable())
+        tbl = self._table(target)
+        talias = talias or _view_name(target)
+        src = plan.sourceTable()
+        src_name, salias = C.relation(src)
+        if src_name is not None:
+            # alias-less `USING s ON ...`: the source is referenced by
+            # its (last-component) table name, standard SQL
+            src_sql = f"SELECT * FROM {src_name}"
+            salias = salias or src_name.split(".")[-1]
+        else:
+            src_sql = C.span(s, src.child() if salias else src)
+            salias = salias or "__merge_src"
+        on_pairs: list[tuple[str, str]] = []  # (target_col, source_col)
+        for conj in C.conjuncts(plan.mergeCondition()):
+            sides = [conj.left(), conj.right()] if conj.nodeName() == "EqualTo" else []
+            if not sides or any(x.nodeName() != "UnresolvedAttribute" for x in sides):
+                # Catch >=/<=/expressions up front — they have no join
+                # column pair to key the rewrite on.
+                raise ValueError(
+                    f"MERGE ON supports only equi-join column conjuncts, got: {conj.sql()!r}"
+                )
+            (lq, lc), (_, rc) = [
+                (parts[-2] if len(parts) > 1 else None, parts[-1])
+                for parts in (C.seq(x.nameParts()) for x in sides)
+            ]
+            if lq == salias:
+                on_pairs.append((rc, lc))
+            else:  # source on the right; an unqualified side is target
+                on_pairs.append((lc, rc))
+
+        def clause(action) -> dict:
+            kind, cond = action.nodeName(), C.opt(action.condition())
+            c: dict = {"cond": None if cond is None else self._text(s, cond)}
+            if kind == "DeleteAction":
+                c["kind"] = "delete"
+            elif kind == "UpdateAction":
+                c.update(kind="update", sets={
+                    C.last_part(a.key()): self._text(s, a.value())
+                    for a in C.seq(action.assignments())
+                })
+            elif kind == "InsertStarAction":
+                c["star"] = True
+            elif kind == "InsertAction":
+                assigns = C.seq(action.assignments())
+                keys = [C.last_part(a.key()) for a in assigns]
+                if keys == [_VALUES_COL]:  # bare INSERT VALUES, positional
+                    c["cols"] = None
+                    c["vals"] = [
+                        self._text(s, v) for v in C.seq(assigns[0].value().valExprs())
+                    ]
+                else:
+                    c["cols"] = keys
+                    c["vals"] = [self._text(s, a.value()) for a in assigns]
+            else:
+                raise ValueError(f"unsupported MERGE action: {kind}")
+            return c
+
+        matched = [clause(a) for a in C.seq(plan.matchedActions())]
+        inserts = [clause(a) for a in C.seq(plan.notMatchedActions())]
+        nmbs = [clause(a) for a in C.seq(plan.notMatchedBySourceActions())]
+        if len(inserts) > 1:
+            raise ValueError("at most one WHEN NOT MATCHED clause is supported")
+
         src_df = self.spark.sql(self._rewrite(src_sql))
-        if m.group("evolve"):
+        if plan.withSchemaEvolution():
             # MERGE WITH SCHEMA EVOLUTION: source columns absent from
             # the target are added (metadata-only) before the merge;
             # pre-existing target rows read them as NULL via the
@@ -1285,184 +980,48 @@ class IceSqlSession:
                     tbl.add_column(f.name, f.dataType.simpleString())
         tbl.read().createOrReplaceTempView(talias)
         src_df.createOrReplaceTempView(salias)
-
-        on_pairs: list[tuple[str, str]] = []  # (target_col, source_col)
-        for conj in re.split(r"\s+AND\s+", m["on"], flags=re.I):
-            sides = [x.strip() for x in conj.split("=")]
-            if len(sides) != 2 or not all(
-                re.fullmatch(r"[\w.]+", x) for x in sides
-            ):
-                # Catch >=/<=/expressions up front — splitting them on
-                # '=' would fabricate garbage join columns.
-                raise ValueError(
-                    f"MERGE ON supports only equi-join column conjuncts, got: {conj!r}"
-                )
-            left, right = sides
-
-            def split_side(x: str) -> tuple[str | None, str]:
-                return tuple(x.rsplit(".", 1)) if "." in x else (None, x)  # type: ignore[return-value]
-
-            lq, lc = split_side(left)
-            rq, rc = split_side(right)
-            if lq == salias:
-                on_pairs.append((rc, lc))
-            elif rq == salias:
-                on_pairs.append((lc, rc))
-            else:  # unqualified side defaults to target (MERGE scoping)
-                on_pairs.append((lc, rc))
-
-        # ---- parse WHEN clauses (order-preserving, gap-free) --------
-        matched: list[dict] = []
-        inserts: list[dict] = []
-        nmbs: list[dict] = []  # WHEN NOT MATCHED BY SOURCE
-        for clause_text in _split_merge_clauses(when_text.strip()):
-            cm = re.match(
-                r"WHEN\s+(?P<neg>NOT\s+)?MATCHED"
-                r"(?P<bysrc>\s+BY\s+SOURCE)?(?:\s+BY\s+TARGET)?\b(?P<rest>.*)$",
-                clause_text,
-                re.I | re.S,
-            )
-            rest = cm["rest"].strip()
-            ti = _find_top_keyword(rest, "THEN")
-            if ti < 0:
-                raise ValueError(f"MERGE clause missing THEN: {clause_text!r}")
-            pre, action = rest[:ti].strip(), rest[ti + 4 :].strip()
-            cond = None
-            if pre:
-                am = re.match(r"AND\s+(?P<c>.+)$", pre, re.I | re.S)
-                if not am:
-                    raise ValueError(f"unparsed MERGE clause guard: {pre!r}")
-                cond = am["c"].strip()
-            clause = {"cond": cond}
-            if cm["neg"] and cm["bysrc"]:
-                # WHEN NOT MATCHED BY SOURCE — target rows with no
-                # source match; DELETE or UPDATE SET (target-column
-                # references only, by construction of the anti-join).
-                if action.upper() == "DELETE":
-                    clause["kind"] = "delete"
-                elif re.match(r"UPDATE\s+SET\s+", action, re.I):
-                    sets = {}
-                    set_text = re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.I)
-                    for assign in _split_top_commas(set_text):
-                        k, v = assign.split("=", 1)
-                        sets[k.strip().rsplit(".", 1)[-1]] = v.strip()
-                    clause["kind"] = "update"
-                    clause["sets"] = sets
-                else:
-                    raise ValueError(
-                        "WHEN NOT MATCHED BY SOURCE supports only"
-                        f" UPDATE SET / DELETE, got: {action!r}"
-                    )
-                nmbs.append(clause)
-                continue
-            if cm["neg"]:
-                # Three standard INSERT forms: bare `INSERT VALUES
-                # (…)` (positional, full width), `INSERT (cols)
-                # VALUES (…)` (named subset; unnamed columns NULL),
-                # and `INSERT *` (source columns by name).
-                if re.fullmatch(r"INSERT\s*\*", action.strip(), re.I):
-                    clause["star"] = True
-                    inserts.append(clause)
-                    continue
-                clause["cols"] = None
-                im = re.match(r"INSERT\s+VALUES\s*(?=\()", action, re.I)
-                if not im:
-                    im = re.match(r"INSERT\s*(?=\()", action, re.I)
-                    if not im:
-                        raise ValueError(
-                            f"WHEN NOT MATCHED supports only INSERT, got: {action!r}"
-                        )
-                    col_text, after = _take_parens(action[im.end():])
-                    vm = re.match(r"\s*VALUES\s*(?=\()", after, re.I)
-                    if not vm:
-                        raise ValueError(
-                            f"MERGE INSERT column list must be followed by "
-                            f"VALUES, got: {after!r}"
-                        )
-                    clause["cols"] = [
-                        c.strip().rsplit(".", 1)[-1]
-                        for c in _split_top_commas(col_text)
-                    ]
-                    vals_text, trailing = _take_parens(after[vm.end():])
-                else:
-                    vals_text, trailing = _take_parens(action[im.end():])
-                if trailing.strip():
-                    raise ValueError(
-                        f"unparsed text after INSERT VALUES: {trailing!r}"
-                    )
-                clause["vals"] = _split_top_commas(vals_text)
-                inserts.append(clause)
-            elif action.upper() == "DELETE":
-                clause["kind"] = "delete"
-                matched.append(clause)
-            elif re.match(r"UPDATE\s+SET\s+", action, re.I):
-                sets: dict[str, str] = {}
-                set_text = re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.I)
-                for assign in _split_top_commas(set_text):
-                    k, v = assign.split("=", 1)
-                    sets[k.strip().rsplit(".", 1)[-1]] = v.strip()
-                clause["kind"] = "update"
-                clause["sets"] = sets
-                matched.append(clause)
-            else:
-                raise ValueError(f"unsupported MERGE action: {action!r}")
-        if not matched and not inserts and not nmbs:
-            raise ValueError(f"MERGE has no WHEN clauses: {when_text!r}")
-        if len(inserts) > 1:
-            raise ValueError("at most one WHEN NOT MATCHED clause is supported")
-
         cols = tbl._column_names()
-        on_sql = " AND ".join(f"{talias}.{t} = {salias}.{s}" for t, s in on_pairs)
 
-        # First applicable clause wins: __act = index of the clause,
-        # evaluated ONCE per row (lateral column alias — every value
-        # and the delete flag reference __act, so the statement stays
-        # O(columns × clauses), not O(columns × clauses²)).
-        act_sql = (
-            "CASE "
-            + " ".join(
-                f"WHEN ({c['cond'] or 'TRUE'}) THEN {i}"
-                for i, c in enumerate(matched)
-            )
-            + " ELSE -1 END"
-        ) if matched else "-1"
+        on_sql = " AND ".join(f"{talias}.{t} = {salias}.{c}" for t, c in on_pairs)
 
-        def value_sql(col: str) -> str:
-            branches = " ".join(
-                f"WHEN {i} THEN ({c['sets'].get(col, f'{talias}.{col}')})"
-                for i, c in enumerate(matched)
-                if c["kind"] == "update"
+        def effects(clauses: list[dict], join: str) -> DataFrame:
+            """Per-row effects of first-applicable-wins clauses: __act =
+            index of the clause, evaluated ONCE per row (lateral column
+            alias — every value and the delete flag reference __act, so
+            the statement stays O(columns × clauses), not O(columns ×
+            clauses²)); rows no clause claims keep their values."""
+            act = " ".join(
+                f"WHEN ({c['cond'] or 'TRUE'}) THEN {i}" for i, c in enumerate(clauses)
             )
-            return (
-                f"CASE __act {branches} ELSE {talias}.{col} END"
-                if branches
-                else f"{talias}.{col}"
+            dels = ", ".join(str(i) for i, c in enumerate(clauses) if c["kind"] == "delete")
+
+            def value(col: str) -> str:
+                keep = f"{talias}.{col}"
+                branches = " ".join(
+                    f"WHEN {i} THEN ({c['sets'].get(col, keep)})"
+                    for i, c in enumerate(clauses)
+                    if c["kind"] == "update"
+                )
+                return f"CASE __act {branches} ELSE {keep} END" if branches else keep
+
+            return self.spark.sql(
+                f"SELECT ({f'CASE {act} ELSE -1 END' if clauses else '-1'}) AS __act, "
+                + ", ".join(f"{value(c)} AS {c}" for c in cols)
+                + f", ({f'__act IN ({dels})' if dels else 'FALSE'}) AS __delete "
+                f"FROM {talias} {join} {salias} ON {on_sql}"
             )
 
-        del_ids = [str(i) for i, c in enumerate(matched) if c["kind"] == "delete"]
-        del_sql = f"__act IN ({', '.join(del_ids)})" if del_ids else "FALSE"
-        upd_proj = ", ".join(f"{value_sql(c)} AS {c}" for c in cols)
-        effects = self.spark.sql(
-            f"SELECT ({act_sql}) AS __act, {upd_proj}, ({del_sql}) AS __delete "
-            f"FROM {talias} JOIN {salias} ON {on_sql}"
-        ).drop("__act")
-        src = effects
+        src = effects(matched, "JOIN").drop("__act")
         for ic in inserts:
             if ic.get("star"):
                 # INSERT *: source columns map to target columns by
                 # name — the source must provide every target column.
                 ins_proj = ", ".join(f"{salias}.{c} AS {c}" for c in cols)
-            elif ic.get("cols") is not None:
+            elif ic["cols"] is not None:
                 # INSERT (cols) VALUES (…): named subset; unnamed
                 # target columns take a typed NULL (CAST keeps
                 # unionByName from widening through VOID).
-                vals = ic["vals"]
-                if len(vals) != len(ic["cols"]):
-                    raise ValueError(
-                        f"MERGE INSERT column list width {len(ic['cols'])}"
-                        f" != VALUES width {len(vals)}"
-                    )
-                provided = dict(zip(ic["cols"], vals))
+                provided = dict(zip(ic["cols"], ic["vals"]))
                 unknown = set(provided) - set(cols)
                 if unknown:
                     raise ValueError(
@@ -1498,34 +1057,7 @@ class IceSqlSession:
             # unmatched rows verbatim). Including claimed rows in the
             # source makes their files "affected", which is exactly
             # the Iceberg CoW behavior for NOT MATCHED BY SOURCE.
-            act2 = (
-                "CASE "
-                + " ".join(
-                    f"WHEN ({c['cond'] or 'TRUE'}) THEN {i}"
-                    for i, c in enumerate(nmbs)
-                )
-                + " ELSE -1 END"
-            )
-
-            def value2(col: str) -> str:
-                branches = " ".join(
-                    f"WHEN {i} THEN ({c['sets'].get(col, col)})"
-                    for i, c in enumerate(nmbs)
-                    if c["kind"] == "update"
-                )
-                return f"CASE __act {branches} ELSE {col} END" if branches else col
-
-            del2_ids = [str(i) for i, c in enumerate(nmbs) if c["kind"] == "delete"]
-            del2 = f"__act IN ({', '.join(del2_ids)})" if del2_ids else "FALSE"
-            proj2 = ", ".join(f"{value2(c)} AS {c}" for c in cols)
-            nm = (
-                self.spark.sql(
-                    f"SELECT ({act2}) AS __act, {proj2}, ({del2}) AS __delete "
-                    f"FROM {talias} LEFT ANTI JOIN {salias} ON {on_sql}"
-                )
-                .filter("__act <> -1")
-                .drop("__act")
-            )
+            nm = effects(nmbs, "LEFT ANTI JOIN").filter("__act <> -1").drop("__act")
             src = src.unionByName(nm)
         # Iceberg's write.merge.mode: merge-on-read masks matched rows
         # with a positional delete and appends updates+inserts in one
@@ -1541,17 +1073,11 @@ class IceSqlSession:
                 on=[t for t, _ in on_pairs],
                 isolation=_iso_level(tbl, "merge"),
             )
-        return None
 
-    def _insert(self, m: re.Match) -> None:
-        tbl = self._table(m["target"])
-        rest = m["rest"].strip()
-        if rest.upper().startswith("VALUES"):
-            src = self.spark.sql(f"SELECT * FROM VALUES {rest[6:].strip()}")
-        else:
-            src = self._select(rest)
-        from pyspark.sql.types import StructType
-
+    def _insert(self, plan, s: str) -> None:
+        tbl = self._table(C.name_of(plan.table()))
+        query = plan.query()
+        src = self._select(C.span(s, query), query)
         cols = tbl._column_names()
         # Static PARTITION(col="lit") assignments bind BY NAME (the
         # old positional append placed static literals AFTER dynamic
@@ -1561,19 +1087,14 @@ class IceSqlSession:
         # explicit (col, ...) list when given — unnamed columns land
         # NULL, SQL column-list semantics.
         static: dict[str, str] = {}
-        if m["part"]:
-            for item in _split_top_commas(m["part"]):
-                if "=" in item:
-                    k, v = item.split("=", 1)
-                    k = k.strip().strip("`")
-                    if k not in cols:
-                        raise ValueError(
-                            f"unknown partition column {k!r} in INSERT"
-                        )
-                    static[k] = v.strip()
-        explicit = m.groupdict().get("cols")
-        if explicit and explicit.strip():
-            provided = [c.strip().strip("`") for c in explicit.split(",")]
+        for k, v in C.scala_dict(plan.partitionSpec()).items():
+            if (v := C.opt(v)) is None:
+                continue  # dynamic: the query supplies it
+            if k not in cols:
+                raise ValueError(f"unknown partition column {k!r} in INSERT")
+            static[k] = v
+        provided = C.seq(plan.userSpecifiedCols())
+        if provided:
             unknown = [c for c in provided if c not in cols]
             if unknown:
                 raise ValueError(f"unknown INSERT columns {unknown}")
@@ -1586,14 +1107,11 @@ class IceSqlSession:
             )
         src = src.toDF(*provided)
         for k, v in static.items():
-            src = src.withColumn(k, F.expr(v))
+            src = src.withColumn(k, F.lit(v))
         # SQL literals arrive as DECIMAL/STRING; cast to the declared
         # column types (INSERT assignment casts), NULL-filling any
         # column neither provided nor statically assigned.
-        types = {
-            f.name: f.dataType
-            for f in StructType.fromDDL(tbl.meta.schema_ddl).fields
-        }
+        types = tbl._types()
         src = src.select(
             *[
                 (F.col(c) if c in src.columns else F.lit(None))
@@ -1602,40 +1120,87 @@ class IceSqlSession:
                 for c in cols
             ]
         )
-        if m["mode"].upper() == "OVERWRITE":
+        if plan.overwrite():
             tbl.insert_overwrite(src)
         else:
             tbl.append(src)
+
+    def _create_table(self, plan, s: str) -> None:
+        name = C.target(plan)
+        if plan.ignoreIfExists() and (name in self.tables or name in self.views):
+            # IF NOT EXISTS on an existing name is a no-op — rebinding
+            # would silently truncate the table at the scratch path.
+            return None
+        table_spec = plan.tableSpec()
+        loc = C.opt(table_spec.location())
+        props = C.scala_dict(table_spec.properties())
+        # Hive-style PARTITIONED BY (col TYPE) columns arrive appended
+        # to the column list, with an identity transform each.
+        spec = _spec(C.seq(plan.partitioning()))
+        if plan.nodeName() == "CreateTableAsSelect":
+            query = plan.query()
+            df, cols_ddl = self._select(C.span(s, query), query), None
+        else:
+            df, cols_ddl = None, ", ".join(
+                f"{c.name()} {c.dataType().simpleString()}"
+                for c in C.seq(plan.columns())
+            )
+            serde = C.opt(table_spec.serde())
+            stored_as = C.opt(serde.storedAs()) if serde is not None else None
+            if loc and (stored_as or "").upper() == "TEXTFILE":
+                # CSV-backed external source table: a read-only view
+                # over the delimited files (the workshop's
+                # staging.*_csv shape).
+                reader = self.spark.read.schema(cols_ddl)
+                if props.get("skip.header.line.count") == "1":
+                    reader = reader.option("header", "true")
+                self.views[name] = reader.csv(self._resolve_location(loc))
+                return None
+        loc = (
+            self._resolve_location(loc)
+            if loc
+            else os.path.join(self.scratch, _view_name(name))
+        )
+        if df is not None:
+            tbl = IceTable.create_as(self.spark, loc, df, partition_spec=spec or None)
+        else:
+            tbl = IceTable.create(self.spark, loc, cols_ddl, partition_spec=spec or None)
+        if props:
+            tbl.set_properties(props)
+        self.tables[name] = tbl
         return None
 
     # -- materialized views -------------------------------------------
-    _MV_AGG_RE = re.compile(
-        r"(?:(?P<cnt>COUNT\s*\(\s*\*\s*\))|SUM\s*\((?P<sum>.+)\))"
-        r"\s+AS\s+(?P<alias>\w+)$",
-        re.I | re.S,
-    )
-
-    def _parse_mv_aggs(self, select: str, group: list[str]) -> list[dict]:
-        """Shared select-list parser for both MV forms: group columns
-        pass through; every other item must be COUNT(*) AS x or
-        SUM(expr) AS x (the self-maintainable aggregates), and a
-        COUNT(*) is required as the group-liveness counter."""
+    def _parse_mv_aggs(self, items: list, group: list[str]) -> list[dict]:
+        """Select list of both MV forms: group columns pass through;
+        every other item must be COUNT(*) AS x or SUM(expr) AS x (the
+        self-maintainable aggregates), and a COUNT(*) is required as
+        the group-liveness counter."""
         aggs: list[dict] = []
-        for item in _split_top_commas(select):
-            item = item.strip()
-            if item in group:
+        for item in items:
+            text = item.sql()
+            if text in group:
                 continue
-            am = self._MV_AGG_RE.match(item)
-            if not am:
+            fn = item.child() if item.nodeName() == "Alias" else None
+            kind = (
+                C.name_of(fn).lower()
+                if fn is not None
+                and fn.nodeName() == "UnresolvedFunction"
+                and not fn.isDistinct()
+                else None
+            )
+            args = [a.sql() for a in C.seq(fn.arguments())] if kind else []
+            # the parser reads COUNT(*) as COUNT(1)
+            if not ((kind == "count" and args == ["1"]) or (kind == "sum" and len(args) == 1)):
                 raise ValueError(
                     "materialized view select items must be the group "
-                    f"columns, COUNT(*) AS x, or SUM(expr) AS x: {item!r}"
+                    f"columns, COUNT(*) AS x, or SUM(expr) AS x: {text!r}"
                 )
             aggs.append(
                 {
-                    "kind": "count" if am["cnt"] else "sum",
-                    "expr": None if am["cnt"] else am["sum"].strip(),
-                    "alias": am["alias"],
+                    "kind": kind,
+                    "expr": args[0] if kind == "sum" else None,
+                    "alias": item.name(),
                 }
             )
         if not any(a["kind"] == "count" for a in aggs):
@@ -1645,33 +1210,56 @@ class IceSqlSession:
             )
         return aggs
 
-    def _create_mview(self, m: re.Match) -> None:
+    def _create_mview(self, plan, s: str) -> None:
         """CREATE MATERIALIZED VIEW name AS SELECT g1, g2, COUNT(*) AS
-        n, SUM(expr) AS s FROM ice_table [WHERE ...] GROUP BY g1, g2
-        — the incrementally-maintainable aggregate shape (COUNT/SUM
-        are self-maintainable under insert/delete deltas; COUNT(*)
-        is REQUIRED, it is the group-liveness counter that lets
-        REFRESH drop emptied groups). The view materializes once here;
-        REFRESH MATERIALIZED VIEW applies the source table's changelog
-        since the last materialization — O(changed rows), never a
-        re-aggregation of the table."""
-        name = m["name"]
-        src = m["src"]
-        tbl = self._table(src)
-        group = [c.strip() for c in m["group"].split(",")]
-        aggs = self._parse_mv_aggs(m["select"], group)
-        self.mviews[name] = {
-            "src": src,
-            "base_sid": tbl.meta.current_snapshot_id,
+        n, SUM(expr) AS s FROM src [WHERE ...] GROUP BY g1, g2 — the
+        incrementally-maintainable aggregate shape (COUNT/SUM are
+        self-maintainable under insert/delete deltas; COUNT(*) is
+        REQUIRED, it is the group-liveness counter that lets REFRESH
+        drop emptied groups). ``src`` is one ice table or an equi-JOIN
+        of two aliased ones — the star-join rollup case. The view
+        materializes once here; REFRESH MATERIALIZED VIEW applies the
+        sources' changelogs since the last materialization — O(changed
+        rows), never a re-aggregation (a join refresh uses the
+        two-sided bag-semantics delta algebra, ``_mv_join_delta``)."""
+        name = C.target(plan)
+        agg = plan.query()
+        if agg.nodeName() != "Aggregate":
+            raise ValueError(
+                "materialized view must be SELECT ... FROM ... GROUP BY ..."
+            )
+        group = [g.sql() for g in C.seq(agg.groupingExpressions())]
+        spec: dict = {
             "group": group,
-            "aggs": aggs,
-            "where": m["where"].strip() if m["where"] else None,
+            "aggs": self._parse_mv_aggs(C.seq(agg.aggregateExpressions()), group),
+            "where": None,
         }
+        node = agg.child()
+        if node.nodeName() == "Filter":
+            spec["where"], node = self._text(s, node.condition()), node.child()
+        if node.nodeName() == "Join":
+            on = C.opt(node.condition())
+            if node.joinType().toString() != "Inner" or on is None:
+                raise ValueError("materialized view joins must be inner JOIN ... ON")
+            on = self._text(s, on)
+            (srca, aa), (srcb, ab) = C.relation(node.left()), C.relation(node.right())
+            tbl_a, tbl_b = self._table(srca), self._table(srcb)
+            aa, ab = aa or srca.split(".")[-1], ab or srcb.split(".")[-1]
+            spec.update(
+                join=True, srca=srca, srcb=srcb, aa=aa, ab=ab, on=on,
+                base_sid_a=tbl_a.meta.current_snapshot_id,
+                base_sid_b=tbl_b.meta.current_snapshot_id,
+            )
+            rows = tbl_a.read().alias(aa).join(tbl_b.read().alias(ab), F.expr(on))
+        else:
+            tbl = self._table(C.name_of(node))
+            spec.update(src=C.name_of(node), base_sid=tbl.meta.current_snapshot_id)
+            rows = tbl.read()
+        self.mviews[name] = spec
         mv_loc = os.path.join(self.scratch, "mv_" + _view_name(name))
-        mv_tbl = IceTable.create_as(
-            self.spark, mv_loc, self._mv_aggregate(tbl.read(), name)
+        self.tables[name] = IceTable.create_as(
+            self.spark, mv_loc, self._mv_aggregate(rows, name)
         )
-        self.tables[name] = mv_tbl
 
     def _mv_aggregate(self, rows: DataFrame, name: str):
         spec = self.mviews[name]
@@ -1686,40 +1274,6 @@ class IceSqlSession:
             for a in spec["aggs"]
         ]
         return rows.groupBy(*spec["group"]).agg(*aggs)
-
-    def _create_mview_join(self, m: re.Match) -> None:
-        """CREATE MATERIALIZED VIEW over an equi-JOIN of two ice
-        tables — the star-join rollup case. REFRESH uses the two-sided
-        bag-semantics delta algebra
-
-            Δ(A ⋈ B) = ΔA ⋈ B_new  +  A_old ⋈ ΔB
-
-        each term signed by its OWN changelog and pre-aggregated, so a
-        refresh costs O(|ΔA| ⋈ B + A ⋈ |ΔB|) with the deltas pruning
-        their join partner's file set — never a re-join of the full
-        sources."""
-        name = m["name"]
-        tbl_a, tbl_b = self._table(m["srca"]), self._table(m["srcb"])
-        group = [c.strip() for c in m["group"].split(",")]
-        aggs = self._parse_mv_aggs(m["select"], group)
-        self.mviews[name] = {
-            "join": True,
-            "srca": m["srca"], "srcb": m["srcb"],
-            "aa": m["aa"], "ab": m["ab"],
-            "on": m["on"].strip(),
-            "base_sid_a": tbl_a.meta.current_snapshot_id,
-            "base_sid_b": tbl_b.meta.current_snapshot_id,
-            "group": group,
-            "aggs": aggs,
-            "where": m["where"].strip() if m["where"] else None,
-        }
-        joined = tbl_a.read().alias(m["aa"]).join(
-            tbl_b.read().alias(m["ab"]), F.expr(m["on"].strip())
-        )
-        mv_loc = os.path.join(self.scratch, "mv_" + _view_name(name))
-        self.tables[name] = IceTable.create_as(
-            self.spark, mv_loc, self._mv_aggregate(joined, name)
-        )
 
     def _mv_join_delta(self, spec: dict):
         """Signed per-group delta for a join MV (None if neither
@@ -1847,85 +1401,154 @@ class IceSqlSession:
         else:
             spec["base_sid"] = cur_sid
 
-    def _create_table(self, m: re.Match) -> None:
-        name = m["target"]
-        if m["ine"] and (name in self.tables or name in self.views):
-            # IF NOT EXISTS on an existing name is a no-op — rebinding
-            # would silently truncate the table at the scratch path.
-            return None
-        body = m["body"].strip()
-        cols_ddl = None
-        if body.startswith("("):
-            inner, body = _take_parens(body)
-            cols_ddl = ", ".join(_split_top_commas(inner))
-        # Balanced-paren capture: transform specs nest parens
-        # (PARTITIONED BY SPEC (DAYS(order_ts))).
-        spec_text = part_text = None
-        if pm := re.search(r"PARTITIONED\s+BY\s+SPEC\s*(?=\()", body, re.I):
-            spec_text, _ = _take_parens(body[pm.end():])
-        elif pm := re.search(r"PARTITIONED\s+BY\s*(?=\()", body, re.I):
-            part_text, _ = _take_parens(body[pm.end():])
-        loc_m = re.search(r"LOCATION\s+'(?P<loc>[^']+)'", body, re.I)
-        props_m = re.search(r"TBLPROPERTIES\s*(?=\()", body, re.I)
-        as_m = re.search(r"\bAS\s+(?P<sel>SELECT\b.+)$", body, re.I | re.S)
-        textfile = re.search(r"STORED\s+AS\s+TEXTFILE", body, re.I)
-        props = (
-            _parse_props(_take_parens(body[props_m.end():])[0])
-            if props_m
-            else {}
+    def _set_props(self, plan, s: str) -> None:
+        self._table(C.target(plan)).set_properties(
+            C.scala_dict(plan.properties())
         )
 
-        if textfile and loc_m:
-            # CSV-backed external source table: a read-only view over
-            # the delimited files (the workshop's staging.*_csv shape).
-            reader = self.spark.read.schema(cols_ddl)
-            if props.get("skip.header.line.count") == "1":
-                reader = reader.option("header", "true")
-            self.views[name] = reader.csv(self._resolve_location(loc_m["loc"]))
-            return None
+    def _alter_columns(self, plan, s: str) -> None:
+        """Schema-evolution DDL (A35; the reference's literal
+        ``ALTER TABLE foo.bar ADD COLUMN ts TIMESTAMP``,
+        limitations.md:8). All metadata-only."""
+        tbl = self._table(C.target(plan))
+        kind = plan.nodeName()
+        if kind == "AddColumns":
+            for c in C.seq(plan.columnsToAdd()):
+                tbl.add_column(c.colName(), c.dataType().simpleString())
+        elif kind == "DropColumns":
+            for f in C.seq(plan.columnsToDrop()):
+                tbl.drop_column(f.name().mkString("."))
+        elif kind == "RenameColumn":
+            tbl.rename_column(plan.column().name().mkString("."), plan.newName())
+        else:  # AlterColumns: Iceberg type widening, ALTER COLUMN c TYPE t
+            for spec in C.seq(plan.specs()):
+                typ = C.opt(spec.newDataType())
+                if typ is None:
+                    raise ValueError(
+                        "ALTER COLUMN supports only TYPE changes: "
+                        f"{spec.column().name().mkString('.')}"
+                    )
+                tbl.update_column_type(
+                    spec.column().name().mkString("."), typ.simpleString()
+                )
 
-        spec = _parse_spec(spec_text) if spec_text else []
-        if part_text:
-            # Hive-style: partition columns are appended to the schema
-            # and become an identity spec.
-            pcols = [
-                c.strip().split() for c in _split_top_commas(part_text)
-            ]
-            spec = [spec_field(c[0], "identity") for c in pcols]
-            if cols_ddl is not None:
-                cols_ddl += ", " + ", ".join(" ".join(c) for c in pcols)
-        loc = (
-            self._resolve_location(loc_m["loc"])
-            if loc_m
-            else os.path.join(self.scratch, _view_name(name))
-        )
-        if as_m:
-            tbl = IceTable.create_as(
-                self.spark, loc, self._select(as_m["sel"]), partition_spec=spec or None
+    def _analyze(self, plan, s: str) -> None:
+        """ANALYZE TABLE ... COMPUTE STATISTICS [FOR COLUMNS ... | FOR
+        ALL COLUMNS]: one distributed aggregate computes the row count
+        (and per-column exact NDV + null counts when columns are
+        named); results land in table properties like engine catalogs
+        persist them (SHOW TBLPROPERTIES / DESCRIBE FORMATTED surface
+        them; a CBO reads them at plan time)."""
+        tbl = self._table(C.target(plan))
+        cols: list[str] = []
+        if plan.nodeName() == "AnalyzeColumn":
+            cols = (
+                tbl._column_names()
+                if plan.allColumns()
+                else C.seq(C.opt(plan.columnNames()))
             )
-        else:
-            tbl = IceTable.create(self.spark, loc, cols_ddl, partition_spec=spec or None)
-        if props:
-            tbl.set_properties(props)
-        self.tables[name] = tbl
-        return None
+        aggs = [F.count(F.lit(1)).alias("__n")]
+        for c in cols:
+            aggs.append(F.countDistinct(c).alias(f"__ndv_{c}"))
+            aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"__nul_{c}"))
+        row = tbl.read().agg(*aggs).first()
+        props = {"statistics.row-count": str(row["__n"])}
+        for c in cols:
+            props[f"statistics.ndv.{c}"] = str(row[f"__ndv_{c}"])
+            props[f"statistics.null-count.{c}"] = str(row[f"__nul_{c}"])
+        tbl.set_properties(props)
 
-    def _describe(self, m: re.Match) -> DataFrame:
-        """DESCRIBE [FORMATTED] over a registered ice table — the
-        reference retrieves ``metadata_location`` this way before a
+    def _truncate(self, plan, s: str) -> None:
+        self._table(C.target(plan)).truncate()
+
+    def _create_db(self, plan, s: str) -> None:
+        self.databases.add(C.target(plan))
+
+    def _drop_db(self, plan, s: str) -> None:
+        db = C.target(plan)
+        self.databases.discard(db)
+        for registry in (self.tables, self.views, self.mviews):
+            for name in [n for n in registry if n.startswith(db + ".")]:
+                del registry[name]
+
+    def _drop_table(self, plan, s: str) -> None:
+        name = C.target(plan)
+        self.tables.pop(name, None)
+        self.views.pop(name, None)
+        # a dropped MV must not survive as a ghost registration
+        self.mviews.pop(name, None)
+
+    def _show_partitions(self, plan, s: str) -> DataFrame:
+        tbl = self._table(C.target(plan))
+        parts = sorted(
+            {_hive_partition_str(f) for f in tbl.meta.current_files()}
+        )
+        return self.spark.createDataFrame(
+            [(p,) for p in parts], "partition string"
+        )
+
+    def _show_tables(self, plan, s: str) -> DataFrame:
+        if C.opt(plan.pattern()) is not None:  # SHOW TABLES ... LIKE
+            return self._select(s, plan)
+        db = C.target(plan)  # None: the current namespace
+        names = sorted(
+            n for n in {**dict.fromkeys(self.tables), **self.views}
+            if db is None or n.startswith(db + ".")
+        )
+        rows = [
+            (
+                n.rsplit(".", 1)[0] if "." in n else "",
+                n.rsplit(".", 1)[-1],
+                n in self.views,
+            )
+            for n in names
+        ]
+        return self.spark.createDataFrame(
+            rows, "namespace string, tableName string, isTemporary boolean"
+        )
+
+    def _show_props(self, plan, s: str) -> DataFrame:
+        if (name := C.target(plan)) not in self.tables:
+            return self._select(s, plan)
+        props = self.tables[name].meta.properties
+        return self.spark.createDataFrame(
+            sorted(props.items()) or [("", "")], "key string, value string"
+        ).filter("key <> ''")
+
+    def _show_create(self, plan, s: str) -> DataFrame:
+        if (name := C.target(plan)) not in self.tables:
+            return self._select(s, plan)
+        tbl = self.tables[name]
+        cols = ",\n  ".join(
+            f"{n} {t.simpleString().upper()}" for n, t in tbl._types().items()
+        )
+        spec = tbl.meta.specs[tbl.meta.current_spec_id]
+        part = (
+            "\nPARTITIONED BY SPEC ("
+            + ", ".join(f"{f['transform']}({f['source']})" for f in spec)
+            + ")"
+            if spec
+            else ""
+        )
+        stmt = (
+            f"CREATE TABLE {name} (\n  {cols}){part}\n"
+            f"STORED BY ICEBERG\nLOCATION '{tbl.meta.location}'"
+        )
+        return self.spark.createDataFrame([(stmt,)], "createtab_stmt string")
+
+    def _describe(self, plan, s: str) -> DataFrame:
+        """DESCRIBE [FORMATTED|EXTENDED] over a registered ice table —
+        the reference retrieves ``metadata_location`` this way before a
         pinned metadata-file read (interoperability.md:90-103). Output
         mirrors Spark's (col_name, data_type, comment) shape; the
         FORMATTED variant appends the detailed-information section."""
-        from pyspark.sql.types import StructType
-
         from iceberg_workshop_spark.icetbl import meta as _M
 
-        tbl = self.tables[m["target"]]
-        rows = [
-            (f.name, f.dataType.simpleString(), "")
-            for f in StructType.fromDDL(tbl.meta.schema_ddl).fields
-        ]
-        if m["fmt"]:
+        if (name := C.target(plan)) not in self.tables:
+            return self._select(s, plan)
+        tbl = self.tables[name]
+        rows = [(n, t.simpleString(), "") for n, t in tbl._types().items()]
+        if plan.isExtended():
             meta = tbl.meta
             spec = meta.specs[meta.current_spec_id]
             rows += [
@@ -1957,20 +1580,19 @@ class IceSqlSession:
             rows, "col_name string, data_type string, comment string"
         )
 
-    def _show_partitions(self, m: re.Match) -> DataFrame:
-        tbl = self._table(m["target"])
-        parts = sorted(
-            {_hive_partition_str(f) for f in tbl.meta.current_files()}
-        )
-        return self.spark.createDataFrame(
-            [(p,) for p in parts], "partition string"
-        )
-
-    def _call(self, m: re.Match) -> DataFrame | None:
+    def _call(self, plan, s: str) -> DataFrame | None:
         from iceberg_workshop_spark.icetbl import maintenance
 
-        proc = m["proc"].lower()
-        pos, named = _parse_call_args(m["args"])
+        proc = C.target(plan).rsplit(".", 1)[-1].lower()
+        if proc not in _PROCEDURES:
+            return self._select(s, plan)
+        pos: list = []
+        named: dict = {}
+        for a in C.seq(plan.args()):
+            if a.nodeName() == "NamedArgumentExpression":
+                named[a.key().lower()] = _call_value(a.value())
+            else:
+                pos.append(_call_value(a))
 
         def arg(name: str, idx: int, default=None):
             if name in named:
@@ -1997,20 +1619,14 @@ class IceSqlSession:
             if "min-file-size-bytes" in opts:
                 kw["small_file_threshold_bytes"] = int(opts["min-file-size-bytes"])
             if sort_order is not None:
+                from iceberg_workshop_spark.icetbl.sortorder import parse_sort_order
+
                 so = str(sort_order).strip()
                 zm = re.match(r"zorder\s*\((?P<cols>.+)\)$", so, re.I)
                 if zm:
                     kw["zorder_by"] = [c.strip() for c in zm["cols"].split(",")]
                 else:
-                    kw["sort_by"] = [
-                        re.sub(
-                            r"\s+(ASC|DESC)(\s+NULLS\s+(FIRST|LAST))?$",
-                            "",
-                            c.strip(),
-                            flags=re.I,
-                        )
-                        for c in _split_top_commas(so)
-                    ]
+                    kw["sort_by"] = [f["source"] for f in parse_sort_order(so)]
             rep = maintenance.rewrite_data_files(tbl, **kw)
             # Iceberg procedure semantics: rewritten = files actually
             # rewritten, added = new files only — untouched files
@@ -2105,32 +1721,97 @@ class IceSqlSession:
             )
         return None
 
-    def _expire(self, m: re.Match) -> None:
+    # -- forms Spark rejects (matched by _REGEX_FORMS) -----------------
+    def _execute(self, m: re.Match) -> None:
+        """ALTER TABLE t EXECUTE expire_snapshots(<timestamp | epoch
+        ms>) / rollback(<snapshot id | timestamp>)."""
         from iceberg_workshop_spark.icetbl import maintenance
 
-        arg = m["arg"].strip()
-        older_ms = int(arg) if re.fullmatch(r"\d+", arg) else _iso_to_ms(arg)
-        maintenance.expire_snapshots(self._table(m["target"]), older_than_ms=older_ms)
-        return None
-
-    def _rollback(self, m: re.Match) -> None:
-        tbl = self._table(m["target"])
-        arg = m["arg"].strip()
-        if re.fullmatch(r"\d+", arg):
+        tbl, arg = self._table(m["target"]), m["arg"].strip()
+        if m["proc"].lower() == "expire_snapshots":
+            older_ms = int(arg) if arg.isdigit() else _iso_to_ms(arg)
+            maintenance.expire_snapshots(tbl, older_than_ms=older_ms)
+        elif arg.isdigit():
             tbl.rollback(int(arg))
         else:  # timestamp form: roll back to the snapshot current then
             snap = tbl._resolve_snapshot(as_of_timestamp_ms=_iso_to_ms(arg))
             if snap is None:
                 raise ValueError(f"no snapshot at or before {arg}")
             tbl.rollback(snap["snapshot_id"])
-        return None
 
-    def _select(self, s: str) -> DataFrame:
+    def _ref_ddl(self, m: re.Match) -> None:
+        """Iceberg ref DDL: ALTER TABLE t CREATE/DROP TAG|BRANCH (tags
+        are immutable bookmarks, branches movable heads)."""
+        tbl = self._table(m["target"])
+        if m["verb"].upper() == "DROP":
+            tbl.drop_ref(m["name"])
+            return
+        sid = int(m["sid"]) if m["sid"] else None
+        if m["kind"].upper() == "TAG":
+            tbl.create_tag(m["name"], snapshot_id=sid)
+        else:
+            tbl.create_branch(m["name"], snapshot_id=sid)
+
+    def _write_order(self, m: re.Match) -> None:
+        """Iceberg write-order DDL: ALTER TABLE t WRITE ORDERED BY c1
+        [ASC|DESC][, ...] / WRITE UNORDERED. Stored as the
+        write.sort-order table property; honored by every later write
+        (_write_files range-clusters + sorts on it). The full Iceberg
+        sort-field surface (direction, null order, transform terms)
+        parses and persists — sortorder.py owns the grammar shared with
+        export/import."""
+        from iceberg_workshop_spark.icetbl.sortorder import (
+            parse_sort_order,
+            serialize_sort_order,
+        )
+
+        order = ""
+        if m["cols"] is not None:
+            try:
+                order = serialize_sort_order(parse_sort_order(m["cols"]))
+            except ValueError as exc:
+                raise ValueError(
+                    f"unparsed WRITE ORDERED BY columns: {m['cols']!r}"
+                ) from exc
+        self._table(m["target"]).set_properties({"write.sort-order": order})
+
+    def _set_spec(self, m: re.Match) -> None:
+        self._table(m["target"]).set_partition_spec(
+            _parse_spec(self.spark, m["spec"])
+        )
+
+    def _mview_stmt(self, m: re.Match) -> None:
+        """REFRESH | DROP MATERIALIZED VIEW name."""
+        if m["verb"].upper() == "REFRESH":
+            return self._refresh_mview(m["name"])
+        if m["name"] not in self.mviews:
+            raise KeyError(f"not a materialized view: {m['name']}")
+        self.mviews.pop(m["name"])
+        IceTable.drop(self.tables.pop(m["name"]).meta.location)
+
+    def _show_mviews(self, m: re.Match) -> DataFrame:
+        rows = []
+        for name, spec in sorted(self.mviews.items()):
+            src = (
+                f"{spec['srca']} JOIN {spec['srcb']}"
+                if spec.get("join")
+                else spec["src"]
+            )
+            rows.append((name, src, ", ".join(spec["group"])))
+        return self.spark.createDataFrame(
+            rows, "name string, source string, group_cols string"
+        )
+
+    # -- SELECT ---------------------------------------------------------
+    def _time_travel(self, s: str) -> str:
+        """Bind each ``<table> FOR SYSTEM_TIME|SYSTEM_VERSION AS OF
+        '<lit>'`` to a temp view of that snapshot."""
+
         def tt_repl(m: re.Match) -> str:
             tbl = self._table(m["name"])
             if m["kind"].upper() == "SYSTEM_TIME":
                 df = tbl.read(as_of_timestamp_ms=_iso_to_ms(m["lit"]))
-            elif re.fullmatch(r"\d+", m["lit"]):
+            elif m["lit"].isdigit():
                 df = tbl.read(snapshot_id=int(m["lit"]))
             else:
                 # Iceberg's Spark dialect: VERSION AS OF also takes a
@@ -2140,43 +1821,63 @@ class IceSqlSession:
             df.createOrReplaceTempView(vname)
             return vname
 
-        s = _TT_RE.sub(tt_repl, s)
-        q_candidates, has_qualify = _rewrite_qualify(s)
-        if has_qualify:
-            from pyspark.errors import AnalysisException
+        return _TT_RE.sub(tt_repl, s)
 
-            last_exc: Exception | None = None
-            for cand in q_candidates:
-                try:
-                    return self.spark.sql(self._rewrite(cand)).drop(
-                        "__iws_qualify__"
-                    )
-                except AnalysisException as exc:
-                    last_exc = exc
-            raise last_exc  # neither form analyzed: surface Spark's error
-        # Single-table SELECT with a simple WHERE: bind the table view
-        # to a PRUNED scan (partition-transform + stats file pruning in
-        # the planner — the 1-of-N-files behavior the reference shows
-        # in Impala plans) instead of a full read. The original WHERE
-        # still runs in Spark, so answers are exact even when only a
-        # subset of conjuncts was prunable.
+    def _qualify(self, s: str) -> DataFrame:
+        """A SELECT with QUALIFY, which Spark's grammar lacks: the
+        ``_rewrite_qualify`` candidates are analyzed in turn."""
+        from pyspark.errors import AnalysisException
+
+        last_exc: Exception | None = None
+        for cand in _rewrite_qualify(self._time_travel(s))[0]:
+            try:
+                return self.spark.sql(self._rewrite(cand)).drop("__iws_qualify__")
+            except AnalysisException as exc:
+                last_exc = exc
+        raise last_exc  # neither form analyzed: surface Spark's error
+
+    def _select(self, s: str, plan) -> DataFrame:
+        """Any other statement, through ``spark.sql`` over temp views.
+        A query reading one registered table through a WHERE binds that
+        table's view to a PRUNED scan (partition-transform + stats file
+        pruning in the planner — the 1-of-N-files behavior the
+        reference shows in Impala plans) instead of a full read. The
+        original WHERE still runs in Spark, so answers are exact even
+        when only a subset of conjuncts was prunable."""
+        s = self._time_travel(s)
         pruned: set[str] = set()
-        if m := _SIMPLE_SELECT_RE.match(s):
-            name = m["name"]
-            if name in self.tables and not self._has_mor_deletes(self.tables[name]):
-                # scan() reads data files only — a snapshot carrying
-                # merge-on-read delete files must go through read()
-                # (which anti-joins them) or deleted rows resurrect.
-                preds = self._safe_preds(self.tables[name], m["cond"])
-                if preds:
-                    try:
-                        df = self.tables[name].scan(preds)
-                    except Exception:  # noqa: BLE001 — pruning is an
-                        df = None  # optimization; never fail the query
-                    if df is not None:
-                        df.createOrReplaceTempView(_view_name(name))
-                        pruned.add(name)
+        if (hit := self._table_filter(plan)) is not None:
+            name, cond = hit
+            preds = self._safe_preds(self.tables[name], cond)
+            if preds:
+                try:
+                    df = self.tables[name].scan(preds)
+                except Exception:  # noqa: BLE001 — pruning is an
+                    df = None  # optimization; never fail the query
+                if df is not None:
+                    df.createOrReplaceTempView(_view_name(name))
+                    pruned.add(name)
         return self.spark.sql(self._rewrite(s, preregistered=pruned))
+
+    def _table_filter(self, plan):
+        """(table, condition) of a WHERE directly over a registered
+        table's scan, reached from the root through _PASS_THROUGH
+        nodes only; None otherwise. A subquery anywhere disqualifies
+        the plan: it could read the table a second time, and that read
+        must not see the pruned scan. scan() reads data files only, so
+        a snapshot carrying merge-on-read delete files must go through
+        read() (which anti-joins them) or deleted rows resurrect."""
+        if self._patterns.has_subquery(plan):
+            return None
+        node = plan
+        while node.nodeName() in _PASS_THROUGH:
+            child = node.children().apply(0)
+            if node.nodeName() == "Filter":
+                name, _ = C.relation(child)
+                if name in self.tables and not self._has_mor_deletes(self.tables[name]):
+                    return name, node.condition()
+            node = child
+        return None
 
     @staticmethod
     def _has_mor_deletes(tbl: IceTable) -> bool:
@@ -2184,6 +1885,39 @@ class IceSqlSession:
         if sid is None:
             return False
         return bool(tbl.meta.delete_entries(tbl.meta.snapshot(sid)))
+
+    _REGEX_FORMS = (
+        (_EXECUTE_RE, _execute),
+        (_REF_DDL_RE, _ref_ddl),
+        (_WRITE_ORDERED_RE, _write_order),
+        (_SET_SPEC_RE, _set_spec),
+        (_MV_STMT_RE, _mview_stmt),
+        (_SHOW_MV_RE, _show_mviews),
+    )
+    _PLAN_HANDLERS = {
+        "MergeIntoTable": _merge,
+        "UpdateTable": _update,
+        "DeleteFromTable": _delete,
+        "InsertIntoStatement": _insert,
+        "Call": _call,
+        **dict.fromkeys(("CreateTable", "CreateTableAsSelect"), _create_table),
+        "CreateMaterializedViewAsSelect": _create_mview,
+        "SetTableProperties": _set_props,
+        **dict.fromkeys(
+            ("AddColumns", "DropColumns", "RenameColumn", "AlterColumns"),
+            _alter_columns,
+        ),
+        **dict.fromkeys(("AnalyzeColumn", "AnalyzeTable"), _analyze),
+        "TruncateTable": _truncate,
+        "ShowPartitions": _show_partitions,
+        "ShowTables": _show_tables,
+        "ShowTableProperties": _show_props,
+        "ShowCreateTable": _show_create,
+        "DescribeRelation": _describe,
+        "CreateNamespace": _create_db,
+        "DropNamespace": _drop_db,
+        "DropTable": _drop_table,
+    }
 
 
 # ---------------------------------------------------------------- queries

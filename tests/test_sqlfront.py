@@ -9,6 +9,7 @@ the plain-SELECT fallthrough with table-name rewriting.
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import ParseException
 
 from iceberg_workshop_spark.icetbl import IceTable
 from iceberg_workshop_spark.plans.sqlfront import IceSqlSession
@@ -429,7 +430,7 @@ def test_merge_conditional_clauses_first_wins(sess, spark):
 
 def test_merge_unparsed_when_clause_raises(sess):
     s, _ = sess
-    with pytest.raises(ValueError, match="unparsed|INSERT"):
+    with pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
         s.sql(
             "MERGE INTO db.t AS t USING (SELECT 1 AS id) AS s ON id = s.id "
             "WHEN NOT MATCHED THEN FROBNICATE"
@@ -932,10 +933,11 @@ def test_delete_without_where_deletes_all(spark, tmp_path):
 
 
 def test_parser_error_paths_are_loud(spark, tmp_path):
-    """Malformed statements near handled grammar must raise a
-    targeted error, not silently fall through to a different
-    interpretation: unknown DML target, MERGE clause without THEN,
-    two WHEN NOT MATCHED clauses, unparsed ALTER COLUMN body."""
+    """Malformed statements near handled grammar must raise, not
+    silently fall through to a different interpretation: an unknown DML
+    target raises KeyError; a MERGE clause without THEN, two
+    unconditional WHEN NOT MATCHED clauses and an unparsed ALTER COLUMN
+    body raise Spark's ParseException, by error class."""
     import pytest as _pytest
 
     from iceberg_workshop_spark.plans.sqlfront import IceSqlSession
@@ -945,18 +947,20 @@ def test_parser_error_paths_are_loud(spark, tmp_path):
     sess.sql("INSERT INTO db.t9 VALUES (1, 10)")
     with _pytest.raises(KeyError, match="not a registered ice table"):
         sess.sql("DELETE FROM db.nope WHERE k = 1")
-    with _pytest.raises(ValueError, match="missing THEN"):
+    with _pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
         sess.sql(
             "MERGE INTO db.t9 t USING (SELECT 1 AS k, 2 AS v) s ON t.k = s.k "
             "WHEN MATCHED UPDATE SET v = s.v"
         )
-    with _pytest.raises(ValueError, match="at most one WHEN NOT MATCHED"):
+    with _pytest.raises(
+        ParseException, match="NON_LAST_NOT_MATCHED_BY_TARGET_CLAUSE_OMIT_CONDITION"
+    ):
         sess.sql(
             "MERGE INTO db.t9 t USING (SELECT 1 AS k, 2 AS v) s ON t.k = s.k "
             "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v) "
             "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"
         )
-    with _pytest.raises(ValueError, match="unparsed ALTER COLUMN"):
+    with _pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
         sess.sql("ALTER TABLE db.t9 ALTER COLUMN v FROBNICATE")
     # failed statements must not have mutated the table
     assert sess.sql("SELECT * FROM db.t9").count() == 1
@@ -1146,3 +1150,137 @@ def test_create_tblproperties_value_with_paren(spark, tmp_path):
         for r in s.sql("SHOW TBLPROPERTIES db.pp").collect()
     }
     assert props.get("comment") == "x (y)"
+
+
+def test_dml_quoting_and_comments_match_duckdb(spark, tmp_path):
+    """Quoting, comments and nesting in UPDATE/DELETE/MERGE are read by
+    Spark's parser: a backslash-escaped quote next to a comma, a ';'
+    inside a literal, nested parentheses, WHERE / WHEN MATCHED / OR
+    inside literals and '-- comment' lines. The table must end up as a
+    DuckDB replay of the same statements leaves it (DuckDB spells the
+    escaped quote '')."""
+    import duckdb
+
+    s = _fresh_sess(spark, tmp_path)
+    s.sql("CREATE TABLE db.q (id INT, note STRING, v INT) STORED BY ICEBERG")
+    staged = [(2, "x OR y"), (5, "new; (one)")]
+    s.register_view("stg.src", spark.createDataFrame(staged, "id int, note string"))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE q (id INT, note VARCHAR, v INT)")
+    con.execute("CREATE TABLE src (id INT, note VARCHAR)")
+    con.executemany("INSERT INTO src VALUES (?, ?)", staged)
+    rows = "(1, 'a', 10), (2, 'x OR y', 20), (3, 'WHEN MATCHED', 30), (4, 'b', 40)"
+    steps = [
+        (f"INSERT INTO db.q VALUES {rows}", f"INSERT INTO q VALUES {rows}"),
+        (
+            "UPDATE db.q SET note = 'it\\'s, fine', v = 1 WHERE id = 1",
+            "UPDATE q SET note = 'it''s, fine', v = 1 WHERE id = 1",
+        ),
+        (
+            "UPDATE db.q SET note = 'a; WHERE b', v = ((v + 1) * (2)) "
+            "WHERE note = 'x OR y' OR (id IN (4, (9)))",
+            "UPDATE q SET note = 'a; WHERE b', v = ((v + 1) * (2)) "
+            "WHERE note = 'x OR y' OR (id IN (4, (9)))",
+        ),
+        (
+            "DELETE FROM db.q -- the WHEN MATCHED row, it's gone\n"
+            "WHERE note = 'WHEN MATCHED'",
+            "DELETE FROM q WHERE note = 'WHEN MATCHED'",
+        ),
+        (
+            "MERGE INTO db.q AS t\n"
+            "-- upsert the staged rows; WHEN NOT MATCHED inserts\n"
+            "USING (SELECT id, note FROM stg.src) AS s ON t.id = s.id\n"
+            "WHEN MATCHED AND s.note <> 'it\\'s; WHEN MATCHED' THEN\n"
+            "  UPDATE SET note = 'upd, it\\'s (x)', v = (t.v + (1))\n"
+            "WHEN NOT MATCHED THEN INSERT VALUES (s.id, concat(s.note, ' -- kept'), 0)",
+            "UPDATE q SET note = 'upd, it''s (x)', v = (q.v + (1)) FROM src s "
+            "WHERE q.id = s.id AND s.note <> 'it''s; WHEN MATCHED'; "
+            "INSERT INTO q SELECT s.id, concat(s.note, ' -- kept'), 0 FROM src s "
+            "WHERE s.id NOT IN (SELECT id FROM q)",
+        ),
+    ]
+    tbl = s.tables["db.q"]
+    for spark_sql, duck_sql in steps:
+        s.sql(spark_sql)
+        con.execute(duck_sql)
+        got = sorted(tuple(r) for r in tbl.read().collect())
+        assert got == sorted(con.execute("SELECT * FROM q").fetchall()), spark_sql
+    # conditional WHEN NOT MATCHED clauses parse; the front end takes one
+    with pytest.raises(ValueError, match="at most one WHEN NOT MATCHED"):
+        s.sql(
+            "MERGE INTO db.q t USING stg.src s ON t.id = s.id "
+            "WHEN NOT MATCHED AND s.id > 4 THEN INSERT (id) VALUES (s.id) "
+            "WHEN NOT MATCHED AND s.id <= 4 THEN INSERT (id) VALUES (s.id)"
+        )
+    assert sorted(tuple(r) for r in tbl.read().collect()) == got
+
+
+def test_doubled_quote_literal_keeps_pruning(spark, tmp_path):
+    """'it''s OR x' is one literal holding no OR: the WHERE keeps both
+    disjuncts as pruning terms, and the pruned read answers like an
+    unpruned one."""
+    from iceberg_workshop_spark.plans.sqlfront import _dnf_from_where
+
+    cond = "id = 1 OR note = 'it''s OR x'"
+    dnf = _dnf_from_where(cond)
+    assert dnf is not None and [t[0].value for t in dnf] == [1, "it's OR x"]
+    s = _fresh_sess(spark, tmp_path)
+    s.sql("CREATE TABLE db.dq (id INT, note STRING) STORED BY ICEBERG")
+    for i, note in enumerate(["a", "it''s OR x", "b", "c"], start=1):
+        s.sql(f"INSERT INTO db.dq VALUES ({i}, '{note}')")
+    tbl = s.tables["db.dq"]
+    got = sorted(tuple(r) for r in s.sql(f"SELECT * FROM db.dq WHERE {cond}").collect())
+    rep = tbl.last_scan_report
+    assert rep["files_scanned"] < rep["files_total"] == 4
+    want = sorted(tuple(r) for r in tbl.read().filter(cond).collect())
+    assert got == want == [(1, "a"), (2, "it's OR x")]
+
+
+# One statement per form the front end still matches with a regex.
+REGEX_FORMS = [
+    "ALTER TABLE db.t EXECUTE rollback(1)",
+    "ALTER TABLE db.t EXECUTE expire_snapshots('2024-01-01 00:00:00')",
+    "ALTER TABLE db.t CREATE TAG v1",
+    "ALTER TABLE db.t DROP BRANCH audit",
+    "ALTER TABLE db.t WRITE ORDERED BY id",
+    "ALTER TABLE db.t SET PARTITION SPEC (id)",
+    "REFRESH MATERIALIZED VIEW db.m",
+    "DROP MATERIALIZED VIEW db.m",
+    "SHOW MATERIALIZED VIEWS",
+    "SELECT id FROM db.t QUALIFY ROW_NUMBER() OVER (ORDER BY id) = 1",
+]
+
+
+@pytest.mark.parametrize("stmt", REGEX_FORMS)
+def test_regex_forms_are_rejected_by_spark(spark, stmt):
+    """A regex stays only for a form Spark's parser rejects. If a later
+    Spark parses one of these, this fails: delete that regex and read
+    the form from the plan."""
+    from iceberg_workshop_spark.plans import catalyst
+    from iceberg_workshop_spark.plans.sqlfront import _find_top_keyword
+
+    assert any(p.match(stmt) for p, _ in IceSqlSession._REGEX_FORMS) or (
+        _find_top_keyword(stmt, "QUALIFY") >= 0
+    )
+    with pytest.raises(ParseException):
+        catalyst.parse_plan(spark, stmt)
+
+
+def test_every_regex_form_has_an_example():
+    for pattern, _ in IceSqlSession._REGEX_FORMS:
+        assert any(pattern.match(s) for s in REGEX_FORMS), pattern.pattern
+
+
+def test_pruned_scan_is_not_seen_by_a_subquery_on_the_same_table(spark, tmp_path):
+    """A WHERE that prunes the outer read of a table must not prune a
+    second read of it inside a subquery: the plan holds a subquery, so
+    no pruned scan is bound and the subquery sees every row."""
+    s = _fresh_sess(spark, tmp_path)
+    s.sql("CREATE TABLE db.sq (id INT, x INT) STORED BY ICEBERG")
+    s.sql("INSERT INTO db.sq VALUES (1, 1), (2, 1)")
+    s.sql("INSERT INTO db.sq VALUES (3, 2)")
+    got = s.sql(
+        "SELECT id FROM db.sq WHERE x = 1 AND id IN (SELECT id - 2 FROM db.sq)"
+    ).collect()
+    assert [r.id for r in got] == [1]

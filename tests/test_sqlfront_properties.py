@@ -2,10 +2,11 @@
 
 Three invariant families, each over generated statements:
 
-1. Fall-through fidelity — statements the regex dispatch must NOT
-   claim (nested subqueries, CTEs, quoted identifiers, string
-   literals containing statement keywords) answer exactly like plain
-   ``spark.sql`` over the same rows.
+1. Fall-through fidelity — statements no handler claims (nested
+   subqueries, CTEs, quoted identifiers, string literals containing
+   statement keywords; the front end dispatches on the root node of
+   Spark's parse) answer exactly like plain ``spark.sql`` over the
+   same rows.
 2. Dispatch coverage — every workshop statement shape routes to its
    handler (state visibly changes), never to the fallthrough.
 3. Pruned-WHERE exactness — for randomized WHERE clauses drawn from a
