@@ -1823,11 +1823,16 @@ class IceSqlSession:
 
         return _TT_RE.sub(tt_repl, s)
 
-    def _qualify(self, s: str) -> DataFrame:
-        """A SELECT with QUALIFY, which Spark's grammar lacks: the
-        ``_rewrite_qualify`` candidates are analyzed in turn."""
+    def _qualify(self, s: str) -> DataFrame | None:
+        """A query with QUALIFY, which Spark's grammar lacks: the
+        ``_rewrite_qualify`` candidates are analyzed in turn. A
+        statement around such a query (INSERT ... SELECT, CREATE TABLE
+        ... AS SELECT) runs with the query's result as a temp view."""
         from pyspark.errors import AnalysisException
 
+        if (i := _find_top_keyword(s, "(?:SELECT|WITH)")) > 0:
+            self._qualify(s[i:]).createOrReplaceTempView("__iws_qualified")
+            return self.sql(f"{s[:i]} SELECT * FROM __iws_qualified")
         last_exc: Exception | None = None
         for cand in _rewrite_qualify(self._time_travel(s))[0]:
             try:

@@ -884,6 +884,23 @@ def test_qualify_rewrite_forms(spark):
     assert not hit  # parenthesized: the inner query's clause, not ours
 
 
+def test_insert_and_ctas_around_a_qualify_query(spark, tmp_path):
+    """QUALIFY inside INSERT ... SELECT and CREATE TABLE ... AS SELECT:
+    the query runs on its own, the statement around it through its
+    usual handler."""
+    spark.createDataFrame(
+        [(1, 5), (1, 7), (2, 3)], "g int, v int"
+    ).createOrReplaceTempView("iws_qual_src")
+    s = _fresh_sess(spark, tmp_path)
+    s.sql("CREATE TABLE db.qi (g INT, v INT) STORED BY ICEBERG")
+    top = "SELECT g, v FROM iws_qual_src QUALIFY ROW_NUMBER() OVER (PARTITION BY g ORDER BY v DESC) = 1"
+    s.sql(f"INSERT INTO db.qi {top}")
+    s.sql(f"CREATE TABLE db.qc AS {top}")
+    for name in ("db.qi", "db.qc"):
+        rows = sorted(tuple(r) for r in s.tables[name].read().collect())
+        assert rows == [(1, 7), (2, 3)], name
+
+
 def test_qualify_alias_shadows_base_column(spark):
     """Regression (round-9 ADVICE): when the QUALIFY predicate names an
     identifier that is BOTH a base column and a select alias, the
