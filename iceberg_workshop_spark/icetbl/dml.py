@@ -318,11 +318,48 @@ def delete_where(
     }
 
 
+def merge_affected(
+    tbl: IceTable,
+    keys: DataFrame,
+    on: list[str],
+    files: list[dict] | None = None,
+) -> list[dict]:
+    """The data files a MERGE rewrites: those of ``files`` (default:
+    the current snapshot's) holding a row whose ``on`` key appears in
+    ``keys``. The one affected-file discovery of MERGE — ``merge_into``,
+    ``merge_into_mor`` and the SQL front end's effect builder all call
+    it. Files are read raw: a key that matches only a deleted row still
+    marks its file, and the rewrite, which reads through the deletes,
+    keeps that row deleted. An empty table has no file-backed scan (no
+    ``_metadata`` column) and no affected files."""
+    files = tbl.meta.current_files() if files is None else files
+    if not files:
+        return []
+    # a semi-join emits each target row once however often its key
+    # repeats, so the broadcast keys need no distinct (and no shuffle)
+    hit = _affected_paths(
+        _with_fp(tbl, files).join(F.broadcast(keys.select(*on)), on, "left_semi")
+    )
+    return [f for f in files if f["path"] in hit]
+
+
+def _effect_frame(source: DataFrame, cols: list[str]) -> tuple[DataFrame, bool]:
+    """``source`` projected to the effect protocol's columns and
+    evaluated once: discovery, the rewrite's broadcast, the insert
+    anti-join and the serializable check all read it. It is
+    broadcast-sized (the rewrite broadcasts it), and a local checkpoint
+    leaves no CacheManager entry."""
+    has_delete = "__delete" in source.columns
+    src_cols = cols + (["__delete"] if has_delete else [])
+    return source.select(*src_cols).localCheckpoint(eager=True), has_delete
+
+
 def merge_into(
     tbl: IceTable,
     source: DataFrame,
     on: list[str],
     isolation: str = "strict",
+    affected: list[dict] | None = None,
 ) -> dict[str, int]:
     """MERGE INTO (A9): source schema == target schema; matched rows
     take the source's non-key columns, unmatched source rows insert.
@@ -332,25 +369,22 @@ def merge_into(
     ``source`` marks keys whose matched target rows are dropped in the
     rewrite instead of updated; ``__delete`` rows never insert. The
     CoW mechanics are unchanged — only files holding matched keys are
-    rewritten."""
+    rewritten.
+
+    ``affected`` is a ``merge_affected`` result the caller already
+    holds for keys covering every key of ``source``; without it the
+    files are discovered from ``source``'s keys."""
     cols = tbl._column_names()
     non_keys = [c for c in cols if c not in on]
     files = tbl.meta.current_files()
-
-    has_delete = "__delete" in source.columns
-    src_cols = cols + (["__delete"] if has_delete else [])
-    src = source.select(*src_cols).withColumn("__matched", F.lit(True))
+    source, has_delete = _effect_frame(source, cols)
+    src = source.withColumn("__matched", F.lit(True))
 
     # 1. Affected files: any file holding a row whose key appears in
-    # source. An empty table has no file-backed scan (no _metadata
-    # column) — and trivially no affected files.
-    if files:
-        target = _with_fp(tbl, files)
-        hit_paths = _affected_paths(
-            target.join(F.broadcast(source.select(*on).distinct()), on, "left_semi")
-        )
-    else:
-        hit_paths = set()
+    # source.
+    if affected is None:
+        affected = merge_affected(tbl, source, on, files)
+    hit_paths = {f["path"] for f in affected}
     affected = [f for f in files if f["path"] in hit_paths]
     untouched = [f for f in files if f["path"] not in hit_paths]
 
@@ -370,9 +404,10 @@ def merge_into(
 
     # 3. Insert source rows that matched nothing. (A key matching any
     # target row would have made its file "affected", so anti-joining
-    # the affected rows is anti-joining the whole table.)
+    # the affected rows is anti-joining the whole table.) An anti-join
+    # needs no distinct build side.
     ins_src = source.filter(~F.coalesce(F.col("__delete"), F.lit(False))) if has_delete else source
-    inserts = ins_src.select(*cols).join(t.select(*on).distinct(), on, "left_anti")
+    inserts = ins_src.select(*cols).join(t.select(*on), on, "left_anti")
 
     spec_id = tbl.meta.current_spec_id
     new_files = tbl._write_files(updated.unionByName(inserts), tbl.meta.specs[spec_id], spec_id)
@@ -385,7 +420,7 @@ def merge_into(
             tbl,
             files,
             _current_deletes(tbl),
-            set(hit_paths),
+            hit_paths,
             new_files,
             # a concurrently-appended row whose key appears in the
             # MERGE source would have been updated/deleted had the
@@ -462,6 +497,7 @@ def update_where(
 
 IceTable.delete_where = delete_where
 IceTable.merge_into = merge_into
+IceTable.merge_affected = merge_affected
 IceTable.update_where = update_where
 
 
@@ -802,7 +838,10 @@ def update_where_mor(
 IceTable.delete_where_pos = delete_where_pos
 
 def merge_into_mor(
-    tbl: IceTable, source: DataFrame, on: list[str]
+    tbl: IceTable,
+    source: DataFrame,
+    on: list[str],
+    affected: list[dict] | None = None,
 ) -> dict[str, int]:
     """Merge-on-read MERGE (Iceberg's ``write.merge.mode =
     merge-on-read``): matched target rows are masked by ONE positional
@@ -810,25 +849,36 @@ def merge_into_mor(
     inserts land as appended data files — all in a single commit, no
     data-file rewrite. Supports the same ``__delete`` effect column as
     the CoW path (matched rows flagged for deletion are masked but not
-    re-inserted).
+    re-inserted), and the same ``affected`` argument.
 
     The matching scan reads THROUGH the current delete set with row
     positions attached, so earlier MoR deletes are never resurrected.
-    At 100 TB the commit cost is O(|matched| + |inserts|) rows.
+    Only the affected files' rows are read and persisted: every matched
+    key lies in one of them. At 100 TB the commit cost is
+    O(|matched| + |inserts|) rows.
     """
-    from pyspark.sql import functions as F
-
     cols = tbl._column_names()
     non_keys = [c for c in cols if c not in on]
     files = tbl.meta.current_files()
     dels = _current_deletes(tbl)
-    has_delete = "__delete" in source.columns
+    source, has_delete = _effect_frame(source, cols)
+    if affected is None:
+        affected = merge_affected(tbl, source, on, files)
+    hit_paths = {f["path"] for f in affected}
+    affected = [f for f in files if f["path"] in hit_paths]
+    ins_src = (
+        source.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
+        if has_delete
+        else source
+    ).select(*cols)
     live = (
-        tbl._apply_deletes(files, dels, keep_pos=True).persist()
-        if files
+        tbl._apply_deletes(affected, dels, keep_pos=True).persist()
+        if affected
         else None
     )
     try:
+        positions = None
+        new_rows = ins_src
         if live is not None:
             # not persisted: both consumers re-derive it from the
             # persisted `live` plus a broadcast — cheap either way
@@ -845,27 +895,8 @@ def merge_into_mor(
             updated = upd.select(
                 *on, *[source[c].alias(c) for c in non_keys]
             ).select(*cols)
-            ins_src = (
-                source.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
-                if has_delete
-                else source
-            )
-            inserts = ins_src.select(*cols).join(
-                live.select(*on).distinct(), on, "left_anti"
-            )
-        else:
-            matched = None
-            positions = None
-            updated = None
-            ins_src = (
-                source.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
-                if has_delete
-                else source
-            )
-            inserts = ins_src.select(*cols)
-        new_rows = (
-            updated.unionByName(inserts) if updated is not None else inserts
-        )
+            inserts = ins_src.join(live.select(*on), on, "left_anti")
+            new_rows = updated.unionByName(inserts)
         spec_id = tbl.meta.current_spec_id
         new_files = tbl._write_files(
             new_rows, tbl.meta.specs[spec_id], spec_id

@@ -954,7 +954,7 @@ def export_iceberg(
     mdir = os.path.join(dest, "metadata")
     os.makedirs(mdir, exist_ok=True)
 
-    schema = iceberg_schema(tbl.read().schema)
+    schema = iceberg_schema(T.StructType.fromDDL(tbl.meta.schema_ddl))
     last_column_id = schema.pop("_last_column_id")
     by_name = {f["name"]: f for f in schema["fields"]}
     now = M.now_ms()

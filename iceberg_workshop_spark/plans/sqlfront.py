@@ -899,10 +899,12 @@ class IceSqlSession:
         clauses (first applicable wins, SQL clause order), an optional
         ``WHEN NOT MATCHED [AND <cond>] THEN INSERT``, and ``WHEN NOT
         MATCHED BY SOURCE`` UPDATE/DELETE clauses.
-        Reduction: one join computes per-matched-row effects (updated
-        values or a __delete flag — rows no clause claims keep their
-        original values), the anti-join computes inserts, and
-        ``merge_into`` applies both in a single copy-on-write commit."""
+        Reduction: ``merge_affected`` finds the files that hold a
+        source key; over their rows one join computes per-matched-row
+        effects (updated values or a __delete flag — rows no clause
+        claims keep their original values), the anti-join computes
+        inserts, and ``merge_into`` applies both in a single
+        copy-on-write commit, rewriting only those files."""
         target, talias = C.relation(plan.targetTable())
         tbl = self._table(target)
         talias = talias or _view_name(target)
@@ -978,9 +980,25 @@ class IceSqlSession:
             for f in src_df.schema.fields:
                 if f.name not in target_cols:
                     tbl.add_column(f.name, f.dataType.simpleString())
-        tbl.read().createOrReplaceTempView(talias)
-        src_df.createOrReplaceTempView(salias)
         cols = tbl._column_names()
+        on = [t for t, _ in on_pairs]
+        files = tbl.meta.current_files()
+        affected = None
+        if nmbs or not files:
+            # NOT MATCHED BY SOURCE clauses claim target rows that no
+            # source key reaches, in any file: they need the whole table.
+            tbl.read().createOrReplaceTempView(talias)
+        else:
+            # Every target row a source key matches lies in a file that
+            # holds the key, so the matched join and the insert anti-join
+            # over those files' rows equal the joins over the table.
+            affected = tbl.merge_affected(
+                src_df.select(*[F.col(c).alias(t) for t, c in on_pairs]), on, files
+            )
+            tbl._apply_deletes(affected, tbl.meta.current_deletes()).createOrReplaceTempView(
+                talias
+            )
+        src_df.createOrReplaceTempView(salias)
 
         on_sql = " AND ".join(f"{talias}.{t} = {salias}.{c}" for t, c in on_pairs)
 
@@ -1027,11 +1045,11 @@ class IceSqlSession:
                     raise ValueError(
                         f"MERGE INSERT names unknown columns: {sorted(unknown)}"
                     )
-                dtypes = dict(tbl.read().dtypes)
+                types = tbl._types()
                 ins_proj = ", ".join(
                     f"{provided[c]} AS {c}"
                     if c in provided
-                    else f"CAST(NULL AS {dtypes[c]}) AS {c}"
+                    else f"CAST(NULL AS {types[c].simpleString()}) AS {c}"
                     for c in cols
                 )
             else:
@@ -1059,6 +1077,25 @@ class IceSqlSession:
             # the Iceberg CoW behavior for NOT MATCHED BY SOURCE.
             nm = effects(nmbs, "LEFT ANTI JOIN").filter("__act <> -1").drop("__act")
             src = src.unionByName(nm)
+        # The writers match effect rows to target rows by key, so the
+        # files found above are the whole rewrite only while every
+        # effect row keeps its source row's ON key: no UPDATE SET of a
+        # key column, and every INSERT takes the key from the source's
+        # ON column. Otherwise the writer rediscovers from the effects.
+        def keeps_key(ic: dict, t: str, c: str) -> bool:
+            expr = (
+                f"{salias}.{t}" if ic.get("star")
+                else dict(zip(ic["cols"] or cols, ic["vals"])).get(t, "")
+            )
+            return expr.replace("`", "").strip().lower() in (
+                c.lower(), f"{salias}.{c}".lower()
+            )
+
+        updated = {k.lower() for cl in matched for k in cl.get("sets", {})}
+        if any(t.lower() in updated for t in on) or not all(
+            keeps_key(ic, t, c) for ic in inserts for t, c in on_pairs
+        ):
+            affected = None
         # Iceberg's write.merge.mode: merge-on-read masks matched rows
         # with a positional delete and appends updates+inserts in one
         # commit; default stays copy-on-write.
@@ -1066,12 +1103,13 @@ class IceSqlSession:
             tbl.meta.properties.get("write.merge.mode", "copy-on-write")
             == "merge-on-read"
         ):
-            tbl.merge_into_mor(src, on=[t for t, _ in on_pairs])
+            tbl.merge_into_mor(src, on=on, affected=affected)
         else:
             tbl.merge_into(
                 src,
-                on=[t for t, _ in on_pairs],
+                on=on,
                 isolation=_iso_level(tbl, "merge"),
+                affected=affected,
             )
 
     def _insert(self, plan, s: str) -> None:
@@ -1375,7 +1413,7 @@ class IceSqlSession:
         # base + delta re-widens sum decimals (decimal(28,2) + delta →
         # decimal(29,2)); cast every maintained column back to the MV
         # table's declared type so the append matches its schema.
-        mv_types = {f.name: f.dataType for f in mv_tbl.read().schema.fields}
+        mv_types = {f.name: f.dataType for f in base.schema.fields}
         bare_group = [g.split(".")[-1] for g in spec["group"]]
         merged = base.join(delta, bare_group, "full_outer").select(
             *bare_group,

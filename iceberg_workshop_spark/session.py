@@ -30,6 +30,8 @@ def get_spark(app_name: str = "iceberg_workshop_spark") -> SparkSession:
       per-row pickled.
     - UTC session TZ: deterministic timestamp semantics across engines
       (SURVEY.md §5.3 hash-stability rule 4).
+    - Listing threshold 1024: icetbl reads explicit file paths its
+      manifests already know, so listing them stays on the driver.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -49,6 +51,13 @@ def get_spark(app_name: str = "iceberg_workshop_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Above this many paths Spark lists them with a distributed job,
+        # one task per path: 350-380 ms for the 54-60 live files of a
+        # 4-core perfbench lakehouse table. icetbl passes explicit data
+        # file paths from its manifests, and the driver stats a local
+        # file in microseconds, so 1024 keeps every read of a table that
+        # size off the cluster (the default is 32).
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -100,3 +100,80 @@ def test_random_merge_matches_model(spark, tmp_path, seed):
     assert got == expected, (
         f"seed={seed} clauses={use} del_st={del_st} cut1={cut1} cut2={cut2}"
     )
+
+
+@pytest.mark.parametrize(
+    "seed,mode",
+    [(s, m) for s in (0, 1) for m in ("copy-on-write", "merge-on-read")],
+)
+def test_merge_over_affected_subset_matches_model(spark, tmp_path, seed, mode):
+    """A target of many files, most holding no source key, with a
+    merge-on-read delete outstanding: the MERGE reads only the files
+    that hold a source key. One source key matches only a deleted row;
+    that row is inserted, not updated."""
+    rng = random.Random(100 + seed)
+    n, n_files = 200, 10
+    tgt_rows = [(k, rng.choice("OFP"), rng.randint(1, 100)) for k in range(n)]
+    tbl = IceTable.create_as(
+        spark,
+        str(tmp_path / f"subset{seed}"),
+        spark.createDataFrame(tgt_rows, "k bigint, st string, p bigint")
+        .repartitionByRange(n_files, "k"),
+    )
+    assert len(tbl.meta.current_files()) == n_files
+    # keys 0-59 and 140-199 lie in files no source key reaches
+    gone = rng.randrange(60, 140)
+    tbl.delete_where_pos(f"k = {gone}")
+    live = {k: (st, p) for k, st, p in tgt_rows if k != gone}
+
+    src_keys = sorted(
+        {k for k in range(60, 140) if rng.random() < 0.3} | {gone}
+        | {n + i for i in range(5)}
+    )
+    src_rows = [(k, rng.randint(101, 200)) for k in src_keys]
+    sess = IceSqlSession(spark)
+    sess.register_table("db.t", tbl)
+    sess.register_view("db.s", spark.createDataFrame(src_rows, "k bigint, sp bigint"))
+    sess.sql(f"ALTER TABLE db.t SET TBLPROPERTIES ('write.merge.mode' = '{mode}')")
+
+    holding = {
+        r["__fp"]
+        for r in tbl._read_files(tbl.meta.current_files(), with_fp=True)
+        .filter(f"k IN ({', '.join(map(str, src_keys))})")
+        .select("__fp")
+        .distinct()
+        .collect()
+    }
+    assert 0 < len(holding) < n_files
+    before = {f["path"] for f in tbl.meta.current_files()}
+    dels_before = {d["path"] for d in tbl.meta.current_deletes()}
+
+    del_st = rng.choice("OFP")
+    sess.sql(
+        "MERGE INTO db.t AS target USING db.s AS source ON target.k = source.k\n"
+        f"WHEN MATCHED AND st = '{del_st}' THEN DELETE\n"
+        "WHEN MATCHED THEN UPDATE SET st = 'M', p = source.sp\n"
+        "WHEN NOT MATCHED THEN INSERT VALUES (source.k, 'I', source.sp)"
+    )
+
+    expected = dict(live)
+    for k, sp in src_rows:
+        if k not in live:
+            expected[k] = ("I", sp)
+        elif live[k][0] == del_st:
+            del expected[k]
+        else:
+            expected[k] = ("M", sp)
+    got = {r["k"]: (r["st"], r["p"]) for r in tbl.read().collect()}
+    assert got == expected, f"seed={seed} mode={mode} del_st={del_st}"
+    assert got[gone][0] == "I"
+
+    from iceberg_workshop_spark.icetbl.morread import canon_path
+
+    holding = {canon_path(p) for p in holding}
+    rewritten = before - {f["path"] for f in tbl.meta.current_files()}
+    assert rewritten <= holding
+    if mode == "merge-on-read":
+        assert not rewritten
+        added = [d for d in tbl.meta.current_deletes() if d["path"] not in dels_before]
+        assert len(added) == 1 and set(added[0]["target_paths"]) <= holding
