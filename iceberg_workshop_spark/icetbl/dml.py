@@ -330,7 +330,10 @@ def merge_affected(
     ``merge_into_mor`` and the SQL front end's effect builder all call
     it. Files are read raw: a key that matches only a deleted row still
     marks its file, and the rewrite, which reads through the deletes,
-    keeps that row deleted. An empty table has no file-backed scan (no
+    keeps that row deleted. The front end discovers from the raw
+    source's keys, so such a key marks its file even when no clause
+    acts on it (say, a MERGE without WHEN NOT MATCHED): copy-on-write
+    then rewrites the file, dropping the deleted row. An empty table has no file-backed scan (no
     ``_metadata`` column) and no affected files."""
     files = tbl.meta.current_files() if files is None else files
     if not files:
@@ -385,7 +388,6 @@ def merge_into(
     if affected is None:
         affected = merge_affected(tbl, source, on, files)
     hit_paths = {f["path"] for f in affected}
-    affected = [f for f in files if f["path"] in hit_paths]
     untouched = [f for f in files if f["path"] not in hit_paths]
 
     # 2. Rewrite affected rows with updates applied; matched rows
@@ -498,6 +500,7 @@ def update_where(
 IceTable.delete_where = delete_where
 IceTable.merge_into = merge_into
 IceTable.merge_affected = merge_affected
+IceTable._rows_of = _rows_of
 IceTable.update_where = update_where
 
 
@@ -864,8 +867,6 @@ def merge_into_mor(
     source, has_delete = _effect_frame(source, cols)
     if affected is None:
         affected = merge_affected(tbl, source, on, files)
-    hit_paths = {f["path"] for f in affected}
-    affected = [f for f in files if f["path"] in hit_paths]
     ins_src = (
         source.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
         if has_delete

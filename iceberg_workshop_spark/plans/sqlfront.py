@@ -937,15 +937,21 @@ class IceSqlSession:
                 on_pairs.append((lc, rc))
 
         def clause(action) -> dict:
+            """A WHEN clause: its condition and values as SQL text,
+            ``nodes`` (the value expressions, by target column or by
+            position) and ``sub`` (a subquery anywhere in it)."""
             kind, cond = action.nodeName(), C.opt(action.condition())
-            c: dict = {"cond": None if cond is None else self._text(s, cond)}
+            c: dict = {
+                "cond": None if cond is None else self._text(s, cond),
+                "sub": self._patterns.has_subquery(action),
+            }
             if kind == "DeleteAction":
                 c["kind"] = "delete"
             elif kind == "UpdateAction":
+                assigns = C.seq(action.assignments())
                 c.update(kind="update", sets={
-                    C.last_part(a.key()): self._text(s, a.value())
-                    for a in C.seq(action.assignments())
-                })
+                    C.last_part(a.key()): self._text(s, a.value()) for a in assigns
+                }, nodes={C.last_part(a.key()): a.value() for a in assigns})
             elif kind == "InsertStarAction":
                 c["star"] = True
             elif kind == "InsertAction":
@@ -953,12 +959,11 @@ class IceSqlSession:
                 keys = [C.last_part(a.key()) for a in assigns]
                 if keys == [_VALUES_COL]:  # bare INSERT VALUES, positional
                     c["cols"] = None
-                    c["vals"] = [
-                        self._text(s, v) for v in C.seq(assigns[0].value().valExprs())
-                    ]
+                    c["nodes"] = C.seq(assigns[0].value().valExprs())
                 else:
                     c["cols"] = keys
-                    c["vals"] = [self._text(s, a.value()) for a in assigns]
+                    c["nodes"] = [a.value() for a in assigns]
+                c["vals"] = [self._text(s, v) for v in c["nodes"]]
             else:
                 raise ValueError(f"unsupported MERGE action: {kind}")
             return c
@@ -984,9 +989,10 @@ class IceSqlSession:
         on = [t for t, _ in on_pairs]
         files = tbl.meta.current_files()
         affected = None
-        if nmbs or not files:
+        if nmbs or not files or any(c["sub"] for c in matched + inserts):
             # NOT MATCHED BY SOURCE clauses claim target rows that no
-            # source key reaches, in any file: they need the whole table.
+            # source key reaches, in any file, and a subquery in a
+            # clause may read the target view: both need the whole table.
             tbl.read().createOrReplaceTempView(talias)
         else:
             # Every target row a source key matches lies in a file that
@@ -995,9 +1001,7 @@ class IceSqlSession:
             affected = tbl.merge_affected(
                 src_df.select(*[F.col(c).alias(t) for t, c in on_pairs]), on, files
             )
-            tbl._apply_deletes(affected, tbl.meta.current_deletes()).createOrReplaceTempView(
-                talias
-            )
+            tbl._rows_of(affected).createOrReplaceTempView(talias)
         src_df.createOrReplaceTempView(salias)
 
         on_sql = " AND ".join(f"{talias}.{t} = {salias}.{c}" for t, c in on_pairs)
@@ -1079,22 +1083,25 @@ class IceSqlSession:
             src = src.unionByName(nm)
         # The writers match effect rows to target rows by key, so the
         # files found above are the whole rewrite only while every
-        # effect row keeps its source row's ON key: no UPDATE SET of a
-        # key column, and every INSERT takes the key from the source's
-        # ON column. Otherwise the writer rediscovers from the effects.
-        def keeps_key(ic: dict, t: str, c: str) -> bool:
-            expr = (
-                f"{salias}.{t}" if ic.get("star")
-                else dict(zip(ic["cols"] or cols, ic["vals"])).get(t, "")
-            )
-            return expr.replace("`", "").strip().lower() in (
-                c.lower(), f"{salias}.{c}".lower()
-            )
+        # effect row keeps its source row's ON key: each UPDATE SET of
+        # a key column and each INSERT value of one must be the bare
+        # source ON column. Otherwise the writer rediscovers from the
+        # effects.
+        def keeps_key(cl: dict, t: str, c: str) -> bool:
+            if cl.get("star") or "nodes" not in cl:  # INSERT * or DELETE
+                return True
+            nodes = cl["nodes"]
+            if isinstance(nodes, list):
+                nodes = dict(zip(cl["cols"] or cols, nodes))
+            node = {k.lower(): v for k, v in nodes.items()}.get(t.lower())
+            if node is None:  # UPDATE keeps the key, INSERT would make it NULL
+                return cl.get("kind") == "update"
+            if node.nodeName() != "UnresolvedAttribute":
+                return False
+            parts = [p.lower() for p in C.seq(node.nameParts())]
+            return parts[-1] == c.lower() and parts[:-1] in ([], [salias.lower()])
 
-        updated = {k.lower() for cl in matched for k in cl.get("sets", {})}
-        if any(t.lower() in updated for t in on) or not all(
-            keeps_key(ic, t, c) for ic in inserts for t, c in on_pairs
-        ):
+        if not all(keeps_key(cl, t, c) for cl in matched + inserts for t, c in on_pairs):
             affected = None
         # Iceberg's write.merge.mode: merge-on-read masks matched rows
         # with a positional delete and appends updates+inserts in one

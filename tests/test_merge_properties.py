@@ -177,3 +177,101 @@ def test_merge_over_affected_subset_matches_model(spark, tmp_path, seed, mode):
         assert not rewritten
         added = [d for d in tbl.meta.current_deletes() if d["path"] not in dels_before]
         assert len(added) == 1 and set(added[0]["target_paths"]) <= holding
+
+
+def _many_files(spark, tmp_path, name, n=200, n_files=10):
+    """A (k, st, p) target of n keys in n_files files, p = k."""
+    tbl = IceTable.create_as(
+        spark,
+        str(tmp_path / name),
+        spark.createDataFrame(
+            [(k, "O", k) for k in range(n)], "k bigint, st string, p bigint"
+        ).repartitionByRange(n_files, "k"),
+    )
+    assert len(tbl.meta.current_files()) == n_files
+    sess = IceSqlSession(spark)
+    sess.register_table("db.t", tbl)
+    return tbl, sess
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_clause_subquery_reads_the_whole_target(spark, tmp_path, mode):
+    """A subquery in a WHEN clause that reads the target alias sees the
+    whole table, not only the files holding a source key."""
+    tbl, sess = _many_files(spark, tmp_path, "sub")
+    tbl.delete_where_pos("k = 0")
+    sess.register_view(
+        "db.s", spark.createDataFrame([(95, 1), (96, 2), (500, 3)], "k bigint, sp bigint")
+    )
+    sess.sql(f"ALTER TABLE db.t SET TBLPROPERTIES ('write.merge.mode' = '{mode}')")
+    sess.sql(
+        "MERGE INTO db.t AS tgt USING db.s AS s ON tgt.k = s.k\n"
+        "WHEN MATCHED AND tgt.p < (SELECT max(p) FROM tgt) THEN\n"
+        "  UPDATE SET st = 'M', p = (SELECT max(p) FROM tgt)\n"
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 'I', (SELECT count(*) FROM tgt))"
+    )
+    expected = {k: ("O", k) for k in range(1, 200)}
+    expected.update({95: ("M", 199), 96: ("M", 199), 500: ("I", 199)})
+    assert {r["k"]: (r["st"], r["p"]) for r in tbl.read().collect()} == expected
+
+
+def test_merge_key_matching_only_a_deleted_row_rewrites_its_file(spark, tmp_path):
+    """Discovery reads the raw files with the raw source's keys, so a
+    matched-only MERGE whose one source key matches only a deleted row
+    still rewrites that row's file under copy-on-write; the row stays
+    deleted and every other row keeps its value."""
+    tbl, sess = _many_files(spark, tmp_path, "gone")
+    tbl.delete_where_pos("k = 97")
+    holding = {
+        r["__fp"]
+        for r in tbl._read_files(tbl.meta.current_files(), with_fp=True)
+        .filter("k = 97")
+        .select("__fp")
+        .collect()
+    }
+    before = {f["path"] for f in tbl.meta.current_files()}
+    sess.register_view("db.s", spark.createDataFrame([(97, 1)], "k bigint, sp bigint"))
+    sess.sql(
+        "MERGE INTO db.t AS tgt USING db.s AS s ON tgt.k = s.k\n"
+        "WHEN MATCHED THEN UPDATE SET p = s.sp"
+    )
+
+    from iceberg_workshop_spark.icetbl.morread import canon_path
+
+    rewritten = before - {f["path"] for f in tbl.meta.current_files()}
+    assert rewritten == {canon_path(p) for p in holding}
+    assert {r["k"]: r["p"] for r in tbl.read().collect()} == {
+        k: k for k in range(200) if k != 97
+    }
+
+
+@pytest.mark.parametrize(
+    "update_set,passed",
+    [
+        ("k = s.k, p = s.sp", True),
+        ("p = s.sp, k = `s`.`k`", True),
+        ("k = s.k + 1000, p = s.sp", False),
+    ],
+)
+def test_merge_passes_discovered_files_only_when_keys_are_kept(
+    spark, tmp_path, monkeypatch, update_set, passed
+):
+    """The front end hands its discovered files to the writer only
+    while every effect row keeps its source row's ON key."""
+    tbl, sess = _many_files(spark, tmp_path, "keys")
+    sess.register_view("db.s", spark.createDataFrame([(5, 1), (900, 2)], "k bigint, sp bigint"))
+    seen = []
+    merge_into = IceTable.merge_into
+
+    def spy(self, source, on, isolation="strict", affected=None):
+        seen.append(affected)
+        return merge_into(self, source, on, isolation=isolation, affected=affected)
+
+    monkeypatch.setattr(IceTable, "merge_into", spy)
+    sess.sql(
+        "MERGE INTO db.t AS tgt USING db.s AS s ON tgt.k = s.k\n"
+        f"WHEN MATCHED THEN UPDATE SET {update_set}\n"
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 'I', s.sp)"
+    )
+    assert len(seen) == 1 and (seen[0] is not None) == passed
+    assert len(seen[0] or []) == (1 if passed else 0)
