@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from iceberg_workshop_spark.registry import persist, register
+from iceberg_workshop_spark.registry import persist, register, scratch
 from iceberg_workshop_spark.sources.tables import load
 
 PROBE_VEC_ID = 0
@@ -344,8 +344,6 @@ def q_llm_simsearch_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFra
     one-time write (maintained incrementally per q_llm_simsearch_incr);
     probes stay nprobe/k-of-files scans regardless of corpus size.
     """
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
-
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
@@ -369,7 +367,7 @@ def q_llm_simsearch_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFra
         (_dot("v", "c") / (F.col("nrm") * F.col("cnrm"))).desc(),
         F.col("label").asc(),
     )
-    loc = _fresh(sf_dir, "ivf_index")
+    loc = scratch("ivf_index")
     (
         n.select("vec_id", "v", "nrm")
         .crossJoin(cn.select("label", "c", "cnrm"))
@@ -1579,7 +1577,6 @@ def q_llm_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_workshop_spark.icetbl import IceTable
     from iceberg_workshop_spark.icetbl.pruning import Pred
     from iceberg_workshop_spark.icetbl.table import spec_field
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.registry import require
 
     emb = load(spark, sf_dir, "embeddings").select(
@@ -1618,7 +1615,7 @@ def q_llm_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 1. BUILD: base table, codebook (k rows -> driver), cluster-
     #    partitioned index table with the codebook as properties.
-    base = IceTable.create_as(spark, _fresh(sf_dir, "ann_base"), initial)
+    base = IceTable.create_as(spark, scratch("ann_base"), initial)
     build_snap = base.meta.current_snapshot_id
     codebook = {
         int(r["cid"]): [int(x) for x in r["c"]]
@@ -1632,7 +1629,7 @@ def q_llm_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx = IceTable.create_as(
         spark,
-        _fresh(sf_dir, "ann_index"),
+        scratch("ann_index"),
         assign(initial, codebook),
         partition_spec=[spec_field("ivf_cluster")],
     )
@@ -1780,7 +1777,6 @@ def q_llm_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     from iceberg_workshop_spark.icetbl import IceTable
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.registry import require
 
     # same quantize + assignment shapes as q_llm_ann_index_lifecycle
@@ -1815,7 +1811,7 @@ def q_llm_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # BUILD over the full corpus
-    base = IceTable.create_as(spark, _fresh(sf_dir, "annd_base"), emb)
+    base = IceTable.create_as(spark, scratch("annd_base"), emb)
     build_snap = base.meta.current_snapshot_id
     codebook = {
         int(r["cid"]): [int(x) for x in r["c"]]
@@ -1825,7 +1821,7 @@ def q_llm_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     idx = IceTable.create_as(
         spark,
-        _fresh(sf_dir, "annd_index"),
+        scratch("annd_index"),
         assign(emb, codebook),
         partition_spec=[spec_field("ivf_cluster")],
     )

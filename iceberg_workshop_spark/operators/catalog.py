@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_workshop_spark.registry import register, require
+from iceberg_workshop_spark.registry import register, require, scratch
 from iceberg_workshop_spark.sources.tables import TABLE_NAMES, load
 
 
@@ -208,9 +208,6 @@ def q_catalog_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots over all documents; docs_even: CTAS of the even half).
     Per-table work is metadata-scale; the only data-sized jobs are the
     two CTAS writes and the verification counts."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl.restcat import (
         RestCatalogClient,
         RestCatalogServer,
@@ -218,47 +215,44 @@ def q_catalog_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_workshop_spark.icetbl.table import IceTable
 
     docs = load(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="iws_restcat_")
-    try:
-        even = docs.filter(F.col("doc_id") % 2 == 0)
-        odd = docs.filter(F.col("doc_id") % 2 == 1)
-        t_all = IceTable.create_as(spark, f"{root}/docs_all", even)
-        t_all.append(odd)
-        IceTable.create_as(spark, f"{root}/docs_even", even)
+    root = scratch("restcat")
+    even = docs.filter(F.col("doc_id") % 2 == 0)
+    odd = docs.filter(F.col("doc_id") % 2 == 1)
+    t_all = IceTable.create_as(spark, f"{root}/docs_all", even)
+    t_all.append(odd)
+    IceTable.create_as(spark, f"{root}/docs_even", even)
 
-        srv = RestCatalogServer()
-        srv.register("docs_all", f"{root}/docs_all")
-        srv.register("docs_even", f"{root}/docs_even")
-        base = srv.start()
-        try:
-            cli = RestCatalogClient(base)
-            require(
-                cli.list_namespaces() == [["default"]],
-                "namespace listing must come from the server",
-            )
-            names = cli.list_tables()
-            require(
-                names == ["docs_all", "docs_even"],
-                f"table discovery over REST failed: {names}",
-            )
-            rows = []
-            for name in names:
-                tm = cli.load_table(name)
-                paths = [f["path"] for f in tm.current_files()]
-                require(paths, f"{name}: served metadata lists no files")
-                n_rows = spark.read.parquet(*paths).count()
-                rows.append((name, len(tm.snapshots), n_rows))
-            require(
-                srv.n_requests >= 6,
-                "metadata must be served over HTTP (config/list/load/manifests)",
-            )
-        finally:
-            srv.stop()
-        return spark.createDataFrame(
-            rows, "table_name string, n_snapshots int, n_rows long"
-        ).orderBy("table_name")
+    srv = RestCatalogServer()
+    srv.register("docs_all", f"{root}/docs_all")
+    srv.register("docs_even", f"{root}/docs_even")
+    base = srv.start()
+    try:
+        cli = RestCatalogClient(base)
+        require(
+            cli.list_namespaces() == [["default"]],
+            "namespace listing must come from the server",
+        )
+        names = cli.list_tables()
+        require(
+            names == ["docs_all", "docs_even"],
+            f"table discovery over REST failed: {names}",
+        )
+        rows = []
+        for name in names:
+            tm = cli.load_table(name)
+            paths = [f["path"] for f in tm.current_files()]
+            require(paths, f"{name}: served metadata lists no files")
+            n_rows = spark.read.parquet(*paths).count()
+            rows.append((name, len(tm.snapshots), n_rows))
+        require(
+            srv.n_requests >= 6,
+            "metadata must be served over HTTP (config/list/load/manifests)",
+        )
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        srv.stop()
+    return spark.createDataFrame(
+        rows, "table_name string, n_snapshots int, n_rows long"
+    ).orderBy("table_name")
 
 
 @register(
@@ -288,9 +282,6 @@ def q_iceberg_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregate the rows. The oracle checks the round-tripped table
     equals the source; require() pins the spec surface (format-version
     2, field-ids, summary counts). Metadata-scale work only."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
         iceberg_data_files,
@@ -300,45 +291,36 @@ def q_iceberg_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_workshop_spark.icetbl.table import IceTable
 
     nation = load(spark, sf_dir, "nation")
-    root = tempfile.mkdtemp(prefix="iws_iceexp_")
-    try:
-        src = IceTable.create_as(spark, f"{root}/src", nation)
-        export_iceberg(src, f"{root}/ice")
-        doc = resolve_iceberg_metadata(f"{root}/ice")
-        require(doc["format-version"] == 2, "must emit Iceberg v2 metadata")
-        require(
-            all(f.get("id") for f in doc["schemas"][0]["fields"]),
-            "schema fields must carry Iceberg field-ids",
+    root = scratch("iceexp")
+    src = IceTable.create_as(spark, f"{root}/src", nation)
+    export_iceberg(src, f"{root}/ice")
+    doc = resolve_iceberg_metadata(f"{root}/ice")
+    require(doc["format-version"] == 2, "must emit Iceberg v2 metadata")
+    require(
+        all(f.get("id") for f in doc["schemas"][0]["fields"]),
+        "schema fields must carry Iceberg field-ids",
+    )
+    require(
+        doc["refs"]["main"]["snapshot-id"] == doc["current-snapshot-id"],
+        "main branch ref must point at the current snapshot",
+    )
+    files = iceberg_data_files(doc)
+    require(files, "manifest walk must surface data files")
+    n_src = nation.count()
+    require(
+        sum(f["record_count"] for f in files) == n_src,
+        "manifest record counts must sum to the table rows",
+    )
+    return (
+        read_iceberg(spark, f"{root}/ice")
+        .groupBy("n_regionkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_nations"),
+            F.sum("n_nationkey").cast("bigint").alias("sum_key"),
+            F.min("n_name").alias("first_name"),
         )
-        require(
-            doc["refs"]["main"]["snapshot-id"] == doc["current-snapshot-id"],
-            "main branch ref must point at the current snapshot",
-        )
-        files = iceberg_data_files(doc)
-        require(files, "manifest walk must surface data files")
-        n_src = nation.count()
-        require(
-            sum(f["record_count"] for f in files) == n_src,
-            "manifest record counts must sum to the table rows",
-        )
-        rows = (
-            read_iceberg(spark, f"{root}/ice")
-            .groupBy("n_regionkey")
-            .agg(
-                F.count(F.lit(1)).alias("n_nations"),
-                F.sum("n_nationkey").cast("bigint").alias("sum_key"),
-                F.min("n_name").alias("first_name"),
-            )
-            .orderBy("n_regionkey")
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "n_regionkey bigint, n_nations bigint, sum_key bigint, "
-            "first_name string",
-        ).orderBy("n_regionkey")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("n_regionkey")
+    )
 
 
 @register(
@@ -368,9 +350,6 @@ def q_iceberg_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the chain breaks parity. Replays the v2 row-level-ops surface of
     `sql/update_iceberg_v2_examples.sql:1-18` across the format
     boundary."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
         iceberg_manifest_entries,
@@ -382,43 +361,36 @@ def q_iceberg_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    root = tempfile.mkdtemp(prefix="iws_icemor_")
-    try:
-        t = IceTable.create_as(spark, f"{root}/src", nation)
-        t.delete_keys_mor(
-            spark.createDataFrame([(1,), (2,), (3,)], "n_nationkey int"),
-            ["n_nationkey"],
+    root = scratch("icemor")
+    t = IceTable.create_as(spark, f"{root}/src", nation)
+    t.delete_keys_mor(
+        spark.createDataFrame([(1,), (2,), (3,)], "n_nationkey int"),
+        ["n_nationkey"],
+    )
+    t.append(
+        spark.createDataFrame(
+            [(2, "REBORN", 0)],
+            "n_nationkey int, n_name string, n_regionkey int",
         )
-        t.append(
-            spark.createDataFrame(
-                [(2, "REBORN", 0)],
-                "n_nationkey int, n_name string, n_regionkey int",
-            )
-        )
-        t.delete_where_pos("n_nationkey >= 20")
-        export_iceberg(t, f"{root}/ice")
-        doc = resolve_iceberg_metadata(f"{root}/ice")
-        _, dels = iceberg_manifest_entries(doc)
-        require(
-            sorted(d["content"] for d in dels) == [1, 2],
-            "export must emit one positional and one equality delete file",
-        )
-        require(
-            next(d for d in dels if d["content"] == 2)["equality_ids"]
-            == [1],
-            "equality_ids must name the key column's field id",
-        )
-        rows = (
-            read_iceberg(spark, f"{root}/ice")
-            .select("n_nationkey", "n_name")
-            .orderBy("n_nationkey", "n_name")
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows, "n_nationkey int, n_name string"
-        ).orderBy("n_nationkey", "n_name")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    t.delete_where_pos("n_nationkey >= 20")
+    export_iceberg(t, f"{root}/ice")
+    doc = resolve_iceberg_metadata(f"{root}/ice")
+    _, dels = iceberg_manifest_entries(doc)
+    require(
+        sorted(d["content"] for d in dels) == [1, 2],
+        "export must emit one positional and one equality delete file",
+    )
+    require(
+        next(d for d in dels if d["content"] == 2)["equality_ids"]
+        == [1],
+        "equality_ids must name the key column's field id",
+    )
+    return (
+        read_iceberg(spark, f"{root}/ice")
+        .select("n_nationkey", "n_name")
+        .orderBy("n_nationkey", "n_name")
+    )
 
 
 @register(
@@ -444,9 +416,6 @@ def q_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins both instants' aggregates, so a snapshot chain broken
     anywhere (wrong parent, wrong file set per snapshot, log order)
     breaks parity."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
         read_iceberg,
@@ -457,42 +426,39 @@ def q_iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    root = tempfile.mkdtemp(prefix="iws_icett_")
-    try:
-        t = IceTable.create_as(spark, f"{root}/src", nation)
-        t.append(
-            spark.createDataFrame(
-                [(999, "FAKE_AIRLINE", 0)],
-                "n_nationkey int, n_name string, n_regionkey int",
-            )
+    root = scratch("icett")
+    t = IceTable.create_as(spark, f"{root}/src", nation)
+    t.append(
+        spark.createDataFrame(
+            [(999, "FAKE_AIRLINE", 0)],
+            "n_nationkey int, n_name string, n_regionkey int",
         )
-        export_iceberg(t, f"{root}/ice", history=True)
-        doc = resolve_iceberg_metadata(f"{root}/ice")
-        snaps = doc["snapshots"]
-        require(len(snaps) == 2, "history export must ship both snapshots")
-        require(
-            snaps[1]["parent-snapshot-id"] == snaps[0]["snapshot-id"],
-            "parent chain must survive the export",
-        )
-        rows = []
-        for label, sid in (
-            ("v1_before", snaps[0]["snapshot-id"]),
-            ("v2_current", snaps[1]["snapshot-id"]),
-        ):
-            agg = (
-                read_iceberg(spark, f"{root}/ice", snapshot_id=sid)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("n_nationkey").cast("bigint").alias("sum_key"),
-                )
-                .first()
+    )
+    export_iceberg(t, f"{root}/ice", history=True)
+    doc = resolve_iceberg_metadata(f"{root}/ice")
+    snaps = doc["snapshots"]
+    require(len(snaps) == 2, "history export must ship both snapshots")
+    require(
+        snaps[1]["parent-snapshot-id"] == snaps[0]["snapshot-id"],
+        "parent chain must survive the export",
+    )
+    rows = []
+    for label, sid in (
+        ("v1_before", snaps[0]["snapshot-id"]),
+        ("v2_current", snaps[1]["snapshot-id"]),
+    ):
+        agg = (
+            read_iceberg(spark, f"{root}/ice", snapshot_id=sid)
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum("n_nationkey").cast("bigint").alias("sum_key"),
             )
-            rows.append((label, agg["n_rows"], agg["sum_key"]))
-        return spark.createDataFrame(
-            rows, "at string, n_rows bigint, sum_key bigint"
-        ).orderBy("at")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            .first()
+        )
+        rows.append((label, agg["n_rows"], agg["sum_key"]))
+    return spark.createDataFrame(
+        rows, "at string, n_rows bigint, sum_key bigint"
+    ).orderBy("at")
 
 
 @register(
@@ -516,9 +482,6 @@ def q_iceberg_import_manage(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the final logical row set, so a delete dropped or re-applied in
     either dialect breaks parity. Complements q_iceberg_mor_roundtrip
     (which gates the read side); this gates adopt-and-write."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
         import_iceberg,
@@ -528,38 +491,31 @@ def q_iceberg_import_manage(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    root = tempfile.mkdtemp(prefix="iws_iceimp_")
-    try:
-        t = IceTable.create_as(spark, f"{root}/src", nation)
-        t.delete_keys_mor(
-            spark.createDataFrame([(1,), (2,), (3,)], "n_nationkey int"),
-            ["n_nationkey"],
-        )
-        export_iceberg(t, f"{root}/ice")
-        adopted = import_iceberg(spark, f"{root}/ice", f"{root}/adopted")
-        # same physical parquet — adopt-in-place, no rewrite
-        src_paths = {f["path"] for f in t.meta.current_files()}
-        adopted_paths = {f["path"] for f in adopted.meta.current_files()}
-        require(
-            adopted_paths == src_paths,
-            "import must register the source files in place",
-        )
-        # keep managing: a further MoR delete in the adopted dialect
-        region0 = nation.filter(F.col("n_regionkey") == 0).select(
-            "n_nationkey"
-        )
-        adopted.delete_keys_mor(region0, ["n_nationkey"])
-        agg = adopted.read().agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("n_nationkey").cast("bigint").alias("sum_key"),
-            F.min("n_name").alias("first_name"),
-        ).first()
-        return spark.createDataFrame(
-            [(agg["n_rows"], agg["sum_key"], agg["first_name"])],
-            "n_rows bigint, sum_key bigint, first_name string",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("iceimp")
+    t = IceTable.create_as(spark, f"{root}/src", nation)
+    t.delete_keys_mor(
+        spark.createDataFrame([(1,), (2,), (3,)], "n_nationkey int"),
+        ["n_nationkey"],
+    )
+    export_iceberg(t, f"{root}/ice")
+    adopted = import_iceberg(spark, f"{root}/ice", f"{root}/adopted")
+    # same physical parquet — adopt-in-place, no rewrite
+    src_paths = {f["path"] for f in t.meta.current_files()}
+    adopted_paths = {f["path"] for f in adopted.meta.current_files()}
+    require(
+        adopted_paths == src_paths,
+        "import must register the source files in place",
+    )
+    # keep managing: a further MoR delete in the adopted dialect
+    region0 = nation.filter(F.col("n_regionkey") == 0).select(
+        "n_nationkey"
+    )
+    adopted.delete_keys_mor(region0, ["n_nationkey"])
+    return adopted.read().agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("n_nationkey").cast("bigint").alias("sum_key"),
+        F.min("n_name").alias("first_name"),
+    )
 
 
 @register(
@@ -585,9 +541,6 @@ def q_iceberg_export_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried spec → an equality predicate on the raw column prunes the
     adopted scan to ~1/8 of files (scan-report-asserted) and returns
     the same rows as the unpartitioned oracle."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl import Pred, spec_field
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
@@ -600,43 +553,35 @@ def q_iceberg_export_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    root = tempfile.mkdtemp(prefix="iws_icebkt_")
-    try:
-        src = IceTable.create_as(
-            spark, f"{root}/src", orders,
-            partition_spec=[
-                spec_field("o_custkey", "bucket[8]", "ck_bucket")
-            ],
-        )
-        export_iceberg(src, f"{root}/ice")
-        doc = resolve_iceberg_metadata(f"{root}/ice")
-        spec = doc["partition-specs"][0]["fields"]
-        require(
-            [(f["name"], f["transform"]) for f in spec]
-            == [("ck_bucket", "bucket[8]")],
-            f"export must emit a real bucket spec entry: {spec}",
-        )
-        require(
-            read_iceberg(spark, f"{root}/ice").count() == orders.count(),
-            "foreign-style reopen must see every row",
-        )
-        adopted = import_iceberg(spark, f"{root}/ice", f"{root}/adopted")
-        df = adopted.scan([Pred("o_custkey", "=", 42)])
-        rep = adopted.last_scan_report
-        require(
-            rep["files_scanned"] * 4 <= rep["files_total"],
-            f"adopted bucket scan must prune to <= 1/4 of files: {rep}",
-        )
-        rows = (
-            df.select("o_orderkey", "o_custkey", "o_orderstatus")
-            .orderBy("o_orderkey")
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows, "o_orderkey bigint, o_custkey bigint, o_orderstatus string"
-        ).orderBy("o_orderkey")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icebkt")
+    src = IceTable.create_as(
+        spark, f"{root}/src", orders,
+        partition_spec=[
+            spec_field("o_custkey", "bucket[8]", "ck_bucket")
+        ],
+    )
+    export_iceberg(src, f"{root}/ice")
+    doc = resolve_iceberg_metadata(f"{root}/ice")
+    spec = doc["partition-specs"][0]["fields"]
+    require(
+        [(f["name"], f["transform"]) for f in spec]
+        == [("ck_bucket", "bucket[8]")],
+        f"export must emit a real bucket spec entry: {spec}",
+    )
+    require(
+        read_iceberg(spark, f"{root}/ice").count() == orders.count(),
+        "foreign-style reopen must see every row",
+    )
+    adopted = import_iceberg(spark, f"{root}/ice", f"{root}/adopted")
+    df = adopted.scan([Pred("o_custkey", "=", 42)])
+    rep = adopted.last_scan_report
+    require(
+        rep["files_scanned"] * 4 <= rep["files_total"],
+        f"adopted bucket scan must prune to <= 1/4 of files: {rep}",
+    )
+    return df.select("o_orderkey", "o_custkey", "o_orderstatus").orderBy(
+        "o_orderkey"
+    )
 
 
 @register(
@@ -669,9 +614,6 @@ def q_iceberg_export_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     new-era files while every old-era file soundly survives —
     scan-report-asserted, the same era-aware pruning contract
     q_part_evolution pins for the internal dialect."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl import Pred, spec_field
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
@@ -685,68 +627,61 @@ def q_iceberg_export_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate"
     )
     cut = F.lit("1997-01-01").cast("timestamp")
-    root = tempfile.mkdtemp(prefix="iws_iceevo_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter(F.col("o_orderdate") < cut)
-        )
-        t.set_partition_spec(
-            [spec_field("o_orderdate", "month", "order_month")]
-        )
-        t.append(orders.filter(F.col("o_orderdate") >= cut))
-        export_iceberg(t, f"{root}/ice")
-        doc = resolve_iceberg_metadata(f"{root}/ice")
-        specs = {s["spec-id"]: s["fields"] for s in doc["partition-specs"]}
-        require(
-            specs.get(0) == [] and len(specs.get(1, [])) == 1,
-            f"export must list both eras' specs: {specs}",
-        )
-        require(
-            doc["default-spec-id"] == 1,
-            "the evolved spec must stay the default",
-        )
-        adopted = import_iceberg(spark, f"{root}/ice", f"{root}/adopted")
-        require(
-            len(adopted.meta.specs) == 2
-            and adopted.meta.current_spec_id == 1,
-            "import must carry BOTH eras' specs",
-        )
-        import datetime as _dt
+    root = scratch("iceevo")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter(F.col("o_orderdate") < cut)
+    )
+    t.set_partition_spec(
+        [spec_field("o_orderdate", "month", "order_month")]
+    )
+    t.append(orders.filter(F.col("o_orderdate") >= cut))
+    export_iceberg(t, f"{root}/ice")
+    doc = resolve_iceberg_metadata(f"{root}/ice")
+    specs = {s["spec-id"]: s["fields"] for s in doc["partition-specs"]}
+    require(
+        specs.get(0) == [] and len(specs.get(1, [])) == 1,
+        f"export must list both eras' specs: {specs}",
+    )
+    require(
+        doc["default-spec-id"] == 1,
+        "the evolved spec must stay the default",
+    )
+    adopted = import_iceberg(spark, f"{root}/ice", f"{root}/adopted")
+    require(
+        len(adopted.meta.specs) == 2
+        and adopted.meta.current_spec_id == 1,
+        "import must carry BOTH eras' specs",
+    )
+    import datetime as _dt
 
-        adopted.scan([
-            Pred(
-                "o_orderdate", "between",
-                (_dt.datetime(1997, 6, 1), _dt.datetime(1997, 6, 30)),
-            )
-        ]).count()
-        rep = adopted.last_scan_report
-        n_old = sum(
-            1
-            for f in adopted.meta.current_files()
-            if f.get("spec_id", 0) == 0
+    adopted.scan([
+        Pred(
+            "o_orderdate", "between",
+            (_dt.datetime(1997, 6, 1), _dt.datetime(1997, 6, 30)),
         )
-        require(
-            n_old <= rep["files_scanned"] < rep["files_total"],
-            f"era-aware pruning must keep old-era files and prune "
-            f"new-era months: {rep} (n_old={n_old})",
+    ]).count()
+    rep = adopted.last_scan_report
+    n_old = sum(
+        1
+        for f in adopted.meta.current_files()
+        if f.get("spec_id", 0) == 0
+    )
+    require(
+        n_old <= rep["files_scanned"] < rep["files_total"],
+        f"era-aware pruning must keep old-era files and prune "
+        f"new-era months: {rep} (n_old={n_old})",
+    )
+    return (
+        read_iceberg(spark, f"{root}/ice")
+        .groupBy(
+            F.date_trunc("month", F.col("o_orderdate")).alias("mon")
         )
-        rows = (
-            read_iceberg(spark, f"{root}/ice")
-            .groupBy(
-                F.date_trunc("month", F.col("o_orderdate")).alias("mon")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("o_orderkey").cast("bigint").alias("sum_key"),
-            )
-            .orderBy("mon")
-            .collect()
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("o_orderkey").cast("bigint").alias("sum_key"),
         )
-        return spark.createDataFrame(
-            rows, "mon timestamp, n_orders bigint, sum_key bigint"
-        ).orderBy("mon")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("mon")
+    )
 
 
 @register(
@@ -771,9 +706,6 @@ def q_iceberg_foreign_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (require()-asserted) and the lowest matching order, deleted
     merge-on-read BEFORE export, must stay deleted through the pruned
     foreign path; the oracle replays both effects relationally."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl import Pred, spec_field
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
@@ -784,44 +716,35 @@ def q_iceberg_foreign_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icefscan_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders,
-            partition_spec=[
-                spec_field("o_custkey", "bucket[8]", "ck_bucket")
-            ],
-        )
-        first = (
-            orders.filter(F.col("o_custkey") == 77)
-            .orderBy("o_orderkey")
-            .limit(1)
-            .select("o_orderkey")
-        )
-        t.delete_keys_mor(first, ["o_orderkey"])
-        export_iceberg(t, f"{root}/ice")
-        df, rep = scan_iceberg(
-            spark, f"{root}/ice", [Pred("o_custkey", "=", 77)]
-        )
-        require(
-            rep["files_scanned"] * 4 <= rep["files_total"],
-            f"foreign bucket scan must prune to <= 1/4 of files: {rep}",
-        )
-        require(
-            rep["delete_files_read"] == 1,
-            f"the MoR sidecar must be read: {rep}",
-        )
-        rows = (
-            df.select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy("o_orderkey")
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "o_orderkey bigint, o_custkey bigint, o_totalprice double",
-        ).orderBy("o_orderkey")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icefscan")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders,
+        partition_spec=[
+            spec_field("o_custkey", "bucket[8]", "ck_bucket")
+        ],
+    )
+    first = (
+        orders.filter(F.col("o_custkey") == 77)
+        .orderBy("o_orderkey")
+        .limit(1)
+        .select("o_orderkey")
+    )
+    t.delete_keys_mor(first, ["o_orderkey"])
+    export_iceberg(t, f"{root}/ice")
+    df, rep = scan_iceberg(
+        spark, f"{root}/ice", [Pred("o_custkey", "=", 77)]
+    )
+    require(
+        rep["files_scanned"] * 4 <= rep["files_total"],
+        f"foreign bucket scan must prune to <= 1/4 of files: {rep}",
+    )
+    require(
+        rep["delete_files_read"] == 1,
+        f"the MoR sidecar must be read: {rep}",
+    )
+    return df.select("o_orderkey", "o_custkey", "o_totalprice").orderBy(
+        "o_orderkey"
+    )
 
 
 @register(
@@ -846,9 +769,6 @@ def q_iceberg_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     every row to one commit, O(delta) metadata work. The money sum is
     the oracle's, so a row double-attributed or dropped anywhere in
     the status plumbing breaks parity."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
         read_iceberg_changes,
@@ -859,27 +779,20 @@ def q_iceberg_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icechg_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0")
-        )
-        s1 = t.meta.current_snapshot_id
-        t.append(orders.filter("o_orderkey % 3 = 1"))
-        t.append(orders.filter("o_orderkey % 3 = 2"))
-        export_iceberg(t, f"{root}/ice", history=True)
-        delta = read_iceberg_changes(spark, f"{root}/ice", s1)
-        row = delta.agg(
-            F.count(F.lit(1)).alias("n_new_rows"),
-            F.countDistinct(F.col("o_orderkey") % 3).alias("n_chunks"),
-            F.sum(money("o_totalprice")).cast("double").alias("sum_price"),
-        ).first()
-        return spark.createDataFrame(
-            [tuple(row)],
-            "n_new_rows bigint, n_chunks bigint, sum_price double",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icechg")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0")
+    )
+    s1 = t.meta.current_snapshot_id
+    t.append(orders.filter("o_orderkey % 3 = 1"))
+    t.append(orders.filter("o_orderkey % 3 = 2"))
+    export_iceberg(t, f"{root}/ice", history=True)
+    delta = read_iceberg_changes(spark, f"{root}/ice", s1)
+    return delta.agg(
+        F.count(F.lit(1)).alias("n_new_rows"),
+        F.countDistinct(F.col("o_orderkey") % 3).alias("n_chunks"),
+        F.sum(money("o_totalprice")).cast("double").alias("sum_price"),
+    )
 
 
 @register(
@@ -913,9 +826,6 @@ def q_iceberg_changes_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-bounds add-back (not the file-set diff) must find them; a
     delete lost or double-counted anywhere breaks the money-sum
     parity."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
@@ -926,33 +836,26 @@ def q_iceberg_changes_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icechgmor_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 4 = 0")
+    root = scratch("icechgmor")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 4 = 0")
+    )
+    s1 = t.meta.current_snapshot_id
+    t.append(orders.filter("o_orderkey % 4 = 1"))
+    t.delete_where_mor("o_orderkey % 8 = 0", keys=["o_orderkey"])
+    t.append(orders.filter("o_orderkey % 4 = 2"))
+    export_iceberg(t, f"{root}/ice", history=True)
+    cl = read_iceberg_changelog(spark, f"{root}/ice", s1)
+    return (
+        cl.groupBy("_change_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(money("o_totalprice"))
+            .cast("double")
+            .alias("sum_price"),
         )
-        s1 = t.meta.current_snapshot_id
-        t.append(orders.filter("o_orderkey % 4 = 1"))
-        t.delete_where_mor("o_orderkey % 8 = 0", keys=["o_orderkey"])
-        t.append(orders.filter("o_orderkey % 4 = 2"))
-        export_iceberg(t, f"{root}/ice", history=True)
-        cl = read_iceberg_changelog(spark, f"{root}/ice", s1)
-        out = (
-            cl.groupBy("_change_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(money("o_totalprice"))
-                .cast("double")
-                .alias("sum_price"),
-            )
-            .orderBy("_change_type")
-        )
-        rows = [tuple(r) for r in out.collect()]
-        return spark.createDataFrame(
-            rows, "_change_type string, n_rows bigint, sum_price double"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("_change_type")
+    )
 
 
 @register(
@@ -988,9 +891,6 @@ def q_iceberg_metadata_tables(
     sized work only — no data file is opened; at 100 TB this is the
     same O(manifests) walk a real engine's metadata tables do, and it
     inherits the distributed manifest decode past 32 manifests."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
         iceberg_metadata_tables,
@@ -1000,108 +900,105 @@ def q_iceberg_metadata_tables(
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icemeta_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0")
-        )
-        t.append(orders.filter("o_orderkey % 3 = 1"))
-        t.append(orders.filter("o_orderkey % 3 = 2"))
-        t.delete_where_mor("o_orderkey % 6 = 1", keys=["o_orderkey"])
-        export_iceberg(t, f"{root}/ice", history=True)
-        mt = iceberg_metadata_tables(spark, f"{root}/ice")
-        # The five views are metadata-sized; aggregate each lazily and
-        # collect them through ONE action (a crossJoin of one-row
-        # aggregates) instead of six sequential .first()/.count()
-        # jobs — same values, one round of job-scheduling latency
-        # (guide §1.2: don't pay per-pass fixed costs for work that
-        # composes into one pass).
-        files_agg = mt["files"].agg(
-            F.sum(
-                F.when(F.col("content") == 0, F.col("record_count"))
-                .otherwise(F.lit(0))
-            ).alias("live_rows"),
-            F.sum(
-                F.when(F.col("content") == 2, F.col("record_count"))
-                .otherwise(F.lit(0))
-            ).alias("eq_delete_rows"),
-            F.max("sequence_number").alias("max_file_seq"),
-            F.min("file_size_in_bytes").alias("min_size"),
-            F.count(F.lit(1)).alias("n_file_entries"),
-        )
-        snaps_agg = mt["snapshots"].agg(
-            F.count(F.lit(1)).alias("n_snapshots"),
-            F.max("sequence_number").alias("max_snap_seq"),
-            F.sum(
-                F.when(F.col("parent_id").isNull(), 1).otherwise(0)
-            ).alias("n_roots"),
-        )
-        hist_agg = mt["history"].agg(
-            F.sum(
-                F.when(F.col("is_current_ancestor"), 1).otherwise(0)
-            ).alias("n_ancestors"),
-            F.count(F.lit(1)).alias("n_log"),
-        )
-        man_agg = mt["manifests"].agg(
-            F.sum(
-                F.col("added_files_count") + F.col("existing_files_count")
-            ).alias("n_listed"),
-            F.min("length").alias("min_len"),
-        )
-        part_agg = mt["partitions"].agg(
-            F.sum("record_count").alias("rows"),
-            F.sum("file_count").alias("nfiles"),
-        )
-        row = (
-            files_agg.crossJoin(snaps_agg)
-            .crossJoin(hist_agg)
-            .crossJoin(man_agg)
-            .crossJoin(part_agg)
-            .first()
-        )
-        files = snaps = hist = man = part = row
-        require(
-            snaps["n_roots"] == 1,
-            "exactly one root snapshot (null parent) in a linear history",
-        )
-        require(
-            hist["n_log"] == hist["n_ancestors"],
-            "a linear history has every log entry on the current line",
-        )
-        require(
-            files["max_file_seq"] <= snaps["max_snap_seq"],
-            "file data-sequence numbers are bounded by the snapshot seq",
-        )
-        require(
-            files["min_size"] > 0,
-            "every listed file carries its real on-disk byte size",
-        )
-        require(
-            man["n_listed"] == files["n_file_entries"],
-            "manifest file counts must cover every live entry",
-        )
-        require(
-            man["min_len"] > 0,
-            "every manifest carries its real on-disk byte length",
-        )
-        require(
-            part["rows"] == files["live_rows"],
-            "partitions view must re-aggregate exactly the data files",
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    int(snaps["n_snapshots"]),
-                    int(hist["n_ancestors"]),
-                    int(files["live_rows"]),
-                    int(files["eq_delete_rows"]),
-                )
-            ],
-            "n_snapshots bigint, n_ancestors bigint, live_rows bigint,"
-            " eq_delete_rows bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icemeta")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0")
+    )
+    t.append(orders.filter("o_orderkey % 3 = 1"))
+    t.append(orders.filter("o_orderkey % 3 = 2"))
+    t.delete_where_mor("o_orderkey % 6 = 1", keys=["o_orderkey"])
+    export_iceberg(t, f"{root}/ice", history=True)
+    mt = iceberg_metadata_tables(spark, f"{root}/ice")
+    # The five views are metadata-sized; aggregate each lazily and
+    # collect them through ONE action (a crossJoin of one-row
+    # aggregates) instead of six sequential .first()/.count()
+    # jobs — same values, one round of job-scheduling latency
+    # (guide §1.2: don't pay per-pass fixed costs for work that
+    # composes into one pass).
+    files_agg = mt["files"].agg(
+        F.sum(
+            F.when(F.col("content") == 0, F.col("record_count"))
+            .otherwise(F.lit(0))
+        ).alias("live_rows"),
+        F.sum(
+            F.when(F.col("content") == 2, F.col("record_count"))
+            .otherwise(F.lit(0))
+        ).alias("eq_delete_rows"),
+        F.max("sequence_number").alias("max_file_seq"),
+        F.min("file_size_in_bytes").alias("min_size"),
+        F.count(F.lit(1)).alias("n_file_entries"),
+    )
+    snaps_agg = mt["snapshots"].agg(
+        F.count(F.lit(1)).alias("n_snapshots"),
+        F.max("sequence_number").alias("max_snap_seq"),
+        F.sum(
+            F.when(F.col("parent_id").isNull(), 1).otherwise(0)
+        ).alias("n_roots"),
+    )
+    hist_agg = mt["history"].agg(
+        F.sum(
+            F.when(F.col("is_current_ancestor"), 1).otherwise(0)
+        ).alias("n_ancestors"),
+        F.count(F.lit(1)).alias("n_log"),
+    )
+    man_agg = mt["manifests"].agg(
+        F.sum(
+            F.col("added_files_count") + F.col("existing_files_count")
+        ).alias("n_listed"),
+        F.min("length").alias("min_len"),
+    )
+    part_agg = mt["partitions"].agg(
+        F.sum("record_count").alias("rows"),
+        F.sum("file_count").alias("nfiles"),
+    )
+    row = (
+        files_agg.crossJoin(snaps_agg)
+        .crossJoin(hist_agg)
+        .crossJoin(man_agg)
+        .crossJoin(part_agg)
+        .first()
+    )
+    files = snaps = hist = man = part = row
+    require(
+        snaps["n_roots"] == 1,
+        "exactly one root snapshot (null parent) in a linear history",
+    )
+    require(
+        hist["n_log"] == hist["n_ancestors"],
+        "a linear history has every log entry on the current line",
+    )
+    require(
+        files["max_file_seq"] <= snaps["max_snap_seq"],
+        "file data-sequence numbers are bounded by the snapshot seq",
+    )
+    require(
+        files["min_size"] > 0,
+        "every listed file carries its real on-disk byte size",
+    )
+    require(
+        man["n_listed"] == files["n_file_entries"],
+        "manifest file counts must cover every live entry",
+    )
+    require(
+        man["min_len"] > 0,
+        "every manifest carries its real on-disk byte length",
+    )
+    require(
+        part["rows"] == files["live_rows"],
+        "partitions view must re-aggregate exactly the data files",
+    )
+    return spark.createDataFrame(
+        [
+            (
+                int(snaps["n_snapshots"]),
+                int(hist["n_ancestors"]),
+                int(files["live_rows"]),
+                int(files["eq_delete_rows"]),
+            )
+        ],
+        "n_snapshots bigint, n_ancestors bigint, live_rows bigint,"
+        " eq_delete_rows bigint",
+    )
 
 
 @register(
@@ -1143,9 +1040,6 @@ def q_iceberg_export_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     money-sum parity. Metadata cost is O(refs) on top of the history
     export — at 100 TB refs are a handful of named pins, not a data
     rewrite."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         export_iceberg,
@@ -1158,60 +1052,57 @@ def q_iceberg_export_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icerefs_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 4 = 0")
-        )
-        t.create_tag("v1")
-        t.append(orders.filter("o_orderkey % 4 = 1"))
-        t.create_branch("audit")
-        t.append(orders.filter("o_orderkey % 4 = 2"), branch="audit")
-        export_iceberg(t, f"{root}/ice", history=True)
+    root = scratch("icerefs")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 4 = 0")
+    )
+    t.create_tag("v1")
+    t.append(orders.filter("o_orderkey % 4 = 1"))
+    t.create_branch("audit")
+    t.append(orders.filter("o_orderkey % 4 = 2"), branch="audit")
+    export_iceberg(t, f"{root}/ice", history=True)
 
-        doc = resolve_iceberg_metadata(f"{root}/ice")
-        refs = iceberg_metadata_tables(spark, f"{root}/ice")["refs"]
-        ref_rows = {
-            r.ref_name: (r.ref_type, int(r.snapshot_id))
-            for r in refs.collect()
-        }
-        require(
-            set(ref_rows) == {"main", "v1", "audit"},
-            "every named ref crosses the boundary",
-        )
-        require(
-            ref_rows["v1"][0] == "tag"
-            and ref_rows["audit"][0] == "branch",
-            "ref types survive export",
-        )
-        logged = {int(h["snapshot-id"]) for h in doc["snapshot-log"]}
-        require(
-            ref_rows["audit"][1] not in logged,
-            "branch-only heads stay OFF the snapshot-log (AS-OF must "
-            "never resolve a branch state)",
-        )
-        out_rows = []
-        for name in sorted(ref_rows):
-            agg = (
-                read_iceberg(spark, f"{root}/ice", ref=name)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(money("o_totalprice"))
-                    .cast("double")
-                    .alias("s"),
-                )
-                .first()
+    doc = resolve_iceberg_metadata(f"{root}/ice")
+    refs = iceberg_metadata_tables(spark, f"{root}/ice")["refs"]
+    ref_rows = {
+        r.ref_name: (r.ref_type, int(r.snapshot_id))
+        for r in refs.collect()
+    }
+    require(
+        set(ref_rows) == {"main", "v1", "audit"},
+        "every named ref crosses the boundary",
+    )
+    require(
+        ref_rows["v1"][0] == "tag"
+        and ref_rows["audit"][0] == "branch",
+        "ref types survive export",
+    )
+    logged = {int(h["snapshot-id"]) for h in doc["snapshot-log"]}
+    require(
+        ref_rows["audit"][1] not in logged,
+        "branch-only heads stay OFF the snapshot-log (AS-OF must "
+        "never resolve a branch state)",
+    )
+    out_rows = []
+    for name in sorted(ref_rows):
+        agg = (
+            read_iceberg(spark, f"{root}/ice", ref=name)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(money("o_totalprice"))
+                .cast("double")
+                .alias("s"),
             )
-            out_rows.append(
-                (name, ref_rows[name][0], int(agg["n"]), float(agg["s"]))
-            )
-        return spark.createDataFrame(
-            out_rows,
-            "ref_name string, ref_type string, n_rows bigint,"
-            " sum_price double",
-        ).orderBy("ref_name")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            .first()
+        )
+        out_rows.append(
+            (name, ref_rows[name][0], int(agg["n"]), float(agg["s"]))
+        )
+    return spark.createDataFrame(
+        out_rows,
+        "ref_name string, ref_type string, n_rows bigint,"
+        " sum_price double",
+    ).orderBy("ref_name")
 
 
 @register(
@@ -1245,9 +1136,6 @@ def q_iceberg_foreign_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven prune-sound, not just readable. O(new data + manifests)
     per commit; at 100 TB the reused-manifest list is what keeps a
     second engine's appends from rewriting metadata history."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl import Pred, spec_field
     from iceberg_workshop_spark.icetbl.iceformat import (
@@ -1262,59 +1150,56 @@ def q_iceberg_foreign_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_iceappend_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0"),
-            [spec_field("o_custkey", "bucket[8]", "cust_bucket")],
-        )
-        export_root = f"{root}/ice"
-        from iceberg_workshop_spark.icetbl.iceformat import export_iceberg
+    root = scratch("iceappend")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0"),
+        [spec_field("o_custkey", "bucket[8]", "cust_bucket")],
+    )
+    export_root = f"{root}/ice"
+    from iceberg_workshop_spark.icetbl.iceformat import export_iceberg
 
-        export_iceberg(t, export_root, history=True)
-        base_sid = int(
-            resolve_iceberg_metadata(export_root)["current-snapshot-id"]
-        )
-        append_iceberg(
-            spark, export_root, orders.filter("o_orderkey % 3 = 1")
-        )
-        append_iceberg(
-            spark, export_root, orders.filter("o_orderkey % 3 = 2")
-        )
-        doc = resolve_iceberg_metadata(export_root)
-        n_snapshots = len(doc["snapshots"])
-        full = read_iceberg(spark, export_root)
-        agg = full.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("s"),
-        ).first()
-        n_appended = read_iceberg_changes(
-            spark, export_root, from_snapshot_id=base_sid
-        ).count()
-        probe, rep = scan_iceberg(
-            spark, export_root, [Pred("o_custkey", "=", 42)]
-        )
-        probe_rows = probe.count()
-        require(
-            0 < rep["files_scanned"] < rep["files_total"],
-            "bucket pruning must skip files across both writers' "
-            "commits and still find every probe row",
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    int(agg["n"]),
-                    float(agg["s"]),
-                    int(n_snapshots),
-                    int(n_appended),
-                    int(probe_rows),
-                )
-            ],
-            "n_rows bigint, sum_price double, n_snapshots bigint,"
-            " n_appended bigint, probe_rows bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    export_iceberg(t, export_root, history=True)
+    base_sid = int(
+        resolve_iceberg_metadata(export_root)["current-snapshot-id"]
+    )
+    append_iceberg(
+        spark, export_root, orders.filter("o_orderkey % 3 = 1")
+    )
+    append_iceberg(
+        spark, export_root, orders.filter("o_orderkey % 3 = 2")
+    )
+    doc = resolve_iceberg_metadata(export_root)
+    n_snapshots = len(doc["snapshots"])
+    full = read_iceberg(spark, export_root)
+    agg = full.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("o_totalprice")).cast("double").alias("s"),
+    ).first()
+    n_appended = read_iceberg_changes(
+        spark, export_root, from_snapshot_id=base_sid
+    ).count()
+    probe, rep = scan_iceberg(
+        spark, export_root, [Pred("o_custkey", "=", 42)]
+    )
+    probe_rows = probe.count()
+    require(
+        0 < rep["files_scanned"] < rep["files_total"],
+        "bucket pruning must skip files across both writers' "
+        "commits and still find every probe row",
+    )
+    return spark.createDataFrame(
+        [
+            (
+                int(agg["n"]),
+                float(agg["s"]),
+                int(n_snapshots),
+                int(n_appended),
+                int(probe_rows),
+            )
+        ],
+        "n_rows bigint, sum_price double, n_snapshots bigint,"
+        " n_appended bigint, probe_rows bigint",
+    )
 
 
 @register(
@@ -1344,9 +1229,6 @@ def q_iceberg_foreign_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NET changelog's exact insert/delete attribution across the
     mixed-operation range. O(delete set + manifests); no data file is
     read or rewritten — the 100 TB MoR posture."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         append_iceberg,
@@ -1361,42 +1243,39 @@ def q_iceberg_foreign_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icefdel_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
-        )
-        dest = f"{root}/ice"
-        export_iceberg(t, dest, history=True)
-        base_sid = int(
-            resolve_iceberg_metadata(dest)["current-snapshot-id"]
-        )
-        append_iceberg(spark, dest, orders.filter("o_orderkey % 2 = 1"))
-        delete_iceberg_keys(
-            spark, dest,
-            orders.filter("o_orderkey % 6 = 0").select("o_orderkey"),
-            ["o_orderkey"],
-        )
-        agg = read_iceberg(spark, dest).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("s"),
-        ).first()
-        cl = read_iceberg_changelog(spark, dest, base_sid)
-        counts = cl.groupBy("_change_type").count().collect()
-        by_type = {r["_change_type"]: int(r["count"]) for r in counts}
-        return spark.createDataFrame(
-            [
-                (
-                    int(agg["n"]),
-                    float(agg["s"]),
-                    by_type.get("insert", 0),
-                    by_type.get("delete", 0),
-                )
-            ],
-            "n_rows bigint, sum_price double, n_ins bigint, n_del bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icefdel")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
+    )
+    dest = f"{root}/ice"
+    export_iceberg(t, dest, history=True)
+    base_sid = int(
+        resolve_iceberg_metadata(dest)["current-snapshot-id"]
+    )
+    append_iceberg(spark, dest, orders.filter("o_orderkey % 2 = 1"))
+    delete_iceberg_keys(
+        spark, dest,
+        orders.filter("o_orderkey % 6 = 0").select("o_orderkey"),
+        ["o_orderkey"],
+    )
+    agg = read_iceberg(spark, dest).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("o_totalprice")).cast("double").alias("s"),
+    ).first()
+    cl = read_iceberg_changelog(spark, dest, base_sid)
+    counts = cl.groupBy("_change_type").count().collect()
+    by_type = {r["_change_type"]: int(r["count"]) for r in counts}
+    return spark.createDataFrame(
+        [
+            (
+                int(agg["n"]),
+                float(agg["s"]),
+                by_type.get("insert", 0),
+                by_type.get("delete", 0),
+            )
+        ],
+        "n_rows bigint, sum_price double, n_ins bigint, n_del bigint",
+    )
 
 
 @register(
@@ -1424,9 +1303,6 @@ def q_iceberg_foreign_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish that rewrote data would each break it. O(new data) to
     stage, O(1) metadata to publish — the posture that makes WAP free
     at 100 TB."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         append_iceberg,
@@ -1440,44 +1316,41 @@ def q_iceberg_foreign_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icewap_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
-        )
-        dest = f"{root}/ice"
-        export_iceberg(t, dest, history=True)
-        append_iceberg(
-            spark, dest, orders.filter("o_orderkey % 2 = 1"),
-            branch="audit",
-        )
-        staged_main = read_iceberg(spark, dest).count()
-        doc = resolve_iceberg_metadata(dest)
-        require(
-            len(doc["snapshot-log"]) == 1,
-            "a staged commit must not touch the snapshot-log",
-        )
-        audit = read_iceberg(spark, dest, ref="audit").count()
-        require(
-            audit > staged_main,
-            "the audit read sees the staged rows by ref",
-        )
-        fast_forward_iceberg(dest, "audit")
-        agg = read_iceberg(spark, dest).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("s"),
-        ).first()
-        require(
-            int(agg["n"]) == audit,
-            "publish promotes exactly the audited state",
-        )
-        return spark.createDataFrame(
-            [(int(staged_main), int(agg["n"]), float(agg["s"]))],
-            "staged_main_rows bigint, published_rows bigint,"
-            " published_sum double",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icewap")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
+    )
+    dest = f"{root}/ice"
+    export_iceberg(t, dest, history=True)
+    append_iceberg(
+        spark, dest, orders.filter("o_orderkey % 2 = 1"),
+        branch="audit",
+    )
+    staged_main = read_iceberg(spark, dest).count()
+    doc = resolve_iceberg_metadata(dest)
+    require(
+        len(doc["snapshot-log"]) == 1,
+        "a staged commit must not touch the snapshot-log",
+    )
+    audit = read_iceberg(spark, dest, ref="audit").count()
+    require(
+        audit > staged_main,
+        "the audit read sees the staged rows by ref",
+    )
+    fast_forward_iceberg(dest, "audit")
+    agg = read_iceberg(spark, dest).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("o_totalprice")).cast("double").alias("s"),
+    ).first()
+    require(
+        int(agg["n"]) == audit,
+        "publish promotes exactly the audited state",
+    )
+    return spark.createDataFrame(
+        [(int(staged_main), int(agg["n"]), float(agg["s"]))],
+        "staged_main_rows bigint, published_rows bigint,"
+        " published_sum double",
+    )
 
 
 @register(
@@ -1506,9 +1379,6 @@ def q_iceberg_foreign_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact count of rows carrying the added column. No data file
     is read or rewritten by the DDL itself: O(1) metadata, the only
     cost posture schema changes can have at 100 TB."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         alter_iceberg_schema,
@@ -1521,40 +1391,37 @@ def q_iceberg_foreign_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icevolve_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
-        )
-        dest = f"{root}/ice"
-        export_iceberg(t, dest, history=True)
-        alter_iceberg_schema(
-            dest,
-            add=[("note", "string")],
-            rename={"o_totalprice": "price"},
-        )
-        append_iceberg(
-            spark, dest,
-            orders.filter("o_orderkey % 2 = 1").selectExpr(
-                "o_orderkey", "o_totalprice AS price", "'audit' AS note"
-            ),
-        )
-        r = read_iceberg(spark, dest)
-        require(
-            r.columns == ["o_orderkey", "price", "note"],
-            "the evolved schema is the read schema",
-        )
-        agg = r.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("price")).cast("double").alias("s"),
-            F.sum(F.col("note").isNotNull().cast("long")).alias("k"),
-        ).first()
-        return spark.createDataFrame(
-            [(int(agg["n"]), float(agg["s"]), int(agg["k"]))],
-            "n_rows bigint, sum_price double, n_notes bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icevolve")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
+    )
+    dest = f"{root}/ice"
+    export_iceberg(t, dest, history=True)
+    alter_iceberg_schema(
+        dest,
+        add=[("note", "string")],
+        rename={"o_totalprice": "price"},
+    )
+    append_iceberg(
+        spark, dest,
+        orders.filter("o_orderkey % 2 = 1").selectExpr(
+            "o_orderkey", "o_totalprice AS price", "'audit' AS note"
+        ),
+    )
+    r = read_iceberg(spark, dest)
+    require(
+        r.columns == ["o_orderkey", "price", "note"],
+        "the evolved schema is the read schema",
+    )
+    agg = r.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("price")).cast("double").alias("s"),
+        F.sum(F.col("note").isNotNull().cast("long")).alias("k"),
+    ).first()
+    return spark.createDataFrame(
+        [(int(agg["n"]), float(agg["s"]), int(agg["k"]))],
+        "n_rows bigint, sum_price double, n_notes bigint",
+    )
 
 
 @register(
@@ -1585,9 +1452,6 @@ def q_iceberg_foreign_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     the retained count and both heads' row/money parity. O(history
     metadata); at 100 TB this is the same manifests-walk a real
     engine's expire does, with deletion left to the file owner."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         expire_iceberg,
@@ -1600,50 +1464,47 @@ def q_iceberg_foreign_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icexpire_")
+    root = scratch("icexpire")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0")
+    )
+    t.create_tag("v1")
+    t.append(orders.filter("o_orderkey % 3 = 1"))
+    t.truncate()
+    t.append(orders.filter("o_orderkey % 3 = 2"))
+    dest = f"{root}/ice"
+    export_iceberg(t, dest, history=True)
+    dropped_sid = int(
+        resolve_iceberg_metadata(dest)["snapshots"][1]["snapshot-id"]
+    )
+    _p, orphaned = expire_iceberg(dest, keep_last=1)
+    doc = resolve_iceberg_metadata(dest)
+    require(
+        any(p.endswith(".parquet") for p in orphaned),
+        "the truncate-retired era's files must be reported orphaned",
+    )
     try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 3 = 0")
-        )
-        t.create_tag("v1")
-        t.append(orders.filter("o_orderkey % 3 = 1"))
-        t.truncate()
-        t.append(orders.filter("o_orderkey % 3 = 2"))
-        dest = f"{root}/ice"
-        export_iceberg(t, dest, history=True)
-        dropped_sid = int(
-            resolve_iceberg_metadata(dest)["snapshots"][1]["snapshot-id"]
-        )
-        _p, orphaned = expire_iceberg(dest, keep_last=1)
-        doc = resolve_iceberg_metadata(dest)
-        require(
-            any(p.endswith(".parquet") for p in orphaned),
-            "the truncate-retired era's files must be reported orphaned",
-        )
-        try:
-            read_iceberg(spark, dest, snapshot_id=dropped_sid)
-            require(False, "pinned read of a dropped snapshot must refuse")
-        except ValueError:
-            pass
-        main = read_iceberg(spark, dest).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("s"),
-        ).first()
-        tag_rows = read_iceberg(spark, dest, ref="v1").count()
-        return spark.createDataFrame(
-            [
-                (
-                    len(doc["snapshots"]),
-                    int(main["n"]),
-                    float(main["s"]),
-                    int(tag_rows),
-                )
-            ],
-            "n_snapshots bigint, main_rows bigint, main_sum double,"
-            " tag_rows bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        read_iceberg(spark, dest, snapshot_id=dropped_sid)
+        require(False, "pinned read of a dropped snapshot must refuse")
+    except ValueError:
+        pass
+    main = read_iceberg(spark, dest).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("o_totalprice")).cast("double").alias("s"),
+    ).first()
+    tag_rows = read_iceberg(spark, dest, ref="v1").count()
+    return spark.createDataFrame(
+        [
+            (
+                len(doc["snapshots"]),
+                int(main["n"]),
+                float(main["s"]),
+                int(tag_rows),
+            )
+        ],
+        "n_snapshots bigint, main_rows bigint, main_sum double,"
+        " tag_rows bigint",
+    )
 
 
 @register(
@@ -1671,9 +1532,6 @@ def q_iceberg_foreign_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass compaction must pay; the commit stays metadata-sized — at
     100 TB you compact size-tiered partitions on a schedule with
     exactly this verb."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         append_iceberg,
@@ -1690,41 +1548,38 @@ def q_iceberg_foreign_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_icecompact_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
-        )
-        dest = f"{root}/ice"
-        export_iceberg(t, dest, history=True)
-        append_iceberg(spark, dest, orders.filter("o_orderkey % 2 = 1"))
-        delete_iceberg_keys(
-            spark, dest,
-            orders.filter("o_orderkey % 6 = 0").select("o_orderkey"),
-            ["o_orderkey"],
-        )
-        base_sid = int(
-            resolve_iceberg_metadata(dest)["current-snapshot-id"]
-        )
-        _p, rep = rewrite_iceberg_files(spark, dest)
-        require(
-            rep["delete_files_before"] == 1,
-            "the MoR sidecar existed before the rewrite",
-        )
-        doc = resolve_iceberg_metadata(dest)
-        _files, dels = iceberg_manifest_entries(doc, spark=spark)
-        net = read_iceberg_changelog(spark, dest, base_sid).count()
-        agg = read_iceberg(spark, dest).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("s"),
-        ).first()
-        return spark.createDataFrame(
-            [(int(agg["n"]), float(agg["s"]), len(dels), int(net))],
-            "n_rows bigint, sum_price double, n_delete_files bigint,"
-            " net_changes bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("icecompact")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
+    )
+    dest = f"{root}/ice"
+    export_iceberg(t, dest, history=True)
+    append_iceberg(spark, dest, orders.filter("o_orderkey % 2 = 1"))
+    delete_iceberg_keys(
+        spark, dest,
+        orders.filter("o_orderkey % 6 = 0").select("o_orderkey"),
+        ["o_orderkey"],
+    )
+    base_sid = int(
+        resolve_iceberg_metadata(dest)["current-snapshot-id"]
+    )
+    _p, rep = rewrite_iceberg_files(spark, dest)
+    require(
+        rep["delete_files_before"] == 1,
+        "the MoR sidecar existed before the rewrite",
+    )
+    doc = resolve_iceberg_metadata(dest)
+    _files, dels = iceberg_manifest_entries(doc, spark=spark)
+    net = read_iceberg_changelog(spark, dest, base_sid).count()
+    agg = read_iceberg(spark, dest).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("o_totalprice")).cast("double").alias("s"),
+    ).first()
+    return spark.createDataFrame(
+        [(int(agg["n"]), float(agg["s"]), len(dels), int(net))],
+        "n_rows bigint, sum_price double, n_delete_files bigint,"
+        " net_changes bigint",
+    )
 
 
 @register(
@@ -1754,9 +1609,6 @@ def q_iceberg_foreign_posdelete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_metadata.row_index`` — the same parquet ordinal a real engine
     records — so the sidecar is engine-readable, not just
     self-readable. O(one scan + delete set); no data file rewritten."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         delete_iceberg_keys,
@@ -1771,44 +1623,41 @@ def q_iceberg_foreign_posdelete(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_iceposdel_")
-    try:
-        t = IceTable.create_as(spark, f"{root}/src", orders)
-        dest = f"{root}/ice"
-        export_iceberg(t, dest, history=True)
-        delete_iceberg_keys(
-            spark, dest,
-            orders.filter("o_orderkey % 11 = 5").select("o_orderkey"),
-            ["o_orderkey"],
-        )
-        delete_iceberg_where(spark, dest, "o_orderkey % 7 = 0")
-        doc = resolve_iceberg_metadata(dest)
-        _files, dels = iceberg_manifest_entries(doc, spark=spark)
-        require(
-            sorted(d.get("content") for d in dels) == [1, 2],
-            "both delete flavors live on the table at once",
-        )
-        # the positional planning scan read RAW files, so rows already
-        # masked by the equality delete may re-record — count the
-        # DISTINCT positions the reader actually masks
-        n_pos = next(
-            int(d.get("record_count") or 0)
-            for d in dels
-            if d.get("content") == 1
-        )
-        eq_overlap = orders.filter(
-            "o_orderkey % 7 = 0 AND o_orderkey % 11 = 5"
-        ).count()
-        agg = read_iceberg(spark, dest).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("s"),
-        ).first()
-        return spark.createDataFrame(
-            [(int(agg["n"]), float(agg["s"]), int(n_pos - eq_overlap))],
-            "n_rows bigint, sum_price double, n_pos_deleted bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("iceposdel")
+    t = IceTable.create_as(spark, f"{root}/src", orders)
+    dest = f"{root}/ice"
+    export_iceberg(t, dest, history=True)
+    delete_iceberg_keys(
+        spark, dest,
+        orders.filter("o_orderkey % 11 = 5").select("o_orderkey"),
+        ["o_orderkey"],
+    )
+    delete_iceberg_where(spark, dest, "o_orderkey % 7 = 0")
+    doc = resolve_iceberg_metadata(dest)
+    _files, dels = iceberg_manifest_entries(doc, spark=spark)
+    require(
+        sorted(d.get("content") for d in dels) == [1, 2],
+        "both delete flavors live on the table at once",
+    )
+    # the positional planning scan read RAW files, so rows already
+    # masked by the equality delete may re-record — count the
+    # DISTINCT positions the reader actually masks
+    n_pos = next(
+        int(d.get("record_count") or 0)
+        for d in dels
+        if d.get("content") == 1
+    )
+    eq_overlap = orders.filter(
+        "o_orderkey % 7 = 0 AND o_orderkey % 11 = 5"
+    ).count()
+    agg = read_iceberg(spark, dest).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("o_totalprice")).cast("double").alias("s"),
+    ).first()
+    return spark.createDataFrame(
+        [(int(agg["n"]), float(agg["s"]), int(n_pos - eq_overlap))],
+        "n_rows bigint, sum_price double, n_pos_deleted bigint",
+    )
 
 
 @register(
@@ -1838,9 +1687,6 @@ def q_iceberg_foreign_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     view), while commit cost stays O(matching rows) — never a data
     file rewrite. Cross-era money parity breaks on a lost update, a
     resurrected row, or a double-applied image."""
-    import shutil
-    import tempfile
-
     from iceberg_workshop_spark.exprs import money
     from iceberg_workshop_spark.icetbl.iceformat import (
         append_iceberg,
@@ -1855,39 +1701,36 @@ def q_iceberg_foreign_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="iws_iceupd_")
-    try:
-        t = IceTable.create_as(
-            spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
-        )
-        dest = f"{root}/ice"
-        export_iceberg(t, dest, history=True)
-        append_iceberg(spark, dest, orders.filter("o_orderkey % 2 = 1"))
-        delete_iceberg_keys(
-            spark, dest,
-            orders.filter("o_orderkey % 10 = 3").select("o_orderkey"),
-            ["o_orderkey"],
-        )
-        update_iceberg_where(
-            spark, dest, "o_orderkey % 4 = 1",
-            {"o_totalprice": "o_totalprice * 2"},
-        )
-        doc = resolve_iceberg_metadata(dest)
-        require(
-            doc["snapshots"][-1]["summary"]["operation"] == "overwrite",
-            "the MoR update lands as ONE overwrite snapshot",
-        )
-        r = read_iceberg(spark, dest)
-        agg = r.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(money("o_totalprice")).cast("double").alias("s"),
-            F.sum(
-                (F.col("o_orderkey") % 4 == 1).cast("long")
-            ).alias("k"),
-        ).first()
-        return spark.createDataFrame(
-            [(int(agg["n"]), float(agg["s"]), int(agg["k"]))],
-            "n_rows bigint, sum_price double, n_updated bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scratch("iceupd")
+    t = IceTable.create_as(
+        spark, f"{root}/src", orders.filter("o_orderkey % 2 = 0")
+    )
+    dest = f"{root}/ice"
+    export_iceberg(t, dest, history=True)
+    append_iceberg(spark, dest, orders.filter("o_orderkey % 2 = 1"))
+    delete_iceberg_keys(
+        spark, dest,
+        orders.filter("o_orderkey % 10 = 3").select("o_orderkey"),
+        ["o_orderkey"],
+    )
+    update_iceberg_where(
+        spark, dest, "o_orderkey % 4 = 1",
+        {"o_totalprice": "o_totalprice * 2"},
+    )
+    doc = resolve_iceberg_metadata(dest)
+    require(
+        doc["snapshots"][-1]["summary"]["operation"] == "overwrite",
+        "the MoR update lands as ONE overwrite snapshot",
+    )
+    r = read_iceberg(spark, dest)
+    agg = r.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(money("o_totalprice")).cast("double").alias("s"),
+        F.sum(
+            (F.col("o_orderkey") % 4 == 1).cast("long")
+        ).alias("k"),
+    ).first()
+    return spark.createDataFrame(
+        [(int(agg["n"]), float(agg["s"]), int(agg["k"]))],
+        "n_rows bigint, sum_price double, n_updated bigint",
+    )

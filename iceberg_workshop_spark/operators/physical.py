@@ -17,13 +17,10 @@ the salting strategies (operators/skew.py) are worth applying.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_workshop_spark.operators.scans import _scratch
-from iceberg_workshop_spark.registry import register, require
+from iceberg_workshop_spark.registry import register, require, scratch
 from iceberg_workshop_spark.sources.tables import load
 
 # month-number -> quarter dim, tiny and broadcastable; the DPP filter
@@ -33,16 +30,14 @@ _MONTH_DIM = [(m, (m - 1) // 3 + 1) for m in range(1, 13)]
 
 
 def _orders_by_month(spark: SparkSession, sf_dir: str) -> str:
-    out = _scratch(f"orders_by_month_{os.path.basename(sf_dir.rstrip('/'))}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load(spark, sf_dir, "orders")
-            .withColumn("o_month", F.month("o_orderdate"))
-            .repartition("o_month")
-            .write.mode("overwrite")
-            .partitionBy("o_month")
-            .parquet(out)
-        )
+    out = scratch("orders_by_month")
+    (
+        load(spark, sf_dir, "orders")
+        .withColumn("o_month", F.month("o_orderdate"))
+        .repartition("o_month")
+        .write.partitionBy("o_month")
+        .parquet(out)
+    )
     return out
 
 
@@ -112,15 +107,13 @@ def q_scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     and proves one-file-per-partition. The same column feeds the
     positional-delete path (plans/lifecycle.py) — this pins its
     provenance contract standalone."""
-    out = _scratch(f"docs_by_lang_{os.path.basename(sf_dir.rstrip('/'))}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load(spark, sf_dir, "documents")
-            .repartition("lang")
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .parquet(out)
-        )
+    out = scratch("docs_by_lang")
+    (
+        load(spark, sf_dir, "documents")
+        .repartition("lang")
+        .write.partitionBy("lang")
+        .parquet(out)
+    )
     return (
         spark.read.parquet(out)
         .select(

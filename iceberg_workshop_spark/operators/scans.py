@@ -15,22 +15,12 @@ directories; correctness is checked against the unpartitioned oracle.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_workshop_spark.registry import persist, register
+from iceberg_workshop_spark.registry import persist, register, scratch
 from iceberg_workshop_spark.sources.tables import load
-
-_SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-
-
-def _scratch(*parts: str) -> str:
-    path = os.path.join(_SCRATCH, "iws_scratch", *parts)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    return path
-
 
 @register(
     "q_scan_parquet",
@@ -52,9 +42,9 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``,`` delimiter of ``/root/reference/sql/airlines.sql:36-39``. The
     schema is explicit (never inferred) so types stay stable.
     """
-    out = _scratch(f"csv_nation_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch("csv_nation")
     nation = load(spark, sf_dir, "nation")
-    nation.write.mode("overwrite").option("header", True).option("sep", ",").csv(out)
+    nation.write.option("header", True).option("sep", ",").csv(out)
     return (
         spark.read.schema("n_nationkey int, n_name string, n_regionkey int")
         .option("header", True)
@@ -71,8 +61,8 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CTAS to a new Parquet table, read back (A3/A4 semantics,
     ``/root/reference/sql/airlines.sql:49-55``)."""
-    out = _scratch(f"ctas_supplier_{os.path.basename(sf_dir.rstrip('/'))}")
-    load(spark, sf_dir, "supplier").write.mode("overwrite").parquet(out)
+    out = scratch("ctas_supplier")
+    load(spark, sf_dir, "supplier").write.parquet(out)
     return spark.read.parquet(out).orderBy("s_suppkey")
 
 
@@ -89,22 +79,19 @@ def q_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned scan (A25, ``/root/reference/README.md:214-237``).
 
-    Writes a ``partitionBy(l_shipyear)`` copy once, then filters on the
+    Writes a ``partitionBy(l_shipyear)`` copy, then filters on the
     partition column so Catalyst prunes to 1-of-N directories; the
     answer must equal the unpartitioned oracle. The 1-year-predicate
     pruning ratio is benchmarked in bench.py (BASELINE.md target:
     ≤0.84% of files for the reference's 1/238 showcase).
     """
-    out = _scratch(f"lineitem_by_year_{os.path.basename(sf_dir.rstrip('/'))}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            load(spark, sf_dir, "lineitem")
-            .withColumn("l_shipyear", F.year("l_shipdate"))
-            .write.mode("overwrite")
-            .partitionBy("l_shipyear")
-            .parquet(out)
-        )
+    out = scratch("lineitem_by_year")
+    (
+        load(spark, sf_dir, "lineitem")
+        .withColumn("l_shipyear", F.year("l_shipdate"))
+        .write.partitionBy("l_shipyear")
+        .parquet(out)
+    )
     part = spark.read.parquet(out).filter(F.col("l_shipyear") == 1997)
     return part.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -126,9 +113,9 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema (schema inference is a second full scan — never in
     a 100 TB pipeline). Dialect closure of A1's CSV staging pattern for
     the other ubiquitous interchange format."""
-    out = _scratch(f"json_nation_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch("json_nation")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    src.write.mode("overwrite").json(out)
+    src.write.json(out)
     return (
         spark.read.schema("n_nationkey long, n_name string, n_regionkey long")
         .json(out)
@@ -146,11 +133,11 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC round trip — the other columnar format the lakehouse world
     reads; same vectorized reader + pushdown machinery as Parquet."""
-    out = _scratch(f"orc_supplier_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch("orc_supplier")
     src = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    src.write.mode("overwrite").orc(out)
+    src.write.orc(out)
     return spark.read.orc(out).orderBy("s_suppkey")
 
 
@@ -171,9 +158,9 @@ def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates must match the structured table exactly; at 100 TB the
     text source splits on line boundaries so parallelism is
     byte-range-based, same as CSV."""
-    out = _scratch(os.path.basename(sf_dir.rstrip("/")), "scan_text")
+    out = scratch("scan_text")
     docs = load(spark, sf_dir, "documents").select("text")
-    docs.write.mode("overwrite").text(out)
+    docs.write.text(out)
     lines = spark.read.text(out)
     return lines.agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -195,13 +182,12 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema + rowTag. Closes the last interchange format the
     staging pattern (A1) covers; like the JSON/CSV twins, inference is
     skipped — an explicit schema keeps the read one pass."""
-    out = _scratch(f"xml_nation_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch("xml_nation")
     src = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     (
         src.write.format("xml")
         .option("rootTag", "nations")
         .option("rowTag", "nation")
-        .mode("overwrite")
         .save(out)
     )
     return (
@@ -231,7 +217,7 @@ def q_scan_csv_dirty(spark: SparkSession, sf_dir: str) -> DataFrame:
     a query projecting ONLY that internal column), DROPMALFORMED
     silently drops them. 3 well-formed + 2 broken rows → 3/2/3,
     engine-independent by construction."""
-    out = _scratch(f"csv_dirty_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = scratch("csv_dirty")
     os.makedirs(out, exist_ok=True)
     with open(os.path.join(out, "rows.csv"), "w") as fh:
         fh.write("1,alpha\n2,beta\nnot_an_int,gamma\n3,delta\n4,epsilon,extra,cols\n")
@@ -282,10 +268,10 @@ def q_scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``recursiveFileLookup`` — the loose-landing-zone pattern before
     data is adopted into the table layer. The oracle is the exact
     union of what both subtrees hold."""
-    base = _scratch(f"recglob_{os.path.basename(sf_dir.rstrip('/'))}")
+    base = scratch("recglob")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    n.write.mode("overwrite").parquet(os.path.join(base, "drop=1", "batch=a"))
-    n.filter(F.col("n_regionkey") == 0).write.mode("overwrite").parquet(
+    n.write.parquet(os.path.join(base, "drop=1", "batch=a"))
+    n.filter(F.col("n_regionkey") == 0).write.parquet(
         os.path.join(base, "drop=2", "batch=b")
     )
     return (
@@ -317,15 +303,13 @@ def q_scan_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the scan engaged the filter (scanned < total) — at 16 files
     with 3 probe bits the expected false-positive scan is ~1 file.
     """
-    import tempfile
-
     from iceberg_workshop_spark.icetbl import IceTable, Pred
     from iceberg_workshop_spark.registry import require
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    loc = os.path.join(tempfile.mkdtemp(prefix="iws_bloom_"), "orders_bloom")
+    loc = scratch("orders_bloom")
     t = IceTable.create(
         spark, loc, "o_orderkey bigint, o_custkey bigint, o_totalprice double"
     )

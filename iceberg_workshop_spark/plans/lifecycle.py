@@ -1,7 +1,7 @@
 """Table-lifecycle queries — the icetbl layer exercised end-to-end.
 
-Each query rebuilds its table from scratch (idempotent under driver
-re-runs) and returns a deterministic result: either the final table
+Each query builds its table in ``registry.scratch`` (a new location
+per invocation) and returns a deterministic result: either the final table
 state (exact DuckDB oracle over the same fixture data) or lifecycle
 invariants encoded as constant-valued oracles (stronger than the
 rows-only fallback).
@@ -18,8 +18,6 @@ must NOT error here (limitations.md:3-17).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,20 +25,8 @@ from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.exprs import money
 from iceberg_workshop_spark.icetbl import IceTable, Pred, spec_field
-from iceberg_workshop_spark.registry import register, require
+from iceberg_workshop_spark.registry import register, require, scratch
 from iceberg_workshop_spark.sources.tables import load
-
-_SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-
-
-def _fresh(sf_dir: str, name: str) -> str:
-    path = os.path.join(
-        _SCRATCH, "iws_lifecycle", os.path.basename(sf_dir.rstrip("/")), name
-    )
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    return path
-
 
 @register(
     "q_dml_insert_values",
@@ -56,7 +42,7 @@ def _fresh(sf_dir: str, name: str) -> str:
 def q_dml_insert_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CREATE + multi-row INSERT VALUES + read back (A6; the airlines
     dimension rows of /root/reference/README.md:102-103)."""
-    loc = _fresh(sf_dir, "insert_values")
+    loc = scratch("insert_values")
     t = IceTable.create(spark, loc, "code string, description string")
     # One batched commit: each insert_values is a full snapshot commit
     # (a Spark write job + metadata swap), a fixed cost worth paying
@@ -89,7 +75,7 @@ def q_dml_insert_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dml_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT INTO ... SELECT with projection + literal column (A7 —
     the 29-column year-1995→2022 replay of README.md:145-177)."""
-    loc = _fresh(sf_dir, "insert_select")
+    loc = scratch("insert_select")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_orderdate"
     )
@@ -128,7 +114,7 @@ def q_dml_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO upsert (A9): matched → update, not matched → insert —
     the exact shape of sql/update_iceberg_v2_examples.sql:14-18, CoW
     file-granular rewrite underneath."""
-    loc = _fresh(sf_dir, "merge")
+    loc = scratch("merge")
     customer = load(spark, sf_dir, "customer")
     t = IceTable.create_as(spark, loc, customer)
     updates = customer.filter(F.col("c_custkey") < 50).withColumn(
@@ -171,7 +157,7 @@ def q_dml_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended — no data file rewritten (require-asserted), one commit.
     Same source and oracle as q_dml_merge's CoW variant, proving the
     two write flavors produce identical tables."""
-    loc = _fresh(sf_dir, "merge_mor")
+    loc = scratch("merge_mor")
     customer = load(spark, sf_dir, "customer")
     t = IceTable.create_as(spark, loc, customer)
     before_files = {f["path"] for f in t.meta.current_files()}
@@ -203,7 +189,7 @@ def q_dml_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dml_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE FROM ... WHERE (A10 — interoperability.md:128), CoW."""
-    loc = _fresh(sf_dir, "delete")
+    loc = scratch("delete")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -231,7 +217,7 @@ def q_dml_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     present in the incoming data (yr=1995) are replaced; all other
     partitions survive untouched. The per-writer option scopes the
     mode so no global session conf leaks."""
-    loc = _fresh(sf_dir, "insert_overwrite")
+    loc = scratch("insert_overwrite")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").alias("yr"), "o_orderpriority"
     )
@@ -266,7 +252,7 @@ def q_dml_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sql/update_iceberg_v2_examples.sql:14-16`), CoW file-granular:
     only files holding a 'P'-status row are rewritten; the rest carry
     into the new snapshot by identity."""
-    loc = _fresh(sf_dir, "update")
+    loc = scratch("update")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority"
     )
@@ -292,7 +278,7 @@ def q_dml_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     file is rewritten (require-asserted), commit cost O(matching
     rows). Same statement-level semantics as q_dml_update's CoW
     variant; the oracle is identical, proving flavor-equivalence."""
-    loc = _fresh(sf_dir, "update_mor")
+    loc = scratch("update_mor")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority"
     )
@@ -322,7 +308,7 @@ def q_dml_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dml_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUNCATE → 0 rows → INSERT 1 → 1 row (A11; README.md:320,346-353)."""
-    loc = _fresh(sf_dir, "truncate")
+    loc = scratch("truncate")
     t = IceTable.create_as(spark, loc, load(spark, sf_dir, "nation"))
     t.truncate()
     require(t.read().count() == 0, "TRUNCATE must leave zero rows")
@@ -343,7 +329,7 @@ def q_dml_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tt_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel (A20): the fake-airline replay of README.md:102-117 —
     snapshot-before lacks the row, current has it."""
-    loc = _fresh(sf_dir, "tt_as_of")
+    loc = scratch("tt_as_of")
     t = IceTable.create_as(spark, loc, load(spark, sf_dir, "nation"))
     s1 = t.meta.current_snapshot_id
     t.insert_values([(990, "FAKELAND", 0)])
@@ -369,7 +355,7 @@ def q_tt_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tt_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollback (A21): after EXECUTE rollback the fake row is gone
     (README.md:122-127)."""
-    loc = _fresh(sf_dir, "tt_rollback")
+    loc = scratch("tt_rollback")
     t = IceTable.create_as(spark, loc, load(spark, sf_dir, "nation"))
     s1 = t.meta.current_snapshot_id
     t.insert_values([(990, "FAKELAND", 0)])
@@ -397,7 +383,7 @@ def q_tt_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     later commits' rows — O(delta) file listing, never a table diff.
     (Iceberg's incremental read, the snapshot-log dual of time travel
     A20.)"""
-    loc = _fresh(sf_dir, "tt_changes")
+    loc = scratch("tt_changes")
     orders = load(spark, sf_dir, "orders")
     t = IceTable.create_as(spark, loc, orders.filter("o_orderkey % 3 = 0"))
     s1 = t.meta.current_snapshot_id
@@ -435,7 +421,7 @@ def q_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     'insert'}; rows the CoW rewrite carried over unchanged cancel out.
     Reads only the symmetric difference of the endpoint file sets —
     O(delta), never O(table) (icetbl/table.py::changelog)."""
-    loc = _fresh(sf_dir, "cdc_changelog")
+    loc = scratch("cdc_changelog")
     orders = load(spark, sf_dir, "orders")
     t = IceTable.create_as(spark, loc, orders.filter("o_orderkey % 7 = 0"))
     s1 = t.meta.current_snapshot_id
@@ -473,7 +459,7 @@ def q_cdc_changelog_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     new ones yields update_preimage/update_postimage pairs for the
     updates (delete+insert sharing the row identity) and plain inserts
     for the rest — the shape a downstream CDC consumer applies."""
-    loc = _fresh(sf_dir, "cdc_changelog_upd")
+    loc = scratch("cdc_changelog_upd")
     orders = load(spark, sf_dir, "orders")
     t = IceTable.create_as(spark, loc, orders.filter("o_orderkey % 13 = 0"))
     s1 = t.meta.current_snapshot_id
@@ -535,7 +521,7 @@ def q_cdc_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup from `CALL system.create_changelog_view`,
     /root/reference/pyspark-iceberg/README.md time-travel + CDC
     surface.)"""
-    loc = _fresh(sf_dir, "cdc_agg_maintain")
+    loc = scratch("cdc_agg_maintain")
     orders = load(spark, sf_dir, "orders")
     t = IceTable.create_as(spark, loc, orders.filter("o_orderkey % 5 = 0"))
     s1 = t.meta.current_snapshot_id
@@ -640,8 +626,8 @@ def q_cdc_join_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the maintained view against a full recompute of the final join —
     the oracle pins zero disagreeing groups, so the driver checks the
     two-sided delta algebra itself."""
-    loc_o = _fresh(sf_dir, "cdc_jm_orders")
-    loc_c = _fresh(sf_dir, "cdc_jm_cust")
+    loc_o = scratch("cdc_jm_orders")
+    loc_c = scratch("cdc_jm_cust")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -738,7 +724,7 @@ def q_cdc_join_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_meta_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """.history metadata table (A31): snapshot count + parent chain
     after insert/insert/rollback match README.md:353-362's shape."""
-    loc = _fresh(sf_dir, "meta_history")
+    loc = scratch("meta_history")
     t = IceTable.create(spark, loc, "code string, description string")
     t.insert_values([("AA", "American")])
     t.insert_values([("ABC", "Real Fake Airlines")])
@@ -772,7 +758,7 @@ def q_meta_pinned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/pyspark-iceberg/interoperability.md:95-112). The
     pinned view must equal the time-travel read of the same snapshot
     (proven by symmetric exceptAll emptiness, computed distributed)."""
-    loc = _fresh(sf_dir, "meta_pinned")
+    loc = scratch("meta_pinned")
     t = IceTable.create_as(spark, loc, load(spark, sf_dir, "nation"))
     pinned_version = t.meta.version  # v2: create + CTAS-append
     s1 = t.meta.current_snapshot_id
@@ -817,7 +803,7 @@ def q_maint_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """expire_snapshots + orphan-file cleanup (A27; README.md:364-381):
     only the current snapshot survives, unreferenced files are
     physically deleted, data is intact."""
-    loc = _fresh(sf_dir, "maint_expire")
+    loc = scratch("maint_expire")
     nation = load(spark, sf_dir, "nation")
     t = IceTable.create_as(spark, loc, nation.filter("n_nationkey < 10"))
     t.append(nation.filter("n_nationkey >= 10"))
@@ -839,7 +825,7 @@ def q_maint_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_maint_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rewrite_data_files compaction (A29; README.md:396-403): same
     answers, fewer files."""
-    loc = _fresh(sf_dir, "maint_compact")
+    loc = scratch("maint_compact")
     li = load(spark, sf_dir, "lineitem")
     t = IceTable.create_as(spark, loc, li.repartition(64))
     stats = t.rewrite_data_files(target_num_files=4)
@@ -872,7 +858,7 @@ def q_maint_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: this is the read-amplification story — clustering is one
     sample+range-shuffle at maintenance time and turns every later
     selective scan from O(table) into O(matching range)."""
-    loc = _fresh(sf_dir, "maint_cluster")
+    loc = scratch("maint_cluster")
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     t = IceTable.create_as(spark, loc, ev.repartition(12))
     pred = [Pred("value", "between", (2.0, 2.5))]
@@ -909,7 +895,7 @@ def q_part_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-spec evolution mid-table (A22; README.md:134-195):
     unpartitioned files coexist with year-partitioned files; a scan
     unions both layouts and matches the unpartitioned oracle."""
-    loc = _fresh(sf_dir, "part_evolution")
+    loc = scratch("part_evolution")
     orders = load(spark, sf_dir, "orders")
     old = orders.filter(F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
     new = orders.filter(F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -942,7 +928,7 @@ def q_part_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     events copy is day(ts)-partitioned; the predicate is on raw ts,
     pruning happens on the transform, answers match the oracle. The
     pruning ratio itself is asserted in tests and benchmarked."""
-    loc = _fresh(sf_dir, "part_transform")
+    loc = scratch("part_transform")
     events = load(spark, sf_dir, "events")
     t = IceTable.create_as(
         spark, loc, events, partition_spec=[spec_field("ts", "day")]
@@ -969,7 +955,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADD COLUMN then query across old+new files (A35): the repro of
     limitations.md:6-10 that crashes Impala must work here — old files
     read the new column as NULL, predicates on it work."""
-    loc = _fresh(sf_dir, "schema_evolution")
+    loc = scratch("schema_evolution")
     t = IceTable.create(spark, loc, "c1 int")
     t.insert_values([(1,)])
     t.add_column("ts", "timestamp")
@@ -997,7 +983,7 @@ def q_meta_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — the lineage a user inspects before time travel
     (/root/reference/README.md:353-362 shows the same via .history).
     """
-    loc = _fresh(sf_dir, "meta_snapshots")
+    loc = scratch("meta_snapshots")
     t = IceTable.create(spark, loc, "k int, v string")
     t.insert_values([(1, "a"), (2, "b"), (3, "c")])
     t.insert_values([(4, "d"), (5, "e")])
@@ -1030,17 +1016,17 @@ def q_meta_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     region = load(spark, sf_dir, "region")
 
-    native_loc = _fresh(sf_dir, "meta_files_native")
+    native_loc = scratch("meta_files_native")
     native = IceTable.create_as(spark, native_loc, region)
 
-    src_loc = _fresh(sf_dir, "meta_files_src")
+    src_loc = scratch("meta_files_src")
     region.coalesce(1).write.mode("overwrite").parquet(src_loc)
     parquet_files = [
         os.path.join(src_loc, f)
         for f in sorted(os.listdir(src_loc))
         if f.endswith(".parquet")
     ]
-    adopted_loc = _fresh(sf_dir, "meta_files_adopted")
+    adopted_loc = scratch("meta_files_adopted")
     adopted = IceTable.adopt(spark, adopted_loc, parquet_files)
 
     rows = []
@@ -1078,7 +1064,7 @@ def q_maint_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: multi-dimension locality from one maintenance pass — the
     layout answer when scans filter on more than one column."""
-    loc = _fresh(sf_dir, "maint_zorder")
+    loc = scratch("maint_zorder")
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     t = IceTable.create_as(spark, loc, ev.repartition(16))
     t.rewrite_data_files(target_num_files=16, zorder_by=["user_id", "value"])
@@ -1127,7 +1113,7 @@ def q_incr_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal a full recompute (the oracle). At 100 TB each refresh costs
     O(delta) + O(groups), never a table re-scan — the viability
     condition for any always-fresh rollup."""
-    loc = _fresh(sf_dir, "incr_agg")
+    loc = scratch("incr_agg")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1175,7 +1161,7 @@ def q_wap_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes staged validation free (no copy of the table, no
     cleanup scan; audit reads the staged snapshot like any other).
     """
-    loc = _fresh(sf_dir, "wap")
+    loc = scratch("wap")
     nation = load(spark, sf_dir, "nation")
     t = IceTable.create_as(spark, loc, nation)
     s_published = t.meta.current_snapshot_id
@@ -1246,7 +1232,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition while the closed rows never move (the CoW merge
     rewrites only files holding seed rows)."""
     cutoff = "1998-01-01"
-    loc = _fresh(sf_dir, "scd2_incr")
+    loc = scratch("scd2_incr")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"
     )
@@ -1297,7 +1283,7 @@ def q_tt_tag_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     different one. Each ref then reads its own file list — three
     histories over one physical table, no data copied (the shared
     990-append file is referenced by both heads)."""
-    loc = _fresh(sf_dir, "tag_branch")
+    loc = scratch("tag_branch")
     t = IceTable.create_as(spark, loc, load(spark, sf_dir, "nation"))
     t.create_tag("v1")
     t.insert_values([(990, "FAKELAND", 0)])
@@ -1343,7 +1329,7 @@ def q_meta_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same totals from the raw data, proving manifest stats are
     trustworthy (the property that makes metadata-only planning sound
     at 100 TB)."""
-    loc = _fresh(sf_dir, "meta_partitions")
+    loc = scratch("meta_partitions")
     orders = load(spark, sf_dir, "orders")
     t = IceTable.create(
         spark,
@@ -1382,7 +1368,7 @@ def q_dml_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized (`rewrite_equality_deletes`) and the answer must not
     change — proving MoR read, sequence semantics, and delete
     compaction agree."""
-    loc = _fresh(sf_dir, "delete_mor")
+    loc = scratch("delete_mor")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1419,7 +1405,7 @@ def q_dml_delete_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     file's paths can never collide with recorded positions); then
     `rewrite_position_delete_files` compacts the delete files and the
     answer must not change."""
-    loc = _fresh(sf_dir, "delete_pos")
+    loc = scratch("delete_pos")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1469,7 +1455,7 @@ def q_meta_delete_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     count must equal the positional entry's record_count."""
     from iceberg_workshop_spark.plans.sqlfront import IceSqlSession
 
-    loc = _fresh(sf_dir, "meta_delete_files")
+    loc = scratch("meta_delete_files")
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
@@ -1512,7 +1498,7 @@ def q_meta_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per named ref with its type and the row count visible at its
     head — metadata joined to a ref-addressed count, no data files
     opened for the listing itself."""
-    loc = _fresh(sf_dir, "meta_refs")
+    loc = scratch("meta_refs")
     t = IceTable.create_as(spark, loc, load(spark, sf_dir, "region"))
     t.create_tag("v1")
     t.create_branch("audit")
@@ -1544,7 +1530,7 @@ def q_part_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     files via the planner's literal-bucket computation, while the
     answer must equal the unpartitioned oracle. The scan-report
     assertion keeps the pruning honest, not just the values."""
-    loc = _fresh(sf_dir, "part_bucket")
+    loc = scratch("part_bucket")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
@@ -1578,7 +1564,7 @@ def q_part_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the transform and keeps only overlapping widths. Asserted
     ≤ 2× the ideal single-width fraction; answers equal the
     unpartitioned oracle."""
-    loc = _fresh(sf_dir, "part_truncate")
+    loc = scratch("part_truncate")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1615,7 +1601,7 @@ def q_maint_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives as a retention root. Row counts prove data is untouched;
     snapshot counts prove the log shrank by exactly the abandoned
     branch."""
-    loc = _fresh(sf_dir, "maint_manifests")
+    loc = scratch("maint_manifests")
     t = IceTable.create_as(spark, loc, load(spark, sf_dir, "region"))
     t.create_tag("keep")
     t.insert_values([(90, "DROPLAND")])
@@ -1652,7 +1638,7 @@ def q_schema_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pre-drop files — old values must NOT resurface — while
     post-re-add inserts carry real values. Metadata-only throughout:
     zero files rewritten."""
-    loc = _fresh(sf_dir, "drop_column")
+    loc = scratch("drop_column")
     customer = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
@@ -1688,7 +1674,7 @@ def q_schema_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     each file era's physical name back to the logical name — no
     rewrite, no NULL-out), post-rename appends write the new name, and
     a filter on the renamed column spans both eras."""
-    loc = _fresh(sf_dir, "rename_column")
+    loc = scratch("rename_column")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     t = IceTable.create_as(spark, loc, orders)
     t.rename_column("o_orderpriority", "priority")
@@ -1727,7 +1713,7 @@ def q_part_evolution_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket. One point predicate exercises both pruning eras in a
     single mixed-layout scan — old files all kept (sound), new files
     ~1/8 kept — and the answer equals the unpartitioned oracle."""
-    loc = _fresh(sf_dir, "part_evo_bucket")
+    loc = scratch("part_evo_bucket")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
@@ -1770,7 +1756,7 @@ def q_maint_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from directory listing."""
     import glob as _glob
 
-    loc = _fresh(sf_dir, "maint_orphans")
+    loc = scratch("maint_orphans")
     region = load(spark, sf_dir, "region")
     t = IceTable.create_as(spark, loc, region)
     stray_dir = os.path.join(loc, "data", "stray")

@@ -22,9 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.icetbl.table import IceTable
-from iceberg_workshop_spark.plans.lifecycle import _fresh
 from iceberg_workshop_spark.plans.sqlfront import IceSqlSession
-from iceberg_workshop_spark.registry import register, require
+from iceberg_workshop_spark.registry import register, require, scratch
 from iceberg_workshop_spark.sources.tables import load
 
 
@@ -48,7 +47,7 @@ def q_sql_update_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    tbl = IceTable.create_as(spark, _fresh(sf_dir, "sql_update"), supplier)
+    tbl = IceTable.create_as(spark, scratch("sql_update"), supplier)
     sess = IceSqlSession(spark)
     sess.register_table("db.suppliers", tbl)
     sess.sql(
@@ -86,7 +85,7 @@ def q_meta_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
     tbl = IceTable.create_as(
         spark,
-        _fresh(sf_dir, "meta_manifests"),
+        scratch("meta_manifests"),
         nation.filter(F.col("n_nationkey") < 10).coalesce(1),
     )
     tbl.append(
@@ -147,7 +146,7 @@ def q_tt_diff_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
     tbl = IceTable.create_as(
         spark,
-        _fresh(sf_dir, "diff_refs"),
+        scratch("diff_refs"),
         nation.filter(F.col("n_nationkey") < 10).coalesce(1),
     )
     tbl.create_branch("audit")

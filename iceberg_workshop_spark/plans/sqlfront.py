@@ -42,7 +42,6 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 import time
 from datetime import datetime, timezone
 
@@ -51,7 +50,7 @@ from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.icetbl import IceTable, spec_field
 from iceberg_workshop_spark.plans import catalyst as C
-from iceberg_workshop_spark.registry import register, require
+from iceberg_workshop_spark.registry import register, require, scratch
 
 # -- forms Spark's grammar rejects ------------------------------------
 # Matched before the parse, so a supported statement never makes the
@@ -503,11 +502,18 @@ class IceSqlSession:
         self.tables: dict[str, IceTable] = {}
         self.views: dict[str, DataFrame] = {}
         self.databases: set[str] = set()
-        self.scratch = scratch or tempfile.mkdtemp(prefix="iws_sqlfront_")
+        self._dir = scratch
         # materialized views: name -> {src, base_sid, group, aggs, where}
         self.mviews: dict[str, dict] = {}
         self.location_map = dict(location_map or {})
         self._patterns = C.Patterns(spark)
+
+    def _location(self, name: str) -> str:
+        """Location of a table the session creates without LOCATION;
+        the directory is taken from ``registry.scratch`` on first need."""
+        if self._dir is None:
+            self._dir = scratch("sqlfront")
+        return os.path.join(self._dir, name)
 
     def register_table(self, name: str, tbl: IceTable) -> None:
         self.tables[name] = tbl
@@ -1204,7 +1210,7 @@ class IceSqlSession:
         loc = (
             self._resolve_location(loc)
             if loc
-            else os.path.join(self.scratch, _view_name(name))
+            else self._location(_view_name(name))
         )
         if df is not None:
             tbl = IceTable.create_as(self.spark, loc, df, partition_spec=spec or None)
@@ -1301,7 +1307,7 @@ class IceSqlSession:
             spec.update(src=C.name_of(node), base_sid=tbl.meta.current_snapshot_id)
             rows = tbl.read()
         self.mviews[name] = spec
-        mv_loc = os.path.join(self.scratch, "mv_" + _view_name(name))
+        mv_loc = self._location("mv_" + _view_name(name))
         self.tables[name] = IceTable.create_as(
             self.spark, mv_loc, self._mv_aggregate(rows, name)
         )
@@ -1985,9 +1991,7 @@ def _stage_workshop_csvs(sf_dir: str, name: str) -> dict[str, str]:
     """Materialize the workshop's CSV drop zone (deterministic mini
     flights/airlines files with header rows) and return the
     location_map that points the scripts' s3a URIs at it."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
-
-    root = _fresh(sf_dir, name)
+    root = scratch(name)
     fdir = os.path.join(root, "flights")
     adir = os.path.join(root, "airlines")
     os.makedirs(fdir)
@@ -2219,7 +2223,6 @@ def q_sql_insert_overwrite_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition — the one present in the incoming SELECT — is replaced;
     all other year partitions carry into the new snapshot by identity
     (file-count asserted). The prior state stays time-travelable."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     from pyspark.sql import functions as F
@@ -2232,7 +2235,7 @@ def q_sql_insert_overwrite_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tbl = IceTable.create_as(
         spark,
-        _fresh(sf_dir, "sql_insert_overwrite"),
+        scratch("sql_insert_overwrite"),
         orders.drop("o_orderdate"),
         partition_spec=[spec_field("yr", "identity")],
     )
@@ -2268,12 +2271,11 @@ def q_sql_call_maintenance_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     and `CALL catalog_name.system.rewrite_manifests('db.sample')` —
     compaction + manifest rewrite must leave answers untouched (exact
     oracle over the source fixture) while reducing file count."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     nation = load(spark, sf_dir, "nation")
     tbl = IceTable.create_as(
-        spark, _fresh(sf_dir, "sql_call_maint"), nation.repartition(8)
+        spark, scratch("sql_call_maint"), nation.repartition(8)
     )
     sess = IceSqlSession(spark)
     sess.register_table("db.sample", tbl)
@@ -2306,13 +2308,12 @@ def q_sql_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned exactly for this scripted history."""
     from pyspark.sql import functions as F
 
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     nation = load(spark, sf_dir, "nation")
     tbl = IceTable.create_as(
         spark,
-        _fresh(sf_dir, "sql_meta_tables"),
+        scratch("sql_meta_tables"),
         nation.filter("n_regionkey <> 4").coalesce(1),
     )
     tbl.append(nation.filter("n_regionkey = 4").coalesce(1))
@@ -2363,13 +2364,12 @@ def q_sql_show_stmts(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching an unfamiliar catalog."""
     from pyspark.sql import functions as F
 
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     nation = load(spark, sf_dir, "nation")
-    t1 = IceTable.create_as(spark, _fresh(sf_dir, "show_t1"), nation)
+    t1 = IceTable.create_as(spark, scratch("show_t1"), nation)
     t2 = IceTable.create(
-        spark, _fresh(sf_dir, "show_t2"), "id bigint, v string"
+        spark, scratch("show_t2"), "id bigint, v string"
     )
     sess = IceSqlSession(spark)
     sess.register_table("db.nation_ice", t1)
@@ -2415,12 +2415,11 @@ def q_sql_call_rewrite_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     files."""
     from pyspark.sql import functions as F
 
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     tbl = IceTable.create_as(
-        spark, _fresh(sf_dir, "sql_call_sort"), ev.repartition(12)
+        spark, scratch("sql_call_sort"), ev.repartition(12)
     )
     sess = IceSqlSession(spark)
     sess.register_table("db.events_cl", tbl)
@@ -2495,11 +2494,10 @@ def q_sql_cdc_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. The reference's interop story is multiple engines committing
     to one table (interoperability.md:64-90); branches + cherry-pick
     is how an engine stages without publishing."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     nation = load(spark, sf_dir, "nation")
-    t = IceTable.create_as(spark, _fresh(sf_dir, "sql_cdc_wap"), nation)
+    t = IceTable.create_as(spark, scratch("sql_cdc_wap"), nation)
     s1 = t.meta.current_snapshot_id
     sess = IceSqlSession(spark)
     sess.register_table("db.nation_wap", t)
@@ -2587,10 +2585,8 @@ def _airlines_session(
 ) -> tuple[IceSqlSession, IceTable]:
     """A fresh airlines IceTable + staging view, per the workshop's
     CREATE ... AS SELECT * FROM staging.airlines_parquet."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
-
     staging = spark.createDataFrame(_AIRLINES, "code string, description string")
-    tbl = IceTable.create_as(spark, _fresh(sf_dir, name), staging)
+    tbl = IceTable.create_as(spark, scratch(name), staging)
     sess = IceSqlSession(spark)
     sess.register_table(table_name, tbl)
     sess.register_view("staging.airlines_parquet", staging)
@@ -2625,14 +2621,13 @@ def q_sql_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the final rollup from scratch; matching it proves the
     delta application, the WHERE pushdown into the delta, and the
     group-liveness (COUNT>0) rule."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
     t = IceTable.create_as(
-        spark, _fresh(sf_dir, "sql_mv"), orders.filter("o_orderkey % 4 = 0")
+        spark, scratch("sql_mv"), orders.filter("o_orderkey % 4 = 0")
     )
     sess = IceSqlSession(spark)
     sess.register_table("db.orders_mv_src", t)
@@ -2681,7 +2676,6 @@ def q_sql_materialized_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta Δ(A⋈B) = ΔA⋈B_new + A_old⋈ΔB — each term signed by its own
     changelog. The oracle re-joins the final snapshots from scratch;
     matching it proves the algebra through the SQL surface."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     orders = load(spark, sf_dir, "orders").select(
@@ -2689,9 +2683,9 @@ def q_sql_materialized_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     t_o = IceTable.create_as(
-        spark, _fresh(sf_dir, "sql_mvj_o"), orders.filter("o_orderkey % 4 = 0")
+        spark, scratch("sql_mvj_o"), orders.filter("o_orderkey % 4 = 0")
     )
-    t_c = IceTable.create_as(spark, _fresh(sf_dir, "sql_mvj_c"), cust)
+    t_c = IceTable.create_as(spark, scratch("sql_mvj_c"), cust)
     sess = IceSqlSession(spark)
     sess.register_table("db.mvj_orders", t_o)
     sess.register_table("db.mvj_cust", t_c)
@@ -2779,11 +2773,10 @@ def q_sql_merge_evolution_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge, pre-existing rows read it as NULL (column-creation-sequence
     era rule), and matched/inserted rows carry source values — the
     Iceberg/Delta mergeSchema upsert in one statement."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     region = load(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    t = IceTable.create_as(spark, _fresh(sf_dir, "sql_merge_evo"), region)
+    t = IceTable.create_as(spark, scratch("sql_merge_evo"), region)
     sess = IceSqlSession(spark)
     sess.register_table("db.region_evo", t)
     src = spark.createDataFrame(
@@ -2823,9 +2816,8 @@ def q_schema_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries a value that cannot fit the old type. CoW DML across the
     widening boundary is covered by unit tests (the same era machinery
     serves the _metadata-based affected-file discovery)."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
 
-    t = IceTable.create(spark, _fresh(sf_dir, "schema_widen"), "k int, v int")
+    t = IceTable.create(spark, scratch("schema_widen"), "k int, v int")
     t.insert_values([(1, 10), (2, 20)])
     sess = IceSqlSession(spark)
     sess.register_table("db.widen", t)
@@ -2893,9 +2885,6 @@ def q_sql_write_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     it back in write.sort-order, so an adopted table keeps the
     clustering contract (reference anchor:
     /root/reference/pyspark-iceberg/interoperability.md:85-112)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from iceberg_workshop_spark.icetbl.iceformat import (
@@ -2904,13 +2893,12 @@ def q_sql_write_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
         resolve_iceberg_metadata,
     )
     from iceberg_workshop_spark.icetbl.sortorder import parse_sort_order
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     tbl = IceTable.create(
         spark,
-        _fresh(sf_dir, "sql_write_ordered"),
+        scratch("sql_write_ordered"),
         "event_id bigint, user_id bigint, value double",
     )
     sess = IceSqlSession(spark)
@@ -2936,31 +2924,25 @@ def q_sql_write_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # order round trip: export -> real sort-order fields -> import ->
     # the adopted table re-declares the same write.sort-order
-    tmp = tempfile.mkdtemp(prefix="iws_wo_")
-    try:
-        dest = os.path.join(tmp, "ice")
-        export_iceberg(tbl, dest)
-        doc = resolve_iceberg_metadata(dest)
-        orders = {
-            int(o["order-id"]): o.get("fields", [])
-            for o in doc.get("sort-orders", [])
-        }
-        exported = [
-            (f["transform"], f["direction"], f["null-order"])
-            for f in orders.get(int(doc.get("default-sort-order-id", 0)), [])
-        ] == [
-            ("identity", "desc", "nulls-last"),
-            ("identity", "asc", "nulls-first"),
-        ]
-        adopted = import_iceberg(spark, dest, os.path.join(tmp, "adopt"))
-        back = parse_sort_order(
-            adopted.meta.properties.get("write.sort-order", "")
-        )
-        roundtrip = exported and back == parse_sort_order(
-            "value DESC NULLS LAST, user_id ASC NULLS FIRST"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    dest = scratch("ice")
+    export_iceberg(tbl, dest)
+    doc = resolve_iceberg_metadata(dest)
+    orders = {
+        int(o["order-id"]): o.get("fields", [])
+        for o in doc.get("sort-orders", [])
+    }
+    exported = [
+        (f["transform"], f["direction"], f["null-order"])
+        for f in orders.get(int(doc.get("default-sort-order-id", 0)), [])
+    ] == [
+        ("identity", "desc", "nulls-last"),
+        ("identity", "asc", "nulls-first"),
+    ]
+    adopted = import_iceberg(spark, dest, scratch("adopt"))
+    back = parse_sort_order(adopted.meta.properties.get("write.sort-order", ""))
+    roundtrip = exported and back == parse_sort_order(
+        "value DESC NULLS LAST, user_id ASC NULLS FIRST"
+    )
     return res.withColumn("pruned", F.lit(bool(pruned))).withColumn(
         "order_roundtrip", F.lit(bool(roundtrip))
     )
@@ -3006,14 +2988,13 @@ def q_sql_merge_nmbs_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked, not just parsed."""
     from pyspark.sql import functions as F
 
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     tbl = IceTable.create_as(
-        spark, _fresh(sf_dir, "sql_merge_nmbs"), orders.filter("o_orderkey % 4 = 0")
+        spark, scratch("sql_merge_nmbs"), orders.filter("o_orderkey % 4 = 0")
     )
     sess = IceSqlSession(spark)
     sess.register_table("ice.orders_sub", tbl)
@@ -3059,7 +3040,6 @@ def q_sql_delete_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE FROM ... WHERE as SQL text — the statement of
     /root/reference/pyspark-iceberg/interoperability.md:128 verbatim,
     on a table with the same column name (c1)."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     from pyspark.sql import functions as F
@@ -3067,7 +3047,7 @@ def q_sql_delete_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c1"), F.col("n_name").alias("c2")
     )
-    tbl = IceTable.create_as(spark, _fresh(sf_dir, "sql_delete"), nation)
+    tbl = IceTable.create_as(spark, scratch("sql_delete"), nation)
     sess = IceSqlSession(spark)
     sess.register_table("hive_cdp.mengel.ice", tbl)
     sess.sql("DELETE FROM hive_cdp.mengel.ice WHERE c1 = 1")
@@ -3092,13 +3072,12 @@ def q_sql_analyze_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimizer consumes; SHOW TBLPROPERTIES surfaces them). The result
     frame re-reads the PROPERTIES, so the oracle match proves the
     whole loop: compute → persist → surface."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    tbl = IceTable.create_as(spark, _fresh(sf_dir, "sql_analyze"), orders)
+    tbl = IceTable.create_as(spark, scratch("sql_analyze"), orders)
     sess = IceSqlSession(spark)
     sess.register_table("db.an", tbl)
     sess.sql(
@@ -3134,7 +3113,6 @@ def q_sql_delete_mor_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(matching rows) commit) instead of rewriting data files. require()
     pins the routing: the data file set is untouched and the head
     snapshot carries a pos-delete entry; the read applies it."""
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.registry import require
     from iceberg_workshop_spark.sources.tables import load
 
@@ -3143,7 +3121,7 @@ def q_sql_delete_mor_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").alias("c2"),
         F.col("n_regionkey").alias("c3"),
     )
-    tbl = IceTable.create_as(spark, _fresh(sf_dir, "sql_delete_mor"), nation)
+    tbl = IceTable.create_as(spark, scratch("sql_delete_mor"), nation)
     before_files = {f["path"] for f in tbl.meta.current_files()}
     sess = IceSqlSession(spark)
     sess.register_table("db.ice_mor", tbl)

@@ -21,6 +21,9 @@ import contextlib
 import contextvars
 import functools
 import importlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
@@ -132,6 +135,7 @@ def guard_axis(axis: DataFrame, query: str, max_grid: int) -> DataFrame:
 class _Scope:
     frames: list[DataFrame] = field(default_factory=list)
     confs: dict[str, str | None] = field(default_factory=dict)
+    root: str | None = None
 
 
 _SCOPE: contextvars.ContextVar[_Scope | None] = contextvars.ContextVar(
@@ -169,16 +173,36 @@ def set_conf(spark: SparkSession, key: str, value: str) -> None:
     spark.conf.set(key, value)
 
 
+def scratch(name: str) -> str:
+    """A path named ``name`` that does not exist yet, for files the
+    current invocation writes; the scope removes it on exit.
+
+    Scratch lives under ``$SPARK_GRAFT_SCRATCH`` (default: the system
+    temp dir), in one root per invocation, created on the first call.
+    Outside an invocation the path lies in a fresh directory the
+    caller owns."""
+    base = os.environ.get("SPARK_GRAFT_SCRATCH") or tempfile.gettempdir()
+    os.makedirs(base, exist_ok=True)
+    scope = _SCOPE.get()
+    if scope is None:
+        return os.path.join(tempfile.mkdtemp(prefix="iws_", dir=base), name)
+    if scope.root is None:
+        scope.root = tempfile.mkdtemp(prefix="iws_call_", dir=base)
+    return os.path.join(tempfile.mkdtemp(dir=scope.root), name)
+
+
 @contextlib.contextmanager
 def invocation(spark: SparkSession) -> Iterator[_Scope]:
     """One invocation scope: on exit, normal or not, unpersist every
-    ``persist`` frame, restore every ``set_conf`` key and drop every
-    local temp view created inside. Frames built over a dropped view
-    stay valid (their plans are analyzed). Scopes nest; each releases
-    only what was taken inside it. Assumes one thread per session:
-    views another thread creates meanwhile would be dropped too."""
+    ``persist`` frame, remove the ``scratch`` root, restore every
+    ``set_conf`` key and drop every local temp view and database
+    created inside. Frames built over a dropped view stay valid (their
+    plans are analyzed). Scopes nest; each releases only what was
+    taken inside it. Assumes one thread per session: views another
+    thread creates meanwhile would be dropped too."""
     catalog = spark._jsparkSession.sessionState().catalog()
     views = catalog.listLocalTempViews("*")
+    databases = catalog.listDatabases()
     scope = _Scope()
     token = _SCOPE.set(scope)
     try:
@@ -187,6 +211,8 @@ def invocation(spark: SparkSession) -> Iterator[_Scope]:
         _SCOPE.reset(token)
         for df in scope.frames:
             df.unpersist()
+        if scope.root is not None:
+            shutil.rmtree(scope.root, ignore_errors=True)
         for key, prior in scope.confs.items():
             if prior is None:
                 spark.conf.unset(key)
@@ -195,6 +221,9 @@ def invocation(spark: SparkSession) -> Iterator[_Scope]:
         new = catalog.listLocalTempViews("*").diff(views)
         for i in range(new.size()):
             catalog.dropTempView(new.apply(i).table())
+        new = catalog.listDatabases().diff(databases)
+        for i in range(new.size()):
+            spark.sql(f"DROP DATABASE IF EXISTS `{new.apply(i)}` CASCADE")
 
 
 def register(
@@ -206,15 +235,16 @@ def register(
     ``tags`` attaches advisory metadata (see ``TAGS``).
 
     Every call runs in its own ``invocation`` scope. A query that
-    persisted anything gets its result checkpointed (one eager job)
-    before the scope releases the frames the result was built from."""
+    persisted anything or took ``scratch`` gets its result
+    checkpointed (one eager job) before the scope releases the frames
+    and files the result was built from."""
 
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def scoped(spark: SparkSession, *args, **kwargs) -> DataFrame:
             with invocation(spark) as scope:
                 out = fn(spark, *args, **kwargs)
-                if scope.frames:
+                if scope.frames or scope.root:
                     out = out.localCheckpoint(eager=True)
                 return out
 

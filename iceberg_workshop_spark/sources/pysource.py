@@ -39,7 +39,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from iceberg_workshop_spark.registry import register, set_conf
+from iceberg_workshop_spark.registry import register, scratch, set_conf
 
 SEQ_ROWS = 10_000
 SEQ_PARTS = 8
@@ -128,10 +128,22 @@ class TicksDataSource(DataSource):
         return _TicksStreamReader()
 
 
+def register_source(spark: SparkSession, source: type[DataSource]) -> None:
+    """Register a Python data source once per session.
+
+    Session setup, like the fixture-reader confs in
+    ``sources/tables.py``, not invocation state: Spark 4.1 cannot
+    unregister a data source, so no scope could give one back, and
+    registering it again on every call only replaces the same class.
+    Skipped when the session already knows the name."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(source.name()):
+        spark.dataSource.register(source)
+
+
 def _register_sources(spark: SparkSession) -> None:
-    """Idempotent registration of both custom formats."""
-    spark.dataSource.register(SeqDataSource)
-    spark.dataSource.register(TicksDataSource)
+    register_source(spark, SeqDataSource)
+    register_source(spark, TicksDataSource)
 
 
 @register(
@@ -454,16 +466,15 @@ def q_stream_ice_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/pyspark-iceberg/interoperability.md:64-90 —
     engines coordinating through table metadata)."""
     from iceberg_workshop_spark.icetbl import IceTable
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
     from iceberg_workshop_spark.sources.tables import load
     from iceberg_workshop_spark.streaming.stateful import _drain
 
-    loc = _fresh(sf_dir, "stream_ice_table")
+    loc = scratch("stream_ice_table")
     orders = load(spark, sf_dir, "orders")
     t = IceTable.create_as(spark, loc, orders.filter("o_orderkey % 41 = 0"))
     t.append(orders.filter("o_orderkey % 41 = 1"))
     t.append(orders.filter("o_orderkey % 41 = 2"))
-    spark.dataSource.register(IceStreamDataSource)
+    register_source(spark, IceStreamDataSource)
     src = (
         spark.readStream.format("iws_ice_stream")
         .option("location", loc)
@@ -568,19 +579,11 @@ def q_source_python_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated across task files + commit."""
     import json as _json
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from iceberg_workshop_spark.sources.tables import load
 
-    spark.dataSource.register(JsonlSinkDataSource)
-    out = _os.path.join(
-        _tempfile.gettempdir(),
-        "iws_pysink",
-        _os.path.basename(sf_dir.rstrip("/")),
-    )
-    if _os.path.exists(out):
-        _shutil.rmtree(out)
+    register_source(spark, JsonlSinkDataSource)
+    out = scratch("pysink")
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     docs.write.format("iws_jsonl").mode("append").option("path", out).save()
     with open(_os.path.join(out, "_MANIFEST")) as fh:
@@ -710,7 +713,7 @@ def q_source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     the optimizer reads it when the plan executes, so the one-row
     result is checkpointed before the conf goes back."""
     set_conf(spark, "spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(BucketPushDataSource)
+    register_source(spark, BucketPushDataSource)
     df = (
         spark.read.format("iws_bucketed")
         .option("rows", str(PUSH_ROWS))

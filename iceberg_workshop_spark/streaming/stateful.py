@@ -19,13 +19,12 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.exprs import dsum
-from iceberg_workshop_spark.registry import register, set_conf
+from iceberg_workshop_spark.registry import register, scratch, set_conf
 from iceberg_workshop_spark.sources.tables import read_nanos_as_long
 
 _sink_ids = itertools.count()
@@ -87,7 +86,7 @@ def _drain(
         .outputMode(output_mode)
         .option(
             "checkpointLocation",
-            checkpoint or tempfile.mkdtemp(prefix="iws_ckpt_"),
+            checkpoint or scratch("checkpoint"),
         )
         .trigger(availableNow=True)
         .start()
@@ -360,9 +359,8 @@ def q_stream_sink_icetbl(spark: SparkSession, sf_dir: str) -> DataFrame:
     across micro-batch history, and compaction (q_maint_compact)
     absorbs the small-file stream afterwards."""
     from iceberg_workshop_spark.icetbl import IceTable
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
 
-    loc = _fresh(sf_dir, "stream_sink")
+    loc = scratch("stream_sink")
     t = IceTable.create(
         spark,
         loc,
@@ -379,7 +377,7 @@ def q_stream_sink_icetbl(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = (
         _events_stream(spark, sf_dir)
         .writeStream.foreachBatch(land)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="iws_ckpt_"))
+        .option("checkpointLocation", scratch("checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
@@ -463,9 +461,8 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     from iceberg_workshop_spark.icetbl import IceTable
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
 
-    loc = _fresh(sf_dir, "cdc_upsert")
+    loc = scratch("cdc_upsert")
     t = IceTable.create(
         spark, loc, "user_id bigint, last_event_id bigint, last_value double"
     )
@@ -488,7 +485,7 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = (
         _events_stream(spark, sf_dir)
         .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="iws_ckpt_"))
+        .option("checkpointLocation", scratch("checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
@@ -771,7 +768,7 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    ckpt = tempfile.mkdtemp(prefix="iws_ckpt_statereader_")
+    ckpt = scratch("checkpoint")
     _drain(agg, "complete", checkpoint=ckpt)  # same drain protocol
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
@@ -809,12 +806,14 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     group columns, and the MV table's own snapshot history doubles as
     the rollup's audit log."""
     from iceberg_workshop_spark.icetbl import IceTable
-    from iceberg_workshop_spark.plans.lifecycle import _fresh
-    from iceberg_workshop_spark.sources.pysource import IceStreamDataSource
+    from iceberg_workshop_spark.sources.pysource import (
+        IceStreamDataSource,
+        register_source,
+    )
     from iceberg_workshop_spark.sources.tables import load
 
-    loc = _fresh(sf_dir, "stream_mv_src")
-    mv_loc = _fresh(sf_dir, "stream_mv_tgt")  # _fresh already cleans
+    loc = scratch("stream_mv_src")
+    mv_loc = scratch("stream_mv_tgt")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -851,13 +850,13 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one atomic overwrite per micro-batch — no empty-MV window
         mv.insert_overwrite(merged)
 
-    spark.dataSource.register(IceStreamDataSource)
+    register_source(spark, IceStreamDataSource)
     query = (
         spark.readStream.format("iws_ice_stream")
         .option("location", loc)
         .load()
         .writeStream.foreachBatch(apply_delta)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="iws_ckpt_"))
+        .option("checkpointLocation", scratch("checkpoint"))
         .trigger(availableNow=True)
         .start()
     )

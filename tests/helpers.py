@@ -8,6 +8,9 @@ if this passes, any order-insensitive value-hash passes too.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import numpy as np
 import pandas as pd
 
@@ -76,3 +79,24 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
     a = normalize(spark_pdf)
     b = normalize(oracle_pdf)
     pd.testing.assert_frame_equal(a, b, check_exact=True, obj=name)
+
+
+def scratch_entries() -> set[str]:
+    """Top-level entries under the temp dir and ``$SPARK_GRAFT_SCRATCH``,
+    Spark's local dirs excluded: the places a query could leave files."""
+    tmp = tempfile.gettempdir()
+    roots = {tmp, os.environ.get("SPARK_GRAFT_SCRATCH") or tmp}
+    local = {
+        os.path.abspath(d)
+        for d in os.environ.get("SPARK_LOCAL_DIRS", "").split(",")
+        if d
+    }
+    entries = set()
+    for root in roots:
+        if os.path.isdir(root):
+            entries |= {os.path.abspath(os.path.join(root, e)) for e in os.listdir(root)}
+    return entries - local
+
+
+def databases(spark) -> set[str]:
+    return {d.name for d in spark.catalog.listDatabases()}

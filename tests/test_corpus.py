@@ -26,10 +26,13 @@ def _plan(df) -> str:
 
 
 def test_dpp_join_prunes_fact_partitions(spark):
-    from iceberg_workshop_spark.registry import queries
+    """The plan is read inside the invocation: on return the scope
+    checkpoints the result and removes the fact layout it staged."""
+    from iceberg_workshop_spark.registry import invocation, queries
 
-    df = queries()["q_join_dpp"](spark, SF_DIR)
-    assert "dynamicpruning" in _plan(df)
+    with invocation(spark):
+        df = queries()["q_join_dpp"].__wrapped__(spark, SF_DIR)
+        assert "dynamicpruning" in _plan(df)
 
 
 def test_keyword_tag_broadcasts_lexicon(spark):

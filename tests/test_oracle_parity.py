@@ -1,14 +1,20 @@
 """Every registered query vs its DuckDB oracle at sf0.01 — the local
 mirror of the driver's t2 gate — and the registry-wide session gate:
 each invocation must leave no cached frame, no temp view, no
-registered function and no changed conf behind."""
+registered function, no changed conf, no database and no file under
+the temp or scratch dir behind."""
 
 from __future__ import annotations
 
 import pytest
 
 from tests.conftest import SF_DIR
-from tests.helpers import assert_driver_sortable, assert_frames_match
+from tests.helpers import (
+    assert_driver_sortable,
+    assert_frames_match,
+    databases,
+    scratch_entries,
+)
 
 
 def _all_query_names():
@@ -35,6 +41,7 @@ def test_query_matches_oracle(spark, oracle, name):
     spark.catalog.clearCache()
     views, confs = _temp_views(spark), dict(spark.conf.getAll)
     funcs = _user_functions(spark)
+    entries, dbs = scratch_entries(), databases(spark)
     df = queries()[name](spark, SF_DIR)
     # Driver-canonicalizer contract: no raw ARRAY/MAP result columns —
     # the driver's pandas lexsort cannot hash them (round-8
@@ -64,6 +71,10 @@ def test_query_matches_oracle(spark, oracle, name):
     assert not changed, f"{name} left confs changed: {changed}"
     added = _user_functions(spark) - funcs
     assert not added, f"{name} left functions registered: {sorted(added)}"
+    left = scratch_entries() - entries
+    assert not left, f"{name} left files behind: {sorted(left)}"
+    left = databases(spark) - dbs
+    assert not left, f"{name} left databases: {sorted(left)}"
     sql = oracle_sql().get(name)
     if sql is None:
         # rows-only check (driver's weak path) — pin non-empty output

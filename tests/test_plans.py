@@ -203,11 +203,14 @@ def test_embed_dedup_is_distributed_tiles(spark):
 def test_ivf_partitioned_probe_prunes_partitions(spark):
     """The write-time-partitioned IVF probe must reach the index scan
     as a partition filter (directory pruning), not a post-scan filter —
-    the nprobe/k I/O bound is the whole point of the layout."""
-    from iceberg_workshop_spark.registry import queries
+    the nprobe/k I/O bound is the whole point of the layout. The plan
+    is read inside the invocation: on return the scope checkpoints the
+    result and removes the index it wrote."""
+    from iceberg_workshop_spark.registry import invocation, queries
 
-    df = queries()["q_llm_simsearch_ivf_partitioned"](spark, SF_DIR)
-    plan = _plan(df)
+    with invocation(spark):
+        fn = queries()["q_llm_simsearch_ivf_partitioned"].__wrapped__
+        plan = _plan(fn(spark, SF_DIR))
     assert "PartitionFilters" in plan
     seg = plan.split("PartitionFilters")[1][:200]
     assert "ivf_cluster" in seg
