@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from iceberg_workshop_spark.icetbl import meta as M
+from iceberg_workshop_spark.icetbl import transforms
 from iceberg_workshop_spark.icetbl.avroio import read_avro, write_avro
 from iceberg_workshop_spark.icetbl.morread import (
     DeleteFile,
@@ -560,76 +561,6 @@ def stage_delete_file(
 
 # ----------------------------------------------- partition-spec export
 
-_EPOCH_DATE = None  # set lazily (datetime import kept function-local)
-
-
-def _transform_codec(
-    t: str, src_type: Any, src: str, bucket_flavor: str = "iceberg-murmur3"
-) -> tuple[Any, Any]:
-    """(Avro type, dir-string → Iceberg-value encoder) for one
-    partition transform — the value conventions both the exporter and
-    the foreign writer must emit: year/month/hour as ordinals from
-    1970, day/date as logical dates, bucket ids as ints. icetbl stores
-    partition values as the dir strings Spark wrote; Iceberg stores
-    TYPED values."""
-    import datetime as _dt
-
-    epoch = _dt.date(1970, 1, 1)
-    if t.startswith("bucket["):
-        if bucket_flavor != "iceberg-murmur3":
-            raise ValueError(
-                f"partition transform {t} on {src!r}: this table was "
-                "bucketed with Spark's hash (legacy, pre-murmur3), "
-                "not Iceberg's murmur3 — exported bucket ids would "
-                "mislead a real engine's pruning; rewrite the table "
-                "to re-bucket it first"
-            )
-        # the stored dir value IS the Iceberg bucket id already
-        return "int", int
-    if t == "identity":
-        if src_type == "date":
-            return (
-                {"type": "int", "logicalType": "date"},
-                lambda s, _e=epoch: (_dt.date.fromisoformat(s) - _e).days,
-            )
-        if src_type in ("int", "long", "string"):
-            avro_t = "int" if src_type == "int" else src_type
-            return avro_t, ((lambda s: s) if src_type == "string" else int)
-        raise ValueError(
-            f"identity partition on {src_type} column {src!r} is "
-            "not supported by the exporter"
-        )
-    if t == "year":
-        return "int", lambda s: int(s) - 1970
-    if t == "month":
-
-        def _enc_month(s):
-            y, m = s.split("-")
-            return (int(y) - 1970) * 12 + int(m) - 1
-
-        return "int", _enc_month
-    if t == "day":
-        return (
-            {"type": "int", "logicalType": "date"},
-            lambda s, _e=epoch: (_dt.date.fromisoformat(s) - _e).days,
-        )
-    if t == "hour":
-
-        def _enc_hour(s, _e=epoch):
-            y, m, d, h = s.split("-")
-            days = (_dt.date(int(y), int(m), int(d)) - _e).days
-            return days * 24 + int(h)
-
-        return "int", _enc_hour
-    if t.startswith("truncate["):
-        if src_type == "string":
-            return "string", lambda s: s
-        if src_type in ("int", "long"):
-            return ("int" if src_type == "int" else "long"), int
-        raise ValueError(f"truncate partition on {src_type} is not supported")
-    raise ValueError(f"unknown partition transform {t!r}")
-
-
 def _export_partitioning(
     meta: M.TableMeta,
     by_name: dict[str, dict],
@@ -638,14 +569,11 @@ def _export_partitioning(
 ) -> tuple[list[dict], list[dict], Any]:
     """ONE partition spec → (spec JSON fields, r102 Avro fields,
     entry-value encoder). icetbl stores partition values as the dir
-    strings Spark wrote (hidden `__p_*` keys); Iceberg stores TYPED
-    values — year/month/hour as ordinals from 1970, day as a date.
-    bucket[n] exports as a true bucket spec entry for tables written
-    with Iceberg's murmur3 transform (bucketing.py — every table
-    created since the switch, recorded in the ``write.bucket.hash``
-    property); LEGACY tables bucketed with Spark's hash are refused,
-    because their bucket ids would lie to a real engine's
-    bucket-pruned scans.
+    strings Spark wrote; Iceberg stores TYPED values
+    (``transforms.codec``). bucket[n] exports as a true bucket spec
+    entry for tables written with Iceberg's murmur3 transform; LEGACY
+    tables bucketed with Spark's hash are refused, because their bucket
+    ids would lie to a real engine's bucket-pruned scans.
 
     ``fids`` is the export-wide (source-id, transform, name) →
     partition-field-id registry: Iceberg assigns partition field ids
@@ -653,9 +581,6 @@ def _export_partitioning(
     specs), and a field shared by several specs keeps one id — a
     partition-EVOLVED table exports one entry per spec through this
     function."""
-    import datetime as _dt
-
-    epoch = _dt.date(1970, 1, 1)
     spec = (
         meta.specs[spec_id]
         if meta.specs and 0 <= spec_id < len(meta.specs)
@@ -674,13 +599,11 @@ def _export_partitioning(
         fid = fids.setdefault(
             (src_field["id"], t, name), 1000 + len(fids)
         )
-        src_type = src_field["type"]
-        flavor = (
-            str((meta.properties or {}).get("write.bucket.hash", "spark"))
-            if t.startswith("bucket[")
-            else "iceberg-murmur3"
+        c = transforms.codec(
+            t, src_field["type"], src, transforms.bucket_flavor(meta.properties)
         )
-        avro_t, enc = _transform_codec(t, src_type, src, flavor)
+        if c.avro_type is None:
+            raise ValueError(f"unknown partition transform {t!r}")
         # Avro field names forbid brackets etc.; Iceberg sanitizes
         # partition field names the same way (AvroSchemaUtil
         # makeCompatibleName) — engines map by field-id regardless
@@ -698,29 +621,16 @@ def _export_partitioning(
         avro_fields.append(
             {
                 "name": safe,
-                "type": ["null", avro_t],
+                "type": ["null", c.avro_type],
                 "default": None,
                 "field-id": fid,
             }
         )
-        encoders.append((name, safe, enc))
+        encoders.append((name, safe, c.encode))
 
     def encode(entry: dict) -> dict:
-        import urllib.parse as _up
-
         part = entry.get("partition") or {}
-        out = {}
-        for name, safe, enc in encoders:
-            # dir-derived keys keep Spark's percent-encoding for
-            # non-alnum spec names (brackets in truncate[w])
-            raw = part.get(name)
-            if raw is None:
-                raw = part.get(_up.quote(name, safe=""))
-            if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-                out[safe] = None
-            else:
-                out[safe] = enc(raw)
-        return out
+        return {safe: enc(part.get(name)) for name, safe, enc in encoders}
 
     return spec_json, avro_fields, encode
 
@@ -2291,68 +2201,25 @@ def _import_one_spec(
     """One foreign spec's fields → (icetbl SpecField list, TYPED
     partition-tuple → dir-string decoder), or ``None`` when a
     transform's dir-string convention cannot be reproduced."""
-    import datetime as _dt
-
-    name_by_id = {f["id"]: f["name"] for f in _current_schema(doc)}
-    epoch = _dt.date(1970, 1, 1)
-
-    def _date_str(days: int) -> str:
-        return (epoch + _dt.timedelta(days=int(days))).isoformat()
-
+    field_by_id = {f["id"]: f for f in _current_schema(doc)}
     decoders: list[tuple[str, Any]] = []
     spec_fields: list[dict] = []
     for f in fields:
         t, pname = f["transform"], f["name"]
-        src = name_by_id.get(f.get("source-id"))
+        src = field_by_id.get(f.get("source-id"))
         if src is None:
             return None
-        if t == "identity":
-            # identity values arrive typed: int/long/string, or days
-            # for date columns — resolve by the SOURCE column type
-            src_type = next(
-                (
-                    s["type"]
-                    for s in _current_schema(doc)
-                    if s["id"] == f.get("source-id")
-                ),
-                None,
-            )
-            if src_type == "date":
-                dec = _date_str
-            elif src_type in ("int", "long", "string"):
-                dec = str
-            else:
-                return None
-        elif t == "year":
-            dec = lambda v: str(1970 + int(v))  # noqa: E731
-        elif t == "month":
-            dec = lambda v: f"{1970 + int(v) // 12}-{int(v) % 12 + 1:02d}"  # noqa: E731
-        elif t == "day":
-            dec = _date_str
-        elif t == "hour":
-            dec = lambda v: (  # noqa: E731
-                _date_str(int(v) // 24) + f"-{int(v) % 24:02d}"
-            )
-        elif t.startswith("bucket[") or t.startswith("truncate["):
-            dec = str
-        elif t == "void":
-            dec = lambda v: "__HIVE_DEFAULT_PARTITION__"  # noqa: E731
-        else:
+        try:
+            decoders.append((pname, transforms.codec(t, src["type"]).decode))
+        except ValueError:
             return None
-        decoders.append((pname, dec))
         spec_fields.append(
-            {"source": src, "transform": t, "name": pname}
+            {"source": src["name"], "transform": t, "name": pname}
         )
 
     def decode(df_entry: dict) -> dict:
         part = df_entry.get("partition") or {}
-        out = {}
-        for pname, dec in decoders:
-            v = part.get(pname)
-            out[pname] = (
-                "__HIVE_DEFAULT_PARTITION__" if v is None else dec(v)
-            )
-        return out
+        return {pname: dec(part.get(pname)) for pname, dec in decoders}
 
     return spec_fields, decode
 
@@ -2445,14 +2312,7 @@ def import_iceberg(spark: SparkSession, location: str, dest: str) -> Any:
         def _install_specs(meta: M.TableMeta) -> None:
             meta.doc["partition_specs"] = spec_list
             meta.doc["current_spec_id"] = default_idx
-            if any(
-                str(f.get("transform", "")).startswith("bucket[")
-                for sp in spec_list
-                for f in sp
-            ):
-                meta.properties.setdefault(
-                    "write.bucket.hash", "iceberg-murmur3"
-                )
+            transforms.stamp_bucket_flavor(meta.properties, spec_list)
 
         tbl._retry_commit(_install_specs)
 
@@ -2825,16 +2685,10 @@ def _write_foreign_files(
     DEFAULT partition spec plus one data manifest ADDING them in
     commit ``c``; return the manifest-list row, or None when no file
     was written. The shared physical half of the foreign writers
-    (append, update and rewrite): hidden dir-partitioning by the
-    spec's transforms (murmur3 for ``bucket[N]``), per-file footer
-    stats as entry bounds, Iceberg partition VALUES from the shared
-    ``_transform_codec``."""
-    import urllib.parse as _up
-
-    from pyspark.sql import functions as F
+    (append, update and rewrite): ``transforms.write_partitioned``
+    (murmur3 for ``bucket[N]``), per-file footer stats as entry bounds,
+    Iceberg partition VALUES from ``transforms.codec``."""
     from pyspark.sql.types import StructType
-
-    from iceberg_workshop_spark.icetbl.stats import file_stats
 
     doc = c.doc
     fields = _current_schema(doc)
@@ -2850,7 +2704,7 @@ def _write_foreign_files(
         ),
         [],
     )
-    part_cols: list[str] = []
+    spec: list[dict] = []
     avro_fields: list[dict] = []
     encoders: list[tuple[str, Any]] = []
     for pf in spec_json:
@@ -2863,84 +2717,31 @@ def _write_foreign_files(
                 f"partition field {pf['name']!r} sources unknown field "
                 f"id {pf['source-id']} — cannot write under this spec"
             )
-        src = src_f["name"]
-        avro_t, enc = _transform_codec(t, src_f["type"], src)
-        pcol = f"__p_{pf['name']}"
-        if t.startswith("bucket["):
-            from iceberg_workshop_spark.icetbl.bucketing import (
-                with_bucket_column,
-            )
-
-            out = with_bucket_column(
-                out, pcol, src, int(t[7:-1]), declared[src].dataType
-            )
-        elif t == "identity":
-            out = out.withColumn(pcol, F.col(src))
-        elif t == "year":
-            out = out.withColumn(pcol, F.date_format(src, "yyyy"))
-        elif t == "month":
-            out = out.withColumn(pcol, F.date_format(src, "yyyy-MM"))
-        elif t == "day":
-            out = out.withColumn(pcol, F.date_format(src, "yyyy-MM-dd"))
-        elif t == "hour":
-            out = out.withColumn(
-                pcol, F.date_format(src, "yyyy-MM-dd-HH")
-            )
-        elif t.startswith("truncate["):
-            w = int(t[9:-1])
-            if src_f["type"] == "string":
-                out = out.withColumn(pcol, F.substring(src, 1, w))
-            else:
-                out = out.withColumn(
-                    pcol,
-                    (F.col(src) - F.pmod(F.col(src), F.lit(w))).cast(
-                        "int" if src_f["type"] == "int" else "long"
-                    ),
-                )
-        else:  # _transform_codec already refused unknown transforms
-            raise ValueError(f"unsupported partition transform {t!r}")
-        part_cols.append(pcol)
+        codec = transforms.codec(t, src_f["type"], src_f["name"])
+        spec.append({"source": src_f["name"], "transform": t, "name": pf["name"]})
         avro_fields.append(
             {
                 "name": pf["name"],
-                "type": ["null", avro_t],
+                "type": ["null", codec.avro_type],
                 "default": None,
                 "field-id": int(pf["field-id"]),
             }
         )
-        encoders.append((pf["name"], enc))
+        encoders.append((pf["name"], codec.encode))
 
     ddir = os.path.join(c.location, "data", f"append-{uuid.uuid4().hex[:12]}")
-    writer = out.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(ddir)
-
-    entries: list[dict] = []
-    for root, _dirs, fnames in os.walk(ddir):
-        for fname in fnames:
-            if not fname.endswith(".parquet"):
-                continue
-            fpath = os.path.join(root, fname)
-            dirvals: dict[str, str | None] = {}
-            for seg in os.path.relpath(root, ddir).split(os.sep):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    if k.startswith("__p_"):
-                        dirvals[k[4:]] = _up.unquote(v)
-            partition = {}
-            for pname, enc in encoders:
-                raw = dirvals.get(pname)
-                partition[pname] = (
-                    None
-                    if raw is None or raw == "__HIVE_DEFAULT_PARTITION__"
-                    else enc(raw)
-                )
-            n_rows, bounds = file_stats(fpath)
-            entries.append(_manifest_entry(
-                fpath, n_rows, c.sid, c.seq, partition=partition,
-                bounds=_encode_bounds(bounds, by_name),
-            ))
+    written = transforms.write_partitioned(
+        out, ddir, spec, {f.name: f.dataType for f in declared.fields},
+        transforms.MURMUR3,
+    )
+    entries = [
+        _manifest_entry(
+            path, n_rows, c.sid, c.seq,
+            partition={name: enc(partition.get(name)) for name, enc in encoders},
+            bounds=_encode_bounds(bounds, by_name),
+        )
+        for path, partition, n_rows, bounds in written
+    ]
     if not entries:
         return None
     return _write_manifest(

@@ -48,6 +48,8 @@ import time
 import uuid
 from typing import Any
 
+from iceberg_workshop_spark.icetbl.transforms import stamp_bucket_flavor
+
 METADATA_DIR = "metadata"
 DATA_DIR = "data"
 HINT_FILE = "version-hint.text"
@@ -294,6 +296,12 @@ class TableMeta:
     # -- construction ------------------------------------------------
     @staticmethod
     def empty(location: str, schema_ddl: str, spec: list[dict[str, str]]) -> "TableMeta":
+        # bucket[N] hashes with Iceberg's murmur3 (bucketing.py); the
+        # stamp lets the planner and the exporter tell these tables
+        # from legacy Spark-hash ones (bucket-specced tables only, so
+        # the property surface of ordinary tables is unchanged)
+        properties: dict[str, str] = {}
+        stamp_bucket_flavor(properties, [spec])
         return TableMeta(
             {
                 "format_version": 1,
@@ -301,22 +309,7 @@ class TableMeta:
                 "schema": schema_ddl,
                 "partition_specs": [spec],
                 "current_spec_id": 0,
-                # bucket[N] hashes with Iceberg's murmur3_x86_32 over
-                # the spec encoding (bucketing.py) — recorded as a
-                # table property (bucket-specced tables only, so the
-                # property surface of ordinary tables is unchanged) so
-                # the planner and the byte-format exporter can
-                # distinguish these tables from ones written before
-                # the switch (legacy Spark-hash buckets, which must
-                # keep Spark-hash pruning and stay export-refused).
-                "properties": (
-                    {"write.bucket.hash": "iceberg-murmur3"}
-                    if any(
-                        str(f.get("transform", "")).startswith("bucket[")
-                        for f in spec
-                    )
-                    else {}
-                ),
+                "properties": properties,
                 "snapshots": [],
                 "current_snapshot_id": None,
             },

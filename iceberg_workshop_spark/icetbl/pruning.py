@@ -24,6 +24,8 @@ from dataclasses import dataclass
 from datetime import date, datetime
 from typing import Any
 
+from iceberg_workshop_spark.icetbl.transforms import is_null_dir, transform_value
+
 # Past this many live file entries the per-file survival decision runs
 # DISTRIBUTED (spark.parallelize over the entry list with the same pure
 # functions) instead of as a driver-side CPython loop — the same
@@ -76,67 +78,6 @@ def intervals(preds: list[Pred]) -> dict[str, tuple[Any, Any]]:
     return out
 
 
-def transform_value(transform: str, v: Any) -> Any:
-    """Apply a partition transform to a literal, matching the string
-    encodings used for partition directory names at write time
-    (table._transform_expr). Sortable-string encodings make range
-    pruning a plain string comparison."""
-    if transform == "identity":
-        # Numeric literals stay numeric so the caller compares
-        # numerically against the (parsed) partition value —
-        # "2" > "10" lexicographically, so a string comparison on an
-        # int-partitioned column both over- and under-prunes.
-        if isinstance(v, (int, float)) and not isinstance(v, bool):
-            return v
-        return _part_str(v)
-    if transform in ("year", "month", "day", "hour"):
-        # TIME transforms coerce string literals to datetime; other
-        # transforms must NOT (a truncate[w] on a STRING column whose
-        # values merely look ISO-ish would otherwise compare
-        # str(datetime) — space-separated — against the raw substring
-        # dir value and over-prune, round-11 review finding)
-        if isinstance(v, str):
-            v = datetime.fromisoformat(v)
-        if transform == "year":
-            return f"{v.year:04d}"
-        if transform == "month":
-            return f"{v.year:04d}-{v.month:02d}"
-        if transform == "day":
-            return f"{v.year:04d}-{v.month:02d}-{v.day:02d}"
-        # hour: a plain DATE literal has no .hour — treat it as
-        # midnight (its day's first hour) instead of crashing
-        if isinstance(v, date) and not isinstance(v, datetime):
-            return f"{v.year:04d}-{v.month:02d}-{v.day:02d}-00"
-        return f"{v.year:04d}-{v.month:02d}-{v.day:02d}-{v.hour:02d}"
-    if transform.startswith("truncate["):
-        w = int(transform[9:-1])
-        if isinstance(v, int) and not isinstance(v, bool):
-            # numeric truncate: return the INT so the caller compares
-            # numerically — "1000" < "200" lexicographically, so a
-            # string comparison over-prunes
-            return v - v % w
-        return _part_str(v)[:w]
-    raise ValueError(f"cannot prune transform {transform}")
-
-
-def _part_str(v: Any) -> str:
-    """The string Spark writes into a partition directory for value v."""
-    if isinstance(v, bool):
-        # Spark writes lowercase 'true'/'false' dirs; Python's
-        # str(True) == 'True' would compare above 'true' and prune
-        # every matching file (round-11 review finding)
-        return str(v).lower()
-    if isinstance(v, datetime):
-        # Spark dir encoding for timestamps varies; identity-partition
-        # comparison is done on ISO seconds (both sides truncated to
-        # second precision in file_survives_partition — a literal's
-        # sub-second digits must never narrow a bound).
-        return v.strftime("%Y-%m-%d %H:%M:%S")
-    if isinstance(v, date):
-        return v.isoformat()
-    return str(v)
-
-
 def file_survives_partition(
     file_partition: dict[str, str],
     spec: list[dict[str, str]],
@@ -152,10 +93,9 @@ def file_survives_partition(
             continue  # bucket pruning handled separately (needs Spark hash)
         lo, hi = ivals[src]
         pv = file_partition[name]
-        if pv == "__HIVE_DEFAULT_PARTITION__":
-            # Spark's shared dir for NULL and empty-string partition
-            # values: the file may hold rows matching any predicate on
-            # those values, so it always survives this field
+        if is_null_dir(pv):
+            # the file may hold rows matching any predicate on NULL or
+            # the empty string, so it always survives this field
             continue
         try:
             tlo = None if lo is None else transform_value(transform, lo)

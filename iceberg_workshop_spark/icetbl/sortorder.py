@@ -178,11 +178,14 @@ def sort_exprs(tbl: Any, fields: list[dict]) -> list:
     ``repartitionByRange``/``sortWithinPartitions``: the transform
     expression (shared with hidden partitioning — write and plan must
     agree) with the declared direction and null order applied."""
+    from iceberg_workshop_spark.icetbl import transforms
+
+    types = tbl._types()
+    flavor = transforms.bucket_flavor(tbl.meta.properties)
     exprs = []
     for f in fields:
-        base = tbl._transform_expr(
-            {"source": f["source"], "transform": f["transform"],
-             "name": f["source"]}
+        base = transforms.column(
+            f["transform"], f["source"], types.get(f["source"]), flavor
         )
         if f["direction"] == "asc":
             expr = (

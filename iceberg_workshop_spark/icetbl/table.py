@@ -30,7 +30,6 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import urllib.parse
 import uuid
 from datetime import datetime, timezone
 from typing import Any
@@ -39,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.icetbl import meta as M
+from iceberg_workshop_spark.icetbl import transforms
 from iceberg_workshop_spark.icetbl.morread import (
     DeleteFile,
     bucket_expectations,
@@ -371,22 +371,7 @@ class IceTable:
         spec id they were written under, scans union per-spec pruned
         sets (replay of /root/reference/README.md:138-195)."""
         def mutate(meta: M.TableMeta) -> None:
-            if any(
-                str(f.get("transform", "")).startswith("bucket[")
-                for f in spec
-            ) and not any(
-                str(f.get("transform", "")).startswith("bucket[")
-                for old in meta.specs
-                for f in old
-            ):
-                # first bucket spec this table ever had → the murmur3
-                # flavor stamp (bucketing.py). A LEGACY table whose
-                # EXISTING specs already bucket with Spark's hash must
-                # NOT be stamped: its old files' bucket dirs would be
-                # mis-pruned under the murmur3 planner.
-                meta.properties.setdefault(
-                    "write.bucket.hash", "iceberg-murmur3"
-                )
+            transforms.stamp_bucket_flavor(meta.properties, [spec], meta.specs)
             meta.specs.append(spec)
             meta.doc["current_spec_id"] = len(meta.specs) - 1
 
@@ -399,52 +384,6 @@ class IceTable:
         self._retry_commit(mutate)
 
     # ----------------------------------------------------------- write
-    def _transform_expr(self, field: SpecField) -> F.Column:
-        src, t = field["source"], field["transform"]
-        if t == "identity":
-            return F.col(src)
-        if t == "year":
-            return F.date_format(src, "yyyy")
-        if t == "month":
-            return F.date_format(src, "yyyy-MM")
-        if t == "day":
-            return F.date_format(src, "yyyy-MM-dd")
-        if t == "hour":
-            return F.date_format(src, "yyyy-MM-dd-HH")
-        if t.startswith("bucket["):
-            n = int(t[7:-1])
-            if self._bucket_hash_flavor() == "iceberg-murmur3":
-                # Iceberg's public bucket transform (murmur3_x86_32 of
-                # the spec's value encoding — bucketing.py), so bucket
-                # ids are the SAME ids a real Iceberg engine computes
-                # and the table can cross the byte-format boundary
-                # (iceformat.export_iceberg) with a true bucket spec.
-                from iceberg_workshop_spark.icetbl.bucketing import bucket_col
-
-                return bucket_col(F.col(src), n, self._types()[src])
-            # legacy pre-murmur3 tables: keep Spark's hash so files
-            # written before the switch stay consistent with new ones
-            return F.pmod(F.hash(F.col(src)), F.lit(n))
-        if t.startswith("truncate["):
-            # Iceberg truncate[w]: numeric columns truncate to width-w
-            # VALUE ranges (v - v % w, order-preserving numerically);
-            # strings truncate to a w-char prefix. The pruner mirrors
-            # this split (pruning.transform_value) — write and plan
-            # must agree or range pruning silently drops files.
-            from pyspark.sql.types import (
-                ByteType,
-                IntegerType,
-                LongType,
-                ShortType,
-            )
-
-            w = int(t[9:-1])
-            dt = self._types().get(src)
-            if isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
-                return (F.col(src) - F.pmod(F.col(src), F.lit(w))).cast("long")
-            return F.substring(F.col(src).cast("string"), 1, w)
-        raise ValueError(f"unknown transform {t}")
-
     def _write_files(self, df: DataFrame, spec: list[SpecField], spec_id: int) -> list[dict]:
         """Write one commit's worth of immutable files under a unique
         snap dir; return their manifest entries (footer stats, no scan).
@@ -454,7 +393,6 @@ class IceTable:
         a later spec change never rewrites data (A23 semantics).
         """
         snap_dir = os.path.join(self.meta.location, M.DATA_DIR, f"snap-{uuid.uuid4().hex[:12]}")
-        part_cols = []
         out = df
         # Iceberg write.sort-order (ALTER TABLE ... WRITE ORDERED BY):
         # range-cluster + sort incoming rows so each data file carries
@@ -481,84 +419,45 @@ class IceTable:
                 )
             )
             out = out.repartitionByRange(parts, *oexprs).sortWithinPartitions(*oexprs)
-        for field in spec:
-            pcol = f"__p_{field['name']}"
-            t = field["transform"]
-            if (
-                t.startswith("bucket[")
-                and self._bucket_hash_flavor() == "iceberg-murmur3"
-            ):
-                # murmur3 bucket goes through the df-level named-chain
-                # form (bucketing.with_bucket_column): whole-stage
-                # codegen fuses the staged arithmetic, ~11x faster
-                # than the single-Column let-binding the generic
-                # transform path would produce
-                from iceberg_workshop_spark.icetbl.bucketing import (
-                    with_bucket_column,
-                )
-
-                dt = self._types()[field["source"]]
-                out = with_bucket_column(
-                    out, pcol, field["source"], int(t[7:-1]), dt
-                )
-            else:
-                out = out.withColumn(pcol, self._transform_expr(field))
-            part_cols.append(pcol)
-        # Iceberg write.distribution-mode=hash: cluster rows by their
-        # partition tuple before the partitioned write, so each hidden
-        # partition is written by ONE task instead of every task
-        # emitting a sliver per partition — the standard fix for the
-        # small-files explosion (tasks × partitions files). "range" is
-        # covered by write.sort-order above; default (none) preserves
-        # the incoming layout.
-        if (
-            part_cols
-            and not order
-            and self.meta.properties.get("write.distribution-mode") == "hash"
-        ):
-            out = out.repartition(*[F.col(c) for c in part_cols])
-        writer = out.write.mode("overwrite")
+        options = {}
         # A28 property surface: Iceberg's write.parquet.compression-codec
         # (zstd/snappy/gzip) — applied at write time, per file, so a
         # codec change never rewrites history.
         codec = self.meta.properties.get("write.parquet.compression-codec")
         if codec:
-            writer = writer.option("compression", codec)
+            options["compression"] = codec
         # Iceberg write.parquet.bloom-filter-enabled.column.X: have the
         # Parquet writer embed REAL bloom pages for external readers…
         from iceberg_workshop_spark.icetbl import bloom as B
 
-        bloom_cols = [c for c in B.bloom_columns(self.meta.properties) if c in out.columns]
+        bloom_cols = [c for c in B.bloom_columns(self.meta.properties) if c in df.columns]
         for c in bloom_cols:
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(snap_dir)
-
-        files = []
-        for root, _dirs, names in os.walk(snap_dir):
-            for fname in names:
-                if not fname.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(root, fname)
-                partition = {}
-                rel = os.path.relpath(root, snap_dir)
-                for seg in rel.split(os.sep):
-                    if "=" in seg:
-                        k, v = seg.split("=", 1)
-                        if k.startswith("__p_"):
-                            partition[k[4:]] = urllib.parse.unquote(v)
-                n, bounds = file_stats(fpath)
-                files.append(
-                    {
-                        "path": fpath,
-                        "record_count": n,
-                        "file_size": os.path.getsize(fpath),
-                        "partition": partition,
-                        "spec_id": spec_id,
-                        "bounds": bounds,
-                    }
-                )
+            options[f"parquet.bloom.filter.enabled#{c}"] = "true"
+        written = transforms.write_partitioned(
+            out, snap_dir, spec, self._types(),
+            transforms.bucket_flavor(self.meta.properties),
+            # Iceberg write.distribution-mode=hash: cluster rows by
+            # their partition tuple, so each hidden partition is
+            # written by ONE task instead of a sliver per task (the
+            # small-files fix). "range" is write.sort-order above;
+            # default (none) preserves the incoming layout.
+            cluster=(
+                not order
+                and self.meta.properties.get("write.distribution-mode") == "hash"
+            ),
+            options=options,
+        )
+        files = [
+            {
+                "path": path,
+                "record_count": n,
+                "file_size": os.path.getsize(path),
+                "partition": partition,
+                "spec_id": spec_id,
+                "bounds": bounds,
+            }
+            for path, partition, n, bounds in written
+        ]
         # …and mirror them into the manifest entries so the PLANNER can
         # skip files on equality predicates (per-file bitmaps computed
         # in one distributed pass grouped by file; the driver receives
@@ -1489,14 +1388,6 @@ class IceTable:
         )
         return df
 
-    def _bucket_hash_flavor(self) -> str:
-        """Which hash backs this table's bucket[N] dirs: tables created
-        since the murmur3 switch carry the property; older on-disk
-        tables (no property) were bucketed with Spark's hash."""
-        return str(
-            self.meta.properties.get("write.bucket.hash", "spark")
-        )
-
     def _bucket_expectations(
         self, preds: list[Pred]
     ) -> dict[tuple[int, str], str | None]:
@@ -1510,7 +1401,7 @@ class IceTable:
             b = F.pmod(F.hash(lit), F.lit(n)).alias("b")
             return str(self.spark.range(1).select(b).first()["b"])
 
-        murmur = self._bucket_hash_flavor() == "iceberg-murmur3"
+        murmur = transforms.bucket_flavor(self.meta.properties) == transforms.MURMUR3
         return bucket_expectations(
             dict(enumerate(self.meta.specs)),
             {k: t.simpleString() for k, t in types.items()},

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.exprs import dsum
-from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.registry import register, scratch
 from iceberg_workshop_spark.sources.tables import load
 
 N_BUCKETS = 8
@@ -54,32 +54,24 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     customer = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
 
-    # DROP only clears this session's in-memory catalog; the managed
-    # locations survive process restarts and block re-creation — clear
-    # both.
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for t in ("iws_orders_bucketed", "iws_customer_bucketed"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+    # a database under this call's scratch: the scope drops it and
+    # removes its files on return
+    db = "iws_bucketed"
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{scratch(db)}'")
     (
         orders.write.bucketBy(N_BUCKETS, "o_custkey")
         .sortBy("o_custkey")
-        .mode("overwrite")
         .format("parquet")
-        .saveAsTable("iws_orders_bucketed")
+        .saveAsTable(f"{db}.orders")
     )
     (
         customer.write.bucketBy(N_BUCKETS, "c_custkey")
         .sortBy("c_custkey")
-        .mode("overwrite")
         .format("parquet")
-        .saveAsTable("iws_customer_bucketed")
+        .saveAsTable(f"{db}.customer")
     )
-    o = spark.table("iws_orders_bucketed")
-    c = spark.table("iws_customer_bucketed").filter(
+    o = spark.table(f"{db}.orders")
+    c = spark.table(f"{db}.customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
     return (

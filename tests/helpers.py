@@ -81,11 +81,16 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
     pd.testing.assert_frame_equal(a, b, check_exact=True, obj=name)
 
 
-def scratch_entries() -> set[str]:
-    """Top-level entries under the temp dir and ``$SPARK_GRAFT_SCRATCH``,
-    Spark's local dirs excluded: the places a query could leave files."""
+def scratch_entries(spark) -> set[str]:
+    """Top-level entries under the temp dir, ``$SPARK_GRAFT_SCRATCH``
+    and ``spark.sql.warehouse.dir``, Spark's local dirs excluded, plus
+    the ``default`` database's tables: the places a query could leave
+    files."""
+    from urllib.parse import urlparse
+
     tmp = tempfile.gettempdir()
-    roots = {tmp, os.environ.get("SPARK_GRAFT_SCRATCH") or tmp}
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    roots = {tmp, os.environ.get("SPARK_GRAFT_SCRATCH") or tmp, warehouse}
     local = {
         os.path.abspath(d)
         for d in os.environ.get("SPARK_LOCAL_DIRS", "").split(",")
@@ -95,7 +100,12 @@ def scratch_entries() -> set[str]:
     for root in roots:
         if os.path.isdir(root):
             entries |= {os.path.abspath(os.path.join(root, e)) for e in os.listdir(root)}
-    return entries - local
+    tables = {
+        f"default.{t.name}"
+        for t in spark.catalog.listTables("default")
+        if not t.isTemporary
+    }
+    return (entries - local) | tables
 
 
 def databases(spark) -> set[str]:

@@ -3,7 +3,7 @@ translation (icetbl/iceformat.py).
 
 Pruning soundness across export→import rests on a convention parity:
 the dir-string partition values the WRITE path records (mirrored by
-``pruning.transform_value``, which the planner compares against) must
+``transforms.transform_value``, which the planner compares against) must
 survive export's typed encoding and import's decoding UNCHANGED —
 ``decode(encode(dir)) == dir`` for every transform and value. A drift
 in either direction silently mis-prunes adopted foreign tables, so
@@ -28,7 +28,7 @@ from iceberg_workshop_spark.icetbl.iceformat import (
     _export_partitioning,
     _import_one_spec,
 )
-from iceberg_workshop_spark.icetbl.pruning import transform_value
+from iceberg_workshop_spark.icetbl.transforms import transform_value
 
 _ICE_TYPE = {
     "int": "int", "long": "long", "bigint": "long",

@@ -41,7 +41,7 @@ def test_query_matches_oracle(spark, oracle, name):
     spark.catalog.clearCache()
     views, confs = _temp_views(spark), dict(spark.conf.getAll)
     funcs = _user_functions(spark)
-    entries, dbs = scratch_entries(), databases(spark)
+    entries, dbs = scratch_entries(spark), databases(spark)
     df = queries()[name](spark, SF_DIR)
     # Driver-canonicalizer contract: no raw ARRAY/MAP result columns —
     # the driver's pandas lexsort cannot hash them (round-8
@@ -71,7 +71,7 @@ def test_query_matches_oracle(spark, oracle, name):
     assert not changed, f"{name} left confs changed: {changed}"
     added = _user_functions(spark) - funcs
     assert not added, f"{name} left functions registered: {sorted(added)}"
-    left = scratch_entries() - entries
+    left = scratch_entries(spark) - entries
     assert not left, f"{name} left files behind: {sorted(left)}"
     left = databases(spark) - dbs
     assert not left, f"{name} left databases: {sorted(left)}"

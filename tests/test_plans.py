@@ -72,10 +72,11 @@ def test_bucketed_join_has_no_hash_exchange(spark):
     and the groupBy on the bucket key reuses the bucket partitioning
     (partial→final HashAggregate with no Exchange between). The only
     allowed exchange is the final ORDER BY's range partitioning."""
-    from iceberg_workshop_spark.registry import queries
+    from iceberg_workshop_spark.registry import invocation, queries
 
-    df = queries()["q_join_bucketed"](spark, SF_DIR)
-    plan = _plan(df)
+    with invocation(spark):
+        df = queries()["q_join_bucketed"].__wrapped__(spark, SF_DIR)
+        plan = _plan(df)
     assert plan.count("Bucketed: true") == 2
     assert "Exchange hashpartitioning" not in plan
 

@@ -176,3 +176,31 @@ def test_insert_values_columns_bind_by_name(spark, tmp_path):
     assert (row.a, row.b, row.c) == (1, 7, None)
     with pytest.raises(ValueError, match="not in table"):
         t.insert_values([(1,)], columns=["zz"])
+
+
+def test_bucket_pruning_with_an_escaped_field_name(spark, tmp_path):
+    """``PARTITIONED BY (bucket(8, id))`` names the field
+    ``id_bucket[8]``, a name Spark percent-escapes in the directory
+    key. The recorded partition is keyed by the field name, so bucket
+    pruning keeps exactly the files it keeps for a plain-named field."""
+    from iceberg_workshop_spark.icetbl import spec_field
+    from iceberg_workshop_spark.plans.sqlfront import IceSqlSession
+
+    df = spark.range(0, 4000, 1, 4).selectExpr("id", "CAST(id AS STRING) AS v")
+    s = IceSqlSession(spark, scratch=str(tmp_path / "sess"))
+    s.sql("CREATE TABLE t (id BIGINT, v STRING) PARTITIONED BY (bucket(8, id))")
+    escaped = s.tables["t"]
+    assert [f["name"] for f in escaped.meta.specs[0]] == ["id_bucket[8]"]
+    escaped.append(df)
+    plain = IceTable.create(
+        spark, str(tmp_path / "plain"), "id BIGINT, v STRING",
+        [spec_field("id", "bucket[8]", "idb")],
+    )
+    plain.append(df)
+
+    got = sorted(tuple(r) for r in s.sql("SELECT * FROM t WHERE id = 5").collect())
+    want = sorted(tuple(r) for r in plain.scan([Pred("id", "=", 5)]).collect())
+    assert got == want == [(5, "5")]
+    rep, ref = escaped.last_scan_report, plain.last_scan_report
+    assert rep["files_total"] == ref["files_total"]
+    assert rep["files_scanned"] == ref["files_scanned"] < ref["files_total"]

@@ -22,11 +22,8 @@ from datetime import datetime, timedelta
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from iceberg_workshop_spark.icetbl.pruning import (
-    Pred,
-    prune_files,
-    transform_value,
-)
+from iceberg_workshop_spark.icetbl.pruning import Pred, prune_files
+from iceberg_workshop_spark.icetbl.transforms import transform_value
 
 BASE = datetime(2023, 11, 20)  # spans a year boundary within ~90 days
 

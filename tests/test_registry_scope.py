@@ -114,11 +114,11 @@ def test_scratch_is_removed_when_the_query_raises(spark, scoped):
         assert os.listdir(paths[0])
         raise RuntimeError("boom")
 
-    before = scratch_entries()
+    before = scratch_entries(spark)
     with pytest.raises(RuntimeError, match="boom"):
         boom(spark, "unused")
     assert not os.path.exists(paths[0])
-    assert scratch_entries() == before
+    assert scratch_entries(spark) == before
 
 
 def test_disk_gate_sees_a_directory_made_outside_scratch(spark, scoped):
@@ -131,12 +131,35 @@ def test_disk_gate_sees_a_directory_made_outside_scratch(spark, scoped):
         made.append(tempfile.mkdtemp())
         return spark.range(1)
 
-    before = scratch_entries()
+    before = scratch_entries(spark)
     try:
         leak(spark, "unused")
-        assert scratch_entries() - before == {os.path.abspath(made[0])}
+        assert scratch_entries(spark) - before == {os.path.abspath(made[0])}
     finally:
         shutil.rmtree(made[0], ignore_errors=True)
+
+
+def test_disk_gate_sees_a_table_saved_to_the_warehouse(spark, scoped):
+    """A query that saves a managed table into the ``default`` database
+    leaves both a catalog entry and a warehouse directory the check
+    reports."""
+    from urllib.parse import urlparse
+
+    @scoped
+    def leak(spark, sf_dir):
+        spark.range(3).write.format("parquet").saveAsTable("iws_gate_probe")
+        return spark.range(1)
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    before = scratch_entries(spark)
+    try:
+        leak(spark, "unused")
+        assert scratch_entries(spark) - before == {
+            "default.iws_gate_probe",
+            os.path.abspath(os.path.join(warehouse, "iws_gate_probe")),
+        }
+    finally:
+        spark.sql("DROP TABLE IF EXISTS iws_gate_probe")
 
 
 def test_result_over_scratch_files_outlives_the_scope(spark, scoped):
@@ -148,9 +171,9 @@ def test_result_over_scratch_files_outlives_the_scope(spark, scoped):
         spark.range(6).write.parquet(path)
         return spark.read.parquet(path).selectExpr("sum(id) AS s")
 
-    before = scratch_entries()
+    before = scratch_entries(spark)
     out = staged(spark, "unused")
-    assert scratch_entries() == before
+    assert scratch_entries(spark) == before
     assert out.collect()[0]["s"] == 15
 
 
@@ -159,9 +182,9 @@ def test_a_scope_that_takes_no_scratch_creates_no_directory(spark, scoped):
     def plain(spark, sf_dir):
         return spark.range(3)
 
-    before = scratch_entries()
+    before = scratch_entries(spark)
     out = plain(spark, "unused")
-    assert scratch_entries() == before
+    assert scratch_entries(spark) == before
     assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
 
 
@@ -282,6 +305,25 @@ def test_only_the_registry_picks_scratch_locations():
             if any(raw in line for raw in _SCRATCH_RAW):
                 hits.append(f"{rel}:{no}: {line.strip()}")
     assert not hits, "use registry.scratch:\n" + "\n".join(hits)
+
+
+# The partition-transform decision (dir keys, the null dir, the time
+# formats, the bucket-hash flavor) belongs to icetbl/transforms.py.
+_TRANSFORM_RAW = ('"__p_', "__HIVE_DEFAULT_PARTITION__", "date_format(", "write.bucket.hash")
+
+
+def test_only_transforms_decides_partition_layout():
+    import iceberg_workshop_spark
+
+    root = pathlib.Path(iceberg_workshop_spark.__file__).parent / "icetbl"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "transforms.py":
+            continue
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if any(raw in line for raw in _TRANSFORM_RAW):
+                hits.append(f"{path.name}:{no}: {line.strip()}")
+    assert not hits, "use icetbl/transforms.py:\n" + "\n".join(hits)
 
 
 # Raw session-state calls that belong to the registry's scope. Exempt:
