@@ -82,15 +82,15 @@ def _cow_rebase(
     Iceberg's optimistic-concurrency arbitration: on a CAS conflict
     the pending snapshot is REBASED onto the winner's state, the
     operation's validation re-runs against fresh metadata, and the
-    commit retries (bounded by ``_commit_snapshot``'s attempt loop).
+    commit retries (bounded by ``_commit_snapshot_delta``'s attempt loop).
     Conflict detection is FILE-LEVEL — writers touching disjoint file
     sets both land, mirroring the concurrent Hive/Impala/Spark world
     of the reference's REST-catalog setup (interoperability.md:60-122).
 
     ``isolation`` levels (Iceberg's write.<op>.isolation-level):
     - ``"strict"`` (this engine's historical default): any concurrent
-      commit invalidates the plan → return None, _commit_snapshot
-      propagates the conflict.
+      commit invalidates the plan → return None,
+      _commit_snapshot_delta propagates the conflict.
     - ``"snapshot"``: the plan survives any concurrent commit that
       leaves ITS OWN read-set intact — validation checks only that
       (a) every file this op REWROTE still exists (a concurrent

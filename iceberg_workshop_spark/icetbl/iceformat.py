@@ -31,18 +31,16 @@ snapshot as one append snapshot; ``history=True`` ships the full
 main-ancestry chain with strictly-increasing sequence numbers and
 EXISTING/ADDED entry statuses. Partition specs export with TYPED
 values (identity / year / month / day / hour / truncate / bucket —
-bucket since round 13, when the internal transform became Iceberg's
-murmur3, ``bucketing.py``; LEGACY Spark-hash bucket tables are
-refused). A partition-EVOLVED file set exports Iceberg's native
-multi-spec shape: one manifest per spec, every spec in
-``partition-specs``, and the import path carries the full spec list
-back with per-file spec ids. RENAMED columns cross the boundary via
-``schema.name-mapping.default`` (historical names listed per field;
-equality-delete sidecars written under retired key names are
-rewritten under current names at export). Column bounds are exported
-for int/long/float/double/string/timestamp columns using Iceberg's
-single-value binary serialization, so file skipping works on the
-other side.
+bucket as Iceberg's murmur3, ``bucketing.py``). A partition-EVOLVED
+file set exports Iceberg's native multi-spec shape: one manifest per
+spec, every spec in ``partition-specs``, and the import path carries
+the full spec list back with per-file spec ids. RENAMED columns cross
+the boundary via ``schema.name-mapping.default`` (historical names
+listed per field; equality-delete sidecars written under retired key
+names are rewritten under current names at export). Column bounds are
+exported for int/long/float/double/string/timestamp columns using
+Iceberg's single-value binary serialization, so file skipping works on
+the other side.
 
 Metadata-scale only: one Avro record per data file; no row data moves.
 """
@@ -327,15 +325,13 @@ MANIFEST_ENTRY_SCHEMA = {
 def _encode_bounds(
     bounds: dict | None, by_name: dict[str, dict]
 ) -> tuple[list[dict] | None, list[dict] | None]:
-    """``{column: (lo, hi)}`` (or legacy ``{column: {"min", "max"}}``)
-    → an entry's (lower_bounds, upper_bounds): Iceberg single-value
-    bytes keyed by field id, sorted by id, None when empty."""
+    """``{column: (lo, hi)}`` → an entry's (lower_bounds,
+    upper_bounds): Iceberg single-value bytes keyed by field id, sorted
+    by id, None when empty."""
     lo: list[dict] = []
     hi: list[dict] = []
     for col, b in (bounds or {}).items():
         f = by_name.get(col)
-        if isinstance(b, dict):
-            b = (b.get("min"), b.get("max"))
         if f is None or not isinstance(b, (list, tuple)) or len(b) != 2:
             continue
         for val, acc in zip(b, (lo, hi)):
@@ -571,9 +567,7 @@ def _export_partitioning(
     entry-value encoder). icetbl stores partition values as the dir
     strings Spark wrote; Iceberg stores TYPED values
     (``transforms.codec``). bucket[n] exports as a true bucket spec
-    entry for tables written with Iceberg's murmur3 transform; LEGACY
-    tables bucketed with Spark's hash are refused, because their bucket
-    ids would lie to a real engine's bucket-pruned scans.
+    entry: the stored dir value is Iceberg's murmur3 bucket id.
 
     ``fids`` is the export-wide (source-id, transform, name) →
     partition-field-id registry: Iceberg assigns partition field ids
@@ -599,9 +593,7 @@ def _export_partitioning(
         fid = fids.setdefault(
             (src_field["id"], t, name), 1000 + len(fids)
         )
-        c = transforms.codec(
-            t, src_field["type"], src, transforms.bucket_flavor(meta.properties)
-        )
+        c = transforms.codec(t, src_field["type"], src)
         if c.avro_type is None:
             raise ValueError(f"unknown partition transform {t!r}")
         # Avro field names forbid brackets etc.; Iceberg sanitizes
@@ -1137,14 +1129,6 @@ def export_iceberg(
         }
         for h in tbl.meta.doc.get("history_log", [])
         if h.get("snapshot_id") in exported_ids
-    ] or [
-        # fallback for tables with no history_log (adopted docs):
-        # MAIN-ancestry snapshots only — the snapshot-log records when
-        # main moved, and branch-only snapshots were never current, so
-        # listing them would make foreign AS-OF resolve branch states
-        {"timestamp-ms": s["timestamp-ms"], "snapshot-id": s["snapshot-id"]}
-        for s in snapshots_json
-        if s["snapshot-id"] in set(_ancestry_ids(cur_sid))
     ]
 
     # hot eras were rewritten above (stamped field-ids need no
@@ -2731,8 +2715,7 @@ def _write_foreign_files(
 
     ddir = os.path.join(c.location, "data", f"append-{uuid.uuid4().hex[:12]}")
     written = transforms.write_partitioned(
-        out, ddir, spec, {f.name: f.dataType for f in declared.fields},
-        transforms.MURMUR3,
+        out, ddir, spec, {f.name: f.dataType for f in declared.fields}
     )
     entries = [
         _manifest_entry(

@@ -638,13 +638,13 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
             "dangling_positions_dropped": 0,
         }
     # Match the recorded URIs to the live file set with an EXECUTOR-
-    # side canonicalization + semi-join against a DataFrame of live
+    # side canonicalization + join against a DataFrame of live
     # paths: collecting the distinct URIs and inlining an isin()
     # literal list would grow the plan (and driver memory) with the
     # number of distinct deleted-from files.
     live_df = tbl.spark.createDataFrame(
-        [(_os.path.abspath(f["path"]),) for f in tbl.meta.current_files()],
-        "live_path string",
+        [(_os.path.abspath(f["path"]), 1) for f in tbl.meta.current_files()],
+        "live_path string, live int",
     ).distinct()
     union = tbl.spark.read.parquet(*[d["path"] for d in pos_dels]).select(
         "file_path", "pos"
@@ -652,19 +652,16 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
     # count the DISTINCT position set on both sides: a (path, pos)
     # pair recorded in two sidecars is a consolidation no-op, not a
     # "dangling position dropped" (round-11 review — the raw-union
-    # count overstated the dangling report)
-    dedup = union.distinct()
-    n_before = dedup.count()
-    norm = canon_path_col(F.col("file_path"))
-    live = (
-        dedup
-        .withColumn("__norm", norm)
-        .join(live_df, F.col("__norm") == F.col("live_path"), "left_semi")
-        .drop("__norm")
+    # count overstated the dangling report). One aggregate over the
+    # live-flagged positions counts both sides in a single job.
+    flagged = union.distinct().join(
+        live_df, canon_path_col(F.col("file_path")) == F.col("live_path"), "left"
     )
-    # counting first skips the sorted write when every position dangles
+    n_before, n_live = flagged.agg(F.count(F.lit(1)), F.sum("live")).first()
+    n_live = n_live or 0
+    live = flagged.filter(F.col("live").isNotNull()).select("file_path", "pos")
+    # the count skips the sorted write when every position dangles
     # (the usual case right after a compaction)
-    n_live = live.count()
     new_entries = (
         _stage_pos_deletes(tbl, live, max(int(d["dseq"]) for d in pos_dels))
         if n_live

@@ -180,28 +180,9 @@ class TableMeta:
         the snap dict (mirroring ``files``'s entry caching); ``commit``
         strips them from the serialized doc."""
         if mkey not in snap:
-            ml = snap.get("manifest_list")
-            if ml is None:
-                if "files" in snap or "delete_files" in snap:
-                    # legacy/unsharded snapshot (inline entry lists,
-                    # pre-migration): no descriptors exist. Report none
-                    # WITHOUT caching an empty list into the snap —
-                    # "manifests" in snap must stay a truthful
-                    # is-this-snapshot-sharded signal, because the
-                    # delta-commit eligibility check uses it to route
-                    # legacy parents to the materializing fallback (a
-                    # fabricated empty list made that check vacuously
-                    # pass and silently dropped every pre-migration
-                    # file — round-11 review finding).
-                    return []
-                snap.setdefault("manifests", [])
-                snap.setdefault("delete_manifests", [])
-            else:
-                lists = self._load_ml(ml)
-                snap.setdefault("manifests", lists.get("manifests", []))
-                snap.setdefault(
-                    "delete_manifests", lists.get("delete_manifests", [])
-                )
+            lists = self._load_ml(snap["manifest_list"])
+            snap.setdefault("manifests", lists.get("manifests", []))
+            snap.setdefault("delete_manifests", lists.get("delete_manifests", []))
         return snap[mkey]
 
     def _load_ml(self, rel_path: str) -> dict[str, Any]:
@@ -296,10 +277,8 @@ class TableMeta:
     # -- construction ------------------------------------------------
     @staticmethod
     def empty(location: str, schema_ddl: str, spec: list[dict[str, str]]) -> "TableMeta":
-        # bucket[N] hashes with Iceberg's murmur3 (bucketing.py); the
-        # stamp lets the planner and the exporter tell these tables
-        # from legacy Spark-hash ones (bucket-specced tables only, so
-        # the property surface of ordinary tables is unchanged)
+        # bucket-specced tables record their bucket hash (murmur3,
+        # bucketing.py) as a property; ordinary tables carry none
         properties: dict[str, str] = {}
         stamp_bucket_flavor(properties, [spec])
         return TableMeta(
@@ -433,15 +412,6 @@ def _write_manifest_shards(
                 "path": rel,
                 "n": len(chunk),
                 "records": sum(e.get("record_count") or 0 for e in chunk),
-                # Every entry carries seq + first_snapshot_id: the
-                # delta-commit fast path may carry this manifest by
-                # reference without the legacy per-entry backfill.
-                # False for delete manifests (their entries are
-                # dseq-stamped by the writer, a different contract)
-                # and for migrated pre-stamping docs.
-                "stamped": all(
-                    "seq" in e and "first_snapshot_id" in e for e in chunk
-                ),
             }
         )
         meta._mf_cache[rel] = chunk
@@ -449,75 +419,10 @@ def _write_manifest_shards(
     return out
 
 
-def _shard_snapshot(
-    meta: TableMeta, snap: dict[str, Any], by_id: dict[int, dict[str, Any]]
-) -> None:
-    """Give ``snap`` manifest descriptors for its entry lists, REUSING
-    every parent manifest whose entries all survive unchanged in the
-    child — so a commit writes O(changed files), never the full list.
-    Entry dicts are JSON-native by construction (stats._jsonable), so
-    plain dict equality is exact across a dump/load round-trip."""
-    parent = by_id.get(snap.get("parent_id"))
-    for key, mkey in (("files", "manifests"), ("delete_files", "delete_manifests")):
-        if mkey in snap or "manifest_list" in snap:
-            continue  # manifests are immutable once assigned
-        entries = snap.get(key)
-        if entries is None:
-            snap[mkey] = []
-            continue
-        reused: list[dict[str, Any]] = []
-        covered_ids: set[int] = set()
-        if parent is not None:
-            # Fast path: carried entries are the SAME OBJECTS as the
-            # parent's materialized manifest entries (commit stamping
-            # only copies a dict when it must backfill), so reuse is
-            # an id()-membership test. Value equality (keyed by path)
-            # is the fallback for copied/legacy entries — built lazily
-            # and only when paths are unique, since duplicate paths
-            # make path-keyed reuse lossy.
-            entry_ids = set(map(id, entries))
-            by_path: dict[str, dict[str, Any]] | None = None
-            dup = False
-            for m in meta.manifests_of(parent, mkey):
-                try:
-                    pents = meta._load_mf(m["path"])
-                except FileNotFoundError:
-                    continue
-                if not pents:
-                    continue
-                if all(id(e) in entry_ids for e in pents):
-                    reused.append(m)
-                    covered_ids.update(map(id, pents))
-                    continue
-                if by_path is None:
-                    by_path = {e["path"]: e for e in entries}
-                    dup = len(by_path) != len(entries)
-                if dup:
-                    continue
-                # One distinct child entry per parent entry: a parent
-                # manifest with two same-path entries would otherwise
-                # map BOTH onto the one child entry (covered_ids only
-                # updates after the scan), get reused, and materialize
-                # a duplicate on reload that the in-memory snapshot
-                # never had.
-                matched_ids: set[int] = set()
-                for e in pents:
-                    c = by_path.get(e["path"])
-                    if c != e or id(c) in covered_ids or id(c) in matched_ids:
-                        matched_ids.clear()
-                        break
-                    matched_ids.add(id(c))
-                if matched_ids:
-                    reused.append(m)
-                    covered_ids.update(matched_ids)
-        remaining = [e for e in entries if id(e) not in covered_ids]
-        snap[mkey] = reused + _write_manifest_shards(meta, remaining)
-
-
 def _spill_manifest_lists(meta: TableMeta) -> None:
     """Write one manifest-list sidecar per snapshot that lacks one
-    (new snapshots; legacy/migrated docs; rewrite_manifests drops the
-    list to force a re-spill). With the list spilled, the version
+    (new snapshots; rewrite_manifests drops the list to force a
+    re-spill). With the list spilled, the version
     document stores ONE path per snapshot — O(retained snapshots)
     bytes regardless of manifest count. Losing-CAS attempts orphan
     their list files like their manifests (tiny, swept with them)."""
@@ -566,21 +471,17 @@ def prepare_commit_doc(meta: TableMeta) -> dict:
     """Writer-side commit preparation — everything ``commit`` does
     BEFORE the atomic version claim.
 
-    Shard any snapshot still carrying inline entry lists (newly built
-    snapshots, or a legacy inline-format doc being migrated) into
-    manifest sidecars — oldest-first so each child can reuse its
-    parent's freshly-assigned manifests. Manifests are fully written
-    before any CAS, so a claimed version file never references an
-    incomplete sidecar; a LOSING commit's manifests are orphaned in
-    metadata/ (tiny, swept by expire/rewrite_manifests GC). Returns
-    the serializable version document. The REST-catalog commit path
-    calls this directly: the WRITER materializes manifest files in
-    storage, then ships only the document for the catalog's pointer
-    swap — the same split the real Iceberg REST protocol makes.
+    The snapshot commit has already written its manifest sidecars;
+    this spills a manifest list for every snapshot that lacks one.
+    Sidecars are fully written before any CAS, so a claimed version
+    file never references an incomplete one; a LOSING commit's
+    sidecars are orphaned in metadata/ (tiny, swept by
+    expire/rewrite_manifests GC). Returns the serializable version
+    document. The REST-catalog commit path calls this directly: the
+    WRITER materializes manifest files in storage, then ships only
+    the document for the catalog's pointer swap — the same split the
+    real Iceberg REST protocol makes.
     """
-    by_id = {s["snapshot_id"]: s for s in meta.snapshots}
-    for s in meta.snapshots:
-        _shard_snapshot(meta, s, by_id)
     _spill_manifest_lists(meta)
     return _serializable_doc(meta)
 

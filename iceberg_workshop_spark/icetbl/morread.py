@@ -257,16 +257,14 @@ def bucket_expectations(
     spec_by_id: dict[int, list[dict]],
     types: dict[str, str],
     preds: list[Pred],
-    legacy: Callable[[Any, str, int], str] | None = None,
 ) -> Expectations:
     """Each bucket partition field's expected dir value for one
     disjunct's equality literals: ``(spec_id, field name)`` → the
     literal's bucket id as a string, or None for "cannot prune this
     field". The literal is coerced to the source column's DDL type
     (``types``) and hashed with Iceberg's murmur3 transform, the
-    function the writers use; ``legacy(value, source, n)`` replaces
-    the hash for tables bucketed with Spark's hash. Range predicates
-    cannot prune a hash bucket and register nothing."""
+    function the writers use. Range predicates cannot prune a hash
+    bucket and register nothing."""
     from iceberg_workshop_spark.icetbl.bucketing import (
         UncoercibleLiteral,
         bucket_value,
@@ -283,16 +281,11 @@ def bucket_expectations(
                 continue
             key = (src, int(t[7:-1]))
             if key not in cache:
-                if legacy is not None:
-                    cache[key] = legacy(eq[src], src, key[1])
-                else:
-                    try:
-                        lit = coerce_bucket_literal(
-                            eq[src], types.get(src, "")
-                        )
-                        cache[key] = str(bucket_value(lit, key[1]))
-                    except UncoercibleLiteral:
-                        cache[key] = None
+                try:
+                    lit = coerce_bucket_literal(eq[src], types.get(src, ""))
+                    cache[key] = str(bucket_value(lit, key[1]))
+                except UncoercibleLiteral:
+                    cache[key] = None
             out[(sid, field["name"])] = cache[key]
     return out
 

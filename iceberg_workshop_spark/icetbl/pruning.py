@@ -90,7 +90,7 @@ def file_survives_partition(
         if src not in ivals or name not in file_partition:
             continue
         if transform.startswith("bucket["):
-            continue  # bucket pruning handled separately (needs Spark hash)
+            continue  # bucket pruning handled separately (murmur3 literal)
         lo, hi = ivals[src]
         pv = file_partition[name]
         if is_null_dir(pv):
@@ -188,7 +188,7 @@ def bucket_survives(
     """One file vs precomputed bucket expectations for one disjunct:
     ``expectations[(spec_id, partition_field_name)]`` is the literal's
     bucket id as the dir string, or None for "cannot prune this field"
-    (uncoercible literal / legacy hash handled by the caller)."""
+    (uncoercible literal)."""
     if not expectations:
         return True
     part = f.get("partition") or {}

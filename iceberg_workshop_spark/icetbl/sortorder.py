@@ -181,11 +181,10 @@ def sort_exprs(tbl: Any, fields: list[dict]) -> list:
     from iceberg_workshop_spark.icetbl import transforms
 
     types = tbl._types()
-    flavor = transforms.bucket_flavor(tbl.meta.properties)
     exprs = []
     for f in fields:
         base = transforms.column(
-            f["transform"], f["source"], types.get(f["source"]), flavor
+            f["transform"], f["source"], types.get(f["source"])
         )
         if f["direction"] == "asc":
             expr = (

@@ -87,7 +87,7 @@ class IceTable:
         version or raise ``meta.CommitConflict``; ``refresher() ->
         TableMeta`` must return the current committed metadata. Every
         optimistic-retry loop in this class (``_retry_commit``,
-        ``_commit_snapshot``, ``_commit_snapshot_delta``) then rebases
+        ``_commit_snapshot_delta``) then rebases
         through the arbiter, so two writers attached to the same
         catalog both land without manual retry while conflicting
         schema changes still raise."""
@@ -371,7 +371,7 @@ class IceTable:
         spec id they were written under, scans union per-spec pruned
         sets (replay of /root/reference/README.md:138-195)."""
         def mutate(meta: M.TableMeta) -> None:
-            transforms.stamp_bucket_flavor(meta.properties, [spec], meta.specs)
+            transforms.stamp_bucket_flavor(meta.properties, [spec])
             meta.specs.append(spec)
             meta.doc["current_spec_id"] = len(meta.specs) - 1
 
@@ -435,7 +435,6 @@ class IceTable:
             options[f"parquet.bloom.filter.enabled#{c}"] = "true"
         written = transforms.write_partitioned(
             out, snap_dir, spec, self._types(),
-            transforms.bucket_flavor(self.meta.properties),
             # Iceberg write.distribution-mode=hash: cluster rows by
             # their partition tuple, so each hidden partition is
             # written by ONE task instead of a sliver per task (the
@@ -510,201 +509,22 @@ class IceTable:
             f"commit did not succeed after {attempts} attempts at {self.meta.location}"
         )
 
-    def _commit_snapshot(
-        self,
-        files: list[dict],
-        operation: str,
-        branch: str | None = None,
-        delete_files: list[dict] | None = None,
-        rebase=None,
-    ) -> None:
-        """Append a snapshot and CAS-commit it.
-
-        ``rebase(fresh_meta) -> files`` recomputes the full file list
-        after a ``CommitConflict`` — set for blind appends (append/
-        truncate/adopt), whose new files stay valid on any base, so
-        two concurrent appenders both land (neither's snapshot is
-        lost). Copy-on-write operations (delete/update/merge/
-        overwrite/compaction) leave it None: their planned file set
-        was derived from one specific base snapshot, so a conflicting
-        commit invalidates the plan and the conflict propagates for
-        the caller to re-plan — Iceberg's validation-exception
-        behavior, never a silent lost update."""
-        # New files (no seq yet) are re-stamped with the attempt's
-        # sequence on every retry; base files keep the seq of the
-        # commit that added them (equality-delete correctness).
-        new_ids = {id(f) for f in files if "seq" not in f}
-        carry = delete_files
-        for _ in range(10):
-            # Carried entry dicts may be ALIASED into earlier
-            # snapshots' files lists of the same metadata doc (a
-            # snapshot carries its parent's entries forward by
-            # reference). Copy any that the stamping below would
-            # MUTATE (a legacy entry missing seq/first_snapshot_id)
-            # so backfills never rewrite history; fully-stamped
-            # carried entries pass through by reference — keeping
-            # them identity-shared with the parent's manifest entries
-            # is what makes manifest reuse and the commit summary
-            # O(changed files) id-set checks instead of per-entry
-            # value comparisons. This commit's own new files are
-            # private dicts and stamp in place.
-            copied_any = False
-            out_files = []
-            for f in files:
-                if id(f) in new_ids or ("seq" in f and "first_snapshot_id" in f):
-                    out_files.append(f)
-                else:
-                    out_files.append(dict(f))
-                    copied_any = True
-            files = out_files
-            parent = (
-                self.meta.refs[branch]["snapshot_id"]
-                if branch
-                else self.meta.current_snapshot_id
-            )
-            # Data sequence numbers (Iceberg v2): every commit gets the
-            # next sequence; files added by it are stamped with that seq
-            # so equality-delete files (which record their own seq)
-            # apply only to STRICTLY OLDER data — a key re-inserted
-            # after the delete survives the anti-join.
-            seq = int(self.meta.properties.get("last-sequence-number", "0")) + 1
-            self.meta.properties["last-sequence-number"] = str(seq)
-            for f in files:
-                if id(f) in new_ids:
-                    f["seq"] = seq
-                else:
-                    f.setdefault("seq", seq)
-            if carry is None:
-                # carry existing merge-on-read deletes forward (like
-                # data files, they stay until a rewrite materializes
-                # them) — from THIS commit's parent: a branch append
-                # extends the branch head, so main's delete files must
-                # not leak into it (and vice versa)
-                delete_files = (
-                    list(self.meta.delete_entries(self.meta.snapshot(parent)))
-                    if parent is not None
-                    else []
-                )
-            else:
-                delete_files = carry
-            snap_id = M.new_snapshot_id()
-            # Iceberg persists entry status in manifests: a file is
-            # ADDED in the snapshot that first references it and
-            # EXISTING ever after — even once that first snapshot is
-            # expired. Record the first-referencing snapshot on the
-            # entry at commit time so the .entries metadata view can
-            # report status without walking (possibly expired)
-            # ancestry. New files are re-stamped on every CAS retry
-            # (the attempt's snapshot id changes); carried-over files
-            # keep the stamp of the commit that added them.
-            legacy = [
-                f
-                for f in files
-                if id(f) not in new_ids and "first_snapshot_id" not in f
-            ]
-            if legacy:
-                # Entries from a table written before stamping existed:
-                # derive the stamp from the OLDEST snapshot referencing
-                # the path (its true ADDED commit), not this commit —
-                # stamping with snap_id would report legacy files as
-                # ADDED here and EXISTING nowhere.
-                first_ref: dict[str, int] = {}
-                for sn in self.meta.snapshots:  # oldest-first
-                    for df in self.meta.files(sn):
-                        first_ref.setdefault(df["path"], sn["snapshot_id"])
-                for f in legacy:
-                    f["first_snapshot_id"] = first_ref.get(f["path"], snap_id)
-            for f in files:
-                if id(f) in new_ids:
-                    f["first_snapshot_id"] = snap_id
-            # Persist the commit summary (added/removed files+records
-            # vs the attempt's parent) like Iceberg's snapshot summary
-            # map — derived-at-read-time diffs go stale the moment the
-            # parent is expired.
-            parent_list = (
-                self.meta.files(self.meta.snapshot(parent))
-                if parent is not None
-                else []
-            )
-            parent_ids = set(map(id, parent_list))
-            cand_added = [f for f in files if id(f) not in parent_ids]
-            if not copied_any and all(id(f) in new_ids for f in cand_added):
-                # Every carried entry is identity-shared with the
-                # parent's list (the common case: stamped entries pass
-                # through by reference), so the added/removed diff is
-                # two id-set scans — no per-path dicts. A carried
-                # entry that does NOT identity-match (e.g. a rollback
-                # replaying pre-consolidation manifest objects) drops
-                # to the exact path-keyed diff below.
-                s_added = cand_added
-                file_ids = set(map(id, files))
-                s_removed = [
-                    f for f in parent_list if id(f) not in file_ids
-                ]
-            else:
-                parent_files = {f["path"]: f for f in parent_list}
-                cur_by_path = {f["path"]: f for f in files}
-                s_added = [
-                    f for p2, f in cur_by_path.items() if p2 not in parent_files
-                ]
-                s_removed = [
-                    f for p2, f in parent_files.items() if p2 not in cur_by_path
-                ]
-            snap = {
-                "snapshot_id": snap_id,
-                "parent_id": parent,
-                "timestamp_ms": M.now_ms(),
-                "operation": operation,
-                "files": files,
-                "delete_files": delete_files,
-                "summary": {
-                    "added_data_files": len(s_added),
-                    "added_records": sum(
-                        f.get("record_count") or 0 for f in s_added
-                    ),
-                    "removed_data_files": len(s_removed),
-                    "removed_records": sum(
-                        f.get("record_count") or 0 for f in s_removed
-                    ),
-                },
-            }
-            self.meta.snapshots.append(snap)
-            if branch:
-                self.meta.refs[branch]["snapshot_id"] = snap["snapshot_id"]
-            else:
-                self.meta.doc["current_snapshot_id"] = snap["snapshot_id"]
-                self.meta.doc.setdefault("history_log", []).append(
-                    {"made_current_at_ms": snap["timestamp_ms"], "snapshot_id": snap["snapshot_id"]}
-                )
-            try:
-                self.meta = self._commit_meta()
-                return
-            except M.CommitConflict:
-                # Discard this attempt's in-memory mutation by adopting
-                # the winner's metadata, then rebase or re-raise.
-                self.meta = self._refresh_meta()
-                if rebase is None:
-                    raise
-                files = rebase(self.meta)
-        raise M.CommitConflict(
-            f"snapshot commit did not succeed after 10 attempts at {self.meta.location}"
-        )
-
     def _partition_manifests(
         self, parent: dict | None, mkey: str, removed: list[dict]
-    ):
+    ) -> tuple[list[dict], list[dict]]:
         """Split the parent's ``mkey`` manifest descriptors into
-        (carried-by-reference descriptors, rewrite-pool entries,
-        located_all). Descriptors holding none of the removed entries
-        pass through untouched — never loaded when the removal set is
-        already exhausted; a manifest holding a removed entry is
-        loaded once and its survivors join the rewrite pool. Location
-        is by object identity (``TableMeta.mf_idset``), exact because
-        manifests are immutable and entries identity-shared through
-        ``_mf_cache``."""
+        (carried-by-reference descriptors, rewrite-pool entries).
+        Descriptors holding none of the removed entries pass through
+        untouched — never loaded when the removal set is already
+        exhausted; a manifest holding a removed entry is loaded once
+        and its survivors join the rewrite pool. Location is by object
+        identity (``TableMeta.mf_idset``), exact because manifests are
+        immutable and entries identity-shared through ``_mf_cache``.
+        A removed entry that is not an object of the parent's
+        manifests raises ValueError naming its path."""
         mans = list(self.meta.manifests_of(parent, mkey)) if parent else []
         if not removed:
-            return mans, [], True
+            return mans, []
         removed_ids = frozenset(map(id, removed))
         remaining = set(removed_ids)
         carried: list[dict] = []
@@ -723,7 +543,12 @@ class IceTable:
                 remaining -= hit
             else:
                 carried.append(m)
-        return carried, pool, not remaining
+        if remaining:
+            lost = sorted(e.get("path", "?") for e in removed if id(e) in remaining)
+            raise ValueError(
+                f"removed entries not held by the parent snapshot's {mkey}: {lost}"
+            )
+        return carried, pool
 
     def _commit_snapshot_delta(
         self,
@@ -768,16 +593,13 @@ class IceTable:
         identities are meaningless after a refresh), or raising
         CommitConflict for a re-plan.
 
-        Falls back to the legacy materialized-list ``_commit_snapshot``
-        when the parent carries pre-stamping manifests (descriptor
-        lacks ``stamped: true``) or a removed entry cannot be located
-        in the parent's manifests — those need the per-entry backfill
-        that only the legacy path performs."""
+        A removed entry that is not an object of the parent's manifests
+        (a copy, or an entry of another metadata instance) raises
+        ValueError before anything is written."""
         if rebase == "blind" and removed:
             raise ValueError("blind rebase requires an empty removed set")
         plan_schema = self.meta.schema_ddl
-        # Entries arriving WITH a sequence number keep it (same
-        # contract as the legacy path's `"seq" not in f` test): an
+        # Entries arriving WITH a sequence number keep it: an
         # adopted foreign table's files must retain their source data
         # sequences or its equality deletes' row_seq < dseq rule
         # collapses. Identity-set so CAS retries still re-stamp the
@@ -792,50 +614,23 @@ class IceTable:
             parent = (
                 self.meta.snapshot(parent_id) if parent_id is not None else None
             )
-            # A parent is delta-eligible only if it is SHARDED (carries
-            # manifest descriptors or a manifest list — a legacy
-            # inline-file snapshot must take the materializing
-            # fallback, which migrates and backfills it) AND every
-            # descriptor is stamped.
-            eligible = parent is None or (
-                ("manifest_list" in parent or "manifests" in parent)
-                and all(
-                    m.get("stamped")
-                    for m in self.meta.manifests_of(parent)
-                )
+            carried, pool = (
+                ([], [])
+                if truncate
+                else self._partition_manifests(parent, "manifests", removed)
             )
-            carried: list[dict] = []
-            pool: list[dict] = []
-            if eligible and not truncate:
-                carried, pool, located = self._partition_manifests(
-                    parent, "manifests", removed
-                )
-                eligible = located
-            dcarried: list[dict] = []
-            dpool: list[dict] = []
-            if eligible and not truncate_deletes:
-                dcarried, dpool, located = self._partition_manifests(
+            dcarried, dpool = (
+                ([], [])
+                if truncate_deletes
+                else self._partition_manifests(
                     parent, "delete_manifests", removed_deletes or []
                 )
-                eligible = located
-            if not eligible:
-                self._commit_snapshot_delta_fallback(
-                    added,
-                    removed,
-                    operation,
-                    branch=branch,
-                    added_deletes=added_deletes,
-                    removed_deletes=removed_deletes,
-                    truncate=truncate,
-                    truncate_deletes=truncate_deletes,
-                    rebase=rebase,
-                )
-                return
+            )
             seq = int(self.meta.properties.get("last-sequence-number", "0")) + 1
             self.meta.properties["last-sequence-number"] = str(seq)
             snap_id = M.new_snapshot_id()
             # Added entries are private dicts — stamp in place,
-            # re-stamped on every CAS retry like the legacy path.
+            # re-stamped on every CAS retry.
             # Carried and pool entries keep the seq/first_snapshot_id
             # of the commit that added them (equality-delete and
             # .entries-status correctness).
@@ -916,86 +711,6 @@ class IceTable:
                     ) = rebase(self.meta)
         raise M.CommitConflict(
             f"snapshot commit did not succeed after 10 attempts at {self.meta.location}"
-        )
-
-    def _commit_snapshot_delta_fallback(
-        self,
-        added,
-        removed,
-        operation,
-        *,
-        branch,
-        added_deletes,
-        removed_deletes,
-        truncate,
-        truncate_deletes,
-        rebase,
-    ) -> None:
-        """Materialize the delta into the legacy full-list contract —
-        the pre-stamping-table escape hatch (legacy entries need the
-        per-entry seq/first_snapshot_id backfill)."""
-
-        def materialize(meta: M.TableMeta):
-            pid = (
-                meta.refs[branch]["snapshot_id"]
-                if branch
-                else meta.current_snapshot_id
-            )
-            base = list(meta.files(meta.snapshot(pid))) if pid is not None else []
-            dels = (
-                list(meta.delete_entries(meta.snapshot(pid)))
-                if pid is not None
-                else []
-            )
-            return base, dels
-
-        def apply(meta, added2, removed2, added_d2, removed_d2, trunc2):
-            # a CAS-losing delta attempt may have stamped the added
-            # entries with ITS seq/snapshot id; strip so the legacy
-            # path treats them as new and re-stamps with the committing
-            # attempt's values (a stale first_snapshot_id would name a
-            # snapshot that never committed — found by round-11 review)
-            for f in added2:
-                f.pop("seq", None)
-                f.pop("first_snapshot_id", None)
-            base, dels = materialize(meta)
-            rm = set(map(id, removed2))
-            files = ([] if trunc2 else [f for f in base if id(f) not in rm])
-            files += added2
-            if truncate_deletes:
-                dfin: list[dict] = []
-            else:
-                rmd = set(map(id, removed_d2 or []))
-                dfin = [d for d in dels if id(d) not in rmd]
-            dfin = dfin + list(added_d2 or [])
-            return files, dfin
-
-        files, dfin = apply(
-            self.meta, added, removed, added_deletes, removed_deletes, truncate
-        )
-        if (
-            added_deletes is None
-            and removed_deletes is None
-            and not truncate_deletes
-        ):
-            # untouched delete set: let the legacy path re-derive the
-            # carry from each attempt's parent (a fixed list would pin
-            # the plan-time delete set across a blind rebase)
-            dfin = None
-        if rebase is None:
-            legacy_rebase = None
-        elif rebase == "blind":
-            legacy_rebase = lambda m: apply(  # noqa: E731
-                m, added, [], added_deletes, [], truncate
-            )[0]
-        else:
-            legacy_rebase = lambda m: apply(m, *rebase(m))[0]  # noqa: E731
-        self._commit_snapshot(
-            files,
-            operation,
-            branch=branch,
-            delete_files=dfin,
-            rebase=legacy_rebase,
         )
 
     # ------------------------------------------------------------ refs
@@ -1262,14 +977,11 @@ class IceTable:
             sid = self.meta.current_snapshot_id
             return None if sid is None else self.meta.snapshot(sid)
         # The snapshot log (history_log) records rollbacks and never a
-        # staged branch head. A legacy doc without one falls back to
-        # the newest snapshot at or before the instant.
+        # staged branch head.
         log = [
             (h["made_current_at_ms"], h["snapshot_id"])
-            for h in self.meta.doc.get("history_log") or ()
-        ] or sorted(
-            (s["timestamp_ms"], s["snapshot_id"]) for s in self.meta.snapshots
-        )
+            for h in self.meta.doc.get("history_log", [])
+        ]
         sid = snapshot_as_of(log, as_of_timestamp_ms)
         if sid is None:
             return None
@@ -1391,22 +1103,11 @@ class IceTable:
     def _bucket_expectations(
         self, preds: list[Pred]
     ) -> dict[tuple[int, str], str | None]:
-        """``morread.bucket_expectations`` over this table's specs: the
-        literal is bucketed with the SAME function the writer used —
-        murmur3 for current tables, Spark's hash for legacy ones."""
-        types = self._types()
-
-        def spark_hash(value: Any, source: str, n: int) -> str:
-            lit = F.lit(value).cast(types[source])
-            b = F.pmod(F.hash(lit), F.lit(n)).alias("b")
-            return str(self.spark.range(1).select(b).first()["b"])
-
-        murmur = transforms.bucket_flavor(self.meta.properties) == transforms.MURMUR3
+        """``morread.bucket_expectations`` over this table's specs."""
         return bucket_expectations(
             dict(enumerate(self.meta.specs)),
-            {k: t.simpleString() for k, t in types.items()},
+            {k: t.simpleString() for k, t in self._types().items()},
             preds,
-            None if murmur else spark_hash,
         )
 
     def _prune_bucket(self, files: list[dict], preds: list[Pred]) -> list[dict]:
@@ -1589,13 +1290,14 @@ class IceTable:
             if f["path"] not in parent_paths
         ]
 
-        def with_delta(m: M.TableMeta) -> list[dict]:
-            cur = list(m.current_files())
-            have = {f["path"] for f in cur}
-            return cur + [f for f in delta if f["path"] not in have]
+        def missing(m: M.TableMeta) -> tuple:
+            # only the paths the head does not list yet (the winner of
+            # a concurrent commit may already have published some)
+            have = {f["path"] for f in m.current_files()}
+            return [f for f in delta if f["path"] not in have], [], None, None, False
 
-        self._commit_snapshot(
-            with_delta(self.meta), "cherrypick", rebase=with_delta
+        self._commit_snapshot_delta(
+            missing(self.meta)[0], [], "cherrypick", rebase=missing
         )
 
     def rollback(self, snapshot_id: int) -> None:

@@ -51,34 +51,22 @@ def is_bucket(transform: str) -> bool:
     return transform.startswith("bucket[")
 
 
-# ------------------------------------------------------ bucket flavor
+# ------------------------------------------------------ bucket hash
 
 
-def bucket_flavor(properties: dict | None) -> str:
-    """Which hash backs a table's ``bucket[N]`` dirs: tables created
-    since the murmur3 switch carry the property; older on-disk tables
-    (no property) were bucketed with Spark's hash."""
-    return str((properties or {}).get(_FLAVOR_KEY, "spark"))
-
-
-def stamp_bucket_flavor(
-    properties: dict, specs: list[list[dict]], earlier: list[list[dict]] = ()
-) -> None:
-    """The first bucket spec a table ever has stamps the murmur3 flavor
-    (bucketing.py). A legacy table whose ``earlier`` specs already
-    bucket with Spark's hash is not stamped: its old files' bucket dirs
-    would be mis-pruned under the murmur3 planner."""
-    def bucketed(ss):
-        return any(is_bucket(str(f.get("transform", ""))) for s in ss for f in s)
-
-    if bucketed(specs) and not bucketed(earlier):
+def stamp_bucket_flavor(properties: dict, specs: list[list[dict]]) -> None:
+    """A table whose specs bucket records ``write.bucket.hash`` (Iceberg's
+    murmur3, bucketing.py) in its properties, which SHOW TBLPROPERTIES
+    and DESCRIBE print. Every bucket column uses murmur3; nothing reads
+    the property back."""
+    if any(is_bucket(str(f.get("transform", ""))) for s in specs for f in s):
         properties.setdefault(_FLAVOR_KEY, MURMUR3)
 
 
 # -------------------------------------------------------- write side
 
 
-def column(transform: str, source: str, dtype: Any, flavor: str) -> Any:
+def column(transform: str, source: str, dtype: Any) -> Any:
     """The Spark column holding ``transform`` of ``source`` (Spark type
     ``dtype``) as the directory string the writer partitions by."""
     from pyspark.sql import functions as F
@@ -89,16 +77,11 @@ def column(transform: str, source: str, dtype: Any, flavor: str) -> Any:
     if transform in _TIME_FORMATS:
         return F.date_format(source, _TIME_FORMATS[transform])
     if is_bucket(transform):
-        n = width(transform)
-        if flavor == MURMUR3:
-            # Iceberg's bucket transform (murmur3_x86_32 of the spec's
-            # value encoding): the ids a real Iceberg engine computes
-            from iceberg_workshop_spark.icetbl.bucketing import bucket_col
+        # Iceberg's bucket transform (murmur3_x86_32 of the spec's
+        # value encoding): the ids a real Iceberg engine computes
+        from iceberg_workshop_spark.icetbl.bucketing import bucket_col
 
-            return bucket_col(F.col(source), n, dtype)
-        # legacy pre-murmur3 tables keep Spark's hash, so files written
-        # before the switch stay consistent with new ones
-        return F.pmod(F.hash(F.col(source)), F.lit(n))
+        return bucket_col(F.col(source), width(transform), dtype)
     if transform.startswith("truncate["):
         # numeric columns truncate to width-w value ranges (v - v % w,
         # order-preserving); strings truncate to a w-character prefix
@@ -114,18 +97,16 @@ def write_partitioned(
     directory: str,
     spec: list[dict],
     types: dict[str, Any],
-    flavor: str,
     *,
     cluster: bool = False,
     options: dict[str, str] | None = None,
 ) -> list[tuple[str, dict[str, str], int, dict]]:
     """Write ``df`` as parquet under ``directory``, hidden-partitioned
-    by ``spec`` (``types``: column → Spark type; ``flavor``: the
-    bucket hash), and return ``(path, partition, record_count,
-    bounds)`` per data file. ``partition`` maps each spec field name
-    to its decoded directory string. ``cluster`` hash-repartitions by
-    the partition tuple first (one task per partition);
-    ``options`` go to the parquet writer."""
+    by ``spec`` (``types``: column → Spark type), and return ``(path,
+    partition, record_count, bounds)`` per data file. ``partition``
+    maps each spec field name to its decoded directory string.
+    ``cluster`` hash-repartitions by the partition tuple first (one
+    task per partition); ``options`` go to the parquet writer."""
     from pyspark.sql import functions as F
 
     from iceberg_workshop_spark.icetbl.stats import file_stats
@@ -135,7 +116,7 @@ def write_partitioned(
     for field in spec:
         key = PREFIX + field["name"]
         src, t = field["source"], field["transform"]
-        if is_bucket(t) and flavor == MURMUR3:
+        if is_bucket(t):
             # the df-level named-chain form: whole-stage codegen fuses
             # the staged arithmetic, ~11x faster than the
             # single-Column let-binding of ``column``
@@ -143,7 +124,7 @@ def write_partitioned(
 
             out = with_bucket_column(out, key, src, width(t), types[src])
         else:
-            out = out.withColumn(key, column(t, src, types.get(src), flavor))
+            out = out.withColumn(key, column(t, src, types.get(src)))
         keys.append(key)
     if keys and cluster:
         out = out.repartition(*[F.col(k) for k in keys])
@@ -291,22 +272,11 @@ _INTEGRAL = {"int": ("int", int, str), "long": ("long", int, str)}
 _STRING = ("string", str, str)
 
 
-def codec(
-    transform: str, src_type: Any, src: str = "", flavor: str = MURMUR3
-) -> Codec:
+def codec(transform: str, src_type: Any, src: str = "") -> Codec:
     """The ``Codec`` of ``transform`` over a source of Iceberg type
     ``src_type``; raises ValueError where no faithful encoding exists
-    (a legacy Spark-hash bucket, an unsupported source type, an unknown
-    transform)."""
+    (an unsupported source type, an unknown transform)."""
     if is_bucket(transform):
-        if flavor != MURMUR3:
-            raise ValueError(
-                f"partition transform {transform} on {src!r}: this table "
-                "was bucketed with Spark's hash (legacy, pre-murmur3), "
-                "not Iceberg's murmur3 — exported bucket ids would "
-                "mislead a real engine's pruning; rewrite the table "
-                "to re-bucket it first"
-            )
         # the stored dir value IS the Iceberg bucket id already
         parts = ("int", int, str)
     elif transform == "identity":

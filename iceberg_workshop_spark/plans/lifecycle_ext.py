@@ -3,7 +3,7 @@ introspection over the sharded metadata layer, and branch diffing.
 
 ``q_meta_manifests`` is the queryable proof of the round-6 metadata
 redesign: commits write O(changed-files) manifest sidecars and REUSE
-the parent's manifests verbatim (icetbl/meta.py::_shard_snapshot —
+the parent's manifests verbatim (icetbl/table.py::_commit_snapshot_delta —
 the structure real Iceberg uses for the same reason,
 ``/root/reference/pyspark-iceberg/limitations.md:82-105``). The
 reuse counts surfaced here are exactly what a 10⁶-file table needs

@@ -621,43 +621,14 @@ class IceSqlSession:
             return tbl.history()
         if suffix == "snapshots":
             # Iceberg's .snapshots carries a summary map per commit —
-            # PERSISTED at commit time (_commit_snapshot) so it
-            # survives parent expiry; snapshots predating the stamp
-            # (defensive) fall back to a parent diff.
+            # PERSISTED at commit time (_commit_snapshot_delta) so it
+            # survives parent expiry.
             by_id = {
                 sn["snapshot_id"]: sn for sn in tbl.meta.snapshots
             }
-
-            def _summary(snap: dict) -> dict:
-                if "summary" in snap:
-                    return snap["summary"]
-                parent = by_id.get(snap.get("parent_id"))
-                cur_files = {f["path"]: f for f in tbl.meta.files(snap)}
-                par_files = (
-                    {f["path"]: f for f in tbl.meta.files(parent)}
-                    if parent is not None
-                    else {}
-                )
-                added = [
-                    f for p, f in cur_files.items() if p not in par_files
-                ]
-                removed = [
-                    f for p, f in par_files.items() if p not in cur_files
-                ]
-                return {
-                    "added_data_files": len(added),
-                    "added_records": sum(
-                        f.get("record_count") or 0 for f in added
-                    ),
-                    "removed_data_files": len(removed),
-                    "removed_records": sum(
-                        f.get("record_count") or 0 for f in removed
-                    ),
-                }
-
             rows = []
             for s2 in tbl.snapshots_info():
-                sm = _summary(by_id[s2["snapshot_id"]])
+                sm = by_id[s2["snapshot_id"]]["summary"]
                 rows.append(
                     (
                         s2["snapshot_id"],
@@ -733,31 +704,13 @@ class IceSqlSession:
                 )
             snap = tbl.meta.snapshot(snap_id)
             # Status is persisted at commit time (first_snapshot_id on
-            # each entry, icetbl/table.py::_commit_snapshot) so it
+            # each entry, icetbl/table.py::_commit_snapshot_delta) so it
             # survives parent-snapshot expiry, exactly like Iceberg's
-            # manifest-recorded status. Entries lacking the stamp
-            # (none written by this engine, defensive only) fall back
-            # to an immediate-parent diff.
-            parent = snap.get("parent_id")
-            parent_paths = (
-                {f["path"] for f in tbl.meta.files(tbl.meta.snapshot(parent))}
-                if parent is not None
-                and any(
-                    s2["snapshot_id"] == parent for s2 in tbl.meta.snapshots
-                )
-                else set()
-            )
-
-            def _status(f: dict) -> int:
-                first = f.get("first_snapshot_id")
-                if first is not None:
-                    return 1 if first == snap_id else 0
-                return 0 if f["path"] in parent_paths else 1
-
+            # manifest-recorded status.
             return self.spark.createDataFrame(
                 [
                     (
-                        _status(f),
+                        int(f["first_snapshot_id"] == snap_id),
                         snap_id,
                         f["path"],
                         f.get("record_count"),

@@ -5,17 +5,15 @@ tools/bench_meta.py): drives `IceTable._commit_snapshot_delta` with
 random interleavings of
 
     append / remove-subset / append+remove (CoW shape) / truncate /
-    add-delete-entries / remove-delete-entries / legacy full-list
-    commit (mixed-writer interop)
+    add-delete-entries / remove-delete-entries
 
 against a plain-Python model of the live file and delete-entry sets,
 asserting after EVERY commit that (a) the in-memory head materializes
 exactly the model, (b) a FRESH reload from disk (empty caches — the
 full v<N>.json -> manifest list -> manifest chain) materializes the
 same, and (c) the persisted snapshot summary records the delta's
-added/removed counts. The legacy interop op pins that delta commits
-compose with full-list commits on one table (a mixed-version-writer
-world) and keep parent-manifest reuse working in both directions.
+added/removed counts. A removed entry the parent's manifests do not
+hold raises and commits nothing.
 """
 
 from __future__ import annotations
@@ -33,9 +31,7 @@ OPS_PER_SEQ = 14
 
 class _Shim:
     _partition_manifests = IceTable._partition_manifests
-    _commit_snapshot = IceTable._commit_snapshot
     _commit_snapshot_delta = IceTable._commit_snapshot_delta
-    _commit_snapshot_delta_fallback = IceTable._commit_snapshot_delta_fallback
     _commit_meta = IceTable._commit_meta
     _refresh_meta = IceTable._refresh_meta
     _committer = staticmethod(M.commit)
@@ -102,11 +98,8 @@ def test_delta_commit_random_interleavings_match_model(tmp_path, seed):
             else []
         )
 
-    ops = [
-        "append", "remove", "cow", "truncate",
-        "add_del", "rm_del", "legacy_full",
-    ]
-    weights = [5, 3, 3, 1, 2, 1, 2]
+    ops = ["append", "remove", "cow", "truncate", "add_del", "rm_del"]
+    weights = [5, 3, 3, 1, 2, 1]
     history = []
     for step in range(OPS_PER_SEQ):
         op = rng.choices(ops, weights)[0]
@@ -155,14 +148,6 @@ def test_delta_commit_random_interleavings_match_model(tmp_path, seed):
                 [], [], "rewrite-deletes", removed_deletes=rmd
             )
             model_dels -= {d["path"] for d in rmd}
-        elif op == "legacy_full":
-            # mixed-writer interop: a FULL-LIST legacy commit over the
-            # delta-built table (and vice versa on later delta ops)
-            base = cur_entries()
-            new = fresh_entries(1)
-            shim._commit_snapshot(base + new, "append")
-            model_files |= {f["path"] for f in new}
-            added_n = 1
 
         # (a) in-memory head == model
         assert _head_paths(shim.meta) == model_files, (seed, step, history)
@@ -176,3 +161,34 @@ def test_delta_commit_random_interleavings_match_model(tmp_path, seed):
         s = head["summary"]
         assert s["added_data_files"] == added_n, (seed, step, history)
         assert s["removed_data_files"] == removed_n, (seed, step, history)
+
+
+def test_unlocatable_removed_entry_raises_and_commits_nothing(tmp_path):
+    """A removed entry must be an object of the parent's manifests (the
+    commit locates it by identity). A value-equal copy is not: the
+    commit raises ValueError naming the path and writes no snapshot,
+    instead of committing a "delete" that removes nothing."""
+    shim = _Shim()
+    shim.meta = M.commit(M.TableMeta.empty(str(tmp_path / "t"), "a int", []))
+    shim._commit_snapshot_delta([_entry(i) for i in range(3)], [], "append")
+    shim._commit_snapshot_delta(
+        [], [], "delete-mor", added_deletes=[_del_entry(9, 2)]
+    )
+    version = shim.meta.version
+    live = shim.meta.current_files()
+    dels = shim.meta.current_deletes()
+    with pytest.raises(ValueError, match=live[0]["path"]):
+        shim._commit_snapshot_delta([], [dict(live[0])], "delete")
+    with pytest.raises(ValueError, match=dels[0]["path"]):
+        shim._commit_snapshot_delta(
+            [], [], "rewrite-deletes", removed_deletes=[dict(dels[0])]
+        )
+    fresh = M.read_current(str(tmp_path / "t"))
+    assert fresh.version == version
+    assert _head_paths(fresh) == {f["path"] for f in live}
+    assert _head_del_paths(fresh) == {dels[0]["path"]}
+    # the entry objects themselves still commit
+    shim._commit_snapshot_delta([], [live[0]], "delete")
+    assert _head_paths(M.read_current(str(tmp_path / "t"))) == {
+        f["path"] for f in live[1:]
+    }

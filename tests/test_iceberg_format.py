@@ -478,29 +478,23 @@ def test_partitioned_export_typed_values(spark, tmp_path):
 
 
 def test_partitioned_export_refusals(spark, tmp_path):
-    """LEGACY bucket[n] tables (written with Spark's hash before the
-    murmur3 switch — no ``write.bucket.hash`` property) refuse loudly
-    instead of exporting misleading partition tuples. Murmur3-bucketed
-    tables (every table created now) export a real bucket spec —
-    covered by test_bucket_partitioned_export_roundtrip; partition-
-    EVOLVED tables export multi-spec manifests — covered by
+    """A partition transform with no faithful Iceberg encoding (here
+    identity on a DOUBLE column) refuses loudly instead of exporting a
+    misleading partition tuple. Bucket tables export a real murmur3
+    bucket spec — covered by test_bucket_partitioned_export_roundtrip;
+    partition-EVOLVED tables export multi-spec manifests — covered by
     test_partition_evolved_export_roundtrip."""
     from iceberg_workshop_spark.icetbl import spec_field
 
     df = spark.createDataFrame(
-        [(i, f"n{i}") for i in range(10)], "id bigint, name string"
+        [(i, float(i % 3)) for i in range(10)], "id bigint, score double"
     )
-    tb = IceTable.create_as(
-        spark, str(tmp_path / "bucketed"), df,
-        partition_spec=[spec_field("id", "bucket[4]")],
+    td = IceTable.create_as(
+        spark, str(tmp_path / "by_double"), df,
+        partition_spec=[spec_field("score")],
     )
-    # simulate a pre-switch table: strip the hash-flavor property
-    def _unstamp(meta):
-        meta.properties.pop("write.bucket.hash", None)
-
-    tb._retry_commit(_unstamp)
-    with pytest.raises(ValueError, match="murmur3"):
-        export_iceberg(tb, str(tmp_path / "ice_b"))
+    with pytest.raises(ValueError, match="identity partition on double"):
+        export_iceberg(td, str(tmp_path / "ice_d"))
 
 
 def test_partition_evolved_export_roundtrip(spark, tmp_path):

@@ -695,52 +695,6 @@ def test_expire_max_ref_age_spares_active_branch(spark, tmp_path):
     assert t.read(ref="dev").count() == 2
 
 
-def test_legacy_entry_backfill_does_not_rewrite_history(spark, tmp_path):
-    # ADVICE r4: committing over a table whose entries predate
-    # first_snapshot_id stamping must (a) not mutate the carried entry
-    # dicts aliased into earlier snapshots of the same doc, and (b)
-    # derive the backfilled stamp from the OLDEST snapshot referencing
-    # the path, not the committing snapshot.
-    from iceberg_workshop_spark.icetbl import meta as M
-
-    loc = str(tmp_path / "legacy")
-    t = IceTable.create_as(
-        spark, loc, spark.createDataFrame([(1,)], "a int")
-    )
-    t.append(spark.createDataFrame([(2,)], "a int"))
-    true_first = {
-        f["path"]: f["first_snapshot_id"]
-        for sn in t.meta.snapshots
-        for f in t.meta.files(sn)
-    }
-    # simulate a pre-stamping table: strip the stamps on disk (also
-    # drop the manifest descriptors so commit re-shards the stripped
-    # entries — a true pre-stamping doc had inline files, no manifests)
-    legacy = M.read_current(loc)
-    for sn in legacy.snapshots:
-        for f in legacy.files(sn):
-            f.pop("first_snapshot_id", None)
-        sn.pop("manifests", None)
-        sn.pop("delete_manifests", None)
-        sn.pop("manifest_list", None)
-    M.commit(legacy)
-
-    t2 = IceTable.load(spark, loc)
-    t2.append(spark.createDataFrame([(3,)], "a int"))
-    doc = M.read_current(loc)
-    snaps = doc.snapshots
-    s3 = snaps[-1]["snapshot_id"]
-    # historical snapshots: still unstamped (no retroactive mutation)
-    for sn in snaps[:-1]:
-        assert all("first_snapshot_id" not in f for f in doc.files(sn)), (
-            "legacy snapshots must not be rewritten"
-        )
-    # head snapshot: backfilled stamps point at the TRUE adding commit
-    for f in doc.files(snaps[-1]):
-        expect = true_first.get(f["path"], s3)
-        assert f["first_snapshot_id"] == expect, f["path"]
-
-
 def test_bloom_skipping_prunes_unsorted_point_lookup(spark, tmp_path):
     """Per-file Bloom filters prune equality scans where min/max stats
     cannot: an unsorted high-cardinality column hashed across files

@@ -3,14 +3,15 @@
 Pure-metadata tests (no Spark): drive TableMeta/commit directly with
 synthetic file entries, asserting the properties the sharding exists
 for — constant v<N>.json size under appends, parent-manifest reuse,
-exact entry round-trips, count-only metadata reads, and transparent
-migration of legacy inline-file documents.
+exact entry round-trips and count-only metadata reads. Snapshots are
+committed through the real ``IceTable._commit_snapshot_delta``.
 """
 
 import json
 import os
 
 import iceberg_workshop_spark.icetbl.meta as M
+from iceberg_workshop_spark.icetbl.table import IceTable
 
 
 def _entry(i: int, seq: int = 1) -> dict:
@@ -26,20 +27,36 @@ def _entry(i: int, seq: int = 1) -> dict:
     }
 
 
+class _Shim:
+    """Stand-in for IceTable in ``_commit_snapshot_delta`` (it only
+    touches ``self.meta`` plus these helpers): the real commit path
+    without a SparkSession."""
+
+    _partition_manifests = IceTable._partition_manifests
+    _commit_snapshot_delta = IceTable._commit_snapshot_delta
+    _commit_meta = IceTable._commit_meta
+    _refresh_meta = IceTable._refresh_meta
+    _committer = staticmethod(M.commit)
+    _refresher = None
+
+
+def _commit_via_table(
+    meta: M.TableMeta,
+    added: list[dict],
+    op: str = "append",
+    removed: list[dict] = (),
+    **delta,
+) -> M.TableMeta:
+    """Commit ``added``/``removed`` (plus any delta keywords) on
+    ``meta``'s head; ``removed`` entries come from ``meta`` itself."""
+    shim = _Shim()
+    shim.meta = meta
+    shim._commit_snapshot_delta(added, list(removed), op, **delta)
+    return shim.meta
+
+
 def _append_snapshot(meta: M.TableMeta, new_entries: list[dict]) -> M.TableMeta:
-    parent_id = meta.current_snapshot_id
-    files = (list(meta.current_files()) if parent_id is not None else []) + new_entries
-    snap = {
-        "snapshot_id": M.new_snapshot_id(),
-        "parent_id": parent_id,
-        "timestamp_ms": M.now_ms(),
-        "operation": "append",
-        "files": files,
-        "delete_files": [],
-    }
-    meta.snapshots.append(snap)
-    meta.doc["current_snapshot_id"] = snap["snapshot_id"]
-    return M.commit(meta)
+    return _commit_via_table(meta, new_entries)
 
 
 def _mk(tmp_path) -> M.TableMeta:
@@ -95,7 +112,7 @@ def test_manifest_round_trip_and_descriptor_schema(tmp_path):
     lists = json.load(open(os.path.join(meta.location, ml)))
     assert set(lists) == {"manifests", "delete_manifests"}
     for m in lists["manifests"]:
-        assert set(m) == {"path", "n", "records", "stamped"}
+        assert set(m) == {"path", "n", "records"}
         assert os.path.exists(os.path.join(meta.location, m["path"]))
     # counts come from descriptors without materializing entries
     assert fresh.file_counts(snap) == (10, 100)
@@ -119,103 +136,16 @@ def test_parent_manifest_reuse_after_reload(tmp_path):
     assert len(reused) == len(first_manifests) + 1
 
 
-def test_dup_path_parent_manifest_not_reused(tmp_path):
-    """A (corrupt/legacy) parent manifest holding two entries with the
-    SAME path must not be value-reused by a child carrying one copied
-    entry for that path: reuse would materialize a duplicate on reload
-    that the in-memory snapshot never had."""
-    meta = _mk(tmp_path)
-    e = _entry(0)
-    descs = M._write_manifest_shards(meta, [dict(e), dict(e)])
-    parent = {
-        "snapshot_id": M.new_snapshot_id(),
-        "parent_id": None,
-        "timestamp_ms": M.now_ms(),
-        "operation": "append",
-        "manifests": descs,
-        "delete_manifests": [],
-    }
-    meta.snapshots.append(parent)
-    child = {
-        "snapshot_id": M.new_snapshot_id(),
-        "parent_id": parent["snapshot_id"],
-        "timestamp_ms": M.now_ms(),
-        "operation": "overwrite",
-        # a fresh value-equal dict: forces the value-equality fallback
-        # (the id() fast path can't fire)
-        "files": [dict(e)],
-        "delete_files": [],
-    }
-    meta.snapshots.append(child)
-    meta.doc["current_snapshot_id"] = child["snapshot_id"]
-    meta = M.commit(meta)
-    head = meta.snapshot(meta.current_snapshot_id)
-    assert [m["path"] for m in head["manifests"]] != [descs[0]["path"]], (
-        "dup-path parent manifest was reused"
-    )
-    fresh = M.read_current(meta.location)
-    assert len(fresh.current_files()) == 1
-
-
 def test_delete_manifests_round_trip(tmp_path):
     meta = _mk(tmp_path)
     meta = _append_snapshot(meta, [_entry(0)])
     dels = [{"path": "/data/del-0.json", "kind": "eq", "keys": ["a"], "dseq": 2}]
-    parent_id = meta.current_snapshot_id
-    snap = {
-        "snapshot_id": M.new_snapshot_id(),
-        "parent_id": parent_id,
-        "timestamp_ms": M.now_ms(),
-        "operation": "delete",
-        "files": list(meta.current_files()),
-        "delete_files": dels,
-    }
-    meta.snapshots.append(snap)
-    meta.doc["current_snapshot_id"] = snap["snapshot_id"]
-    meta = M.commit(meta)
+    meta = _commit_via_table(meta, [], "delete", added_deletes=dels)
     fresh = M.read_current(meta.location)
     head = fresh.snapshot(fresh.current_snapshot_id)
     assert fresh.delete_entries(head) == dels
     # delete manifests are separate sidecars with their own descriptors
     assert head["delete_manifests"] and head["delete_manifests"][0]["n"] == 1
-
-
-def test_legacy_inline_doc_migrates_on_next_commit(tmp_path):
-    """A pre-sharding vN.json (inline files) reads fine and is sharded
-    by the next commit without data change."""
-    loc = str(tmp_path / "tbl")
-    os.makedirs(os.path.join(loc, M.METADATA_DIR))
-    entries = [_entry(i) for i in range(5)]
-    doc = {
-        "format_version": 1,
-        "table_uuid": "u",
-        "schema": "a int",
-        "partition_specs": [[]],
-        "current_spec_id": 0,
-        "properties": {},
-        "snapshots": [
-            {
-                "snapshot_id": 1,
-                "parent_id": None,
-                "timestamp_ms": M.now_ms(),
-                "operation": "append",
-                "files": entries,
-                "delete_files": [],
-            }
-        ],
-        "current_snapshot_id": 1,
-    }
-    with open(M.metadata_path(loc, 1), "w") as f:
-        json.dump(doc, f)
-    meta = M.read_current(loc)
-    assert meta.current_files() == entries  # inline reads still work
-    meta = _append_snapshot(meta, [_entry(99)])
-    raw = json.load(open(M.metadata_path(loc, meta.version)))
-    assert all("files" not in s for s in raw["snapshots"])
-    fresh = M.read_current(loc)
-    assert {f["path"] for f in fresh.current_files()} == {
-        e["path"] for e in entries
-    } | {_entry(99)["path"]}
 
 
 def test_sharding_respects_target_entries(tmp_path):
@@ -344,23 +274,6 @@ def test_file_counts_fallback_without_n(tmp_path):
     assert fresh.file_counts(head)[0] == 4
 
 
-def _commit_via_table(meta: M.TableMeta, files: list[dict], op: str = "append") -> M.TableMeta:
-    """Run the REAL IceTable commit path (stamping, summary, sharding)
-    over prepared entry lists without a SparkSession."""
-    from iceberg_workshop_spark.icetbl.table import IceTable
-
-    class _Shim:
-        _commit_meta = IceTable._commit_meta
-        _refresh_meta = IceTable._refresh_meta
-        _committer = staticmethod(M.commit)
-        _refresher = None
-
-    shim = _Shim()
-    shim.meta = meta
-    IceTable._commit_snapshot(shim, files, op)
-    return shim.meta
-
-
 def _fresh_entry(i: int) -> dict:
     """An entry as _write_files emits it: no seq / first_snapshot_id
     yet — the commit stamps both."""
@@ -368,39 +281,21 @@ def _fresh_entry(i: int) -> dict:
 
 
 def test_summary_identity_fast_path(tmp_path):
-    """Common case: carried entries pass through by reference, the new
-    file is the only added one — summary via the id-set fast path,
-    including across a fresh metadata read (manifest-loaded objects)."""
+    """The persisted summary counts the delta, not the live set, also
+    across a fresh metadata read (manifest-loaded entry objects)."""
     meta = _mk(tmp_path)
     meta = _commit_via_table(meta, [_fresh_entry(i) for i in range(5)])
     meta = M.read_current(meta.location)
-    meta = _commit_via_table(meta, list(meta.current_files()) + [_fresh_entry(99)])
+    meta = _commit_via_table(meta, [_fresh_entry(99)])
     head = meta.snapshot(meta.current_snapshot_id)
     assert head["summary"]["added_data_files"] == 1
     assert head["summary"]["removed_data_files"] == 0
-
-
-def test_summary_fallback_on_identity_mismatch(tmp_path):
-    """Carried entries that are value-equal COPIES of the parent's
-    (identity broken, e.g. a rollback replaying pre-consolidation
-    manifest objects) must fall back to the exact path-keyed diff —
-    zero added/removed, not 5 of each."""
-    meta = _mk(tmp_path)
-    meta = _commit_via_table(meta, [_fresh_entry(i) for i in range(5)])
-    copies = [dict(f) for f in meta.current_files()]
-    meta = _commit_via_table(meta, copies + [_fresh_entry(99)])
+    gone = meta.current_files()[0]
+    meta = _commit_via_table(meta, [], "delete", removed=[gone])
     head = meta.snapshot(meta.current_snapshot_id)
-    assert head["summary"]["added_data_files"] == 1
-    assert head["summary"]["removed_data_files"] == 0
-    # value-equality fallback still REUSES the parent's manifests for
-    # the copied entries: the head shares the parent's descriptors and
-    # only adds a 1-entry manifest for the genuinely new file
-    parent = meta.snapshot(head["parent_id"])
-    parent_mfs = {m["path"] for m in parent["manifests"]}
-    head_mfs = {m["path"] for m in head["manifests"]}
-    assert parent_mfs <= head_mfs
-    extra = [m for m in head["manifests"] if m["path"] not in parent_mfs]
-    assert len(extra) == 1 and extra[0]["n"] == 1
+    assert head["summary"]["added_data_files"] == 0
+    assert head["summary"]["removed_data_files"] == 1
+    assert gone["path"] not in {f["path"] for f in meta.current_files()}
 
 
 def test_commit_hands_manifest_cache_forward(tmp_path):
@@ -457,9 +352,10 @@ def test_vjson_stays_flat_as_manifests_accumulate(tmp_path):
         meta = _append_snapshot(meta, [_entry(i)])
     head = meta.snapshot(meta.current_snapshot_id)
     assert len(meta.manifests_of(head)) == 31
-    # keep only the head snapshot in a fresh doc to compare like for
-    # like (same snapshot count, 31x the manifests)
+    # keep only the head snapshot (and its log entry) in a fresh doc to
+    # compare like for like (same snapshot count, 31x the manifests)
     meta.doc["snapshots"] = [head]
+    meta.doc["history_log"] = meta.doc["history_log"][-1:]
     meta = M.commit(meta)
     one_snap_many_mfs = os.path.getsize(
         M.metadata_path(meta.location, meta.version)
@@ -495,66 +391,6 @@ def test_pinned_read_fails_loudly_on_expired_manifest_list(spark, tmp_path):
     pinned = M.read_version(loc, pinned_version)
     with pytest.raises(M.SnapshotExpired, match="manifest list"):
         pinned.current_files()
-
-
-def test_legacy_inline_doc_survives_delta_append(tmp_path):
-    """Round-11 review data-loss finding, pinned: a DELTA append over
-    a pre-sharding vN.json (snapshots carry inline 'files', no
-    manifests, no manifest list) must route to the materializing
-    fallback and keep every pre-migration file — the fabricated-empty-
-    descriptor path made the eligibility check vacuously pass and
-    dropped the whole table."""
-    from iceberg_workshop_spark.icetbl.table import IceTable
-
-    loc = str(tmp_path / "tbl")
-    os.makedirs(os.path.join(loc, M.METADATA_DIR))
-    entries = [_entry(i) for i in range(5)]
-    doc = {
-        "format_version": 1,
-        "table_uuid": "u",
-        "schema": "a int",
-        "partition_specs": [[]],
-        "current_spec_id": 0,
-        "properties": {"last-sequence-number": "1"},
-        "snapshots": [
-            {
-                "snapshot_id": 1,
-                "parent_id": None,
-                "timestamp_ms": M.now_ms(),
-                "operation": "append",
-                "files": entries,
-                "delete_files": [],
-            }
-        ],
-        "current_snapshot_id": 1,
-    }
-    with open(M.metadata_path(loc, 1), "w") as f:
-        json.dump(doc, f)
-
-    class _Shim:
-        _partition_manifests = IceTable._partition_manifests
-        _commit_snapshot = IceTable._commit_snapshot
-        _commit_snapshot_delta = IceTable._commit_snapshot_delta
-        _commit_snapshot_delta_fallback = (
-            IceTable._commit_snapshot_delta_fallback
-        )
-        _commit_meta = IceTable._commit_meta
-        _refresh_meta = IceTable._refresh_meta
-        _committer = staticmethod(M.commit)
-        _refresher = None
-
-    shim = _Shim()
-    shim.meta = M.read_current(loc)
-    new = {k: v for k, v in _entry(99).items() if k not in ("seq", "first_snapshot_id")}
-    IceTable._commit_snapshot_delta(shim, [new], [], "append", rebase="blind")
-
-    fresh = M.read_current(loc)
-    assert {f["path"] for f in fresh.current_files()} == {
-        e["path"] for e in entries
-    } | {new["path"]}, "pre-migration files must survive a delta append"
-    # and the next delta commit runs the FAST path over the migrated doc
-    head = fresh.snapshot(fresh.current_snapshot_id)
-    assert "manifest_list" in head
 
 
 def test_remove_orphans_respects_files_committed_after_handle_load(

@@ -326,6 +326,35 @@ def test_only_transforms_decides_partition_layout():
     assert not hits, "use icetbl/transforms.py:\n" + "\n".join(hits)
 
 
+def test_one_snapshot_commit_and_one_bucket_hash():
+    """``IceTable._commit_snapshot_delta`` is the only code under icetbl/
+    that appends a snapshot, and no bucket is computed with Spark's
+    ``hash`` (every bucket column is Iceberg's murmur3)."""
+    import ast
+
+    import iceberg_workshop_spark
+
+    root = pathlib.Path(iceberg_workshop_spark.__file__).parent / "icetbl"
+    appends, hashes = [], []
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text()
+        for no, line in enumerate(text.splitlines(), 1):
+            if "snapshots.append(" in line:
+                appends.append((path.name, no))
+            if "F.hash(" in line:
+                hashes.append(f"{path.name}:{no}: {line.strip()}")
+    assert not hashes, "bucket with transforms.column (murmur3):\n" + "\n".join(hashes)
+    assert len(appends) == 1, appends
+    name, no = appends[0]
+    tree = ast.parse((root / name).read_text())
+    owner = [
+        f.name
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.lineno <= no <= f.end_lineno
+    ]
+    assert (name, owner) == ("table.py", ["_commit_snapshot_delta"]), appends
+
+
 # Raw session-state calls that belong to the registry's scope. Exempt:
 # registry.py (it is the scope); sources/tables.py (fixture-reader
 # confs are session-wide on purpose — memoized scan plans read them at

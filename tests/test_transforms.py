@@ -81,7 +81,7 @@ def test_write_side_and_planner_agree(spark, tmp_path, rows):
     spec = [{"name": n, "source": c, "transform": t} for n, c, t, _ in SPEC]
     types = {f.name: f.dataType for f in df.schema.fields}
     written = transforms.write_partitioned(
-        df, str(tmp_path / uuid.uuid4().hex), spec, types, transforms.MURMUR3
+        df, str(tmp_path / uuid.uuid4().hex), spec, types
     )
 
     seen = set()

@@ -10,10 +10,11 @@ the written bytes stay O(changed files) while the inline baseline is
 O(live files × retained snapshots); this tool certifies it with
 numbers the way BENCH_scale.json certifies query scaling.
 
-Drives the REAL commit path: IceTable._commit_snapshot (snapshot
-construction, sequence stamping, summary, manifest sharding with
-parent-manifest reuse, CAS link) over synthetic file entries — no
-Spark session needed, this is a pure metadata-layer benchmark.
+Drives the REAL commit path: IceTable._commit_snapshot_delta
+(snapshot construction, sequence stamping, summary, manifest writes
+with parent-manifest carry-over, CAS link) over synthetic file
+entries — no Spark session needed, this is a pure metadata-layer
+benchmark.
 
 Writes BENCH_meta.json; prints one JSON line.
 """
@@ -59,8 +60,10 @@ class _Shim:
     run the real commit path without a SparkSession."""
 
     _partition_manifests = IceTable._partition_manifests
-    _commit_snapshot = IceTable._commit_snapshot
-    _commit_snapshot_delta_fallback = IceTable._commit_snapshot_delta_fallback
+    _commit_meta = IceTable._commit_meta
+    _refresh_meta = IceTable._refresh_meta
+    _committer = staticmethod(M.commit)
+    _refresher = None
 
 
 def _metadata_bytes(location: str) -> dict[str, int]:
