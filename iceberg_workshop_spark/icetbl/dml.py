@@ -696,8 +696,12 @@ def _stage_pos_deletes(
     runs once."""
     from iceberg_workshop_spark.icetbl.iceformat import stage_delete_file
 
+    # one task sorts the small frame: same single sorted file as a
+    # global orderBy, without its range-sampling job
     staged = stage_delete_file(
-        positions.orderBy("file_path", "pos"), tbl.meta.location, "posdel"
+        positions.repartition(1).sortWithinPartitions("file_path", "pos"),
+        tbl.meta.location,
+        "posdel",
     )
     if staged is None:
         return []

@@ -2940,7 +2940,8 @@ def _stage_positions(
             F.col("__path").alias("file_path"),
             F.col("__pos").cast("long").alias("pos"),
         )
-        .orderBy("file_path", "pos")
+        .repartition(1)
+        .sortWithinPartitions("file_path", "pos")
     )
     staged = stage_delete_file(matching, c.location, "posdel-foreign")
     if staged is None:

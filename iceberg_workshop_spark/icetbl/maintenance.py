@@ -10,10 +10,12 @@ Replays /root/reference/README.md:364-409:
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 
 from iceberg_workshop_spark.icetbl import meta as M
+from iceberg_workshop_spark.icetbl import transforms
 from iceberg_workshop_spark.icetbl.table import IceTable
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024  # Iceberg's default 128 MB
@@ -178,7 +180,10 @@ def rewrite_data_files(
     Sizing is bytes-driven (total current bytes / target file size),
     exactly how you'd size a 100 TB compaction; the rewrite is a
     single ``repartition`` job so it scales with the cluster, and old
-    files stay readable via time travel until expired.
+    files stay readable via time travel until expired. A partitioned
+    table is hash-distributed by its partition tuple, so a partition of
+    ``b`` bytes comes out as at most ``ceil(b / target)`` files (one
+    for a small partition), however many tasks write.
 
     ``small_file_threshold_bytes`` switches to **size-tiered** mode
     (Iceberg binpack's min-file-size filter): only files below the
@@ -237,15 +242,26 @@ def rewrite_data_files(
     # carried equality deletes — so the rewrite must read THROUGH the
     # deletes (untouched files keep their old seq; the carried deletes
     # still apply to them).
-    df = tbl._apply_deletes(to_rewrite, tbl.meta.current_deletes())
-    if zorder_by:
-        df = _zorder(df, zorder_by, n)
-    elif sort_by:
-        df = df.repartitionByRange(n, *sort_by).sortWithinPartitions(*sort_by)
-    else:
-        df = df.repartition(n)
+    dels = tbl.meta.current_deletes()
     spec_id = tbl.meta.current_spec_id
-    new_files = tbl._write_files(df, tbl.meta.specs[spec_id], spec_id)
+    spec = tbl.meta.specs[spec_id]
+    width = None
+    if spec and not (zorder_by or sort_by):
+        # The writer clusters by the partition tuple, so the file count
+        # no longer depends on the shuffle width: the width only
+        # spreads the partitions over the cores.
+        target = total / n if target_num_files else target_file_size_bytes
+        df = _spread_partitions(tbl, to_rewrite, dels, target)
+        width = max(n, tbl.spark.sparkContext.defaultParallelism)
+    else:
+        df = tbl._apply_deletes(to_rewrite, dels)
+        if zorder_by:
+            df = _zorder(df, zorder_by, n)
+        elif sort_by:
+            df = df.repartitionByRange(n, *sort_by).sortWithinPartitions(*sort_by)
+        else:
+            df = df.repartition(n)
+    new_files = tbl._write_files(df, spec, spec_id, width)
     tbl._commit_snapshot_delta(new_files, to_rewrite, "replace")
     return {
         "files_before": len(files),
@@ -253,6 +269,44 @@ def rewrite_data_files(
         "files_rewritten": len(to_rewrite),
         "files_untouched": len(untouched),
     }
+
+
+def _spread_partitions(
+    tbl: IceTable, files: list[dict], dels: list[dict], target: float
+):
+    """Rows of ``files`` through ``dels``, each row of a partition over
+    ``target`` bytes tagged with a :data:`transforms.SPREAD` value in
+    ``range(k)``, ``k = ceil(partition bytes / target)`` (manifest
+    ``file_size``, grouped by source partition): the clustered writer
+    then writes that partition from at most ``k`` tasks, so at most
+    ``k`` files. The files of one ``k`` share a scan; the value is the
+    row's position in its file modulo ``k``."""
+    from pyspark.sql import functions as F
+
+    size: dict[tuple, int] = {}
+
+    def key(f: dict) -> tuple:
+        return f.get("spec_id"), tuple(sorted((f.get("partition") or {}).items()))
+
+    for f in files:
+        size[key(f)] = size.get(key(f), 0) + f.get("file_size", 0)
+    by_k: dict[int, list[dict]] = {}
+    for f in files:
+        k = max(1, math.ceil(size[key(f)] / target)) if target else 1
+        by_k.setdefault(k, []).append(f)
+    parts = []
+    for k, fs in sorted(by_k.items()):
+        if k == 1:
+            parts.append(tbl._apply_deletes(fs, dels))
+            continue
+        part = tbl._apply_deletes(fs, dels, keep_pos=True)
+        parts.append(
+            part.withColumn(transforms.SPREAD, F.pmod(F.col("__pos"), F.lit(k)))
+            .drop("__path", "__pos")
+        )
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    )
 
 
 _Z_BITS = 8  # per-column code width (256 quantile buckets)
@@ -619,13 +673,21 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
     rewrite_data_files leaves the old files' position deletes
     dangling, and this procedure is what keeps the delete-file count
     (and the read-time anti-join input) proportional to LIVE deleted
-    rows."""
-    import os as _os
+    rows.
 
+    What the manifest entries decide, no data file is read for. An
+    entry whose ``target_paths`` name no live file dangles whole and
+    is dropped unread; one whose targets are all live keeps every
+    position without the live-path join. Only entries without targets
+    or with targets on both sides are joined against the live paths.
+    The live positions are staged directly (the staged file's row
+    count is the live count); the distinct-position count behind the
+    exact ``dangling_positions_dropped`` runs only when some position
+    dangles."""
     from pyspark.sql import functions as F
 
     from iceberg_workshop_spark.icetbl.dml import _stage_pos_deletes
-    from iceberg_workshop_spark.icetbl.morread import canon_path_col
+    from iceberg_workshop_spark.icetbl.morread import _local, canon_path_col
 
     dels = tbl.meta.current_deletes()
     pos_dels = [d for d in dels if d.get("kind") == "pos"]
@@ -637,36 +699,54 @@ def rewrite_position_deletes(tbl: IceTable) -> dict[str, int]:
             "added_delete_files_count": 0,
             "dangling_positions_dropped": 0,
         }
-    # Match the recorded URIs to the live file set with an EXECUTOR-
-    # side canonicalization + join against a DataFrame of live
-    # paths: collecting the distinct URIs and inlining an isin()
-    # literal list would grow the plan (and driver memory) with the
-    # number of distinct deleted-from files.
-    live_df = tbl.spark.createDataFrame(
-        [(_os.path.abspath(f["path"]), 1) for f in tbl.meta.current_files()],
-        "live_path string, live int",
-    ).distinct()
-    union = tbl.spark.read.parquet(*[d["path"] for d in pos_dels]).select(
-        "file_path", "pos"
-    )
-    # count the DISTINCT position set on both sides: a (path, pos)
-    # pair recorded in two sidecars is a consolidation no-op, not a
-    # "dangling position dropped" (round-11 review — the raw-union
-    # count overstated the dangling report). One aggregate over the
-    # live-flagged positions counts both sides in a single job.
-    flagged = union.distinct().join(
-        live_df, canon_path_col(F.col("file_path")) == F.col("live_path"), "left"
-    )
-    n_before, n_live = flagged.agg(F.count(F.lit(1)), F.sum("live")).first()
-    n_live = n_live or 0
-    live = flagged.filter(F.col("live").isNotNull()).select("file_path", "pos")
-    # the count skips the sorted write when every position dangles
-    # (the usual case right after a compaction)
+    live_paths = {_local(f["path"]) for f in tbl.meta.current_files()}
+    dead: list[dict] = []  # every target gone
+    whole: list[dict] = []  # every target live
+    mixed: list[dict] = []  # targets unknown, or on both sides
+    for d in pos_dels:
+        tp = d.get("target_paths")
+        hits = None if tp is None else {_local(p) in live_paths for p in tp}
+        if hits == {False}:
+            dead.append(d)
+        elif hits == {True}:
+            whole.append(d)
+        else:
+            mixed.append(d)
+
+    def positions(entries: list[dict]):
+        # a declared schema (no footer-inference job), deduplicated in
+        # one task: the staged file is written by one task anyway
+        return (
+            tbl.spark.read.schema("file_path string, pos long")
+            .parquet(*[d["path"] for d in entries])
+            .coalesce(1)
+            .distinct()
+        )
+
+    kept = whole + mixed
+    live = positions(kept) if kept else None
+    if mixed:
+        # EXECUTOR-side canonicalization + join against a frame of
+        # live paths: an isin() literal list would grow the plan (and
+        # driver memory) with the number of deleted-from files
+        live_df = tbl.spark.createDataFrame(
+            [(p,) for p in sorted(live_paths)], "live_path string"
+        )
+        live = live.join(
+            live_df,
+            canon_path_col(F.col("file_path")) == F.col("live_path"),
+            "left_semi",
+        )
     new_entries = (
         _stage_pos_deletes(tbl, live, max(int(d["dseq"]) for d in pos_dels))
-        if n_live
+        if live is not None
         else []
     )
+    n_live = sum(e["record_count"] for e in new_entries)
+    # count the DISTINCT position set: a (path, pos) pair recorded in
+    # two sidecars is a consolidation no-op, not a "dangling position
+    # dropped". With no dead or mixed entry every position is live.
+    n_before = positions(pos_dels).count() if dead or mixed else n_live
     tbl._commit_snapshot_delta(
         [],
         [],

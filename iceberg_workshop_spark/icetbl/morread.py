@@ -24,6 +24,7 @@ Common shape:
 from __future__ import annotations
 
 import functools
+import json
 import operator
 import os
 import re
@@ -117,11 +118,21 @@ def _scan(
     return spark.read.schema(schema).parquet(*paths)
 
 
+def _path_lookup(by_path: dict[str, int], path: F.Column) -> F.Column:
+    """``by_path[path]`` for a canonical local path column: the map is
+    one JSON literal that the optimizer folds into a map constant, so
+    building it costs the same few Py4J calls for any number of paths.
+    Spark scans a map's keys on every lookup, so use it where few rows
+    are looked up: delete rows, or data rows a delete matched."""
+    lookup = F.from_json(F.lit(json.dumps(by_path)), "map<string,bigint>")
+    return lookup[path]
+
+
 def _dseq(dels: list[DeleteFile]) -> F.Column:
     """Each delete row's own file's sequence number, for a scan from
-    :func:`_scan`: a literal when the files share one, else a literal
-    map lookup on the row's canonical file path (a path listed twice
-    keeps its highest sequence, which masks exactly the same rows)."""
+    :func:`_scan`: a literal when the files share one, else a lookup on
+    the row's canonical file path (a path listed twice keeps its
+    highest sequence, which masks exactly the same rows)."""
     by_path: dict[str, int] = {}
     for d in dels:
         p = _local(d.path)
@@ -129,10 +140,8 @@ def _dseq(dels: list[DeleteFile]) -> F.Column:
     seqs = set(by_path.values())
     if len(seqs) == 1:
         return F.lit(seqs.pop()).alias("__dseq")
-    lookup = F.create_map(
-        *[x for p, s in by_path.items() for x in (F.lit(p), F.lit(s))]
-    )
-    return lookup[canon_path_col(F.col("_metadata.file_path"))].alias("__dseq")
+    path = canon_path_col(F.col("_metadata.file_path"))
+    return _path_lookup(by_path, path).alias("__dseq")
 
 
 _POS_SCHEMA = StructType(
@@ -158,19 +167,38 @@ def read_with_deletes(
 ) -> DataFrame:
     """Rows of ``files`` with ``dels`` applied (Iceberg v2 read rule).
 
-    Each data row carries its file's sequence number ``__seq``. All
-    positional deletes are read in one scan and anti-joined on
-    (canonical path, pos) with ``__seq <= dseq``; the equality deletes
-    of one key set are read in one scan and anti-joined on the
-    null-safe keys with ``__seq < dseq``. An anti-join drops a row iff
-    some delete row matches, so no per-key max is needed. Only the
-    target files of positional deletes get the ``_metadata`` columns.
-    ``types`` maps current column names to their types (equality keys
-    are read with them). ``keep_pos`` keeps ``__path``/``__pos`` on
-    every row."""
-    if not dels:
+    The data files are opened in at most two scans, one per targeting
+    group: the files a positional delete can hit (every file when
+    ``keep_pos``), opened with ``__path``/``__pos``, and the rest,
+    opened plain. A scan is never split by sequence number, so Spark
+    packs a group's small files into about ``defaultParallelism`` tasks.
+
+    All positional deletes are read in one scan and anti-joined on
+    (canonical path, pos); the equality deletes of one key set are read
+    in one scan and anti-joined on the null-safe keys. An anti-join
+    drops a row iff some delete row matches, so no per-key max is
+    needed. Untargeted rows meet the positional join under null markers
+    that never match.
+
+    Sequence numbers are compared only where the manifest cannot settle
+    the comparison: a positional delete masks rows of files no newer
+    than itself (``seq <= dseq``), an equality delete rows of strictly
+    older files (``seq < dseq``). A delete that no in-scope data file is
+    too new for is joined without the comparison; natively written
+    positional deletes always are. Where a comparison remains, it is
+    part of the join condition and looks the data file's sequence
+    number up by the row's canonical path only for the rows a delete
+    matches on path and position or on keys; other rows pay nothing
+    for it. ``types`` maps current column names to their types
+    (equality keys are read with them). ``keep_pos`` keeps
+    ``__path``/``__pos`` on every row."""
+    if not dels or not files:
         return open_files(files, keep_pos)
     pos = [d for d in dels if not d.keys]
+    eq_groups: dict[tuple[tuple[str, str], ...], list[DeleteFile]] = {}
+    for d in dels:
+        if d.keys:
+            eq_groups.setdefault(d.keys, []).append(d)
     targets: set[str] | None = set()
     for d in pos:
         if d.targets is None:
@@ -178,56 +206,76 @@ def read_with_deletes(
             break
         targets |= d.targets
 
-    def needs_pos(f: dict) -> bool:
+    def targeted(f: dict) -> bool:
         return keep_pos or bool(pos) and (
             targets is None or _local(f["path"]) in targets
         )
 
-    groups: dict[tuple[int, bool], list[dict]] = {}
-    for f in files:
-        groups.setdefault((int(f.get("seq", 0)), needs_pos(f)), []).append(f)
-    data = None
-    for (seq, with_pos), fs in sorted(groups.items()):
-        part = open_files(fs, with_pos).withColumn("__seq", F.lit(seq))
-        if pos and not with_pos:
-            # untargeted files union with the targeted part under null
-            # markers that never match a delete row
-            part = part.withColumns(
-                {
-                    "__path": F.lit(None).cast("string"),
-                    "__pos": F.lit(None).cast("long"),
-                }
-            )
-        data = part if data is None else data.unionByName(part)
-    if data is None:
-        return open_files([], keep_pos)
+    def seq(f: dict) -> int:
+        return int(f.get("seq", 0))
+
+    hit = [f for f in files if targeted(f)]
+    rest = [f for f in files if not targeted(f)]
+    # Which deletes need the sequence-number comparison, decided from
+    # the manifest: a positional delete when one of the files it can
+    # hit is newer than it, an equality group when some file is not
+    # older than one of its deletes.
+    hit_seq = {_local(f["path"]): seq(f) for f in hit}
+    top_hit = max(hit_seq.values(), default=0)
+    pos_cmp = any(
+        d.seq < (
+            top_hit if d.targets is None
+            else max((hit_seq.get(p, 0) for p in d.targets), default=0)
+        )
+        for d in pos
+    )
+    top = max(seq(f) for f in files)
+    eq_cmp = {k: top >= min(d.seq for d in g) for k, g in eq_groups.items()}
+    compare = pos_cmp or any(eq_cmp.values())
+
+    def open_group(fs: list[dict], is_hit: bool) -> DataFrame:
+        df = open_files(fs, is_hit or compare)
+        if is_hit and pos:
+            df = df.withColumn("__cp", canon_path_col(F.col("__path")))
+        if pos and not is_hit:
+            # untargeted rows meet the positional join under null
+            # markers that never match; ``__path`` stays for the
+            # sequence-number lookup when one is needed
+            nulls = {"__cp": "string", "__pos": "long"}
+            if not compare:
+                nulls["__path"] = "string"
+            df = df.withColumns({c: F.lit(None).cast(t) for c, t in nulls.items()})
+        return df
+
+    parts = [open_group(fs, h) for fs, h in ((hit, True), (rest, False)) if fs]
+    data = functools.reduce(DataFrame.unionByName, parts)
+    # the row's data-file sequence number, evaluated inside the join
+    # condition, so only for rows a delete already matched
+    fseq = (
+        _path_lookup({_local(f["path"]): seq(f) for f in files}, canon_path_col(F.col("__path")))
+        if compare
+        else None
+    )
     if pos:
         pd = _scan(spark, pos, _POS_SCHEMA).select(
             canon_path_col(F.col("file_path")).alias("__dpath"),
             F.col("pos").alias("__dpos"),
-            _dseq(pos),
+            *([_dseq(pos)] if pos_cmp else []),
         )
-        data = data.join(
-            F.broadcast(pd),
-            (canon_path_col(F.col("__path")) == F.col("__dpath"))
-            & (F.col("__pos") == F.col("__dpos"))
-            & (F.col("__seq") <= F.col("__dseq")),
-            "left_anti",
-        )
-    eq_groups: dict[tuple[tuple[str, str], ...], list[DeleteFile]] = {}
-    for d in dels:
-        if d.keys:
-            eq_groups.setdefault(d.keys, []).append(d)
+        cond = (F.col("__cp") == F.col("__dpath")) & (F.col("__pos") == F.col("__dpos"))
+        if pos_cmp:
+            cond = cond & (fseq <= F.col("__dseq"))
+        data = data.join(F.broadcast(pd), cond, "left_anti")
     for keys, group in eq_groups.items():
         dd = _scan(spark, group, _key_schema(keys, types)).select(
             *[F.col(phys).alias(f"__dk_{cur}") for phys, cur in keys],
-            _dseq(group),
+            *([_dseq(group)] if eq_cmp[keys] else []),
         )
-        cond = F.col("__seq") < F.col("__dseq")
-        for _phys, cur in keys:
-            cond = cond & F.col(cur).eqNullSafe(F.col(f"__dk_{cur}"))
-        data = data.join(F.broadcast(dd), cond, "left_anti")
-    drop = ["__seq"] + (["__path", "__pos"] if pos and not keep_pos else [])
+        conds = [F.col(cur).eqNullSafe(F.col(f"__dk_{cur}")) for _phys, cur in keys]
+        if eq_cmp[keys]:
+            conds.append(fseq < F.col("__dseq"))
+        data = data.join(F.broadcast(dd), functools.reduce(operator.and_, conds), "left_anti")
+    drop = ["__cp"] + ([] if keep_pos else ["__path", "__pos"])
     return data.drop(*drop)
 
 

@@ -384,9 +384,14 @@ class IceTable:
         self._retry_commit(mutate)
 
     # ----------------------------------------------------------- write
-    def _write_files(self, df: DataFrame, spec: list[SpecField], spec_id: int) -> list[dict]:
+    def _write_files(
+        self, df: DataFrame, spec: list[SpecField], spec_id: int, width: int | None = None
+    ) -> list[dict]:
         """Write one commit's worth of immutable files under a unique
         snap dir; return their manifest entries (footer stats, no scan).
+        ``width`` clusters a partitioned write by its partition tuple
+        at that shuffle width, whatever write.distribution-mode says
+        (compaction); a write.sort-order still takes precedence.
 
         Hidden partitioning: transform columns are written as `__p_*`
         directory keys only — source columns stay in the data files, so
@@ -442,7 +447,7 @@ class IceTable:
             # default (none) preserves the incoming layout.
             cluster=(
                 not order
-                and self.meta.properties.get("write.distribution-mode") == "hash"
+                and (width or self.meta.properties.get("write.distribution-mode") == "hash")
             ),
             options=options,
         )

@@ -29,6 +29,9 @@ import urllib.parse
 from typing import Any, Callable, NamedTuple
 
 PREFIX = "__p_"
+# optional cluster-key column of ``write_partitioned``: spreads one
+# partition over several writer tasks
+SPREAD = "__spread"
 # Spark's directory value for NULL and the empty string
 NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 MURMUR3 = "iceberg-murmur3"
@@ -98,7 +101,7 @@ def write_partitioned(
     spec: list[dict],
     types: dict[str, Any],
     *,
-    cluster: bool = False,
+    cluster: bool | int = False,
     options: dict[str, str] | None = None,
 ) -> list[tuple[str, dict[str, str], int, dict]]:
     """Write ``df`` as parquet under ``directory``, hidden-partitioned
@@ -106,7 +109,10 @@ def write_partitioned(
     partition, record_count, bounds)`` per data file. ``partition``
     maps each spec field name to its decoded directory string.
     ``cluster`` hash-repartitions by the partition tuple first (one
-    task per partition); ``options`` go to the parquet writer."""
+    task per partition); an int is also the shuffle width. A
+    :data:`SPREAD` column of ``df`` joins the cluster key, so a
+    partition goes to at most as many tasks as it has spread values;
+    it is not written. ``options`` go to the parquet writer."""
     from pyspark.sql import functions as F
 
     from iceberg_workshop_spark.icetbl.stats import file_stats
@@ -127,7 +133,10 @@ def write_partitioned(
             out = out.withColumn(key, column(t, src, types.get(src)))
         keys.append(key)
     if keys and cluster:
-        out = out.repartition(*[F.col(k) for k in keys])
+        by = keys + ([SPREAD] if SPREAD in out.columns else [])
+        num = [] if cluster is True else [cluster]
+        out = out.repartition(*num, *[F.col(k) for k in by])
+    out = out.drop(SPREAD)
     writer = out.write.mode("overwrite")
     for k, v in (options or {}).items():
         writer = writer.option(k, v)

@@ -110,3 +110,24 @@ def scratch_entries(spark) -> set[str]:
 
 def databases(spark) -> set[str]:
     return {d.name for d in spark.catalog.listDatabases()}
+
+
+def data_scans(df, paths: set[str]) -> int:
+    """File scans in ``df``'s optimized plan that read any of ``paths``
+    (local paths): the data-file scans of a table read, its delete-file
+    scans excluded."""
+    from urllib.parse import unquote, urlparse
+
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    n = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        roots = leaf.relation().location().rootPaths()
+        read = {
+            os.path.abspath(unquote(urlparse(roots.apply(j).toUri().toString()).path))
+            for j in range(roots.size())
+        }
+        n += bool(read & paths)
+    return n

@@ -764,6 +764,60 @@ def test_write_distribution_mode_hash_compacts_partition_files(spark, tmp_path):
     assert t_hash.read().count() == 4000
 
 
+def test_rewrite_data_files_keeps_one_file_per_partition(spark, tmp_path):
+    """Compaction of a day(ts) table into ``target_num_files=3``: rows
+    are hash-distributed by partition tuple, so each of the 6
+    partitions is written by one task (one file each), not one file
+    per (task, partition)."""
+    df = spark.range(0, 600).selectExpr(
+        "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, CAST(id % 6 AS INT)) AS ts",
+        "id AS v",
+    )
+    t = IceTable.create(
+        spark, str(tmp_path / "days"), "ts timestamp, v bigint",
+        partition_spec=[spec_field("ts", "day")],
+    )
+    t.append(df.repartition(4))
+    assert len(t.meta.current_files()) > 6  # per-task slivers
+    report = t.rewrite_data_files(target_num_files=3)
+    files = t.meta.current_files()
+    assert report["files_after"] == len(files) == 6
+    assert len({tuple(sorted(f["partition"].items())) for f in files}) == 6
+    assert t.read().count() == 600
+
+
+def test_rewrite_data_files_spreads_a_partition_over_the_target(spark, tmp_path):
+    """A partition larger than the byte target compacts into more than
+    one file, at most ``ceil(partition bytes / target)``; a small
+    partition of the same table still comes out as one file."""
+    df = spark.range(0, 3030).selectExpr(
+        "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, CAST(id >= 3000 AS INT)) AS ts",
+        "id * 7919 % 100003 AS v",
+    )
+    t = IceTable.create(
+        spark, str(tmp_path / "big"), "ts timestamp, v bigint",
+        partition_spec=[spec_field("ts", "day")],
+    )
+    t.append(df.repartition(4))
+    t.delete_where_pos("v % 97 = 0")  # read through on the spread path
+    want = t.read().count()
+    size: dict = {}
+    for f in t.meta.current_files():
+        day = f["partition"]["ts_day"]
+        size[day] = size.get(day, 0) + f["file_size"]
+    big, small = max(size, key=size.get), min(size, key=size.get)
+    target = size[big] // 3 + 1  # the big partition needs 3 files
+    assert size[small] < target
+    t.rewrite_data_files(target_file_size_bytes=target)
+    per_day: dict = {}
+    for f in t.meta.current_files():
+        day = f["partition"]["ts_day"]
+        per_day[day] = per_day.get(day, 0) + 1
+    assert 1 < per_day[big] <= 3, per_day
+    assert per_day[small] == 1
+    assert t.read().count() == want < 3030
+
+
 def test_rename_then_readd_old_name_no_collision(spark, tmp_table_dir):
     """Round-10 era-identity fix: after RENAME a->b, a NEW column may
     reuse the name `a`. For files from before the rename, BOTH

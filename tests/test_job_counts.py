@@ -12,11 +12,13 @@ extra job, whatever the host load."""
 from __future__ import annotations
 
 import itertools
+import os
 
 import pytest
 
 from iceberg_workshop_spark.icetbl import IceTable
 from iceberg_workshop_spark.plans.sqlfront import IceSqlSession
+from tests.helpers import data_scans
 
 N_FILES = 44
 _groups = itertools.count()
@@ -81,5 +83,93 @@ def test_merge_job_count(spark, wide):
 def test_delete_where_pos_job_count(spark, wide):
     tbl, _ = wide
     n = _jobs(spark, lambda: tbl.delete_where_pos("id % 89 = 5"))
-    assert n <= 3, f"delete_where_pos ran {n} Spark jobs"
+    assert n <= 2, f"delete_where_pos ran {n} Spark jobs"
     assert tbl.read().filter("id % 89 = 5").count() == 0
+
+
+def test_read_opens_at_most_two_data_scans(spark, tmp_path):
+    """Files of three sequence numbers under a positional and an
+    equality delete: one scan for the targeted files, one for the rest,
+    never one per sequence number."""
+    tbl = IceTable.create(spark, str(tmp_path / "seqs"), "k bigint, v bigint")
+    for lo in (0, 10, 20):
+        tbl.append(spark.range(lo, lo + 10).selectExpr("id AS k", "id AS v").coalesce(2))
+    tbl.delete_where_pos("k = 3")
+    tbl.delete_where_mor("k = 24", keys=["k"])
+    files = tbl.meta.current_files()
+    assert len({f["seq"] for f in files}) == 3
+    df = tbl.read()
+    assert data_scans(df, {os.path.abspath(f["path"]) for f in files}) <= 2
+    assert sorted(r.k for r in df.collect()) == [k for k in range(30) if k not in (3, 24)]
+
+
+def _all_data_paths(tbl) -> set[str]:
+    return {
+        os.path.abspath(f["path"]) for s in tbl.meta.snapshots for f in tbl.meta.files(s)
+    }
+
+
+@pytest.mark.parametrize("loc", ["plain", "sp ace"])
+def test_rewrite_position_deletes_after_compaction_reads_no_data_file(
+    spark, tmp_path, monkeypatch, loc
+):
+    """After a full rewrite_data_files every positional entry's targets
+    are gone: the manifest entries decide that, no data file is read,
+    and the report still counts distinct positions."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    tbl = IceTable.create_as(
+        spark, str(tmp_path / loc / "t"),
+        spark.range(0, 200).selectExpr("id", "id % 7 AS v").repartition(4),
+    )
+    tbl.delete_where_pos("id < 10")
+    tbl.delete_where_pos("id % 50 = 7")  # records id 7 a second time
+    tbl.delete_where_pos("id < 3")  # three more repeats
+    tbl.rewrite_data_files()
+    want = sorted(r.id for r in tbl.read().collect())
+    data = _all_data_paths(tbl)
+    read: list[str] = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        read.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    report: dict = {}
+    n = _jobs(spark, lambda: report.update(tbl.rewrite_position_deletes()))
+    monkeypatch.undo()
+    assert n <= 3, f"rewrite_position_deletes ran {n} Spark jobs"
+    assert read and not {os.path.abspath(p) for p in read} & data
+    # 10 + 4 + 3 recorded positions, 13 distinct
+    assert report == {
+        "rewritten_delete_files_count": 3,
+        "added_delete_files_count": 0,
+        "dangling_positions_dropped": 13,
+    }
+    assert tbl.meta.current_deletes() == []
+    assert sorted(r.id for r in tbl.read().collect()) == want
+
+
+def test_rewrite_position_deletes_one_live_one_dangling_job_count(spark, tmp_path):
+    """One entry whose target is live and one whose target a
+    copy-on-write delete rewrote: the live positions are staged
+    directly and the dangling one is dropped unread."""
+    tbl = IceTable.create(spark, str(tmp_path / "mixed"), "k bigint, v bigint")
+    for lo in (0, 10):
+        tbl.append(spark.range(lo, lo + 10).selectExpr("id AS k", "id AS v").coalesce(1))
+    tbl.delete_where_pos("k = 3")
+    tbl.delete_where_pos("k = 15")
+    tbl.delete_where("k = 16")  # rewrites the second file
+    want = [k for k in range(20) if k not in (3, 15, 16)]
+    assert sorted(r.k for r in tbl.read().collect()) == want
+    report: dict = {}
+    n = _jobs(spark, lambda: report.update(tbl.rewrite_position_deletes()))
+    assert n <= 3, f"rewrite_position_deletes ran {n} Spark jobs"
+    assert report == {
+        "rewritten_delete_files_count": 2,
+        "added_delete_files_count": 1,
+        "dangling_positions_dropped": 1,
+    }
+    assert [d["record_count"] for d in tbl.meta.current_deletes()] == [1]
+    assert sorted(r.k for r in tbl.read().collect()) == want

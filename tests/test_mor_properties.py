@@ -8,11 +8,21 @@ tests miss."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
 
 from iceberg_workshop_spark.icetbl import IceTable
+from tests.helpers import data_scans
+
+OPS = ["append", "mor_delete", "pos_delete", "cow_delete", "materialize", "rewrite_pos"]
+# Scripted histories run through the same generator. "three_seqs":
+# files of three sequence numbers under a positional and an equality
+# delete, then one more append (four sequence numbers).
+SCRIPTS = {
+    "three_seqs": ["append", "append", "append", "pos_delete", "mor_delete", "append"],
+}
 
 
 def _model_rows(model: dict[int, int]) -> set[tuple[int, int]]:
@@ -23,24 +33,31 @@ def _table_rows(t: IceTable) -> set[tuple[int, int]]:
     return {(r["k"], r["v"]) for r in t.read().collect()}
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
+def _check_scans(t: IceTable) -> bool:
+    """When the live files carry three or more sequence numbers under
+    both delete flavors, the read opens at most two data-file scans
+    (one per targeting group, never one per sequence number). Returns
+    whether the case applied."""
+    files = t.meta.current_files()
+    kinds = {d.get("kind", "eq") for d in t.meta.current_deletes()}
+    if len({f["seq"] for f in files}) < 3 or kinds != {"pos", "eq"}:
+        return False
+    paths = {os.path.abspath(f["path"]) for f in files}
+    assert data_scans(t.read(), paths) <= 2
+    return True
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2, 3, 4, "three_seqs"])
 def test_random_op_sequences_match_reference(spark, tmp_path, seed):
     rng = random.Random(seed)
+    script = SCRIPTS.get(seed)
     t = IceTable.create(spark, str(tmp_path / f"mor{seed}"), "k bigint, v bigint")
     model: dict[int, int] = {}
     next_v = 0
+    checked = False
 
-    for step in range(8):
-        op = rng.choice(
-            [
-                "append",
-                "mor_delete",
-                "pos_delete",
-                "cow_delete",
-                "materialize",
-                "rewrite_pos",
-            ]
-        )
+    for step in range(len(script) if script else 8):
+        op = script[step] if script else rng.choice(OPS)
         if op == "append" or not model:
             # append is INSERT, not upsert — only non-live keys, so the
             # model stays a map. Re-inserting a DELETED key is exactly
@@ -84,6 +101,8 @@ def test_random_op_sequences_match_reference(spark, tmp_path, seed):
         assert _table_rows(t) == _model_rows(model), (
             f"seed={seed} step={step} op={op}"
         )
+        checked |= _check_scans(t)
+    assert checked or not script
 
 
 def test_positional_delete_call_through_frontend(spark, tmp_path):
