@@ -59,15 +59,19 @@ def _current_deletes(tbl: IceTable, branch: str | None = None) -> list[dict]:
 
 
 def _rows_of(
-    tbl: IceTable, files: list[dict], branch: str | None = None
+    tbl: IceTable,
+    files: list[dict],
+    branch: str | None = None,
+    keep_pos: bool = False,
 ) -> DataFrame:
     """Rows of ``files`` with merge-on-read deletes applied — every
     CoW rewrite must read THROUGH the deletes: the rewritten file gets
     a fresh sequence number, so a carried equality delete would no
     longer apply to it and a raw read would resurrect deleted rows.
     The delete set comes from the same head the files came from
-    (branch-scoped DML reads the branch's deletes, not main's)."""
-    return tbl._apply_deletes(files, _current_deletes(tbl, branch))
+    (branch-scoped DML reads the branch's deletes, not main's).
+    ``keep_pos`` keeps each row's ``__path``/``__pos``."""
+    return tbl._apply_deletes(files, _current_deletes(tbl, branch), keep_pos)
 
 
 def _del_entry_key(d: dict) -> tuple:
@@ -324,17 +328,15 @@ def merge_affected(
     on: list[str],
     files: list[dict] | None = None,
 ) -> list[dict]:
-    """The data files a MERGE rewrites: those of ``files`` (default:
-    the current snapshot's) holding a row whose ``on`` key appears in
-    ``keys``. The one affected-file discovery of MERGE — ``merge_into``,
-    ``merge_into_mor`` and the SQL front end's effect builder all call
-    it. Files are read raw: a key that matches only a deleted row still
-    marks its file, and the rewrite, which reads through the deletes,
-    keeps that row deleted. The front end discovers from the raw
-    source's keys, so such a key marks its file even when no clause
-    acts on it (say, a MERGE without WHEN NOT MATCHED): copy-on-write
-    then rewrites the file, dropping the deleted row. An empty table has no file-backed scan (no
-    ``_metadata`` column) and no affected files."""
+    """The data files of ``files`` (default: the current snapshot's)
+    holding a row whose ``on`` key appears in ``keys``: a raw-file
+    ``_metadata.file_path`` semi-join, run before any effect is built.
+    It narrows a MERGE's target view to the rows a source key can
+    reach, so the matched join and the insert anti-join over that view
+    equal the joins over the table. It decides nothing about the write:
+    the view reads through the deletes, and the writers rewrite or mask
+    only the rows effects name by (file, pos). An empty table has no
+    file-backed scan (no ``_metadata`` column) and no affected files."""
     files = tbl.meta.current_files() if files is None else files
     if not files:
         return []
@@ -346,15 +348,77 @@ def merge_affected(
     return [f for f in files if f["path"] in hit]
 
 
-def _effect_frame(source: DataFrame, cols: list[str]) -> tuple[DataFrame, bool]:
-    """``source`` projected to the effect protocol's columns and
-    evaluated once: discovery, the rewrite's broadcast, the insert
-    anti-join and the serializable check all read it. It is
-    broadcast-sized (the rewrite broadcasts it), and a local checkpoint
-    leaves no CacheManager entry."""
-    has_delete = "__delete" in source.columns
-    src_cols = cols + (["__delete"] if has_delete else [])
-    return source.select(*src_cols).localCheckpoint(eager=True), has_delete
+# Columns of a MERGE effect frame besides the table's: the target row
+# an effect replaces or deletes (null for an insert), the delete flag,
+# and the index of the clause that claimed the row (-1: a matched row
+# no clause claims, kept only for the cardinality check).
+_EFFECT_COLS = ("__path", "__pos", "__delete", "__act")
+
+
+def _upsert_effects(tbl: IceTable, source: DataFrame, on: list[str]) -> DataFrame:
+    """Effects of the upsert MERGE: each source row with the (file, pos)
+    of every target row its ``on`` key matches, or null when none. The
+    source row is the image (matched) or the insert (unmatched); a row
+    flagged ``__delete`` deletes its matches and never inserts."""
+    cols = tbl._column_names()
+    delete = F.col("__delete") if "__delete" in source.columns else F.lit(False)
+    src = source.select(*cols, F.coalesce(delete, F.lit(False)).alias("__delete"))
+    target = _rows_of(tbl, merge_affected(tbl, src, on), keep_pos=True)
+    # the semi-join against the broadcast keys leaves only matched
+    # target rows for the left join
+    pos = target.join(F.broadcast(src.select(*on)), on, "left_semi")
+    return (
+        src.join(pos.select(*on, "__path", "__pos"), on, "left")
+        .filter(F.col("__path").isNotNull() | ~F.col("__delete"))
+        .withColumn("__act", F.lit(0))
+    )
+
+
+def _cardinality_violation(tbl: IceTable) -> Exception:
+    """Spark's MERGE_CARDINALITY_VIOLATION (SQLSTATE 23K01), as PySpark
+    raises it from a Spark MERGE."""
+    from pyspark.errors.exceptions.captured import convert_exception
+
+    errors = tbl.spark._jvm.org.apache.spark.sql.errors.QueryExecutionErrors
+    return convert_exception(errors.mergeCardinalityViolationError())
+
+
+def _merge_effects(
+    tbl: IceTable, source: DataFrame, on: list[str]
+) -> tuple[DataFrame, set[str]]:
+    """The claimed rows of a MERGE's effect frame, evaluated once, and
+    the canonical paths of the data files they name.
+
+    ``source`` is an effect frame (the table's columns plus
+    ``_EFFECT_COLS``, as the SQL front end builds it) or an upsert
+    source for ``_upsert_effects``. The frame is local-checkpointed:
+    every consumer reads it, none re-derives it, and it leaves no
+    CacheManager entry. One aggregate over its positioned rows, which
+    the driver holds anyway (the copy-on-write rewrite broadcasts them,
+    the merge-on-read stager reads them back), returns the named files
+    and raises MERGE_CARDINALITY_VIOLATION when one (file, pos) has
+    more than one row. A front end that follows Spark's rule (no check
+    under a lone unconditional WHEN MATCHED DELETE, or no WHEN MATCHED
+    at all) deduplicates or leaves out those matched rows."""
+    if "__path" not in source.columns:
+        source = _upsert_effects(tbl, source, on)
+    frame = source.select(*tbl._column_names(), *_EFFECT_COLS).localCheckpoint(eager=True)
+    # one Arrow collect, grouped on the driver: a Spark aggregate would
+    # add a job per shuffle stage
+    named = (
+        frame.filter(F.col("__path").isNotNull())
+        .select("__path", "__pos", "__act")
+        .toArrow()
+        .group_by("__path")
+        .aggregate([("__pos", "count"), ("__pos", "count_distinct"), ("__act", "max")])
+        .to_pylist()
+    )
+    if any(r["__pos_count"] > r["__pos_count_distinct"] for r in named):
+        raise _cardinality_violation(tbl)
+    return (
+        frame.filter(F.col("__act") >= 0),
+        {canon_path(r["__path"]) for r in named if r["__act_max"] >= 0},
+    )
 
 
 def merge_into(
@@ -362,70 +426,56 @@ def merge_into(
     source: DataFrame,
     on: list[str],
     isolation: str = "strict",
-    affected: list[dict] | None = None,
 ) -> dict[str, int]:
-    """MERGE INTO (A9): source schema == target schema; matched rows
-    take the source's non-key columns, unmatched source rows insert.
+    """Copy-on-write MERGE INTO (A9). ``source`` has the target's
+    columns: a matched source row replaces each target row its ``on``
+    key matches, an unmatched one inserts, and a boolean ``__delete``
+    column, when present, turns a matched row into a delete (and keeps
+    an unmatched one out). ``source`` may instead be an effect frame
+    (``_merge_effects``). Two source rows matching one target row raise
+    MERGE_CARDINALITY_VIOLATION before any write.
 
-    Effect protocol for the general MERGE grammar (WHEN MATCHED THEN
-    DELETE, conditional clauses): a boolean ``__delete`` column on
-    ``source`` marks keys whose matched target rows are dropped in the
-    rewrite instead of updated; ``__delete`` rows never insert. The
-    CoW mechanics are unchanged — only files holding matched keys are
-    rewritten.
-
-    ``affected`` is a ``merge_affected`` result the caller already
-    holds for keys covering every key of ``source``; without it the
-    files are discovered from ``source``'s keys."""
-    cols = tbl._column_names()
-    non_keys = [c for c in cols if c not in on]
+    Only the files effects name are rewritten: each named row is
+    replaced by its image or dropped, the others are kept, and the
+    inserts are added."""
     files = tbl.meta.current_files()
-    source, has_delete = _effect_frame(source, cols)
-    src = source.withColumn("__matched", F.lit(True))
-
-    # 1. Affected files: any file holding a row whose key appears in
-    # source.
-    if affected is None:
-        affected = merge_affected(tbl, source, on, files)
-    hit_paths = {f["path"] for f in affected}
-    untouched = [f for f in files if f["path"] not in hit_paths]
-
-    # 2. Rewrite affected rows with updates applied; matched rows
-    # flagged __delete drop out of the rewrite entirely.
-    t = _rows_of(tbl, affected)
-    joined = t.join(F.broadcast(src), on, "left")
-    if has_delete:
-        joined = joined.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
-    updated = joined.select(
-        *on,
-        *[
-            F.when(F.col("__matched"), src[c]).otherwise(t[c]).alias(c)
-            for c in non_keys
-        ],
-    ).select(*cols)
-
-    # 3. Insert source rows that matched nothing. (A key matching any
-    # target row would have made its file "affected", so anti-joining
-    # the affected rows is anti-joining the whole table.) An anti-join
-    # needs no distinct build side.
-    ins_src = source.filter(~F.coalesce(F.col("__delete"), F.lit(False))) if has_delete else source
-    inserts = ins_src.select(*cols).join(t.select(*on), on, "left_anti")
-
+    effects, paths = _merge_effects(tbl, source, on)
+    cols = tbl._column_names()
+    rewrite = [f for f in files if f["path"] in paths]
+    # Each image replaces its row inside the scan of its file, so the
+    # rewrite writes about as many files as it reads. Both sides'
+    # __path is Spark's URI of the same data file, read the same way,
+    # so the positions compare raw.
+    t = _rows_of(tbl, rewrite, keep_pos=True).alias("t")
+    e = F.broadcast(effects.filter(F.col("__path").isNotNull())).alias("e")
+    rewritten = (
+        t.join(e, ["__path", "__pos"], "left")
+        .filter(~F.coalesce(F.col("e.__delete"), F.lit(False)))
+        .select(
+            *[
+                F.when(F.col("e.__act").isNotNull(), F.col(f"e.{c}"))
+                .otherwise(F.col(f"t.{c}"))
+                .alias(c)
+                for c in cols
+            ]
+        )
+    )
+    new_rows = rewritten.unionByName(effects.filter(F.col("__path").isNull()).select(*cols))
     spec_id = tbl.meta.current_spec_id
-    new_files = tbl._write_files(updated.unionByName(inserts), tbl.meta.specs[spec_id], spec_id)
-    src_keys = source.select(*on).distinct()
+    new_files = tbl._write_files(new_rows, tbl.meta.specs[spec_id], spec_id)
+    src_keys = effects.select(*on).distinct()
     tbl._commit_snapshot_delta(
         new_files,
-        affected,
+        rewrite,
         "merge",
         rebase=_cow_rebase(
             tbl,
             files,
             _current_deletes(tbl),
-            hit_paths,
+            {f["path"] for f in rewrite},
             new_files,
             # a concurrently-appended row whose key appears in the
-            # MERGE source would have been updated/deleted had the
+            # MERGE effects would have been updated/deleted had the
             # MERGE run second — serializable must re-plan
             lambda df: df.join(F.broadcast(src_keys), on, "left_semi")
             .limit(1)
@@ -436,8 +486,8 @@ def merge_into(
     )
     return {
         "files_total": len(files),
-        "files_rewritten": len(affected),
-        "files_untouched": len(untouched),
+        "files_rewritten": len(rewrite),
+        "files_untouched": len(files) - len(rewrite),
     }
 
 
@@ -774,149 +824,32 @@ def delete_where_pos(tbl: IceTable, condition: str) -> dict[str, int]:
     }
 
 
-def update_where_mor(
-    tbl: IceTable, condition: str, set_exprs: dict[str, str]
+def _write_effects_mor(
+    tbl: IceTable, effects: DataFrame, op: str, commit_empty: bool = True
 ) -> dict[str, int]:
-    """Merge-on-read UPDATE (Iceberg's ``write.update.mode =
-    merge-on-read``): instead of rewriting whole data files (CoW), ONE
-    commit adds (a) a positional delete file masking the matching rows
-    and (b) new data files holding their updated images — Iceberg's
-    exact v2 recipe, commit cost O(matching rows).
-
-    The matching scan reads THROUGH the current delete set
-    (``_apply_deletes(..., keep_pos=True)``): a row already masked by
-    an earlier MoR delete must not be resurrected by the insert side.
-
-    At 100 TB: the planning scan touches each file once with the
-    (path, pos) metadata columns attached; read-time cost afterwards
-    is the targeted (path, pos) anti-join plus the appended files —
-    until a rewrite_position_deletes/rewrite_data_files pass
-    materializes them.
-    """
-    from pyspark.sql import functions as F
-
-    files = tbl.meta.current_files()
-    dels = _current_deletes(tbl)
-    cols = tbl._column_names()
-    live = (
-        tbl._apply_deletes(files, dels, keep_pos=True)
-        .filter(condition)
-        .persist()
+    """The merge-on-read effect writer: ONE commit adds a positional
+    delete file masking every (file, pos) ``effects`` names and data
+    files holding its images and inserts (the rows not flagged
+    ``__delete``). ``effects`` must be evaluated once (checkpointed),
+    since both writes read it. ``commit_empty=False`` commits nothing
+    when no position is staged."""
+    positions = effects.filter(F.col("__path").isNotNull()).select(
+        F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
     )
-    try:
-        positions = live.select(
-            F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
-        )
-        entries = _stage_pos_deletes(tbl, positions)
-        if not entries:
-            # nothing matched: no file written, no empty commit
-            return {"positions_deleted": 0, "files_added": 0}
-        updated = live.select(
-            *[
-                F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(c)
-                for c in cols
-            ]
-        )
-        spec_id = tbl.meta.current_spec_id
-        new_files = tbl._write_files(updated, tbl.meta.specs[spec_id], spec_id)
-    finally:
-        live.unpersist()
+    entries = _stage_pos_deletes(tbl, positions)
+    if not entries and not commit_empty:
+        return {"positions_deleted": 0, "files_added": 0}
+    spec_id = tbl.meta.current_spec_id
+    new_files = tbl._write_files(
+        effects.filter(~F.col("__delete")).select(*tbl._column_names()),
+        tbl.meta.specs[spec_id],
+        spec_id,
+    )
     existing = _current_deletes(tbl)
     tbl._commit_snapshot_delta(
         new_files,
         [],
-        "update-mor",
-        added_deletes=entries,
-        rebase=_mor_append_rebase(
-            tbl,
-            tbl.meta,
-            tbl.meta.current_snapshot_id,
-            existing,
-            new_files,
-            entries,
-        ),
-    )
-    return {
-        "positions_deleted": entries[0]["record_count"],
-        "files_added": len(new_files),
-    }
-
-
-IceTable.delete_where_pos = delete_where_pos
-
-def merge_into_mor(
-    tbl: IceTable,
-    source: DataFrame,
-    on: list[str],
-    affected: list[dict] | None = None,
-) -> dict[str, int]:
-    """Merge-on-read MERGE (Iceberg's ``write.merge.mode =
-    merge-on-read``): matched target rows are masked by ONE positional
-    delete file; their updated images plus the unmatched-source
-    inserts land as appended data files — all in a single commit, no
-    data-file rewrite. Supports the same ``__delete`` effect column as
-    the CoW path (matched rows flagged for deletion are masked but not
-    re-inserted), and the same ``affected`` argument.
-
-    The matching scan reads THROUGH the current delete set with row
-    positions attached, so earlier MoR deletes are never resurrected.
-    Only the affected files' rows are read and persisted: every matched
-    key lies in one of them. At 100 TB the commit cost is
-    O(|matched| + |inserts|) rows.
-    """
-    cols = tbl._column_names()
-    non_keys = [c for c in cols if c not in on]
-    files = tbl.meta.current_files()
-    dels = _current_deletes(tbl)
-    source, has_delete = _effect_frame(source, cols)
-    if affected is None:
-        affected = merge_affected(tbl, source, on, files)
-    ins_src = (
-        source.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
-        if has_delete
-        else source
-    ).select(*cols)
-    live = (
-        tbl._apply_deletes(affected, dels, keep_pos=True).persist()
-        if affected
-        else None
-    )
-    try:
-        positions = None
-        new_rows = ins_src
-        if live is not None:
-            # not persisted: both consumers re-derive it from the
-            # persisted `live` plus a broadcast — cheap either way
-            matched = live.join(F.broadcast(source), on, "inner")
-            positions = matched.select(
-                F.col("__path").alias("file_path"),
-                F.col("__pos").alias("pos"),
-            )
-            upd = matched
-            if has_delete:
-                upd = upd.filter(
-                    ~F.coalesce(F.col("__delete"), F.lit(False))
-                )
-            updated = upd.select(
-                *on, *[source[c].alias(c) for c in non_keys]
-            ).select(*cols)
-            inserts = ins_src.join(live.select(*on), on, "left_anti")
-            new_rows = updated.unionByName(inserts)
-        spec_id = tbl.meta.current_spec_id
-        new_files = tbl._write_files(
-            new_rows, tbl.meta.specs[spec_id], spec_id
-        )
-        entries = (
-            _stage_pos_deletes(tbl, positions) if positions is not None else []
-        )
-    finally:
-        if live is not None:
-            live.unpersist()
-    existing = _current_deletes(tbl)
-    tbl._commit_snapshot_delta(
-        new_files,
-        [],
-        "merge-mor",
+        op,
         added_deletes=entries,
         rebase=_mor_append_rebase(
             tbl,
@@ -931,6 +864,63 @@ def merge_into_mor(
         "positions_deleted": sum(e["record_count"] for e in entries),
         "files_added": len(new_files),
     }
+
+
+def update_where_mor(
+    tbl: IceTable, condition: str, set_exprs: dict[str, str]
+) -> dict[str, int]:
+    """Merge-on-read UPDATE (Iceberg's ``write.update.mode =
+    merge-on-read``): each matching row, read THROUGH the current
+    delete set with its (file, pos), becomes an image for the
+    merge-on-read effect writer — one positional delete masks the old
+    rows and appended data files hold the new ones, in one commit. A
+    row an earlier MoR delete masked is never resurrected, and nothing
+    matched commits nothing.
+
+    At 100 TB: the planning scan touches each file once with the
+    (path, pos) metadata columns attached; read-time cost afterwards
+    is the targeted (path, pos) anti-join plus the appended files —
+    until a rewrite_position_deletes/rewrite_data_files pass
+    materializes them.
+    """
+    images = (
+        _rows_of(tbl, tbl.meta.current_files(), keep_pos=True)
+        .filter(condition)
+        .select(
+            *[
+                F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(c)
+                for c in tbl._column_names()
+            ],
+            "__path",
+            "__pos",
+            F.lit(False).alias("__delete"),
+        )
+    )
+    # lazy: the staging job evaluates the scan once and the image write
+    # reads what it stored
+    return _write_effects_mor(
+        tbl, images.localCheckpoint(eager=False), "update-mor", commit_empty=False
+    )
+
+
+IceTable.delete_where_pos = delete_where_pos
+
+
+def merge_into_mor(
+    tbl: IceTable,
+    source: DataFrame,
+    on: list[str],
+) -> dict[str, int]:
+    """Merge-on-read MERGE (Iceberg's ``write.merge.mode =
+    merge-on-read``): the same ``source`` as ``merge_into`` (an upsert
+    source or an effect frame), written by the merge-on-read effect
+    writer — matched target rows are masked by ONE positional delete
+    file, and their images plus the inserts land as appended data
+    files, in a single commit with no data-file rewrite. At 100 TB the
+    commit cost is O(|matched| + |inserts|) rows.
+    """
+    effects, _ = _merge_effects(tbl, source, on)
+    return _write_effects_mor(tbl, effects, "merge-mor")
 
 
 IceTable.update_where_mor = update_where_mor

@@ -858,12 +858,15 @@ class IceSqlSession:
         clauses (first applicable wins, SQL clause order), an optional
         ``WHEN NOT MATCHED [AND <cond>] THEN INSERT``, and ``WHEN NOT
         MATCHED BY SOURCE`` UPDATE/DELETE clauses.
-        Reduction: ``merge_affected`` finds the files that hold a
-        source key; over their rows one join computes per-matched-row
-        effects (updated values or a __delete flag — rows no clause
-        claims keep their original values), the anti-join computes
-        inserts, and ``merge_into`` applies both in a single
-        copy-on-write commit, rewriting only those files."""
+        Reduction: the target view is the table read through its
+        deletes with each row's (file, pos) as ``__path``/``__pos`` —
+        only the files ``merge_affected`` finds, unless a NOT MATCHED BY
+        SOURCE clause or a clause subquery needs the whole table. One
+        join over it gives each matched row's effect (the new image or a
+        __delete flag for that position), the anti-joins give the
+        inserts (no position) and the claimed NOT MATCHED BY SOURCE
+        rows, and ``merge_into`` (copy-on-write) or ``merge_into_mor``
+        writes the effects by row identity in a single commit."""
         target, talias = C.relation(plan.targetTable())
         tbl = self._table(target)
         talias = talias or _view_name(target)
@@ -896,9 +899,8 @@ class IceSqlSession:
                 on_pairs.append((lc, rc))
 
         def clause(action) -> dict:
-            """A WHEN clause: its condition and values as SQL text,
-            ``nodes`` (the value expressions, by target column or by
-            position) and ``sub`` (a subquery anywhere in it)."""
+            """A WHEN clause: its condition and values as SQL text and
+            ``sub`` (a subquery anywhere in it)."""
             kind, cond = action.nodeName(), C.opt(action.condition())
             c: dict = {
                 "cond": None if cond is None else self._text(s, cond),
@@ -910,7 +912,7 @@ class IceSqlSession:
                 assigns = C.seq(action.assignments())
                 c.update(kind="update", sets={
                     C.last_part(a.key()): self._text(s, a.value()) for a in assigns
-                }, nodes={C.last_part(a.key()): a.value() for a in assigns})
+                })
             elif kind == "InsertStarAction":
                 c["star"] = True
             elif kind == "InsertAction":
@@ -918,11 +920,11 @@ class IceSqlSession:
                 keys = [C.last_part(a.key()) for a in assigns]
                 if keys == [_VALUES_COL]:  # bare INSERT VALUES, positional
                     c["cols"] = None
-                    c["nodes"] = C.seq(assigns[0].value().valExprs())
+                    values = C.seq(assigns[0].value().valExprs())
                 else:
                     c["cols"] = keys
-                    c["nodes"] = [a.value() for a in assigns]
-                c["vals"] = [self._text(s, v) for v in c["nodes"]]
+                    values = [a.value() for a in assigns]
+                c["vals"] = [self._text(s, v) for v in values]
             else:
                 raise ValueError(f"unsupported MERGE action: {kind}")
             return c
@@ -947,30 +949,28 @@ class IceSqlSession:
         cols = tbl._column_names()
         on = [t for t, _ in on_pairs]
         files = tbl.meta.current_files()
-        affected = None
-        if nmbs or not files or any(c["sub"] for c in matched + inserts):
-            # NOT MATCHED BY SOURCE clauses claim target rows that no
-            # source key reaches, in any file, and a subquery in a
-            # clause may read the target view: both need the whole table.
-            tbl.read().createOrReplaceTempView(talias)
-        else:
+        if files and not nmbs and not any(c["sub"] for c in matched + inserts):
             # Every target row a source key matches lies in a file that
             # holds the key, so the matched join and the insert anti-join
-            # over those files' rows equal the joins over the table.
-            affected = tbl.merge_affected(
+            # over those files' rows equal the joins over the table. NOT
+            # MATCHED BY SOURCE clauses claim rows no source key reaches,
+            # and a clause subquery may read the target view: both keep
+            # the whole table.
+            files = tbl.merge_affected(
                 src_df.select(*[F.col(c).alias(t) for t, c in on_pairs]), on, files
             )
-            tbl._rows_of(affected).createOrReplaceTempView(talias)
+        tbl._rows_of(files, keep_pos=True).createOrReplaceTempView(talias)
         src_df.createOrReplaceTempView(salias)
 
         on_sql = " AND ".join(f"{talias}.{t} = {salias}.{c}" for t, c in on_pairs)
 
         def effects(clauses: list[dict], join: str) -> DataFrame:
-            """Per-row effects of first-applicable-wins clauses: __act =
-            index of the clause, evaluated ONCE per row (lateral column
-            alias — every value and the delete flag reference __act, so
-            the statement stays O(columns × clauses), not O(columns ×
-            clauses²)); rows no clause claims keep their values."""
+            """Per-row effects of first-applicable-wins clauses on the
+            target row (__path, __pos): __act = index of the clause
+            (-1: none), evaluated ONCE per row (lateral column alias —
+            every value and the delete flag reference __act, so the
+            statement stays O(columns × clauses), not O(columns ×
+            clauses²))."""
             act = " ".join(
                 f"WHEN ({c['cond'] or 'TRUE'}) THEN {i}" for i, c in enumerate(clauses)
             )
@@ -986,13 +986,26 @@ class IceSqlSession:
                 return f"CASE __act {branches} ELSE {keep} END" if branches else keep
 
             return self.spark.sql(
-                f"SELECT ({f'CASE {act} ELSE -1 END' if clauses else '-1'}) AS __act, "
+                f"SELECT (CASE {act} ELSE -1 END) AS __act, "
                 + ", ".join(f"{value(c)} AS {c}" for c in cols)
-                + f", ({f'__act IN ({dels})' if dels else 'FALSE'}) AS __delete "
+                + f", ({f'__act IN ({dels})' if dels else 'FALSE'}) AS __delete, "
+                f"{talias}.__path AS __path, {talias}.__pos AS __pos "
                 f"FROM {talias} {join} {salias} ON {on_sql}"
             )
 
-        src = effects(matched, "JOIN").drop("__act")
+        # An effect replaces or deletes the target row (__path, __pos),
+        # or inserts (null position). The writers raise
+        # MERGE_CARDINALITY_VIOLATION when a position repeats, so Spark's
+        # rule (RewriteMergeIntoTable.shouldCheckCardinality) is kept
+        # here: without a WHEN MATCHED clause no matched row is an
+        # effect, and a lone unconditional DELETE deletes each matched
+        # row once however many source rows match it.
+        parts = []
+        if matched:
+            m = effects(matched, "JOIN")
+            if len(matched) == 1 and matched[0]["kind"] == "delete" and not matched[0]["cond"]:
+                m = m.dropDuplicates(["__path", "__pos"])
+            parts.append(m)
         for ic in inserts:
             if ic.get("star"):
                 # INSERT *: source columns map to target columns by
@@ -1025,43 +1038,18 @@ class IceSqlSession:
                     )
                 ins_proj = ", ".join(f"{v} AS {c}" for c, v in zip(cols, vals))
             where = f" WHERE ({ic['cond']})" if ic["cond"] else ""
-            ins = self.spark.sql(
-                f"SELECT {ins_proj}, FALSE AS __delete "
+            parts.append(self.spark.sql(
+                f"SELECT 0 AS __act, {ins_proj}, FALSE AS __delete, "
+                "CAST(NULL AS STRING) AS __path, CAST(NULL AS BIGINT) AS __pos "
                 f"FROM {salias} LEFT ANTI JOIN {talias} ON {on_sql}{where}"
-            )
-            src = src.unionByName(ins)
+            ))
         if nmbs:
             # Target rows with NO source match, claimed first-wins by
-            # the NMBS clauses; unclaimed rows stay out of the effect
-            # set entirely (their files are rewritten only if they
-            # share a file with an affected key — merge_into keeps
-            # unmatched rows verbatim). Including claimed rows in the
-            # source makes their files "affected", which is exactly
-            # the Iceberg CoW behavior for NOT MATCHED BY SOURCE.
-            nm = effects(nmbs, "LEFT ANTI JOIN").filter("__act <> -1").drop("__act")
-            src = src.unionByName(nm)
-        # The writers match effect rows to target rows by key, so the
-        # files found above are the whole rewrite only while every
-        # effect row keeps its source row's ON key: each UPDATE SET of
-        # a key column and each INSERT value of one must be the bare
-        # source ON column. Otherwise the writer rediscovers from the
-        # effects.
-        def keeps_key(cl: dict, t: str, c: str) -> bool:
-            if cl.get("star") or "nodes" not in cl:  # INSERT * or DELETE
-                return True
-            nodes = cl["nodes"]
-            if isinstance(nodes, list):
-                nodes = dict(zip(cl["cols"] or cols, nodes))
-            node = {k.lower(): v for k, v in nodes.items()}.get(t.lower())
-            if node is None:  # UPDATE keeps the key, INSERT would make it NULL
-                return cl.get("kind") == "update"
-            if node.nodeName() != "UnresolvedAttribute":
-                return False
-            parts = [p.lower() for p in C.seq(node.nameParts())]
-            return parts[-1] == c.lower() and parts[:-1] in ([], [salias.lower()])
-
-        if not all(keeps_key(cl, t, c) for cl in matched + inserts for t, c in on_pairs):
-            affected = None
+            # the NMBS clauses; unclaimed rows are no effect.
+            parts.append(effects(nmbs, "LEFT ANTI JOIN").filter("__act <> -1"))
+        src = parts[0]
+        for part in parts[1:]:
+            src = src.unionByName(part)
         # Iceberg's write.merge.mode: merge-on-read masks matched rows
         # with a positional delete and appends updates+inserts in one
         # commit; default stays copy-on-write.
@@ -1069,14 +1057,9 @@ class IceSqlSession:
             tbl.meta.properties.get("write.merge.mode", "copy-on-write")
             == "merge-on-read"
         ):
-            tbl.merge_into_mor(src, on=on, affected=affected)
+            tbl.merge_into_mor(src, on=on)
         else:
-            tbl.merge_into(
-                src,
-                on=on,
-                isolation=_iso_level(tbl, "merge"),
-                affected=affected,
-            )
+            tbl.merge_into(src, on=on, isolation=_iso_level(tbl, "merge"))
 
     def _insert(self, plan, s: str) -> None:
         tbl = self._table(C.name_of(plan.table()))

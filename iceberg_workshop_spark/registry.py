@@ -191,11 +191,20 @@ def scratch(name: str) -> str:
     return os.path.join(tempfile.mkdtemp(dir=scope.root), name)
 
 
+# Above this many paths Spark lists a read's explicit file paths with a
+# distributed job, one task per path (the default is 32). icetbl reads
+# name their data files from the manifests and the driver stats a local
+# file in microseconds, so every scope raises it, whatever session the
+# caller built.
+LISTING_THRESHOLD_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
 @contextlib.contextmanager
 def invocation(spark: SparkSession) -> Iterator[_Scope]:
-    """One invocation scope: on exit, normal or not, unpersist every
-    ``persist`` frame, remove the ``scratch`` root, restore every
-    ``set_conf`` key and drop every local temp view and database
+    """One invocation scope: it raises the file-listing threshold
+    (``LISTING_THRESHOLD_KEY``), and on exit, normal or not, unpersists
+    every ``persist`` frame, removes the ``scratch`` root, restores
+    every ``set_conf`` key and drops every local temp view and database
     created inside. Frames built over a dropped view stay valid (their
     plans are analyzed). Scopes nest; each releases only what was
     taken inside it. Assumes one thread per session: views another
@@ -206,6 +215,7 @@ def invocation(spark: SparkSession) -> Iterator[_Scope]:
     scope = _Scope()
     token = _SCOPE.set(scope)
     try:
+        set_conf(spark, LISTING_THRESHOLD_KEY, "1024")
         yield scope
     finally:
         _SCOPE.reset(token)

@@ -63,8 +63,15 @@ def test_read_construction_runs_no_job(spark, wide):
     assert _jobs(spark, tbl.read) == 0
 
 
-def test_merge_job_count(spark, wide):
+# merge-on-read's bound is the count its writer ran when it still
+# matched effects to target rows by key
+_MERGE_JOBS = {"copy-on-write": 11, "merge-on-read": 16}
+
+
+@pytest.mark.parametrize("mode", list(_MERGE_JOBS))
+def test_merge_job_count(spark, wide, mode):
     tbl, sess = wide
+    sess.sql(f"ALTER TABLE t SET TBLPROPERTIES ('write.merge.mode' = '{mode}')")
     before = tbl.read().count()
     n = _jobs(
         spark,
@@ -74,7 +81,7 @@ def test_merge_job_count(spark, wide):
             "WHEN NOT MATCHED THEN INSERT VALUES (s.id, s.v, s.g)"
         ),
     )
-    assert n <= 11, f"MERGE ran {n} Spark jobs"
+    assert n <= _MERGE_JOBS[mode], f"{mode} MERGE ran {n} Spark jobs"
     # source ids below 40 * N_FILES update a row, the others insert
     assert tbl.read().count() == before + sum(1 for i in range(30) if i * 97 + 1 >= 40 * N_FILES)
     assert tbl.read().filter("v >= 100").count() == 30

@@ -215,63 +215,178 @@ def test_merge_clause_subquery_reads_the_whole_target(spark, tmp_path, mode):
     assert {r["k"]: (r["st"], r["p"]) for r in tbl.read().collect()} == expected
 
 
-def test_merge_key_matching_only_a_deleted_row_rewrites_its_file(spark, tmp_path):
-    """Discovery reads the raw files with the raw source's keys, so a
-    matched-only MERGE whose one source key matches only a deleted row
-    still rewrites that row's file under copy-on-write; the row stays
-    deleted and every other row keeps its value."""
+def test_merge_key_matching_only_a_deleted_row_rewrites_no_file(spark, tmp_path):
+    """A matched-only MERGE whose one source key matches only a deleted
+    row has no effect: no file is rewritten, the row stays deleted and
+    every other row keeps its value."""
     tbl, sess = _many_files(spark, tmp_path, "gone")
     tbl.delete_where_pos("k = 97")
-    holding = {
-        r["__fp"]
-        for r in tbl._read_files(tbl.meta.current_files(), with_fp=True)
-        .filter("k = 97")
-        .select("__fp")
-        .collect()
-    }
     before = {f["path"] for f in tbl.meta.current_files()}
     sess.register_view("db.s", spark.createDataFrame([(97, 1)], "k bigint, sp bigint"))
     sess.sql(
         "MERGE INTO db.t AS tgt USING db.s AS s ON tgt.k = s.k\n"
         "WHEN MATCHED THEN UPDATE SET p = s.sp"
     )
-
-    from iceberg_workshop_spark.icetbl.morread import canon_path
-
-    rewritten = before - {f["path"] for f in tbl.meta.current_files()}
-    assert rewritten == {canon_path(p) for p in holding}
+    assert before <= {f["path"] for f in tbl.meta.current_files()}
     assert {r["k"]: r["p"] for r in tbl.read().collect()} == {
         k: k for k in range(200) if k != 97
     }
 
 
-@pytest.mark.parametrize(
-    "update_set,passed",
-    [
-        ("k = s.k, p = s.sp", True),
-        ("p = s.sp, k = `s`.`k`", True),
-        ("k = s.k + 1000, p = s.sp", False),
-    ],
-)
-def test_merge_passes_discovered_files_only_when_keys_are_kept(
-    spark, tmp_path, monkeypatch, update_set, passed
-):
-    """The front end hands its discovered files to the writer only
-    while every effect row keeps its source row's ON key."""
-    tbl, sess = _many_files(spark, tmp_path, "keys")
-    sess.register_view("db.s", spark.createDataFrame([(5, 1), (900, 2)], "k bigint, sp bigint"))
-    seen = []
-    merge_into = IceTable.merge_into
+# Clause sets of the row-identity model: key-changing SETs and INSERT
+# values, and duplicate source keys under each side of Spark's
+# cardinality rule (a lone unconditional WHEN MATCHED DELETE, or no
+# WHEN MATCHED clause, is never checked).
+_SCENARIOS = {
+    "key_change": (False, [
+        "WHEN MATCHED THEN UPDATE SET k = s.k + 1000, p = s.sp",
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 'I', s.sp)",
+    ]),
+    "key_change_clauses": (False, [
+        "WHEN MATCHED AND st = 'F' THEN DELETE",
+        "WHEN MATCHED AND p > 50 THEN UPDATE SET k = s.k + 1000, st = 'M'",
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k * 10 + 5000, 'I', s.sp)",
+        "WHEN NOT MATCHED BY SOURCE AND p < 30 THEN UPDATE SET k = tgt.k + 3000, st = 'X'",
+    ]),
+    "dup_update": (True, [
+        "WHEN MATCHED THEN UPDATE SET k = s.k + 1000, p = s.sp",
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 'I', s.sp)",
+    ]),
+    "dup_conditional_delete": (True, [
+        "WHEN MATCHED AND s.sp > 0 THEN DELETE",
+    ]),
+    "dup_lone_delete": (True, [
+        "WHEN MATCHED THEN DELETE",
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 'I', s.sp)",
+    ]),
+    "dup_insert_only": (True, [
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 'I', s.sp)",
+        "WHEN NOT MATCHED BY SOURCE AND p >= 90 THEN DELETE",
+    ]),
+}
 
-    def spy(self, source, on, isolation="strict", affected=None):
-        seen.append(affected)
-        return merge_into(self, source, on, isolation=isolation, affected=affected)
 
-    monkeypatch.setattr(IceTable, "merge_into", spy)
-    sess.sql(
-        "MERGE INTO db.t AS tgt USING db.s AS s ON tgt.k = s.k\n"
-        f"WHEN MATCHED THEN UPDATE SET {update_set}\n"
-        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 'I', s.sp)"
+def _model(live, src_rows, clauses):
+    """Rows after the MERGE, or None for MERGE_CARDINALITY_VIOLATION:
+    first applicable clause wins, per target row."""
+    matched = [c for c in clauses if c.startswith("WHEN MATCHED")]
+    checked = matched and matched != ["WHEN MATCHED THEN DELETE"]
+    by_key: dict[int, list[int]] = {}
+    for k, sp in src_rows:
+        by_key.setdefault(k, []).append(sp)
+    out = []
+    for k, st, p in live:
+        sps = by_key.get(k, [])
+        if sps and checked and len(sps) > 1:
+            return None
+        row = (k, st, p)
+        for c in clauses:
+            if sps and c == "WHEN MATCHED THEN DELETE":
+                row = None
+            elif sps and c == "WHEN MATCHED AND st = 'F' THEN DELETE":
+                if st != "F":
+                    continue
+                row = None
+            elif sps and c == "WHEN MATCHED AND s.sp > 0 THEN DELETE":
+                row = None
+            elif sps and c == "WHEN MATCHED THEN UPDATE SET k = s.k + 1000, p = s.sp":
+                row = (k + 1000, st, sps[0])
+            elif sps and c.startswith("WHEN MATCHED AND p > 50"):
+                if p <= 50:
+                    continue
+                row = (k + 1000, "M", p)
+            elif not sps and c.startswith("WHEN NOT MATCHED BY SOURCE AND p < 30"):
+                if p >= 30:
+                    continue
+                row = (k + 3000, "X", p)
+            elif not sps and c.startswith("WHEN NOT MATCHED BY SOURCE AND p >= 90"):
+                if p < 90:
+                    continue
+                row = None
+            else:
+                continue
+            break
+        if row is not None:
+            out.append(row)
+    keys = {k for k, _st, _p in live}
+    for c in clauses:
+        if c.startswith("WHEN NOT MATCHED THEN INSERT"):
+            scaled = "s.k * 10 + 5000" in c
+            out += [
+                (k * 10 + 5000 if scaled else k, "I", sp)
+                for k, sp in src_rows
+                if k not in keys
+            ]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+@pytest.mark.parametrize("scenario", list(_SCENARIOS))
+def test_merge_by_row_identity_matches_model(spark, tmp_path, scenario, mode):
+    """Key-changing SETs replace the matched row (they never add a row
+    beside it), and duplicate source keys raise
+    MERGE_CARDINALITY_VIOLATION before any write exactly where Spark's
+    rule checks. The target spans many files, one row deleted by a
+    positional delete; DuckDB has no MERGE, so the model is the oracle."""
+    from pyspark.errors import PySparkException
+
+    dups, clauses = _SCENARIOS[scenario]
+    rng = random.Random(scenario)
+    tbl = IceTable.create_as(
+        spark,
+        str(tmp_path / scenario),
+        spark.createDataFrame(
+            [(k, "OFP"[k % 3], k * 37 % 100) for k in range(100)],
+            "k bigint, st string, p bigint",
+        ).repartitionByRange(10, "k"),
     )
-    assert len(seen) == 1 and (seen[0] is not None) == passed
-    assert len(seen[0] or []) == (1 if passed else 0)
+    sess = IceSqlSession(spark)
+    sess.register_table("db.t", tbl)
+    gone = rng.randrange(100)
+    tbl.delete_where_pos(f"k = {gone}")
+    live = sorted((r["k"], r["st"], r["p"]) for r in tbl.read().collect())
+    src_keys = sorted({rng.randrange(130) for _ in range(25)} | {gone})
+    if dups:
+        # one duplicate of a live key and one of a key no row holds
+        src_keys += [next(k for k in src_keys if k < 100 and k != gone), 120]
+    src_rows = [(k, rng.randint(1, 100)) for k in src_keys]
+    sess.register_view("db.s", spark.createDataFrame(src_rows, "k bigint, sp bigint"))
+    sess.sql(f"ALTER TABLE db.t SET TBLPROPERTIES ('write.merge.mode' = '{mode}')")
+    head = tbl.meta.current_snapshot_id
+    expected = _model(live, src_rows, clauses)
+    stmt = "MERGE INTO db.t AS tgt USING db.s AS s ON tgt.k = s.k\n" + "\n".join(clauses)
+    if expected is None:
+        with pytest.raises(PySparkException) as err:
+            sess.sql(stmt)
+        assert err.value.getCondition() == "MERGE_CARDINALITY_VIOLATION"
+        assert err.value.getSqlState() == "23K01"
+        assert tbl.meta.current_snapshot_id == head
+        expected = live
+    else:
+        sess.sql(stmt)
+    got = sorted((r["k"], r["st"], r["p"]) for r in tbl.read().collect())
+    assert got == expected, f"{scenario} {mode}"
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_into_duplicate_source_keys_raise(spark, tmp_path, mode):
+    """The direct upsert API keeps Spark's rule too: two source rows for
+    one target row raise before any write; for a key no row holds both
+    rows insert."""
+    from pyspark.errors import PySparkException
+
+    tbl, _ = _many_files(spark, tmp_path, "direct", n=20, n_files=2)
+    head = tbl.meta.current_snapshot_id
+    write = tbl.merge_into if mode == "copy-on-write" else tbl.merge_into_mor
+    src = spark.createDataFrame([(3, "U", 1), (3, "U", 2)], "k bigint, st string, p bigint")
+    with pytest.raises(PySparkException) as err:
+        write(src, on=["k"])
+    assert err.value.getCondition() == "MERGE_CARDINALITY_VIOLATION"
+    assert tbl.meta.current_snapshot_id == head
+    src = spark.createDataFrame(
+        [(3, "U", 1), (50, "N", 2), (50, "N", 3)], "k bigint, st string, p bigint"
+    )
+    write(src, on=["k"])
+    expected = {(k, "O", k) for k in range(20) if k != 3} | {(3, "U", 1), (50, "N", 2), (50, "N", 3)}
+    got = [(r["k"], r["st"], r["p"]) for r in tbl.read().collect()]
+    assert len(got) == 22 and set(got) == expected

@@ -102,6 +102,23 @@ def test_outside_an_invocation_nothing_is_taken(spark):
         set_conf(spark, _KEY, "3")
 
 
+def test_scope_raises_the_listing_threshold_in_any_session(spark):
+    """A session the package did not build keeps Spark's default file-
+    listing threshold (32 paths); every scope raises it and restores the
+    unset state on exit."""
+    from iceberg_workshop_spark.registry import LISTING_THRESHOLD_KEY, invocation
+
+    prior = spark.conf.get(LISTING_THRESHOLD_KEY, None)
+    spark.conf.unset(LISTING_THRESHOLD_KEY)
+    try:
+        with invocation(spark):
+            assert spark.conf.get(LISTING_THRESHOLD_KEY) == "1024"
+        assert spark.conf.get(LISTING_THRESHOLD_KEY, None) is None
+    finally:
+        if prior is not None:
+            spark.conf.set(LISTING_THRESHOLD_KEY, prior)
+
+
 def test_scratch_is_removed_when_the_query_raises(spark, scoped):
     from iceberg_workshop_spark.registry import scratch
 
